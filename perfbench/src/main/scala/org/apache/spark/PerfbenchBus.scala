@@ -1,0 +1,8 @@
+package org.apache.spark
+
+/** Lets the benchmark wait until its listener has seen every event posted
+  * so far, so a traced call's task metrics are complete before they are
+  * read. The listener bus is package-private to Spark. */
+object PerfbenchBus {
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
