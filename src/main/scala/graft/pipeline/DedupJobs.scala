@@ -9,9 +9,13 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructTyp
   * reference's first-file-wins dedupe intent, `merge_json_files.py:48-62`).
   *
   * Shape at 100 TB:
-  *  - signatures are computed entirely IN-ROW (`array_min` over a
-  *    `transform` of the token array) — no token ever leaves its row, so
-  *    the signature stage is map-only;
+  *  - each doc is tokenized ONCE into a distinct-token array (one row per
+  *    doc); in [[minhashVerifiedPairs]] that table is persisted and feeds
+  *    both the signature stage and the verify join, so no doc is
+  *    tokenized twice and no candidate-doc semi-join re-reads the text;
+  *  - signatures are computed entirely IN-ROW (one compiled pass over the
+  *    token array) — no token ever leaves its row, so the signature stage
+  *    is map-only;
   *  - the only shuffle is the banded equi-join on (band index, band hash),
   *    i.e. the algorithm's candidate generation itself;
   *  - hot buckets (a band hash shared by > bucketCap docs) are dropped
@@ -19,9 +23,9 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructTyp
   *    degenerate bucket (e.g. boilerplate-only docs) would otherwise emit
   *    billions of pairs. Drops are observable via [[droppedBuckets]] —
   *    never silent;
-  *  - candidate pairs are then verified with exact Jaccard over distinct
-  *    token sets, joining tokens only for docs that appear in a candidate
-  *    pair (candidate-bounded, not corpus-bounded).
+  *  - candidate pairs are then verified with exact Jaccard over the same
+  *    distinct token arrays, joined onto the (candidate-bounded) pair table
+  *    by doc id.
   */
 object DedupJobs {
 
@@ -77,23 +81,29 @@ object DedupJobs {
     }
   }
 
-  /** One row per (doc, band): band hash = md5 of the band's concatenated
-    * row hashes. The signature (min over tokens of a seeded md5, per hash
-    * function — duplicate tokens can't change a min, so no distinct needed)
-    * is ONE compiled in-row pass over the token array
-    * ([[graft.plans.MinHashSigExpr]]). Zero-token docs are excluded (they
-    * have no signature). */
-  def bandRows(docs: DataFrame, numHashes: Int, bands: Int): DataFrame = {
-    require(numHashes % bands == 0, s"numHashes=$numHashes not divisible by bands=$bands")
+  /** One row per doc with tokens: (doc_id, toks) where `toks` is the
+    * doc's DISTINCT word tokens ([[tokens]] + `array_distinct`, one
+    * compiled pass plus one hash pass). Zero-token docs are excluded (they
+    * have no signature and can't be in a candidate pair). The single
+    * tokenization both the signature stage and the verify join read. */
+  private def tokenSets(docs: DataFrame): DataFrame = {
     graft.plans.TextHashExprs.register(docs.sparkSession)
-    val rowsPerBand = numHashes / bands
-    // the signature projection is the compute-heavy stage: don't let a
-    // single-split source serialize it (no-op at real scale)
-    val withSig = ScanParallelism.ensure(docs)
-      .withColumn("toks", tokens(col("text")))
+    // the tokenize + signature projection is the compute-heavy stage:
+    // don't let a single-split source serialize it (no-op at real scale)
+    ScanParallelism.ensure(docs)
+      .select(col("doc_id"), array_distinct(tokens(col("text"))).as("toks"))
       .filter(size(col("toks")) > 0)
-      .withColumn("sig",
-        graft.plans.TextHashExprs.minhash_sig(col("toks"), lit(numHashes)))
+  }
+
+  /** Band rows over a [[tokenSets]] table: the signature (min over tokens
+    * of a seeded md5, per hash function) is ONE compiled in-row pass over
+    * the token array ([[graft.plans.MinHashSigExpr]]); band hash = md5 of
+    * the band's concatenated row hashes. */
+  private def signatureBands(toks: DataFrame, numHashes: Int, bands: Int): DataFrame = {
+    require(numHashes % bands == 0, s"numHashes=$numHashes not divisible by bands=$bands")
+    val rowsPerBand = numHashes / bands
+    val withSig = toks.withColumn("sig",
+      graft.plans.TextHashExprs.minhash_sig(col("toks"), lit(numHashes)))
     val bandHashes = (0 until bands).map { bi =>
       val hs = (bi * rowsPerBand until (bi + 1) * rowsPerBand)
         .map(k => element_at(col("sig"), k + 1))
@@ -101,6 +111,11 @@ object DedupJobs {
     }
     withSig.select(col("doc_id"), posexplode(array(bandHashes: _*)).as(Seq("bi", "bh")))
   }
+
+  /** One row per (doc, band): (doc_id, bi, bh). Zero-token docs are
+    * excluded (they have no signature). */
+  def bandRows(docs: DataFrame, numHashes: Int, bands: Int): DataFrame =
+    signatureBands(tokenSets(docs), numHashes, bands)
 
   /** Buckets that exceed the cap — surfaced so truncation is never silent.
     * Returns (bi, bh, n) for every dropped bucket. */
@@ -121,8 +136,11 @@ object DedupJobs {
     * At cluster scale this is the table you'd write out / checkpoint.
     * Persisted intermediates are released via [[releaseCached]]. */
   def candidatePairs(docs: DataFrame, numHashes: Int, bands: Int,
-                     bucketCap: Int): DataFrame = {
-    val rows = cache(bandRows(docs, numHashes, bands))
+                     bucketCap: Int): DataFrame =
+    bandCandidates(bandRows(docs, numHashes, bands), bucketCap)
+
+  private def bandCandidates(bandTable: DataFrame, bucketCap: Int): DataFrame = {
+    val rows = cache(bandTable)
     val sizes = rows.groupBy(col("bi"), col("bh")).agg(count(lit(1)).as("n"))
     val kept = rows.join(sizes.filter(col("n") <= bucketCap), Seq("bi", "bh"))
       .select(col("bi"), col("bh"), col("doc_id"))
@@ -133,9 +151,7 @@ object DedupJobs {
   }
 
   /** Candidates verified by exact Jaccard over distinct token sets:
-    * returns (doc_a, doc_b, jaccard) with jaccard >= threshold. Token rows
-    * are joined only for candidate docs, so the verify cost is bounded by
-    * candidate volume, not corpus size. */
+    * returns (doc_a, doc_b, jaccard) with jaccard >= threshold, sorted. */
   def minhashVerified(docs: DataFrame, numHashes: Int = 8, bands: Int = 4,
                       bucketCap: Int = 200,
                       jaccardThreshold: Double = 0.5): DataFrame =
@@ -148,51 +164,46 @@ object DedupJobs {
     * pipeline) would otherwise pay a range-partitioning exchange + sort
     * whose order the next shuffle immediately destroys.
     *
+    * ONE token table, two consumers: each doc's distinct-token array
+    * ([[tokenSets]]) is persisted and read by the signature stage AND by
+    * both sides of the verify join, so every doc is tokenized exactly once
+    * and the verify needs no semi-join of the text against the candidate
+    * doc ids. The persisted table is one array row per doc, no larger than
+    * the text it was built from; released via [[releaseCached]].
+    *
     * Verify stage is IN-ROW set intersection, not a token-explode join:
-    * each candidate doc's distinct-token ARRAY (one row per doc, built in
-    * one compiled pass) joins onto the pair table by doc id, and
+    * the token arrays join onto the pair table by doc id, and
     * `|A∩B| / (|A|+|B|-|A∩B|)` is computed per pair with
     * `array_intersect`/`size` — identical exact-Jaccard semantics. The
     * former explode shape shuffled one row per (pair, token) through two
     * joins and a groupBy (pairs × avg-token-count rows) plus two size
-    * joins; this shape shuffles each candidate doc's token array once per
-    * side and nothing else — candidate-bounded bytes either way, but
-    * ~tokens-per-doc× fewer shuffled rows and 3 fewer shuffles. */
+    * joins; this shape moves each candidate doc's token array once per
+    * side and nothing else. */
   def minhashVerifiedPairs(docs: DataFrame, numHashes: Int = 8, bands: Int = 4,
                            bucketCap: Int = 200,
                            jaccardThreshold: Double = 0.5): DataFrame = {
-    // Candidates are consumed twice (doc-id prune + the verify join); the
-    // pair table is tiny relative to the corpus, so persist it rather than
-    // recompute the banded-join lineage (at cluster scale: checkpoint it).
-    //
-    // Join-strategy experiment (round 6, MEASURED AND REVERTED): hinting
-    // the id-set semi-join below to broadcast removes the corpus-text
-    // exchange+sort (2 SortMergeJoin -> 0), but (a) with the lazy persist
-    // the broadcast-exchange thread races the main DAG's first
-    // materialization of this same candidate lineage and duplicates the
+    // Join-strategy experiment (round 6, MEASURED AND REVERTED, on the
+    // former candidate-doc semi-join that pruned the text before the second
+    // tokenization): hinting that id-set semi-join to broadcast removed the
+    // corpus-text exchange+sort (2 SortMergeJoin -> 0), but (a) with the
+    // lazy persist the broadcast-exchange thread raced the main DAG's first
+    // materialization of the same candidate lineage and duplicated the
     // whole signature stage nondeterministically (measured 6 -> 16-28 s
     // outlier reps on the neardup pipeline), and (b) fixing the race with
-    // an eager localCheckpoint serializes the candidate build before the
-    // corpus tokenize stage, losing the overlap the SMJ shape gets for
-    // free (verified 1.9 -> 2.9 s, components 1.5 -> 2.1 s). The
-    // incremental probe (dedupAgainstIndex) KEEPS broadcast+eager — there
-    // the candidate lineage is index-read-bounded and cheap, so the
-    // serialization costs nothing and the prune win is real (2.0 -> 1.6 s,
-    // outlier-free).
-    val cand = cache(candidatePairs(docs, numHashes, bands, bucketCap))
-    // Tokenize ONLY docs that appear in a candidate pair (in-row fanout of
-    // both pair ends + semi-join prune), once per doc.
-    val candDocs = cand
-      .select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id")).distinct()
-    val tokSets = docs.join(candDocs, Seq("doc_id"), "left_semi")
-      .select(col("doc_id"), array_distinct(tokens(col("text"))).as("toks"))
-
+    // an eager localCheckpoint serialized the candidate build before the
+    // corpus tokenize stage, losing the overlap the SMJ shape got for free
+    // (verified 1.9 -> 2.9 s, components 1.5 -> 2.1 s). The incremental
+    // probe (dedupAgainstIndex) KEEPS broadcast+eager — there the candidate
+    // lineage is index-read-bounded and cheap, so the serialization costs
+    // nothing and the prune win is real (2.0 -> 1.6 s, outlier-free).
+    val toks = cache(tokenSets(docs))
+    val cand = bandCandidates(signatureBands(toks, numHashes, bands), bucketCap)
     val jac = col("inter").cast("double") /
       (col("na") + col("nb") - col("inter"))
     cand
-      .join(tokSets.select(col("doc_id").as("doc_a"), col("toks").as("toks_a")),
+      .join(toks.select(col("doc_id").as("doc_a"), col("toks").as("toks_a")),
         Seq("doc_a"))
-      .join(tokSets.select(col("doc_id").as("doc_b"), col("toks").as("toks_b")),
+      .join(toks.select(col("doc_id").as("doc_b"), col("toks").as("toks_b")),
         Seq("doc_b"))
       .select(col("doc_a"), col("doc_b"),
         size(array_intersect(col("toks_a"), col("toks_b"))).as("inter"),

@@ -149,9 +149,10 @@ object QualityExprs {
               k += 1
             }
           } else {
-            // same String.toLowerCase() the builtin lower() delegates to
+            // locale-independent case fold: the JVM default locale must not
+            // change a stopword match (tr-TR would lower "İN" to "in")
             val lowered = new String(bytes, tokStart, i - tokStart,
-              java.nio.charset.StandardCharsets.UTF_8).toLowerCase
+              java.nio.charset.StandardCharsets.UTF_8).toLowerCase(java.util.Locale.ROOT)
             if (stopSet.contains(lowered)) {
               var k = 0
               while (k < stopBytes.length) {

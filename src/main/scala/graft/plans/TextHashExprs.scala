@@ -89,25 +89,33 @@ object TextHashExprs {
 
   /** MinHash signature: for k in 0..numHashes-1, the minimum of
     * md5("k#" + tok) over the tokens, hex-encoded. Empty input → array of
-    * nulls (callers exclude zero-token docs, matching the GROUP BY form). */
+    * nulls (callers exclude zero-token docs, matching the GROUP BY form).
+    * Each DISTINCT token is hashed once (a per-call hash set skips
+    * repeats): a minimum ignores repeats, so the result is bit-identical,
+    * and word tokens repeat heavily in real text (numHashes md5 calls per
+    * occurrence dominated the kernel). */
   def minhashSig(tokens: ArrayData, numHashes: Int): ArrayData = {
     require(numHashes <= seedBytes.length, s"numHashes $numHashes > ${seedBytes.length}")
     val n = tokens.numElements()
     val mins = new Array[Array[Byte]](numHashes)
     val md = md5Local.get()
     val buf = new Array[Byte](16)
+    val seen = new java.util.HashSet[UTF8String](math.max(16, n / 2))
     var i = 0
     while (i < n) {
-      val tok = tokens.getUTF8String(i).getBytes
-      var k = 0
-      while (k < numHashes) {
-        md.reset()
-        md.update(seedBytes(k))
-        md.update(tok)
-        md.digest(buf, 0, 16)
-        if (mins(k) == null || java.util.Arrays.compareUnsigned(buf, mins(k)) < 0)
-          mins(k) = buf.clone()
-        k += 1
+      val t = tokens.getUTF8String(i)
+      if (seen.add(t)) {
+        val tok = t.getBytes
+        var k = 0
+        while (k < numHashes) {
+          md.reset()
+          md.update(seedBytes(k))
+          md.update(tok)
+          md.digest(buf, 0, 16)
+          if (mins(k) == null || java.util.Arrays.compareUnsigned(buf, mins(k)) < 0)
+            mins(k) = buf.clone()
+          k += 1
+        }
       }
       i += 1
     }

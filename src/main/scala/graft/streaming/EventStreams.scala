@@ -115,10 +115,14 @@ object EventStreams {
     * ingest timestamp). */
   def streamingExactDedup(spark: SparkSession, docsPath: String,
                           watermark: String = "1 hour"): DataFrame = {
+    graft.plans.TextHashExprs.register(spark)
     spark.readStream
       .schema(docSchema)
       .parquet(docsPath)
-      .withColumn("fp", md5(lower(regexp_replace(col("text"), "\\s+", " "))))
+      // one-pass kernel, bit-identical to md5(lower(regexp_replace(text,
+      // "\\s+", " "))) (TextHashSpec / EventStreamsSpec differentials)
+      .withColumn("fp", md5(graft.plans.TextHashExprs
+        .ws_normalize(col("text"), doTrim = false, doLower = true)))
       .withColumn("ingest_ts",
         timestamp_seconds(lit(1767225600L) + pmod(col("doc_id"), lit(100L))))
       .withWatermark("ingest_ts", watermark)

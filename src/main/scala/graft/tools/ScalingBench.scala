@@ -27,7 +27,9 @@ object ScalingBench {
     args.headOption match {
       case Some("gen") =>
         val nDocs = if (args.length > 1) args(1).toLong else 20000L
-        val spark = SparkSession.builder().master("local[32]")
+        val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+          Runtime.getRuntime.availableProcessors.toString)
+        val spark = SparkSession.builder().master(s"local[$cpus]")
           .config("spark.ui.enabled", "false").getOrCreate()
         spark.sparkContext.setLogLevel("WARN")
         CorpusGen.generate(spark, nDocs, 32)

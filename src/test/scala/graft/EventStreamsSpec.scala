@@ -114,4 +114,37 @@ class EventStreamsSpec extends AnyFunSuite {
       s"stream must emit exactly one row per fingerprint (${out.count()} vs $distinctFp)")
     assert(out.select("fp").distinct().count() == distinctFp)
   }
+
+  test("streaming dedup fingerprint == md5(lower(regexp_replace(text, \\s+, ' '))) on traps") {
+    import spark.implicits._
+    // the ws_normalize traps: case-fold specials (ſ K İ Σ incl. final
+    // sigma), non-ASCII whitespace (NBSP must NOT collapse), runs of every
+    // Java-\s char, all-whitespace, empty, null — plus case/space variants
+    // that must collide on one fingerprint
+    val texts: Seq[String] = Seq(
+      "", " ", " \t\n\f\r ", "plain", "  lead", "trail  ", " both \t sides ",
+      "Upper CASE ſtraße İstanbul KΣLVIN ΟΔΟΣ", "nb\u00a0sp stays", "早安  世界",
+      "a\rb\nc\td", "ΣΙΓΜΑ ΤΕΛΟΣ", "x  y   z", "X Y Z", "PLAIN", null) ++
+      (0 until 30).map { i =>
+        val r = new scala.util.Random(700 + i)
+        (0 until 12).map(_ => Seq("Tok", "ſs", "İi", "K", "Σ", "早", " ", "\t", "\n", "#")(
+          r.nextInt(10))).mkString(Seq("", " ", "  ", "\t")(r.nextInt(4)))
+      }
+    val dir = java.nio.file.Files.createTempDirectory("docs-fp-traps").toString
+    val docs = texts.zipWithIndex
+      .map { case (t, i) => (i.toLong, t, "en", "trap", Option(t).map(_.length.toLong)) }
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+    docs.write.mode("overwrite").parquet(dir)
+
+    val q = EventStreams.startToMemory(
+      EventStreams.streamingExactDedup(spark, dir), "dedup_fp_traps")
+    q.awaitTermination()
+    val want = docs.select(col("doc_id"),
+      md5(lower(regexp_replace(col("text"), "\\s+", " "))).as("want"))
+    val got = spark.table("dedup_fp_traps")
+    val mismatched = got.join(want, Seq("doc_id"))
+      .filter(!(col("fp") <=> col("want"))).count()
+    assert(mismatched == 0L)
+    assert(got.count() == want.select("want").distinct().count())
+  }
 }

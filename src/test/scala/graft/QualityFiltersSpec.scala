@@ -136,6 +136,22 @@ class QualityFiltersSpec extends AnyFunSuite {
     }
   }
 
+  test("gopher signals ignore the JVM default locale (tr-TR case fold)") {
+    // under tr-TR, "İN".toLowerCase is "in" (a stopword); the
+    // locale-independent fold gives "i̇n" (dotted) and matches nothing
+    val text = "İN İS ÇAY cats sleep on warm mats"
+    def both(): (Row, String) =
+      (signals(text), graft.plans.QualityExprs.gopherSignals(
+        org.apache.spark.unsafe.types.UTF8String.fromString(text)).toString)
+    val saved = java.util.Locale.getDefault
+    val root = try { java.util.Locale.setDefault(java.util.Locale.ROOT); both() }
+      finally java.util.Locale.setDefault(saved)
+    val tr = try { java.util.Locale.setDefault(java.util.Locale.forLanguageTag("tr-TR")); both() }
+      finally java.util.Locale.setDefault(saved)
+    assert(root._1.getAs[Long]("n_stopwords") == 0L)
+    assert(tr == root)
+  }
+
   test("repetition: a looping 2-gram dominates and fails the bound") {
     val r = repetition("a b a b a b")        // "a b" x3, chars 3*3/11
     assert(r.getString(1) == "a b" && r.getLong(2) == 3)

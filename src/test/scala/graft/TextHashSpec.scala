@@ -75,6 +75,35 @@ class TextHashSpec extends AnyFunSuite {
     }
   }
 
+  test("minhash_sig over heavy repeats == over the distinct set == the builtin form") {
+    import spark.implicits._
+    TextHashExprs.register(spark)
+    // hashing each distinct token once must not change any minimum
+    val r = new scala.util.Random(4242)
+    val vocab = Seq("the", "court", "appeal", "hk", "2021", "plaintiff", "x")
+    val texts = Seq(
+      ("the cat sat " * 300) + "dog",
+      "same same same same same",
+      "unique tokens only here 1 2 3") ++
+      (0 until 20).map(_ => (0 until 400).map(_ => vocab(r.nextInt(vocab.size))).mkString(" "))
+    val toks = regexp_extract_all(lower(col("text")), lit("[a-z0-9]+"), lit(0))
+    val rows = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+      .withColumn("toks", toks)
+      .select(col("doc_id"), size(col("toks")).as("n"),
+        size(array_distinct(col("toks"))).as("nd"),
+        TextHashExprs.minhash_sig(col("toks"), lit(8)).as("rep"),
+        TextHashExprs.minhash_sig(array_distinct(col("toks")), lit(8)).as("dis"),
+        array((0 until 8).map(k => array_min(transform(col("toks"),
+          tk => md5(concat(lit(s"$k#"), tk))))): _*).as("want"))
+      .collect()
+    assert(rows.exists(r => r.getInt(1) > 10 * r.getInt(2)), "fixture must repeat heavily")
+    rows.foreach { r =>
+      val rep = r.getSeq[String](3)
+      assert(rep == r.getSeq[String](4), s"doc ${r.getLong(0)}: repeats vs distinct")
+      assert(rep == r.getSeq[String](5), s"doc ${r.getLong(0)}: kernel vs builtin")
+    }
+  }
+
   test("property: all three expressions equal their builtin forms on random unicode") {
     import spark.implicits._
     // seeded generator over an alphabet that stresses every byte width:
