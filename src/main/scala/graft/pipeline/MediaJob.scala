@@ -1695,8 +1695,8 @@ object MediaJob {
           case 1 | 2 | 6 | 7 => 1L; case 3 => 2L; case 4 | 9 => 4L; case _ => 8L
         }
         val inline = tsize * cnt <= 4
+        val base = if (inline) at + 8 else u32(at + 8)
         def valAt(k: Long): Long = {
-          val base = if (inline) at + 8 else u32(at + 8)
           val p = base + k * tsize
           if (p + tsize > b.length) throw new java.io.EOFException
           typ match {
@@ -1712,10 +1712,14 @@ object MediaJob {
           case 258 => bitsPS = valAt(0).toInt // uniform across samples assumed
           case 259 => comp = valAt(0).toInt
           case 262 => photo = valAt(0).toInt
-          case 273 => stripOffs = Array.tabulate(cnt.toInt)(k => valAt(k))
+          // the strip count is an untrusted field: it sizes an array only
+          // once the values it claims actually fit in the bytes
+          case 273 | 279 =>
+            if (base + cnt * tsize > b.length) return None
+            val vals = Array.tabulate(cnt.toInt)(k => valAt(k))
+            if (tag == 273) stripOffs = vals else stripLens = vals
           case 277 => spp = valAt(0).toInt
           case 278 => rowsPerStrip = math.min(valAt(0), Int.MaxValue.toLong).toInt
-          case 279 => stripLens = Array.tabulate(cnt.toInt)(k => valAt(k))
           case 284 => planar = valAt(0).toInt
           case 317 => predictor = valAt(0).toInt
           case 320 =>

@@ -2469,6 +2469,23 @@ class StreamingMediaSpec extends AnyFunSuite {
     assert(MediaJob.probeHeader("image", vp8x) == Some((512, 128, 3)))
   }
 
+  test("TIFF decode: a strip count the file cannot hold is rejected before it sizes an array") {
+    val px = Array.tabulate[Byte](16)(k => (k * 16).toByte)
+    def tiff(tag: Int, count: Int) = encodeTiff(le = true, Seq(
+      (256, 3, 1, 4L), (257, 3, 1, 4L), (258, 3, 1, 8L), (259, 3, 1, 1L),
+      (262, 3, 1, 1L), (273, 4, if (tag == 273) count else 1, tiffDataOff(7).toLong),
+      (279, 4, if (tag == 279) count else 1, px.length.toLong)), px)
+    assert(MediaJob.decodeTiffLuma(tiff(273, 1)).isDefined)
+    // 2^31-1 and 2^32-1 (a negative Int) strips, and one just past the end
+    for (tag <- Seq(273, 279); count <- Seq(Int.MaxValue, -1, 1 << 28, 5)) {
+      val crafted = tiff(tag, count)
+      assert(MediaJob.decodeTiffLuma(crafted).isEmpty, s"tag $tag count $count")
+      assert(MediaJob.probeHeader("image", crafted) == Some((4, 4, 1)))
+      val (d1, d2, d3, feat) = MediaJob.decodeStub("image", crafted)
+      assert((d1, d2, d3) == (4, 4, 1) && feat.length == 16)
+    }
+  }
+
   test("mutation fuzz: corrupted valid containers never throw and always yield a 16-dim finite feature") {
     // The highest-yield fuzz seeds are VALID files: random byte flips,
     // truncations, length-field splices and garbage tails reach the deep
