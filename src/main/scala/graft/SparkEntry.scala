@@ -773,8 +773,9 @@ object SparkEntry {
     }),
 
     // Multimodal media (rows-only check: the deterministic decode-stub fold
-    // is a per-byte loop DuckDB can't express; StreamingMediaSpec pins the
-    // semantics). Full first-class chain: corpus media spans → synthesized
+    // is a per-byte loop DuckDB can't express; MediaFeaturesSpec pins this
+    // query's full output at sf0.001, StreamingMediaSpec each decodeStub
+    // tier). Full first-class chain: corpus media spans → synthesized
     // media table → batched scan-stage feature extraction (media bytes
     // never shuffle) → image-resize geometry + per-video sampled-frame
     // counts, one row per media object. --------------------------------------

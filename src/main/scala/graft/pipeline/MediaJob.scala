@@ -5,16 +5,28 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Multimodal columns: image/audio/video as opaque `binary` with typed
-  * metadata. The Spark-side plumbing — schema, partitioning, batch shape —
-  * is real, and so are the decoders for PNG (inflate + unfilter), baseline
-  * JPEG (Huffman + IDCT), MJPEG-in-AVI frames, and WAV PCM — all written
-  * from the public specs against plain byte arrays (the container has no
-  * image/audio libraries). MP4/ISO-BMFF and Matroska/WebM get real
-  * metadata walks (moov → tkhd geometry + stsz frames; EBML Segment →
-  * Tracks geometry + per-cluster block counts). Unsupported ENCODINGS
-  * (H.264/VP9 pixel payloads, …) fall back to a
-  * deterministic fake feature behind real header dims, clearly marked
-  * below, so swapping in a further codec changes one function.
+  * metadata. The Spark-side plumbing — schema, scan-stage feature
+  * extraction, resize geometry, capped frame sampling, the doc join — is
+  * real. Per-object features come from [[MediaJob.decodeStub]]'s tiers:
+  *  - pixel and sample decoders written from the public specs against
+  *    plain byte arrays (PNG, baseline and progressive JPEG, GIF, BMP,
+  *    TIFF, MJPEG-in-AVI, WAV incl. G.711/ADPCM, FLAC) — the container
+  *    has no image/audio libraries;
+  *  - header-only probes ([[MediaJob.probeHeader]]: the same formats plus
+  *    MP4/ISO-BMFF, Matroska/WebM, WebP, MP3 and Ogg) that report real
+  *    dims behind a deterministic byte-fold feature;
+  *  - faked dims behind the fold feature for bytes no probe recognises.
+  *
+  * `q_media_features` feeds [[MediaJob.synthesizeFromDocs]] bytes (the
+  * media ref repeated), which neither a decoder nor a probe recognises,
+  * so every row of that query comes from the last tier. MediaFeaturesSpec
+  * pins the query's output; StreamingMediaSpec pins each tier on crafted
+  * and mutated files.
+  *
+  * Every byte walk treats its input as untrusted: cursors move in Long
+  * arithmetic, corrupt input degrades to a lower tier instead of
+  * throwing, and an allocation sized by a header field is first bounded by
+  * the bytes actually present or by a fixed cap.
   *
   * Scale notes: media bytes never pass through a shuffle — features are
   * computed in the scan stage (`mapPartitions` directly over the source
@@ -58,10 +70,12 @@ object MediaJob {
   private def u16le(b: Array[Byte], i: Int): Int =
     (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
 
-  /** REAL container-header parsing — plain byte arithmetic, no codec
-    * library: PNG IHDR width/height, JPEG SOFn height/width, WAV (RIFF)
-    * sample-rate + data-bytes→samples. Returns (dim1, dim2, dim3) or None
-    * when the bytes aren't one of these containers. */
+  /** Container-header parsing — plain byte arithmetic, no codec library —
+    * for PNG, BMP, GIF, JPEG, WAV, AVI, MP4, TIFF, WebP, FLAC, MP3, Ogg
+    * and Matroska. Returns (dim1, dim2, dim3) — image: width/height/
+    * channels, audio: rate/samples/channels, video: width/height/frames —
+    * or None when the bytes aren't a recognised container or its header
+    * fails the per-format sanity checks below. */
   private[graft] def probeHeader(mediaType: String,
                                  b: Array[Byte]): Option[(Int, Int, Int)] = {
     if (b == null) return None
@@ -2063,9 +2077,12 @@ object MediaJob {
       val bits = new FlacBits(b, i * 8)
       val samples = new scala.collection.mutable.ArrayBuilder.ofDouble
       var nFrames = 0L
+      // the cap counts the samples each frame actually appends: a frame's
+      // own channel assignment may claim more channels than STREAMINFO
+      var nSamples = 0L
       val maxSamples = 16L << 20
       var decoding = true
-      while (decoding && nFrames * chans < maxSamples) {
+      while (decoding && nSamples < maxSamples) {
         try {
           bits.alignByte()
           if (bits.remaining < 40) decoding = false
@@ -2158,6 +2175,7 @@ object MediaJob {
               k += 1
             }
             nFrames += blockSize
+            nSamples += blockSize.toLong * nCh
           }
         } catch {
           case _: Exception => decoding = false // truncated/corrupt tail
@@ -2836,45 +2854,39 @@ object MediaJob {
     } catch { case _: Exception => None } // corrupt input → header/fold tier
   }
 
-  /** Decode dispatch, best-real-first:
-    *  1. PNG → REAL pixel decode ([[decodePngLuma]]: inflate + unfilter)
-    *     with a 4x4 mean-pool luminance grid as the 16-dim feature;
-    *  2. baseline or progressive JPEG → REAL pixel decode
-    *     ([[decodeJpegLuma]] / [[decodeJpegProgressive]]: Huffman +
-    *     dequant + IDCT, multi-scan accumulation), same grid feature;
-    *  3. GIF (87a/89a, still or animated) → REAL pixel decode
-    *     ([[decodeGif]]: LZW + palette + interlace + GCE compositing);
-    *     still = grid of the frame, animated = mean of per-frame grids
-    *     with dim3 carrying the frame count;
-    *  3a. BMP (DIB: 1/4/8/16/24/32 bpp, BI_RGB/RLE8/RLE4/BITFIELDS) →
-    *     REAL pixel decode ([[decodeBmpLuma]]), same grid feature;
-    *  3c. TIFF (strips; none/LZW/PackBits; gray 1/4/8/16, RGB, palette)
-    *     → REAL pixel decode ([[decodeTiffLuma]]), same grid feature;
-    *  3b. MJPEG-in-AVI video → REAL frame decode ([[decodeAviMjpeg]]):
-    *     per-frame JPEG pixels, feature = mean of per-frame grids;
-    *  4. WAV (PCM 8/16/24/32, float32, G.711 A-law/µ-law, MS-ADPCM,
-    *     IMA ADPCM, extensible) → REAL sample decode ([[decodeWavRms]]:
-    *     16 window RMS energies);
-    *  5. recognized container but unsupported encoding (non-MJPEG AVI,
-    *     MP4/Matroska with a compressed codec payload, compressed-audio
-    *     WAV codecs like MP3-in-WAV, raw MP3, Ogg Vorbis/Opus) → REAL
-    *     header metadata ([[probeHeader]], incl. the [[probeMp4]] moov
-    *     walk, the [[probeMkv]] EBML walk, the [[probeMp3]] frame-header
-    *     walk and the [[probeOgg]] page walk) + the
+  /** Decode dispatch, best-decoder-first:
+    *  1. PNG → pixel decode ([[decodePngLuma]]: inflate + unfilter) with a
+    *     4x4 mean-pool luminance grid as the 16-dim feature;
+    *  2. baseline or progressive JPEG → pixel decode ([[decodeJpegLuma]] /
+    *     [[decodeJpegProgressive]]: Huffman + dequant + IDCT, multi-scan
+    *     accumulation), same grid feature;
+    *  3. GIF (87a/89a, still or animated) → pixel decode ([[decodeGif]]:
+    *     LZW + palette + interlace + GCE compositing); still = grid of the
+    *     frame, animated = mean of per-frame grids with dim3 carrying the
+    *     frame count;
+    *  4. BMP (DIB: 1/4/8/16/24/32 bpp, BI_RGB/RLE8/RLE4/BITFIELDS) → pixel
+    *     decode ([[decodeBmpLuma]]), same grid feature;
+    *  5. TIFF (strips; none/LZW/PackBits; gray 1/4/8/16, RGB, palette) →
+    *     pixel decode ([[decodeTiffLuma]]), same grid feature;
+    *  6. MJPEG-in-AVI video → frame decode ([[decodeAviMjpeg]]): per-frame
+    *     JPEG pixels, feature = mean of per-frame grids;
+    *  7. WAV (PCM 8/16/24/32, float32, G.711 A-law/µ-law, MS-ADPCM, IMA
+    *     ADPCM, extensible) → sample decode ([[decodeWavRms]]: 16 window
+    *     RMS energies); FLAC → sample decode ([[decodeFlacRms]]), same
+    *     feature;
+    *  8. a container [[probeHeader]] recognises but no decoder above
+    *     accepts (non-MJPEG AVI, MP4/Matroska with a compressed codec
+    *     payload, compressed-audio WAV, raw MP3, Ogg Vorbis/Opus, WebP,
+    *     tiled TIFF, corrupt pixel payloads) → the probed header dims + the
     *     deterministic fold feature;
-    *  6. unrecognized bytes → fully faked dims + fold feature.
+    *  9. unrecognised bytes → faked dims + the fold feature. Every row of
+    *     `q_media_features` lands here (see the object doc).
     *
     * ============================ STUB ================================
-    * Only tier 5-6's FEATURE VECTOR is faked (a stable byte fold):
+    * Only tiers 8-9 fake the FEATURE VECTOR (a stable byte fold):
     * compressed video PIXEL codecs (H.264/VP9 etc.) and perceptual-audio
     * SAMPLE decode (MP3/Vorbis/Opus payloads) are out of scope to write
-    * from scratch in this container. PNG pixels (every depth and
-    * interlace mode), baseline AND progressive JPEG pixels, GIF frames
-    * (still + animated), BMP pixels, MJPEG-AVI frames, WAV samples
-    * (every realistic codec) and FLAC samples are all decoded for real
-    * above; MP4/Matroska geometry/frame counts and MP3/Ogg sample
-    * rates/durations parse for real; swapping in further codecs extends
-    * the dispatch.
+    * from scratch in this container.
     * ================================================================== */
   def decodeStub(mediaType: String, bytes: Array[Byte]): (Int, Int, Int, Array[Float]) = {
     val b = if (bytes == null) Array.empty[Byte] else bytes

@@ -2210,6 +2210,18 @@ class StreamingMediaSpec extends AnyFunSuite {
       MediaJob.decodeFlacRms(three.take(c)) // must not throw
   }
 
+  test("FLAC decode: frames claiming more channels than STREAMINFO stay within the sample cap") {
+    // STREAMINFO says mono; each ~30-byte frame claims 8 independent
+    // channels of 65536 CONSTANT samples, so 64 frames would be 32M samples
+    val frame = (i: Int) => flacFrame(i, 65536, 16, 7, { w =>
+      (0 until 8).foreach { _ => w.write(0, 1); w.write(0, 6); w.write(0, 1); w.write(1000, 16) }
+    })
+    val bomb = flacStreamInfo(8000, 1, 16, 0L) ++ (0 until 64).flatMap(i => frame(i).toSeq)
+    val (_, frames, _) = MediaJob.decodeFlacRms(bomb).get
+    assert(frames.toLong * 8 <= (16L << 20) + 8 * 65536,
+      s"decoded $frames frames of 8 channels past the 16M-sample cap")
+  }
+
   // ---------------------------------------------------------------------
   // Independent TIFF assembler (both byte orders, hand-built IFDs) with
   // its own PackBits and TIFF-LZW COMPRESSORS (MSB-first packing, EARLY
