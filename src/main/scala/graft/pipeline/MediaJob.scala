@@ -149,12 +149,12 @@ object MediaJob {
       if (rate > 0) return Some((rate, dataLen / bytesPerSample, 1))
     }
     // AVI: RIFF....AVI  — avih main header carries width/height/frames;
-    // maxDecode=0 parses the header + counts frame chunks, no pixel work.
+    // the walk counts frame chunks without reading them.
     if (b.length >= 24 && b(0) == 'R' && b(1) == 'I' && b(2) == 'F' &&
         b(3) == 'F' && b(8) == 'A' && b(9) == 'V' && b(10) == 'I' &&
         b(11) == ' ')
-      decodeAviMjpeg(b, maxDecode = 0) match {
-        case Some((w, h, n, _)) => return Some((w, h, n))
+      probeAvi(b) match {
+        case s @ Some(_) => return s
         case None => ()
       }
     // MP4 / ISO-BMFF: an `ftyp` box leads; `moov` carries the video
@@ -2796,29 +2796,26 @@ object MediaJob {
     } catch { case _: Exception => None } // corrupt input → header/fold tier
   }
 
-  /** REAL MJPEG-in-AVI video decode — the RIFF/AVI container is a public
-    * Microsoft spec and each frame chunk is a baseline JPEG, so the frame
-    * pixels come from [[decodeJpegLuma]] with no codec library: parses the
-    * `avih` main header (geometry + declared frame count), walks the
-    * nested LIST tree to the `movi` chunk run, and grid-pools every
-    * decoded video-stream chunk (`##dc`/`##db`). Untrusted-bytes rules
-    * match the other walks: Long cursor arithmetic (a crafted length can't
-    * wrap the cursor), a LIST depth limit (crafted nesting can't recurse
-    * unboundedly), and a `maxDecode` cap on frames actually decoded (a
-    * crafted header can't force unbounded pixel work) while the returned
-    * frame COUNT still reflects every chunk present. Returns
-    * (width, height, nFrames, per-frame 16-dim features — possibly empty
-    * when the embedded codec isn't baseline JPEG) or None when the bytes
-    * aren't RIFF AVI with a parseable header. */
-  private[graft] def decodeAviMjpeg(b: Array[Byte], maxDecode: Int = 64)
-      : Option[(Int, Int, Int, Array[Array[Float]])] = {
+  /** Header-only RIFF/AVI walk (the public Microsoft container spec):
+    * parses the `avih` main header (geometry + declared frame count) and
+    * walks the nested LIST tree counting video-stream chunks
+    * (`##dc`/`##db`); no chunk body is read. Untrusted-bytes rules match
+    * the other walks: Long cursor arithmetic (a crafted length can't wrap
+    * the cursor) and a LIST depth limit (crafted nesting can't recurse
+    * unboundedly). Returns (width, height, max(declared, chunk count)) or
+    * None when the bytes aren't RIFF AVI with a positive-geometry header. */
+  private[graft] def probeAvi(b: Array[Byte]): Option[(Int, Int, Int)] =
+    walkAvi(b, (_, _) => ())
+
+  /** The [[probeAvi]] walk, handing each video-stream chunk's body bounds
+    * `[from, until)` (clamped to the buffer) to `onFrame` in file order. */
+  private def walkAvi(b: Array[Byte], onFrame: (Int, Int) => Unit): Option[(Int, Int, Int)] = {
     if (b == null || b.length < 24 || b(0) != 'R' || b(1) != 'I' ||
         b(2) != 'F' || b(3) != 'F' || b(8) != 'A' || b(9) != 'V' ||
         b(10) != 'I' || b(11) != ' ') return None
     try {
       var w = 0; var h = 0; var declared = 0
       var chunkFrames = 0
-      val feats = scala.collection.mutable.ArrayBuffer[Array[Float]]()
       def walk(from: Int, until: Int, depth: Int): Unit = {
         var i = from
         while (i + 8 <= until) {
@@ -2837,12 +2834,7 @@ object MediaJob {
           } else if (id(0).isDigit && id(1).isDigit &&
                      (id.endsWith("dc") || id.endsWith("db"))) {
             chunkFrames += 1
-            if (feats.length < maxDecode && i + 8 <= bodyEnd) {
-              val frame = java.util.Arrays.copyOfRange(b, i + 8, bodyEnd)
-              decodeJpegLuma(frame).foreach { case (fw, fh, _, luma) =>
-                feats += gridPool16(fw, fh, luma)
-              }
-            }
+            if (i + 8 <= bodyEnd) onFrame(i + 8, bodyEnd)
           }
           val next = i.toLong + 8 + len + (len & 1)
           i = if (next > until) until else next.toInt
@@ -2850,8 +2842,27 @@ object MediaJob {
       }
       walk(12, b.length, 0)
       if (w <= 0 || h <= 0) None
-      else Some((w, h, math.max(declared, chunkFrames), feats.toArray))
+      else Some((w, h, math.max(declared, chunkFrames)))
     } catch { case _: Exception => None } // corrupt input → header/fold tier
+  }
+
+  /** MJPEG-in-AVI video decode: each video-stream chunk of the
+    * [[probeAvi]] walk is a baseline JPEG, so the frame pixels come from
+    * [[decodeJpegLuma]] with no codec library, grid-pooled per frame. A
+    * `maxDecode` cap bounds the frames actually decoded (a crafted header
+    * can't force unbounded pixel work) while the returned frame COUNT
+    * still reflects every chunk present. Returns (width, height, nFrames,
+    * per-frame 16-dim features — possibly empty when the embedded codec
+    * isn't baseline JPEG) or None when [[probeAvi]] rejects the bytes. */
+  private[graft] def decodeAviMjpeg(b: Array[Byte], maxDecode: Int = 64)
+      : Option[(Int, Int, Int, Array[Array[Float]])] = {
+    val feats = scala.collection.mutable.ArrayBuffer[Array[Float]]()
+    walkAvi(b, (from, until) =>
+      if (feats.length < maxDecode)
+        decodeJpegLuma(java.util.Arrays.copyOfRange(b, from, until)).foreach {
+          case (fw, fh, _, luma) => feats += gridPool16(fw, fh, luma)
+        }
+    ).map { case (w, h, n) => (w, h, n, feats.toArray) }
   }
 
   /** Decode dispatch, best-decoder-first:

@@ -1140,6 +1140,43 @@ class StreamingMediaSpec extends AnyFunSuite {
     assert(capped.exists(x => x._3 == 100 && x._4.length == 5))
   }
 
+  test("probeAvi: the header-only walk matches the MJPEG decode's geometry and count") {
+    val w = 8; val h = 8
+    val frame = encodeGrayJpeg(w, h,
+      Array.tabulate(w * h)(i => i * 3 % 256), Array.fill(64)(4))._1
+    val junk = Array.tabulate[Byte](200)(i => (i * 37).toByte)
+    def dims(r: Option[(Int, Int, Int, Array[Array[Float]])]) =
+      r.map { case (a, b, n, _) => (a, b, n) }
+    for (avi <- Seq(encodeAvi(w, h, Seq(frame, frame)),
+                    encodeAvi(320, 240, Seq(junk, junk), declared = 48),
+                    encodeAvi(w, h, Seq.fill(100)(frame)),
+                    encodeAvi(16, 16, Seq.empty, declared = Int.MaxValue))) {
+      assert(MediaJob.probeAvi(avi).isDefined)
+      assert(MediaJob.probeAvi(avi) == dims(MediaJob.decodeAviMjpeg(avi)))
+      assert(MediaJob.probeHeader("video", avi) == MediaJob.probeAvi(avi))
+      for (cut <- Seq(12, 30, avi.length / 2, avi.length - 3))
+        assert(MediaJob.probeAvi(avi.take(cut)) ==
+          dims(MediaJob.decodeAviMjpeg(avi.take(cut))), s"cut at $cut")
+    }
+    // a chunk length near Int.MaxValue cannot wrap the cursor
+    val avi = encodeAvi(w, h, Seq(frame))
+    val at = avi.indices.find(i => avi(i) == '0' && avi(i + 1) == '0' &&
+      avi(i + 2) == 'd' && avi(i + 3) == 'c').get
+    val evil = avi.clone()
+    evil(at + 4) = 0xff.toByte; evil(at + 5) = 0xff.toByte
+    evil(at + 6) = 0xff.toByte; evil(at + 7) = 0x7f.toByte
+    assert(MediaJob.probeAvi(evil).contains((w, h, 1)))
+    // LISTs nest at most four deep: a frame chunk one level deeper is not seen
+    def le32(v: Int) = Array[Byte](v.toByte, (v >> 8).toByte, (v >> 16).toByte, (v >> 24).toByte)
+    def list(body: Array[Byte]) =
+      "LIST".getBytes("US-ASCII") ++ le32(body.length + 4) ++ "movi".getBytes("US-ASCII") ++ body
+    val chunk = "00dc".getBytes("US-ASCII") ++ le32(2) ++ Array[Byte](0, 0)
+    def nested(levels: Int) = (0 until levels).foldLeft(chunk)((b, _) => list(b))
+    val base = encodeAvi(w, h, Seq.empty, declared = 0)
+    assert(MediaJob.probeAvi(base ++ nested(4)).contains((w, h, 1)))
+    assert(MediaJob.probeAvi(base ++ nested(5)).contains((w, h, 0)))
+  }
+
   // Independent ISO-BMFF (MP4) assembler for the probeMp4 tests:
   // big-endian [size:u32][4cc][body] boxes built bottom-up — a separate
   // derivation of ISO/IEC 14496-12, so the kernel's walk is checked
