@@ -2525,7 +2525,8 @@ class StreamingMediaSpec extends AnyFunSuite {
       (262, 3, 1, 1L), (273, 4, if (tag == 273) count else 1, tiffDataOff(7).toLong),
       (279, 4, if (tag == 279) count else 1, px.length.toLong)), px)
     assert(MediaJob.decodeTiffLuma(tiff(273, 1)).isDefined)
-    // 2^31-1 and 2^32-1 (a negative Int) strips, and one just past the end
+    // 2^31-1, 2^32-1 (written as Int -1) and 2^28 strips, and 5 — one
+    // more than the 16 bytes after the offset can hold
     for (tag <- Seq(273, 279); count <- Seq(Int.MaxValue, -1, 1 << 28, 5)) {
       val crafted = tiff(tag, count)
       assert(MediaJob.decodeTiffLuma(crafted).isEmpty, s"tag $tag count $count")
