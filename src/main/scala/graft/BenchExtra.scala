@@ -17,7 +17,8 @@ object BenchExtra {
     val sfDir = args.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     val names = args.drop(1).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -30,16 +31,25 @@ object BenchExtra {
     spark.sparkContext.setLogLevel("WARN")
     spark.range(100000).selectExpr("sum(id)").collect()
 
+    // a query that throws ends the run with its exception and a non-zero
+    // exit code: a missing number must never read as a timing
+    def orExit[T](name: String)(body: => T): T =
+      try body catch { case e: Throwable =>
+        System.err.println(s"[bench-extra] $name failed")
+        e.printStackTrace()
+        spark.stop()
+        sys.exit(1)
+      }
+
     val warmDir = "/root/testdata/sf0.001"
     if (new java.io.File(warmDir).exists() && warmDir != sfDir) {
       names.foreach { name =>
-        try noop(SparkEntry.queries(name)(spark, warmDir))
-        catch { case _: Throwable => }
+        orExit(name)(noop(SparkEntry.queries(name)(spark, warmDir)))
       }
     }
     val results = names.map { name =>
       val fn = SparkEntry.queries(name)
-      val reps = try {
+      val reps = orExit(name) {
         graft.pipeline.DedupJobs.releaseCached()
         spark.catalog.clearCache()
         noop(fn(spark, sfDir))
@@ -50,8 +60,7 @@ object BenchExtra {
           noop(fn(spark, sfDir))
           (System.nanoTime() - t0) / 1e9
         }.toSeq
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench-extra] $name failed: $e"); Seq(-1.0) }
+      }
       name -> reps
     }
     results.foreach { case (n, reps) =>

@@ -322,7 +322,7 @@ object SparkEntry {
 
     "q_dedup_minhash" -> ((s, dir) => {
       // Signature stage is fully in-row (one compiled pass over the token
-      // array, graft.plans.MinHashSigExpr — no token ever leaves its row);
+      // array, graft.plans.TextHashExprs.minhashSig — no token ever leaves its row);
       // the only shuffles left are the banded equi-joins, which are the
       // algorithm's point — plus the single-split parallelism guard for the
       // signature projection (no-op at real scale).
@@ -683,7 +683,7 @@ object SparkEntry {
 
     "q_fingerprint" -> ((s, dir) => {
       // Per-doc rolling-shingle fingerprint in ONE compiled in-row pass
-      // (graft.plans.ShingleMinMaxExpr): the former plan exploded every
+      // (graft.plans.TextHashExprs.shingleMinMax): the former plan exploded every
       // character position into a row and shuffled ~8× the corpus bytes
       // back through a groupBy. No explode, identical output; the only
       // shuffles are the output sort and the single-split parallelism guard.
@@ -1186,7 +1186,7 @@ object SparkEntry {
       val wrapped = docs.select(col("doc_id"),
         concat(col("text"), lit("\n"), pii).as("t2"))
       // ONE fused kernel pass for counts + Luhn + redaction
-      // (graft.plans.PiiStatsExpr, same compiled PiiOps patterns): the
+      // (graft.plans.PiiExprs.statsU, same compiled PiiOps patterns): the
       // composed form materialized a match array per pattern just to
       // size() it and ran an interpreted filter lambda (regexp_replace +
       // luhn_check per card). Differential-pinned in PiiSpec; the oracle

@@ -139,9 +139,11 @@ object HtmlContent {
                   if (q > m) { srcVal = html.substring(m + 1, q); k = q + 1 }
                   else k = n
                 } else {
+                  // HTML5 unquoted attribute value: runs to whitespace or
+                  // '>'; '/' is part of the value (as in LinkExtract.scan)
                   var e2 = m
                   while (e2 < n && !Character.isWhitespace(html.charAt(e2)) &&
-                    html.charAt(e2) != '>' && html.charAt(e2) != '/') e2 += 1
+                    html.charAt(e2) != '>') e2 += 1
                   srcVal = html.substring(m, e2)
                   k = e2
                 }

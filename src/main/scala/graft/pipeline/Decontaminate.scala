@@ -50,7 +50,18 @@ object Decontaminate {
     * corpus document frequency <= maxDf) with any test document. The test
     * split is `doc_id % testMod == 0`. Returns one row per contaminated
     * doc: distinct shared shingles and distinct test docs matched. */
-  def contaminated(documents: DataFrame, k: Int, testMod: Long, maxDf: Long): DataFrame = {
+  def contaminated(documents: DataFrame, k: Int, testMod: Long, maxDf: Long): DataFrame =
+    sharedShingles(documents, k, testMod, maxDf)
+      .groupBy("doc_id")
+      .agg(
+        countDistinct(col("shingle")).as("n_hit_shingles"),
+        countDistinct(col("test_doc_id")).as("n_test_docs"))
+
+  /** (doc_id, shingle, test_doc_id) for every DF-capped corpus shingle a
+    * test document shares — the chain [[contaminated]] and
+    * [[contaminationAudit]] group two ways. */
+  private def sharedShingles(documents: DataFrame, k: Int, testMod: Long,
+                             maxDf: Long): DataFrame = {
     val sh = shingles(documents, k)
     val test = sh.filter(col("doc_id") % testMod === 0)
       .select(col("doc_id").as("test_doc_id"), col("shingle"))
@@ -67,10 +78,6 @@ object Decontaminate {
     corpus
       .join(keep, Seq("shingle"), "left_semi")
       .join(test, "shingle")
-      .groupBy("doc_id")
-      .agg(
-        countDistinct(col("shingle")).as("n_hit_shingles"),
-        countDistinct(col("test_doc_id")).as("n_test_docs"))
   }
 
   /** Removal AUDIT (round-4 verdict #7): one row per (contaminated training
@@ -81,22 +88,10 @@ object Decontaminate {
     * this kind of per-collision accounting). Same shingling/cap semantics as
     * [[contaminated]]: `contaminated` == this table grouped by doc_id. */
   def contaminationAudit(documents: DataFrame, k: Int, testMod: Long,
-                         maxDf: Long): DataFrame = {
-    val sh = shingles(documents, k)
-    val test = sh.filter(col("doc_id") % testMod === 0)
-      .select(col("doc_id").as("test_doc_id"), col("shingle"))
-    // same double-consumer persist as [[contaminated]]
-    val corpus = DedupJobs.cacheTracked(sh.filter(col("doc_id") % testMod =!= 0))
-    val keep = corpus.groupBy("shingle")
-      .agg(count(lit(1)).as("df"))
-      .filter(col("df") <= maxDf)
-      .select("shingle")
-    corpus
-      .join(keep, Seq("shingle"), "left_semi")
-      .join(test, "shingle")
+                         maxDf: Long): DataFrame =
+    sharedShingles(documents, k, testMod, maxDf)
       .groupBy(col("doc_id"), col("test_doc_id"))
       .agg(
         countDistinct(col("shingle")).as("n_shared_shingles"),
         min(col("shingle")).as("example_shingle"))
-  }
 }

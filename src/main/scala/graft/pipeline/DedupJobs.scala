@@ -97,7 +97,7 @@ object DedupJobs {
 
   /** Band rows over a [[tokenSets]] table: the signature (min over tokens
     * of a seeded md5, per hash function) is ONE compiled in-row pass over
-    * the token array ([[graft.plans.MinHashSigExpr]]); band hash = md5 of
+    * the token array ([[graft.plans.TextHashExprs.minhashSig]]); band hash = md5 of
     * the band's concatenated row hashes. */
   private def signatureBands(toks: DataFrame, numHashes: Int, bands: Int): DataFrame = {
     require(numHashes % bands == 0, s"numHashes=$numHashes not divisible by bands=$bands")

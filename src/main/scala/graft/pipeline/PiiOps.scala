@@ -49,7 +49,7 @@ object PiiOps {
     "\\b(?:[0-9]{4}[- ]){3}[0-9]{4}\\b|\\b[0-9]{13,19}\\b"
 
   // compiled once per JVM; exposed so the fused pii_stats kernel
-  // (graft.plans.PiiStatsExpr) counts with the EXACT same pattern objects
+  // (graft.plans.PiiExprs.statsU) counts with the EXACT same pattern objects
   val emailPattern: Pattern = Pattern.compile(EmailRe)
   val phonePattern: Pattern = Pattern.compile(PhoneRe)
   val ipv4Pattern: Pattern = Pattern.compile(Ipv4Re)

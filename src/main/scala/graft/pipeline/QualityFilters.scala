@@ -29,7 +29,7 @@ object QualityFilters {
   /** Adds the signal columns + `passes` to a documents frame.
     *
     * All five signals come from ONE compiled byte pass per row
-    * ([[graft.plans.GopherSignalsExpr]]) — the composed form ran six
+    * ([[graft.plans.QualityExprs.gopherSignals]]) — the composed form ran six
     * passes per row (the `\s+` normalization regex + its string copy, a
     * `split` token-array build, three `replace` occurrence scans, a
     * `regexp_count`, and a `regexp_extract_all` + distinct). Arithmetic

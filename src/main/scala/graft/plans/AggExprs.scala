@@ -39,7 +39,7 @@ case class TopKMinAgg(
     rank: Expression, key: Expression, kExpr: Expression,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[TopKMinBuffer] {
+  extends TypedImperativeAggregate[TopKMinBuffer] with BespokeName {
 
   private lazy val k: Int = kExpr.eval().asInstanceOf[Number].intValue()
 
@@ -64,8 +64,6 @@ case class TopKMinAgg(
       return TypeCheckResult.TypeCheckFailure(s"$prettyName requires k > 0")
     TypeCheckResult.TypeCheckSuccess
   }
-
-  override def prettyName: String = "topk_min"
 
   @transient private lazy val keyOrdering: Ordering[Any] =
     TypeUtils.getInterpretedOrdering(key.dataType)
@@ -155,9 +153,5 @@ object TopKMinAgg {
   def fromExprs(exprs: Seq[Expression]): TopKMinAgg =
     TopKMinAgg(exprs(0), exprs(1), exprs(2))
 
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "topk_min", exprs => fromExprs(exprs), "built-in")
-  }
+  def register(spark: SparkSession): Unit = NativeFunctions.register(spark, this)
 }

@@ -1,11 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions.call_function
-import org.apache.spark.sql.types.{BinaryType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.pipeline.CharsetOps
@@ -16,122 +12,27 @@ import graft.pipeline.CharsetOps
   * ingest path — same tiering as [[UrlExprs]]: pure shared kernel, thin
   * UTF8String/byte[] shim, registered per-session and via
   * [[GraftExtensions]]. */
-
-/** `charset_sniff(bytes)` — detected encoding label of entity bytes. */
-case class CharsetSniffExpr(child: Expression) extends UnaryExpression {
-  override def prettyName: String = "charset_sniff"
-  override def dataType: DataType = StringType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a binary argument, got ${child.dataType}")
-  override protected def nullSafeEval(input: Any): Any =
-    CharsetExprs.sniffB(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.CharsetExprs.sniffB($c)")
-  override protected def withNewChildInternal(newChild: Expression): CharsetSniffExpr =
-    copy(child = newChild)
-}
-
-/** `charset_decode(bytes)` — sniff-then-decode (no trusted label). */
-case class CharsetDecodeExpr(child: Expression) extends UnaryExpression {
-  override def prettyName: String = "charset_decode"
-  override def dataType: DataType = StringType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a binary argument, got ${child.dataType}")
-  override protected def nullSafeEval(input: Any): Any =
-    CharsetExprs.decodeB(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.CharsetExprs.decodeB($c)")
-  override protected def withNewChildInternal(newChild: Expression): CharsetDecodeExpr =
-    copy(child = newChild)
-}
-
-/** `charset_decode_as(bytes, label)` — decode with a caller label (the
-  * HTTP Content-Type path; unknown labels fall back to windows-1252). */
-case class CharsetDecodeAsExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def prettyName: String = "charset_decode_as"
-  override def dataType: DataType = StringType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == BinaryType && right.dataType == StringType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires (binary, string), got (${left.dataType}, ${right.dataType})")
-  override protected def nullSafeEval(b: Any, l: Any): Any =
-    CharsetExprs.decodeAsB(b.asInstanceOf[Array[Byte]], l.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (b, l) => s"graft.plans.CharsetExprs.decodeAsB($b, $l)")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): CharsetDecodeAsExpr =
-    copy(left = newLeft, right = newRight)
-}
-
-/** `charset_encode(text, label)` — encode text for a sink (UTF-16 output
-  * carries its BOM; windows-1252 substitutes '?'; ascii drops). */
-case class CharsetEncodeExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def prettyName: String = "charset_encode"
-  override def dataType: DataType = BinaryType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == StringType && right.dataType == StringType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires (string, string), got (${left.dataType}, ${right.dataType})")
-  override protected def nullSafeEval(s: Any, l: Any): Any =
-    CharsetExprs.encodeAsB(s.asInstanceOf[UTF8String], l.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (s, l) => s"graft.plans.CharsetExprs.encodeAsB($s, $l)")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): CharsetEncodeExpr =
-    copy(left = newLeft, right = newRight)
-}
-
-/** `fix_mojibake(text)` — ftfy-style wrong-charset-decode repair. */
-case class FixMojibakeExpr(child: Expression) extends UnaryExpression {
-  override def prettyName: String = "fix_mojibake"
-  override def dataType: DataType = StringType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${child.dataType}")
-  override protected def nullSafeEval(input: Any): Any =
-    CharsetExprs.fixB(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.CharsetExprs.fixB($c)")
-  override protected def withNewChildInternal(newChild: Expression): FixMojibakeExpr =
-    copy(child = newChild)
-}
-
 object CharsetExprs {
-  /** Static entry points referenced from generated code. */
+  /** `charset_sniff(bytes)` — detected encoding label of entity bytes. */
   def sniffB(b: Array[Byte]): UTF8String =
     UTF8String.fromString(CharsetOps.sniff(b))
+  /** `charset_decode(bytes)` — sniff-then-decode (no trusted label). */
   def decodeB(b: Array[Byte]): UTF8String =
     UTF8String.fromString(CharsetOps.decode(b))
+  /** `charset_decode_as(bytes, label)` — decode with a caller label (the
+    * HTTP Content-Type path; unknown labels fall back to windows-1252). */
   def decodeAsB(b: Array[Byte], l: UTF8String): UTF8String =
     UTF8String.fromString(CharsetOps.decodeAs(b, l.toString))
+  /** `charset_encode(text, label)` — encode text for a sink (UTF-16 output
+    * carries its BOM; windows-1252 substitutes '?'; ascii drops). */
   def encodeAsB(s: UTF8String, l: UTF8String): Array[Byte] =
     CharsetOps.encodeAs(s.toString, l.toString)
+  /** `fix_mojibake(text)` — ftfy-style wrong-charset-decode repair. */
   def fixB(s: UTF8String): UTF8String =
     UTF8String.fromString(CharsetOps.fixMojibake(s.toString))
 
   /** Register all five for SQL/Column use in this session. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "charset_sniff", exprs => CharsetSniffExpr(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "charset_decode", exprs => CharsetDecodeExpr(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "charset_decode_as", exprs => CharsetDecodeAsExpr(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "charset_encode", exprs => CharsetEncodeExpr(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "fix_mojibake", exprs => FixMojibakeExpr(exprs.head), "built-in")
-  }
+  def register(spark: SparkSession): Unit = NativeFunctions.register(spark, this)
 
   /** Column-API forms (require [[register]] on the active session). */
   def charset_sniff(c: Column): Column = call_function("charset_sniff", c)

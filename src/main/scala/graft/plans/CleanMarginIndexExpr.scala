@@ -1,16 +1,12 @@
 package graft.plans
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions.call_function
-import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.extract.Cleaners
 
-/** Native Catalyst expression for the margin-index boilerplate strip (P1,
+/** Native Catalyst function for the margin-index boilerplate strip (P1,
   * `/root/reference/src/extractor.py:146-235`) — the optional codegen tier
   * flagged in SURVEY.md §2.2/§7.3. Semantics are exactly
   * [[Cleaners.cleanPdfIndexArtifacts]] (shared code path, covered by the
@@ -25,36 +21,13 @@ import graft.extract.Cleaners
   *   spark.sql("SELECT clean_margin_index(text) FROM t")
   * }}}
   */
-case class CleanMarginIndexExpr(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = StringType
-  override def prettyName: String = "clean_margin_index"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"clean_margin_index requires a string argument, got ${child.dataType}")
-
-  override protected def nullSafeEval(input: Any): Any =
-    CleanMarginIndexExpr.evalUtf8(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.plans.CleanMarginIndexExpr.evalUtf8($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): CleanMarginIndexExpr =
-    copy(child = newChild)
-}
-
 object CleanMarginIndexExpr {
   /** Static entry point referenced from generated code. */
   def evalUtf8(s: UTF8String): UTF8String =
     UTF8String.fromString(Cleaners.cleanPdfIndexArtifacts(s.toString))
 
   /** Register `clean_margin_index` for SQL/Column use in this session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "clean_margin_index", exprs => CleanMarginIndexExpr(exprs.head), "built-in")
+  def register(spark: SparkSession): Unit = NativeFunctions.register(spark, this)
 
   /** Column-API form (requires [[register]] on the active session). */
   def clean_margin_index(c: Column): Column =

@@ -2,9 +2,6 @@ package graft.plans
 
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
@@ -17,7 +14,8 @@ import graft.pipeline.FeedText
   * parses the full entry list as `array<struct<title,link,ts>>` — the
   * crawl-frontier discovery ops run inside whole-stage codegen in the
   * scan stage; downstream explodes the small entry array, never the
-  * feed document itself. */
+  * feed document itself. Both return null for NON-NULL input that is not
+  * a feed, so their table entries are null-on-non-null. */
 object FeedExprs {
 
   val entrySchema: StructType = StructType(Seq(
@@ -25,12 +23,14 @@ object FeedExprs {
     StructField("link", StringType, nullable = true),
     StructField("ts", StringType, nullable = true)))
 
+  /** `feed_kind(text)` — rss | atom | sitemap | null. */
   def kindS(s: UTF8String): UTF8String = {
     if (s == null) return null
     val k = FeedText.kind(s.toString)
     if (k == null) null else UTF8String.fromString(k)
   }
 
+  /** `feed_entries(text)` — parsed entry array (null when not a feed). */
   def entriesS(s: UTF8String): ArrayData = {
     if (s == null) return null
     val es = FeedText.entries(s.toString)
@@ -41,67 +41,8 @@ object FeedExprs {
       InternalRow(u(e.title), u(e.link), u(e.ts))).asInstanceOf[Array[Any]])
   }
 
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "feed_kind", exprs => FeedKindExpr(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "feed_entries", exprs => FeedEntriesExpr(exprs.head), "built-in")
-  }
+  def register(spark: SparkSession): Unit = NativeFunctions.register(spark, this)
 
   def feed_kind(c: Column): Column = call_function("feed_kind", c)
   def feed_entries(c: Column): Column = call_function("feed_entries", c)
-}
-
-abstract class FeedStringExpr extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${child.dataType}")
-}
-
-/** `feed_kind(text)` — rss | atom | sitemap | null. The kernel returns
-  * null for NON-NULL input (not a feed), so nullable is forced true and
-  * codegen re-checks the result (the FeedEntriesExpr discipline —
-  * `defineCodeGen` would leave isNull=false and NPE downstream). */
-case class FeedKindExpr(child: Expression) extends FeedStringExpr {
-  override def prettyName: String = "feed_kind"
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    FeedExprs.kindS(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.plans.FeedExprs.kindS($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override protected def withNewChildInternal(newChild: Expression): FeedKindExpr =
-    copy(child = newChild)
-}
-
-/** `feed_entries(text)` — parsed entry array (null when not a feed).
-  * nullSafeEval can return null for a non-null input (unrecognized
-  * root), so nullable stays true and codegen null-checks the result. */
-case class FeedEntriesExpr(child: Expression) extends FeedStringExpr {
-  override def prettyName: String = "feed_entries"
-  override def dataType: DataType =
-    ArrayType(FeedExprs.entrySchema, containsNull = false)
-  override protected def nullSafeEval(input: Any): Any =
-    FeedExprs.entriesS(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val c = child.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${c.code}
-        boolean ${ev.isNull} = true;
-        org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
-        if (!${c.isNull}) {
-          ${ev.value} = graft.plans.FeedExprs.entriesS(${c.value});
-          ${ev.isNull} = ${ev.value} == null;
-        }
-      """)
-  }
-  override protected def withNewChildInternal(newChild: Expression): FeedEntriesExpr =
-    copy(child = newChild)
 }

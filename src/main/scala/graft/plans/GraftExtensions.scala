@@ -2,7 +2,6 @@ package graft.plans
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** Standard extension entry point: installs the engine's native functions
   * into any session via
@@ -12,149 +11,12 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * }}}
   *
   * (or `SparkSession.builder().withExtensions(new GraftExtensions)`), so a
-  * cluster configured with this library gets `clean_margin_index` as a
-  * first-class SQL function without per-session registration calls. */
+  * cluster configured with this library gets every [[NativeFunctions]]
+  * entry as a first-class SQL function without per-session registration
+  * calls. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("clean_margin_index"),
-      new ExpressionInfo(classOf[CleanMarginIndexExpr].getName, "clean_margin_index"),
-      (exprs: Seq[Expression]) => CleanMarginIndexExpr(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("simhash16"),
-      new ExpressionInfo(classOf[SimHash16Expr].getName, "simhash16"),
-      (exprs: Seq[Expression]) => SimHash16Expr(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSigExpr].getName, "minhash_sig"),
-      (exprs: Seq[Expression]) => MinHashSigExpr(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("shingle_minmax"),
-      new ExpressionInfo(classOf[ShingleMinMaxExpr].getName, "shingle_minmax"),
-      (exprs: Seq[Expression]) => ShingleMinMaxExpr(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("url_canonicalize"),
-      new ExpressionInfo(classOf[UrlCanonicalizeExpr].getName, "url_canonicalize"),
-      (exprs: Seq[Expression]) => UrlCanonicalizeExpr(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("url_registrable_domain"),
-      new ExpressionInfo(classOf[RegistrableDomainExpr].getName, "url_registrable_domain"),
-      (exprs: Seq[Expression]) => RegistrableDomainExpr(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("url_host_reversed"),
-      new ExpressionInfo(classOf[ReverseHostExpr].getName, "url_host_reversed"),
-      (exprs: Seq[Expression]) => ReverseHostExpr(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("url_host"),
-      new ExpressionInfo(classOf[UrlHostExpr].getName, "url_host"),
-      (exprs: Seq[Expression]) => UrlHostExpr(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("robots_allowed"),
-      new ExpressionInfo(classOf[RobotsAllowedExpr].getName, "robots_allowed"),
-      (exprs: Seq[Expression]) => RobotsAllowedExpr(exprs(0), exprs(1), exprs(2))))
-    ext.injectFunction((
-      FunctionIdentifier("robots_crawl_delay"),
-      new ExpressionInfo(classOf[RobotsCrawlDelayExpr].getName, "robots_crawl_delay"),
-      (exprs: Seq[Expression]) => RobotsCrawlDelayExpr(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("charset_sniff"),
-      new ExpressionInfo(classOf[CharsetSniffExpr].getName, "charset_sniff"),
-      (exprs: Seq[Expression]) => CharsetSniffExpr(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("charset_decode"),
-      new ExpressionInfo(classOf[CharsetDecodeExpr].getName, "charset_decode"),
-      (exprs: Seq[Expression]) => CharsetDecodeExpr(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("charset_decode_as"),
-      new ExpressionInfo(classOf[CharsetDecodeAsExpr].getName, "charset_decode_as"),
-      (exprs: Seq[Expression]) => CharsetDecodeAsExpr(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("charset_encode"),
-      new ExpressionInfo(classOf[CharsetEncodeExpr].getName, "charset_encode"),
-      (exprs: Seq[Expression]) => CharsetEncodeExpr(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("fix_mojibake"),
-      new ExpressionInfo(classOf[FixMojibakeExpr].getName, "fix_mojibake"),
-      (exprs: Seq[Expression]) => FixMojibakeExpr(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("pii_redact"),
-      new ExpressionInfo(classOf[PiiRedactExpr].getName, "pii_redact"),
-      (exprs: Seq[Expression]) => PiiRedactExpr(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("pii_stats"),
-      new ExpressionInfo(classOf[PiiStatsExpr].getName, "pii_stats"),
-      (exprs: Seq[Expression]) => PiiStatsExpr(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("office_kind"),
-      new ExpressionInfo(classOf[OfficeKindExpr].getName, "office_kind"),
-      (exprs: Seq[Expression]) => OfficeKindExpr(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("office_text"),
-      new ExpressionInfo(classOf[OfficeTextExpr].getName, "office_text"),
-      (exprs: Seq[Expression]) => OfficeTextExpr(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("unicode_norm"),
-      new ExpressionInfo(classOf[UnicodeNormExpr].getName, "unicode_norm"),
-      (exprs: Seq[Expression]) => UnicodeNormExpr(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("norm_key"),
-      new ExpressionInfo(classOf[NormKeyExpr].getName, "norm_key"),
-      (exprs: Seq[Expression]) => NormKeyExpr(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("feed_kind"),
-      new ExpressionInfo(classOf[FeedKindExpr].getName, "feed_kind"),
-      (exprs: Seq[Expression]) => FeedKindExpr(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("feed_entries"),
-      new ExpressionInfo(classOf[FeedEntriesExpr].getName, "feed_entries"),
-      (exprs: Seq[Expression]) => FeedEntriesExpr(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("char_ngrams"),
-      new ExpressionInfo(classOf[CharNgramsExpr].getName, "char_ngrams"),
-      (exprs: Seq[Expression]) => CharNgramsExpr(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("window_hashes"),
-      new ExpressionInfo(classOf[WindowHashesExpr].getName, "window_hashes"),
-      (exprs: Seq[Expression]) => WindowHashesExpr(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("windows_at"),
-      new ExpressionInfo(classOf[WindowsAtExpr].getName, "windows_at"),
-      (exprs: Seq[Expression]) => WindowsAtExpr(exprs(0), exprs(1), exprs(2))))
-    ext.injectFunction((
-      FunctionIdentifier("remove_intervals"),
-      new ExpressionInfo(classOf[RemoveIntervalsExpr].getName, "remove_intervals"),
-      (exprs: Seq[Expression]) => RemoveIntervalsExpr(exprs(0), exprs(1), exprs(2))))
-    ext.injectFunction((
-      FunctionIdentifier("top_2gram"),
-      new ExpressionInfo(classOf[Top2GramExpr].getName, "top_2gram"),
-      (exprs: Seq[Expression]) => Top2GramExpr(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("gopher_signals"),
-      new ExpressionInfo(classOf[GopherSignalsExpr].getName, "gopher_signals"),
-      (exprs: Seq[Expression]) => GopherSignalsExpr(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("token_shingles_md5"),
-      new ExpressionInfo(classOf[TokenShinglesMd5Expr].getName, "token_shingles_md5"),
-      (exprs: Seq[Expression]) => TokenShinglesMd5Expr(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("norm_md5"),
-      new ExpressionInfo(classOf[NormMd5Expr].getName, "norm_md5"),
-      (exprs: Seq[Expression]) => NormMd5Expr(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("ws_normalize"),
-      new ExpressionInfo(classOf[WsNormalizeExpr].getName, "ws_normalize"),
-      (exprs: Seq[Expression]) => WsNormalizeExpr(exprs(0), exprs(1), exprs(2))))
-    ext.injectFunction((
-      FunctionIdentifier("ascii_tokens"),
-      new ExpressionInfo(classOf[AsciiTokensExpr].getName, "ascii_tokens"),
-      (exprs: Seq[Expression]) => AsciiTokensExpr(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[VecDotExpr].getName, "vec_dot"),
-      (exprs: Seq[Expression]) => VecDotExpr(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("topk_min"),
-      new ExpressionInfo(classOf[TopKMinAgg].getName, "topk_min"),
-      (exprs: Seq[Expression]) => TopKMinAgg.fromExprs(exprs)))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    NativeFunctions.all.foreach { f =>
+      ext.injectFunction((FunctionIdentifier(f.name), f.info, f.build))
+    }
 }

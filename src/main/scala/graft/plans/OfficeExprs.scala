@@ -1,11 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions.call_function
-import org.apache.spark.sql.types.{BinaryType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.pipeline.OfficeText
@@ -13,68 +9,21 @@ import graft.pipeline.OfficeText
 /** Native codegen'd forms of the [[graft.pipeline.OfficeText]] kernels
   * (DOCX/ODT container walk + text-model scan) so office-document
   * extraction runs inside whole-stage codegen on the ingest path — the
-  * [[CharsetExprs]] tiering. */
-abstract class OfficeBinaryToStringExpr extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a binary argument, got ${child.dataType}")
-}
-
-/** `office_kind(bytes)` — docx | odt | rtf | zip | null. The kernel
-  * returns null for NON-NULL input (unrecognized container), so nullable
-  * is forced true and codegen re-checks the result — `defineCodeGen`
-  * would leave isNull=false and NPE downstream under whole-stage codegen
-  * (the FeedEntriesExpr discipline). */
-case class OfficeKindExpr(child: Expression) extends OfficeBinaryToStringExpr {
-  override def prettyName: String = "office_kind"
-  override def nullable: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    OfficeExprs.kindB(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.plans.OfficeExprs.kindB($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override protected def withNewChildInternal(newChild: Expression): OfficeKindExpr =
-    copy(child = newChild)
-}
-
-/** `office_text(bytes)` — extracted plain text (null when unrecognized;
-  * same result-null codegen discipline as [[OfficeKindExpr]]). */
-case class OfficeTextExpr(child: Expression) extends OfficeBinaryToStringExpr {
-  override def prettyName: String = "office_text"
-  override def nullable: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    OfficeExprs.textB(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.plans.OfficeExprs.textB($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override protected def withNewChildInternal(newChild: Expression): OfficeTextExpr =
-    copy(child = newChild)
-}
-
+  * [[CharsetExprs]] tiering. Both return null for NON-NULL input (an
+  * unrecognized container), so their table entries are null-on-non-null. */
 object OfficeExprs {
-  /** Static entry points referenced from generated code. */
+  /** `office_kind(bytes)` — docx | odt | rtf | zip | null. */
   def kindB(b: Array[Byte]): UTF8String = {
     val k = OfficeText.kind(b)
     if (k == null) null else UTF8String.fromString(k)
   }
+  /** `office_text(bytes)` — extracted plain text (null when unrecognized). */
   def textB(b: Array[Byte]): UTF8String = {
     val t = OfficeText.text(b)
     if (t == null) null else UTF8String.fromString(t)
   }
 
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "office_kind", exprs => OfficeKindExpr(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "office_text", exprs => OfficeTextExpr(exprs.head), "built-in")
-  }
+  def register(spark: SparkSession): Unit = NativeFunctions.register(spark, this)
 
   /** Column-API forms (require [[register]] on the active session). */
   def office_kind(c: Column): Column = call_function("office_kind", c)

@@ -2,76 +2,36 @@ package graft.plans
 
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.functions.call_function
-import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.pipeline.PiiOps
 
-/** `pii_redact(text)` — typed-placeholder PII redaction as ONE codegen'd
-  * call: the four [[graft.pipeline.PiiOps]] patterns (email, card, ipv4,
-  * phone) precompiled once per JVM and applied in their documented
-  * sequence, instead of four chained `regexp_replace` plan nodes each
-  * round-tripping the row through UTF8String→String. Callers needing the
-  * detection counts too use [[PiiStatsExpr]], which fuses counts + Luhn +
-  * this redaction into one call. */
-case class PiiRedactExpr(child: Expression) extends UnaryExpression {
-  override def prettyName: String = "pii_redact"
-  override def dataType: DataType = StringType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${child.dataType}")
-  override protected def nullSafeEval(input: Any): Any =
-    PiiExprs.redactU(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.PiiExprs.redactU($c)")
-  override protected def withNewChildInternal(newChild: Expression): PiiRedactExpr =
-    copy(child = newChild)
-}
-
-/** `pii_stats(text)` — the full PII detection+redaction surface of
-  * q_pii_stats as ONE codegen'd call over the SAME compiled
-  * [[graft.pipeline.PiiOps]] patterns: per-pattern match COUNTS via bare
-  * `Matcher.find` loops (the composed `size(regexp_extract_all(...))`
-  * form materialized an array of match UTF8Strings per pattern just to
-  * take its size), the Luhn-valid card count inline (the composed form
-  * ran an INTERPRETED higher-order `filter` lambda with a per-element
-  * `regexp_replace` + `luhn_check` call), and the documented sequential
-  * redaction. Counting semantics are identical by construction — same
-  * pattern objects, and `regexp_extract_all` is itself a
-  * non-overlapping-leftmost `find` loop; Luhn parity with the Spark
-  * builtin is differential-tested in PiiSpec. */
-case class PiiStatsExpr(child: Expression) extends UnaryExpression {
-  override def prettyName: String = "pii_stats"
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_email", LongType, nullable = false),
-    StructField("n_phone", LongType, nullable = false),
-    StructField("n_ip", LongType, nullable = false),
-    StructField("n_card", LongType, nullable = false),
-    StructField("n_card_valid", LongType, nullable = false),
-    StructField("redacted", StringType, nullable = false)))
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${child.dataType}")
-  override protected def nullSafeEval(input: Any): Any =
-    PiiExprs.statsU(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.PiiExprs.statsU($c)")
-  override protected def withNewChildInternal(newChild: Expression): PiiStatsExpr =
-    copy(child = newChild)
-}
-
+/** Native codegen'd forms of the [[graft.pipeline.PiiOps]] detectors. */
 object PiiExprs {
-  /** Static entry point referenced from generated code. */
+  /** `pii_redact(text)` — typed-placeholder PII redaction as ONE codegen'd
+    * call: the four [[graft.pipeline.PiiOps]] patterns (email, card, ipv4,
+    * phone) precompiled once per JVM and applied in their documented
+    * sequence, instead of four chained `regexp_replace` plan nodes each
+    * round-tripping the row through UTF8String→String. Callers needing the
+    * detection counts too use `pii_stats`, which fuses counts + Luhn +
+    * this redaction into one call. */
   def redactU(s: UTF8String): UTF8String =
     UTF8String.fromString(PiiOps.redact(s.toString))
 
-  /** Static entry point for [[PiiStatsExpr]]. */
+  /** `pii_stats(text)` — the full PII detection+redaction surface of
+    * q_pii_stats as ONE codegen'd call over the SAME compiled
+    * [[graft.pipeline.PiiOps]] patterns: per-pattern match COUNTS via bare
+    * `Matcher.find` loops (the composed `size(regexp_extract_all(...))`
+    * form materialized an array of match UTF8Strings per pattern just to
+    * take its size), the Luhn-valid card count inline (the composed form
+    * ran an INTERPRETED higher-order `filter` lambda with a per-element
+    * `regexp_replace` + `luhn_check` call), and the documented sequential
+    * redaction. Counting semantics are identical by construction — same
+    * pattern objects, and `regexp_extract_all` is itself a
+    * non-overlapping-leftmost `find` loop; Luhn parity with the Spark
+    * builtin is differential-tested in PiiSpec. */
   def statsU(u: UTF8String): InternalRow = {
     val s = u.toString
     def count(p: java.util.regex.Pattern): Long = {
@@ -102,12 +62,7 @@ object PiiExprs {
       UTF8String.fromString(PiiOps.redact(s))))
   }
 
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "pii_redact", exprs => PiiRedactExpr(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "pii_stats", exprs => PiiStatsExpr(exprs.head), "built-in")
-  }
+  def register(spark: SparkSession): Unit = NativeFunctions.register(spark, this)
 
   /** Column-API form (requires [[register]] on the active session). */
   def pii_redact(c: Column): Column = call_function("pii_redact", c)

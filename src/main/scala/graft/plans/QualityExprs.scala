@@ -2,73 +2,9 @@ package graft.plans
 
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.functions.call_function
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
-
-/** `gopher_signals(text)` — every Gopher A1.1 signal of
-  * [[graft.pipeline.QualityFilters.gopherSignals]] computed in ONE
-  * compiled byte pass over the raw text, replacing six composed passes
-  * per row (the `\s+` normalization regex + its string copy, the
-  * `split` token array, three `replace` occurrence scans, one
-  * `regexp_count`, one `regexp_extract_all` + `array_distinct`).
-  *
-  * Semantics are replicated EXACTLY from the composed form (the DuckDB
-  * oracle replays that arithmetic, so any deviation fails the
-  * correctness gate; QualityFiltersSpec pins the differential on trap
-  * inputs):
-  *
-  *  - normalization: Java `\s` is ASCII-only ([ \t\n\x0B\f\r]), so
-  *    tokens are maximal runs of non-ASCII-whitespace bytes and
-  *    `length(nt)` = sum of token codepoint lengths + (n_tokens - 1);
-  *    non-ASCII whitespace (U+00A0...) stays INSIDE tokens, as in the
-  *    regex form;
-  *  - word_count = number of tokens (= `size(split(nt, " "))` on the
-  *    normalized string);
-  *  - mean_word_len_raw = (length(nt) - (n-1)) / n as the same single
-  *    double division of exact ints (= sum_cp / n);
-  *  - symbol occurrences mirror the replace-length arithmetic: every
-  *    '#', floor(run_of_dots / 3) per maximal '.' run (replace scans
-  *    left-to-right non-overlapping), every U+2026; runs cannot span
-  *    whitespace and are broken by any non-'.' codepoint, exactly as in
-  *    the normalized string. The per-occurrence divisions are exact in
-  *    double (3k/3), so the sum and the final ratio reproduce bit-equal;
-  *  - alpha_word_ratio counts tokens containing [A-Za-z] — exactly one
-  *    `(?:^| )[^ ]*[A-Za-z]` match per such token (the greedy run can
-  *    never cross a space, so matches and tokens are 1:1);
-  *  - n_stopwords = distinct stopword TYPES: a token counts iff its
-  *    lowercase equals one of the eight stopwords. ASCII tokens compare
-  *    byte-wise; a non-ASCII token of <= 4 codepoints is lowercased via
-  *    the same `String.toLowerCase()` the builtin `lower` delegates to
-  *    (so 'iſ' -> "is" still counts — the long-s trap); longer tokens
-  *    cannot lower to a <= 4-char stopword because Java lowercasing
-  *    never shrinks the codepoint count.
-  *
-  * Zero-token input returns (0, 0.0, 0.0, 0.0, 0) — the composed form's
-  * `when(n === 0, ...)` arms. Callers coalesce null text to "" exactly
-  * as before. */
-case class GopherSignalsExpr(child: Expression) extends UnaryExpression {
-  override def prettyName: String = "gopher_signals"
-  override def dataType: DataType = StructType(Seq(
-    StructField("word_count", LongType, nullable = false),
-    StructField("mean_raw", DoubleType, nullable = false),
-    StructField("symbol_raw", DoubleType, nullable = false),
-    StructField("alpha_raw", DoubleType, nullable = false),
-    StructField("n_stopwords", LongType, nullable = false)))
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${child.dataType}")
-  override protected def nullSafeEval(input: Any): Any =
-    QualityExprs.gopherSignals(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.QualityExprs.gopherSignals($c)")
-  override protected def withNewChildInternal(newChild: Expression): GopherSignalsExpr =
-    copy(child = newChild)
-}
 
 object QualityExprs {
 
@@ -84,7 +20,47 @@ object QualityExprs {
   @inline private def isWs(b: Byte): Boolean =
     b == ' ' || b == '\t' || b == '\n' || b == 0x0b || b == '\f' || b == '\r'
 
-  /** Static entry point referenced from generated code. */
+  /** `gopher_signals(text)` — every Gopher A1.1 signal of
+    * [[graft.pipeline.QualityFilters.gopherSignals]] computed in ONE
+    * compiled byte pass over the raw text, replacing six composed passes
+    * per row (the `\s+` normalization regex + its string copy, the
+    * `split` token array, three `replace` occurrence scans, one
+    * `regexp_count`, one `regexp_extract_all` + `array_distinct`).
+    *
+    * Semantics are replicated EXACTLY from the composed form (the DuckDB
+    * oracle replays that arithmetic, so any deviation fails the
+    * correctness gate; QualityFiltersSpec pins the differential on trap
+    * inputs):
+    *
+    *  - normalization: Java `\s` is ASCII-only ([ \t\n\x0B\f\r]), so
+    *    tokens are maximal runs of non-ASCII-whitespace bytes and
+    *    `length(nt)` = sum of token codepoint lengths + (n_tokens - 1);
+    *    non-ASCII whitespace (U+00A0...) stays INSIDE tokens, as in the
+    *    regex form;
+    *  - word_count = number of tokens (= `size(split(nt, " "))` on the
+    *    normalized string);
+    *  - mean_word_len_raw = (length(nt) - (n-1)) / n as the same single
+    *    double division of exact ints (= sum_cp / n);
+    *  - symbol occurrences mirror the replace-length arithmetic: every
+    *    '#', floor(run_of_dots / 3) per maximal '.' run (replace scans
+    *    left-to-right non-overlapping), every U+2026; runs cannot span
+    *    whitespace and are broken by any non-'.' codepoint, exactly as in
+    *    the normalized string. The per-occurrence divisions are exact in
+    *    double (3k/3), so the sum and the final ratio reproduce bit-equal;
+    *  - alpha_word_ratio counts tokens containing [A-Za-z] — exactly one
+    *    `(?:^| )[^ ]*[A-Za-z]` match per such token (the greedy run can
+    *    never cross a space, so matches and tokens are 1:1);
+    *  - n_stopwords = distinct stopword TYPES: a token counts iff its
+    *    lowercase equals one of the eight stopwords. ASCII tokens compare
+    *    byte-wise; a non-ASCII token of <= 4 codepoints is lowercased via
+    *    the same `String.toLowerCase()` the builtin `lower` delegates to
+    *    (so 'iſ' -> "is" still counts — the long-s trap); longer tokens
+    *    cannot lower to a <= 4-char stopword because Java lowercasing
+    *    never shrinks the codepoint count.
+    *
+    * Zero-token input returns (0, 0.0, 0.0, 0.0, 0) — the composed form's
+    * `when(n === 0, ...)` arms. Callers coalesce null text to "" exactly
+    * as before. */
   def gopherSignals(u: UTF8String): InternalRow = {
     val bytes = u.getBytes
     val n = bytes.length
@@ -176,10 +152,7 @@ object QualityExprs {
       nTok, meanRaw, symRaw, alphaRaw, java.lang.Long.bitCount(stopMask.toLong).toLong))
   }
 
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "gopher_signals", exprs => GopherSignalsExpr(exprs.head), "built-in")
-  }
+  def register(spark: SparkSession): Unit = NativeFunctions.register(spark, this)
 
   /** Column-API form (requires [[register]] on the active session). */
   def gopher_signals(c: Column): Column = call_function("gopher_signals", c)

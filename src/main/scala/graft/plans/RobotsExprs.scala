@@ -1,11 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions.call_function
-import org.apache.spark.sql.types.{BooleanType, DataType, DoubleType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.pipeline.RobotsOps
@@ -17,70 +13,18 @@ import graft.pipeline.RobotsOps
   * registration. The kernel's bounded (robots, agent) policy cache makes
   * the per-row cost a cached-rule scan — one robots.txt is shared by
   * every URL of its site. */
-
-/** `robots_allowed(robots_txt, agent, path)` — RFC 9309 §2.2.2 verdict. */
-case class RobotsAllowedExpr(first: Expression, second: Expression,
-                             third: Expression) extends TernaryExpression {
-  override def prettyName: String = "robots_allowed"
-  override def dataType: DataType = BooleanType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (children.forall(_.dataType == StringType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires (string, string, string) arguments")
-  override protected def nullSafeEval(r: Any, a: Any, p: Any): Any =
-    RobotsOps.isAllowed(r.asInstanceOf[UTF8String].toString,
-      a.asInstanceOf[UTF8String].toString, p.asInstanceOf[UTF8String].toString)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (r, a, p) =>
-      s"graft.plans.RobotsExprs.allowed($r, $a, $p)")
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression,
-      newThird: Expression): RobotsAllowedExpr =
-    copy(first = newFirst, second = newSecond, third = newThird)
-}
-
-/** `robots_crawl_delay(robots_txt, agent)` — the group's Crawl-delay in
-  * seconds, NULL when the group declares none. */
-case class RobotsCrawlDelayExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def prettyName: String = "robots_crawl_delay"
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (children.forall(_.dataType == StringType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires (string, string) arguments")
-  override def nullSafeEval(r: Any, a: Any): Any =
-    RobotsOps.crawlDelay(r.asInstanceOf[UTF8String].toString,
-      a.asInstanceOf[UTF8String].toString).map(java.lang.Double.valueOf).orNull
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (r, a) => {
-      val boxed = ctx.freshName("delay")
-      s"""java.lang.Double $boxed = graft.plans.RobotsExprs.delay($r, $a);
-         |if ($boxed == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = $boxed.doubleValue(); }""".stripMargin
-    })
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): RobotsCrawlDelayExpr =
-    copy(left = newLeft, right = newRight)
-}
-
 object RobotsExprs {
-  /** Static entry points referenced from generated code. */
+  /** `robots_allowed(robots_txt, agent, path)` — RFC 9309 §2.2.2 verdict. */
   def allowed(r: UTF8String, a: UTF8String, p: UTF8String): Boolean =
     RobotsOps.isAllowed(r.toString, a.toString, p.toString)
+  /** `robots_crawl_delay(robots_txt, agent)` — the group's Crawl-delay in
+    * seconds, NULL when the group declares none. */
   def delay(r: UTF8String, a: UTF8String): java.lang.Double =
     RobotsOps.crawlDelay(r.toString, a.toString)
       .map(java.lang.Double.valueOf).orNull
 
   /** Register both for SQL/Column use in this session. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("robots_allowed",
-      exprs => RobotsAllowedExpr(exprs(0), exprs(1), exprs(2)), "built-in")
-    reg.createOrReplaceTempFunction("robots_crawl_delay",
-      exprs => RobotsCrawlDelayExpr(exprs(0), exprs(1)), "built-in")
-  }
+  def register(spark: SparkSession): Unit = NativeFunctions.register(spark, this)
 
   /** Column-API forms (require [[register]] on the active session). */
   def robots_allowed(robots: Column, agent: Column, path: Column): Column =

@@ -5,7 +5,7 @@ import java.security.MessageDigest
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions.call_function
@@ -18,8 +18,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * votes/minima, `md5(substring(nt, i, 8))` shingles) — what these add is a
   * single compiled pass per row: no interpreted higher-order-function
   * lambdas, no per-element struct/array churn, one reused MessageDigest.
-  * Each stays inside whole-stage codegen via a static-call `defineCodeGen`
-  * (the [[CleanMarginIndexExpr]] pattern).
+  * Each is a [[NativeFunctions]] table entry: a static call inside
+  * whole-stage codegen.
   *
   * Hex-vs-binary note: minima/maxima are tracked on raw digest bytes and
   * hex-encoded once at the end — valid because the nibble→char map of
@@ -291,10 +291,6 @@ object TextHashExprs {
     UTF8String.fromBytes(out.toByteArray)
   }
 
-  /** Register all four for SQL/Column use in this session. Idempotent per
-    * session: every re-registration logs a `SimpleFunctionRegistry` WARN per
-    * function, and query closures call this defensively, so a bench run
-    * would otherwise spam dozens of replaced-function warnings. */
   /** Most frequent word 2-gram of a single-space-normalized string, as
     * (gram, count) — ties broken to the binary-smallest gram, exactly the
     * `(count DESC, gram ASC)` window rank over exploded 2-gram rows it
@@ -418,7 +414,8 @@ object TextHashExprs {
     * `lower` uses (so ſ/İ/Σ behave identically). For the hot paths that
     * feed a normalized string into another builtin (md5 fingerprints,
     * char_ngrams shingles, split tokenizers), this replaces a
-    * regex-engine scan plus ~4 buffer copies per row with one pass. */
+    * regex-engine scan plus ~4 buffer copies per row with one pass.
+    * In SQL, `ws_normalize(text, trim, lower)` takes literal booleans. */
   def wsNormalize(raw: UTF8String, doTrim: Boolean, doLower: Boolean): UTF8String = {
     val b = raw.getBytes
     val n = b.length
@@ -466,7 +463,8 @@ object TextHashExprs {
     * the scan runs on the LOWERED bytes exactly like the regex), then
     * maximal [a-z0-9] byte runs are sliced off directly (multi-byte
     * UTF-8 units never contain ASCII bytes, so a byte scan is exact).
-    * Non-overlapping leftmost maximal runs == the regex's match set. */
+    * Non-overlapping leftmost maximal runs == the regex's match set.
+    * Non-null input always yields an array (possibly empty). */
   def asciiTokens(raw: UTF8String): ArrayData = {
     val b = raw.toLowerCase.getBytes
     val n = b.length
@@ -494,38 +492,7 @@ object TextHashExprs {
     new GenericArrayData(out)
   }
 
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("simhash16"))) {
-      reg.createOrReplaceTempFunction(
-        "simhash16", exprs => SimHash16Expr(exprs.head), "built-in")
-      reg.createOrReplaceTempFunction(
-        "minhash_sig", exprs => MinHashSigExpr(exprs(0), exprs(1)), "built-in")
-      reg.createOrReplaceTempFunction(
-        "shingle_minmax", exprs => ShingleMinMaxExpr(exprs(0), exprs(1)), "built-in")
-      reg.createOrReplaceTempFunction(
-        "char_ngrams", exprs => CharNgramsExpr(exprs(0), exprs(1)), "built-in")
-      reg.createOrReplaceTempFunction(
-        "window_hashes", exprs => WindowHashesExpr(exprs(0), exprs(1)), "built-in")
-      reg.createOrReplaceTempFunction(
-        "windows_at", exprs => WindowsAtExpr(exprs(0), exprs(1), exprs(2)), "built-in")
-      reg.createOrReplaceTempFunction(
-        "remove_intervals", exprs => RemoveIntervalsExpr(exprs(0), exprs(1), exprs(2)), "built-in")
-      reg.createOrReplaceTempFunction(
-        "top_2gram", exprs => Top2GramExpr(exprs.head), "built-in")
-      reg.createOrReplaceTempFunction(
-        "token_shingles_md5",
-        exprs => TokenShinglesMd5Expr(exprs(0), exprs(1)), "built-in")
-      reg.createOrReplaceTempFunction(
-        "norm_md5", exprs => NormMd5Expr(exprs.head), "built-in")
-      reg.createOrReplaceTempFunction(
-        "ws_normalize",
-        exprs => WsNormalizeExpr(exprs(0), exprs(1), exprs(2)), "built-in")
-      reg.createOrReplaceTempFunction(
-        "ascii_tokens", exprs => AsciiTokensExpr(exprs.head), "built-in")
-    }
-  }
+  def register(spark: SparkSession): Unit = NativeFunctions.register(spark, this)
 
   def simhash16(tokens: Column): Column = call_function("simhash16", tokens)
   def minhash_sig(tokens: Column, numHashes: Column): Column =
@@ -551,225 +518,19 @@ object TextHashExprs {
   def ascii_tokens(raw: Column): Column = call_function("ascii_tokens", raw)
 }
 
-/** `ascii_tokens(text)` — the dedup-family tokenizer, one compiled pass
-  * (see [[TextHashExprs.asciiTokens]]). Non-null input always yields an
-  * array (possibly empty). */
-case class AsciiTokensExpr(child: Expression) extends UnaryExpression {
-  override def prettyName: String = "ascii_tokens"
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${child.dataType}")
-  override protected def nullSafeEval(input: Any): Any =
-    TextHashExprs.asciiTokens(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.TextHashExprs.asciiTokens($c)")
-  override protected def withNewChildInternal(newChild: Expression): AsciiTokensExpr =
-    copy(child = newChild)
-}
-
-/** `ws_normalize(text, trim, lower)` — the normalized string in one byte
-  * walk (see [[TextHashExprs.wsNormalize]]); `trim`/`lower` are literal
-  * booleans. */
-case class WsNormalizeExpr(first: Expression, second: Expression, third: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.TernaryExpression {
-  override def prettyName: String = "ws_normalize"
-  override def dataType: DataType = StringType
-  override def checkInputDataTypes(): TypeCheckResult =
-    (first.dataType, second.dataType, third.dataType) match {
-      case (StringType, BooleanType, BooleanType)
-          if second.foldable && third.foldable =>
-        TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (string, literal boolean, literal boolean), got $other")
-    }
-  override protected def nullSafeEval(s: Any, t: Any, l: Any): Any =
-    TextHashExprs.wsNormalize(s.asInstanceOf[UTF8String],
-      t.asInstanceOf[Boolean], l.asInstanceOf[Boolean])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (s, t, l) =>
-      s"graft.plans.TextHashExprs.wsNormalize($s, $t, $l)")
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): WsNormalizeExpr =
-    copy(first = f, second = s, third = t)
-}
-
-/** `norm_md5(text)` — md5 of the whitespace-normalized text, one byte
-  * walk (see [[TextHashExprs.normMd5]]). */
-case class NormMd5Expr(child: Expression) extends UnaryExpression {
-  override def prettyName: String = "norm_md5"
-  override def dataType: DataType = StringType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${child.dataType}")
-  override protected def nullSafeEval(input: Any): Any =
-    TextHashExprs.normMd5(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.TextHashExprs.normMd5($c)")
-  override protected def withNewChildInternal(newChild: Expression): NormMd5Expr =
-    copy(child = newChild)
-}
-
-/** `token_shingles_md5(nt, k)` — distinct md5s of all k-token windows,
-  * one compiled pass (see [[TextHashExprs.tokenShinglesMd5]]). Non-null
-  * input always yields an array (possibly empty), so `defineCodeGen`'s
-  * non-null contract holds. */
-case class TokenShinglesMd5Expr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def prettyName: String = "token_shingles_md5"
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (StringType, IntegerType) if right.foldable =>
-        TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (string, literal int), got $other")
-    }
-  override protected def nullSafeEval(s: Any, k: Any): Any =
-    TextHashExprs.tokenShinglesMd5(s.asInstanceOf[UTF8String], k.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (s, k) =>
-      s"graft.plans.TextHashExprs.tokenShinglesMd5($s, $k)")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): TokenShinglesMd5Expr =
-    copy(left = newLeft, right = newRight)
-}
-
-/** `top_2gram(nt)` — most frequent word 2-gram + count of a normalized
-  * string; NULL below two tokens (see [[TextHashExprs.top2gram]]). */
-case class Top2GramExpr(child: Expression) extends UnaryExpression {
-  override def prettyName: String = "top_2gram"
-  override def dataType: DataType = StructType(Seq(
-    StructField("gram", StringType, nullable = false),
-    StructField("cnt", LongType, nullable = false)))
-  // NULL for non-null input (< 2 tokens): nullable forced true, codegen
-  // re-checks the kernel result (the FeedEntriesExpr discipline)
-  override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${child.dataType}")
-  override protected def nullSafeEval(input: Any): Any =
-    TextHashExprs.top2gram(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.plans.TextHashExprs.top2gram($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override protected def withNewChildInternal(newChild: Expression): Top2GramExpr =
-    copy(child = newChild)
-}
-
-/** `window_hashes(text, w)` — stride-1 window positions + xxhash64
-  * (seed 42, bit-identical to `xxhash64(substr(text, pos, w))`). */
-case class WindowHashesExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def prettyName: String = "window_hashes"
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("pos", IntegerType, nullable = false),
-    StructField("h", LongType, nullable = false))), containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == StringType && right.dataType == IntegerType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires (string, int), got (${left.dataType}, ${right.dataType})")
-  override protected def nullSafeEval(s: Any, w: Any): Any =
-    TextHashExprs.windowHashes(s.asInstanceOf[UTF8String], w.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (s, w) => s"graft.plans.TextHashExprs.windowHashes($s, $w)")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): WindowHashesExpr =
-    copy(left = newLeft, right = newRight)
-}
-
-/** `windows_at(text, positions, w)` — the `w`-codepoint window at each
-  * 1-based position, sliced off one shared offset index. */
-case class WindowsAtExpr(first: Expression, second: Expression, third: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.TernaryExpression {
-  override def prettyName: String = "windows_at"
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("pos", IntegerType, nullable = false),
-    StructField("s", StringType, nullable = false))), containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult =
-    (first.dataType, second.dataType, third.dataType) match {
-      case (StringType, ArrayType(IntegerType, _), IntegerType) =>
-        TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (string, array<int>, int), got $other")
-    }
-  override protected def nullSafeEval(s: Any, ps: Any, w: Any): Any =
-    TextHashExprs.windowsAt(s.asInstanceOf[UTF8String],
-      ps.asInstanceOf[ArrayData], w.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (s, ps, w) =>
-      s"graft.plans.TextHashExprs.windowsAt($s, $ps, $w)")
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): WindowsAtExpr =
-    copy(first = f, second = s, third = t)
-}
-
-/** `remove_intervals(text, sorted_positions, w)` — complement of the
-  * union of the `w`-codepoint windows, one byte pass. */
-case class RemoveIntervalsExpr(first: Expression, second: Expression, third: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.TernaryExpression {
-  override def prettyName: String = "remove_intervals"
-  override def dataType: DataType = StringType
-  override def checkInputDataTypes(): TypeCheckResult =
-    (first.dataType, second.dataType, third.dataType) match {
-      case (StringType, ArrayType(IntegerType, _), IntegerType) =>
-        TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (string, array<int>, int), got $other")
-    }
-  override protected def nullSafeEval(s: Any, ps: Any, w: Any): Any =
-    TextHashExprs.removeIntervals(s.asInstanceOf[UTF8String],
-      ps.asInstanceOf[ArrayData], w.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (s, ps, w) =>
-      s"graft.plans.TextHashExprs.removeIntervals($s, $ps, $w)")
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): RemoveIntervalsExpr =
-    copy(first = f, second = s, third = t)
-}
-
-/** `char_ngrams(text, n)` — all overlapping codepoint n-grams, one pass.
-  * Non-null input always yields an array (possibly empty), so
-  * `defineCodeGen`'s non-null contract holds. */
-case class CharNgramsExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def prettyName: String = "char_ngrams"
-  override def dataType: DataType =
-    ArrayType(StringType, containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == StringType && right.dataType == IntegerType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires (string, int), got (${left.dataType}, ${right.dataType})")
-  override protected def nullSafeEval(s: Any, n: Any): Any =
-    TextHashExprs.charNgrams(s.asInstanceOf[UTF8String], n.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (s, n) => s"graft.plans.TextHashExprs.charNgrams($s, $n)")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): CharNgramsExpr =
-    copy(left = newLeft, right = newRight)
-}
-
 /** NULL on an empty token array: a zero-token doc has no defined simhash —
   * every tie-break would set all 16 bits (0xFFFF), a misleading "hash", and
   * the GROUP BY form this replaces emitted no row at all for such docs. The
   * function is registered session-wide for SQL, so the empty case must be
   * safe without every call site pre-filtering. */
-case class SimHash16Expr(child: Expression) extends UnaryExpression {
+case class SimHash16Expr(child: Expression) extends UnaryExpression with BespokeName {
   override def dataType: DataType = LongType
-  override def prettyName: String = "simhash16"
   override def nullable: Boolean = true
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
     case other => TypeCheckResult.TypeCheckFailure(
-      s"simhash16 requires array<string>, got $other")
+      s"$prettyName requires array<string>, got $other")
   }
 
   override protected def nullSafeEval(input: Any): Any = {
@@ -789,50 +550,4 @@ case class SimHash16Expr(child: Expression) extends UnaryExpression {
 
   override protected def withNewChildInternal(newChild: Expression): SimHash16Expr =
     copy(child = newChild)
-}
-
-case class MinHashSigExpr(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = true)
-  override def prettyName: String = "minhash_sig"
-
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (ArrayType(StringType, _), IntegerType) if right.foldable =>
-      TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"minhash_sig requires (array<string>, literal int), got $other")
-  }
-
-  override protected def nullSafeEval(tokens: Any, k: Any): Any =
-    TextHashExprs.minhashSig(tokens.asInstanceOf[ArrayData], k.asInstanceOf[Int])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (t, k) => s"graft.plans.TextHashExprs.minhashSig($t, $k)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): MinHashSigExpr =
-    copy(left = newLeft, right = newRight)
-}
-
-case class ShingleMinMaxExpr(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = StructType(Seq(
-    StructField("mn", StringType, nullable = true),
-    StructField("mx", StringType, nullable = true)))
-  override def prettyName: String = "shingle_minmax"
-
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (StringType, IntegerType) if right.foldable =>
-      TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"shingle_minmax requires (string, literal int), got $other")
-  }
-
-  override protected def nullSafeEval(nt: Any, width: Any): Any =
-    TextHashExprs.shingleMinMax(nt.asInstanceOf[UTF8String], width.asInstanceOf[Int])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (s, w) => s"graft.plans.TextHashExprs.shingleMinMax($s, $w)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): ShingleMinMaxExpr =
-    copy(left = newLeft, right = newRight)
 }

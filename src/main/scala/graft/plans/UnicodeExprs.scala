@@ -3,11 +3,7 @@ package graft.plans
 import java.text.Normalizer
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions.call_function
-import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Unicode normalization (UAX #15) as native codegen'd expressions — the
@@ -30,6 +26,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * codegen, zero shuffle, predicate-pushdown-transparent. */
 object UnicodeNorm {
 
+  /** `unicode_norm(text, form)` — UAX #15 normalization to a named form.
+    * Null for NON-NULL input when the form is unknown, so the table entry
+    * is null-on-non-null. */
   def norm(s: UTF8String, form: UTF8String): UTF8String = {
     if (s == null || form == null) return null
     val f = form.toString.toUpperCase match {
@@ -42,7 +41,8 @@ object UnicodeNorm {
     UTF8String.fromString(Normalizer.normalize(s.toString, f))
   }
 
-  /** NFC → lower(ROOT) → NFD → strip Mn/Me/Mc marks → NFC. */
+  /** `norm_key(text)` — accent/case/form-insensitive dedup key:
+    * NFC → lower(ROOT) → NFD → strip Mn/Me/Mc marks → NFC. */
   def key(s: UTF8String): UTF8String = {
     if (s == null) return null
     val lowered = Normalizer.normalize(s.toString, Normalizer.Form.NFC)
@@ -60,57 +60,9 @@ object UnicodeNorm {
     UTF8String.fromString(Normalizer.normalize(sb.toString, Normalizer.Form.NFC))
   }
 
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "unicode_norm", exprs => UnicodeNormExpr(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "norm_key", exprs => NormKeyExpr(exprs.head), "built-in")
-  }
+  def register(spark: SparkSession): Unit = NativeFunctions.register(spark, this)
 
   def unicode_norm(c: Column, form: String): Column =
     call_function("unicode_norm", c, org.apache.spark.sql.functions.lit(form))
   def norm_key(c: Column): Column = call_function("norm_key", c)
-}
-
-/** `unicode_norm(text, form)` — UAX #15 normalization to a named form. */
-case class UnicodeNormExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def prettyName: String = "unicode_norm"
-  override def dataType: DataType = StringType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == StringType && right.dataType == StringType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires (string, string), got (${left.dataType}, ${right.dataType})")
-  // norm() returns null for NON-NULL input (unknown form), so nullable is
-  // forced true and codegen re-checks the result — defineCodeGen would
-  // leave isNull=false and NPE downstream under whole-stage codegen.
-  override def nullable: Boolean = true
-  override protected def nullSafeEval(s: Any, f: Any): Any =
-    UnicodeNorm.norm(s.asInstanceOf[UTF8String], f.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (s, f) => s"""
-      ${ev.value} = graft.plans.UnicodeNorm.norm($s, $f);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): UnicodeNormExpr =
-    copy(left = newLeft, right = newRight)
-}
-
-/** `norm_key(text)` — accent/case/form-insensitive dedup key. */
-case class NormKeyExpr(child: Expression) extends UnaryExpression {
-  override def prettyName: String = "norm_key"
-  override def dataType: DataType = StringType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${child.dataType}")
-  override protected def nullSafeEval(s: Any): Any =
-    UnicodeNorm.key(s.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.UnicodeNorm.key($c)")
-  override protected def withNewChildInternal(newChild: Expression): NormKeyExpr =
-    copy(child = newChild)
 }

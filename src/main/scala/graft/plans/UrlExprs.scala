@@ -1,11 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions.call_function
-import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.pipeline.UrlOps
@@ -16,83 +12,25 @@ import graft.pipeline.UrlOps
   * codegen on full-corpus paths — the same tiering as
   * [[CleanMarginIndexExpr]]: pure shared kernel, thin UTF8String shim,
   * registered both per-session and via [[GraftExtensions]]. */
-abstract class UrlStringExpr extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${child.dataType}")
-}
-
-/** `url_canonicalize(url)` — RFC 3986 §6 + crawl-convention canonical form. */
-case class UrlCanonicalizeExpr(child: Expression) extends UrlStringExpr {
-  override def prettyName: String = "url_canonicalize"
-  override protected def nullSafeEval(input: Any): Any =
-    UrlExprs.canonUtf8(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.UrlExprs.canonUtf8($c)")
-  override protected def withNewChildInternal(newChild: Expression): UrlCanonicalizeExpr =
-    copy(child = newChild)
-}
-
-/** `url_registrable_domain(host)` — eTLD+1 site key of a canonical host. */
-case class RegistrableDomainExpr(child: Expression) extends UrlStringExpr {
-  override def prettyName: String = "url_registrable_domain"
-  override protected def nullSafeEval(input: Any): Any =
-    UrlExprs.domainUtf8(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.UrlExprs.domainUtf8($c)")
-  override protected def withNewChildInternal(newChild: Expression): RegistrableDomainExpr =
-    copy(child = newChild)
-}
-
-/** `url_host_reversed(host)` — SURT-style reversed host (site row key). */
-case class ReverseHostExpr(child: Expression) extends UrlStringExpr {
-  override def prettyName: String = "url_host_reversed"
-  override protected def nullSafeEval(input: Any): Any =
-    UrlExprs.reverseUtf8(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.UrlExprs.reverseUtf8($c)")
-  override protected def withNewChildInternal(newChild: Expression): ReverseHostExpr =
-    copy(child = newChild)
-}
-
-/** `url_host(url)` — host of a hierarchical URL (null if not one). */
-case class UrlHostExpr(child: Expression) extends UrlStringExpr {
-  override def prettyName: String = "url_host"
-  override protected def nullSafeEval(input: Any): Any =
-    UrlExprs.hostUtf8(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.UrlExprs.hostUtf8($c)")
-  override protected def withNewChildInternal(newChild: Expression): UrlHostExpr =
-    copy(child = newChild)
-}
-
 object UrlExprs {
-  /** Static entry points referenced from generated code. */
+  /** `url_canonicalize(url)` — RFC 3986 §6 + crawl-convention canonical form. */
   def canonUtf8(s: UTF8String): UTF8String =
     UTF8String.fromString(UrlOps.canonicalize(s.toString))
+  /** `url_registrable_domain(host)` — eTLD+1 site key of a canonical host. */
   def domainUtf8(s: UTF8String): UTF8String =
     UTF8String.fromString(UrlOps.registrableDomain(s.toString))
+  /** `url_host_reversed(host)` — SURT-style reversed host (site row key). */
   def reverseUtf8(s: UTF8String): UTF8String =
     UTF8String.fromString(UrlOps.reverseHost(s.toString))
+  /** `url_host(url)` — host of a hierarchical URL; null for non-null input
+    * that is not one (`mailto:`, bare text). */
   def hostUtf8(s: UTF8String): UTF8String = {
     val h = UrlOps.hostOf(s.toString)
     if (h == null) null else UTF8String.fromString(h)
   }
 
   /** Register all four for SQL/Column use in this session. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "url_canonicalize", exprs => UrlCanonicalizeExpr(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "url_registrable_domain", exprs => RegistrableDomainExpr(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "url_host_reversed", exprs => ReverseHostExpr(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "url_host", exprs => UrlHostExpr(exprs.head), "built-in")
-  }
+  def register(spark: SparkSession): Unit = NativeFunctions.register(spark, this)
 
   /** Column-API forms (require [[register]] on the active session). */
   def url_canonicalize(c: Column): Column = call_function("url_canonicalize", c)

@@ -43,11 +43,7 @@ object VecExprs {
     s
   }
 
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "vec_dot", exprs => VecDotExpr(exprs(0), exprs(1)), "built-in")
-  }
+  def register(spark: SparkSession): Unit = NativeFunctions.register(spark, this)
 
   /** Column-API form (requires [[register]] on the active session). */
   def vec_dot(a: Column, b: Column): Column = call_function("vec_dot", a, b)
@@ -56,11 +52,10 @@ object VecExprs {
 /** `vec_dot(a, b)` — exact fold-left dot product as double; NULL on
   * length mismatch or null elements (see [[VecExprs]]). */
 case class VecDotExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def prettyName: String = "vec_dot"
+    extends BinaryExpression with BespokeName {
   override def dataType: DataType = DoubleType
   // NULL for non-null inputs (mismatch/null element): nullable stays true
-  // and codegen re-checks the boxed result (the FeedEntriesExpr discipline)
+  // and codegen re-checks the boxed result (as for a nullOnNonNull Scalar)
   override def nullable: Boolean = true
 
   private def elemOk(dt: DataType): Option[Boolean] = dt match {

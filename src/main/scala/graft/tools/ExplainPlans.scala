@@ -12,9 +12,11 @@ object ExplainPlans {
     val names = if (args.length > 1) args.drop(1).toSeq
       else Seq("q_pricing_summary", "q_customers_no_orders", "q_similar_docs",
         "q_ann_cosine", "q_top_orders_per_cust", "q_extract_records")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -6,7 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Null-result discipline under WHOLE-STAGE CODEGEN for the native
   * expressions whose kernels return null on NON-NULL input (unrecognized
-  * container / not-a-feed / unknown normalization form).
+  * container / not-a-feed / unknown normalization form / not a
+  * hierarchical URL).
   *
   * The trap this pins: `defineCodeGen` leaves `isNull = false` when only
   * the child was null-checked, so a kernel returning null made any
@@ -71,5 +72,28 @@ class CodegenNullSpec extends AnyFunSuite {
       assert(r.isNullAt(0) && r.isNullAt(1))
       assert(r.getString(2).contains("café"))
     }
+  }
+
+  test("url_host yields NULL for a non-hierarchical URL in codegen") {
+    graft.plans.UrlExprs.register(spark)
+    val urls = spark.range(6).select(concat(lit("mailto:a"), col("id")).as("u"))
+    // a bare projection: the row writer itself must see the null
+    val bare = urls.select(call_function("url_host", col("u")).as("h"))
+    assertCodegen(bare)
+    bare.collect().foreach { r => assert(r.isNullAt(0)) }
+    val domain = urls.select(
+      call_function("url_registrable_domain", call_function("url_host", col("u"))).as("d"))
+    assertCodegen(domain)
+    domain.collect().foreach { r => assert(r.isNullAt(0)) }
+  }
+
+  test("feed_entries yields NULL for non-feed text of a non-nullable column in codegen") {
+    graft.plans.FeedExprs.register(spark)
+    val df = spark.range(6).select(
+        concat(lit("plain text, not xml #"), col("id")).as("s"))
+      .select(call_function("feed_entries", col("s")).as("e"))
+      .select(col("e"), size(col("e")).as("n"))
+    assertCodegen(df)
+    df.collect().foreach { r => assert(r.isNullAt(0) && r.isNullAt(1)) }
   }
 }

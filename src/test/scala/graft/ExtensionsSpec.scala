@@ -1,13 +1,22 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.extract.Cleaners
+import graft.plans._
 
-/** The SparkSessionExtensions install path: a session built with
-  * GraftExtensions must expose clean_margin_index as a SQL function. */
+/** Both install paths of the native functions: a session built with
+  * GraftExtensions, and a plain session after each kernel object's
+  * `register`, must resolve every [[NativeFunctions]] entry. */
 class ExtensionsSpec extends AnyFunSuite {
+
+  /** Every table entry resolves to its own expression class. */
+  private def assertResolvesAll(s: SparkSession): Unit = NativeFunctions.all.foreach { f =>
+    val info = s.sessionState.catalog.lookupFunctionInfo(FunctionIdentifier(f.name))
+    assert(info.getClassName == f.expressionClass.getName, f.name)
+  }
 
   test("GraftExtensions installs clean_margin_index into a fresh session") {
     // getOrCreate reuses any existing session and ignores the extensions
@@ -34,8 +43,8 @@ class ExtensionsSpec extends AnyFunSuite {
       assert(got == Cleaners.cleanPdfIndexArtifacts(noisy))
       assert(got.length < noisy.length, "margin index should have been cut")
 
-      // the TextHash kernel family must resolve through the extension
-      // registry too (registry kept in sync with TextHashExprs.register)
+      assertResolvesAll(spark)
+
       val tri = spark.sql("SELECT char_ngrams('abcd', 3) AS g")
         .collect()(0).getSeq[String](0)
       assert(tri == Seq("abc", "bcd"))
@@ -54,6 +63,28 @@ class ExtensionsSpec extends AnyFunSuite {
       assert(tsh.getSeq[String](0) == Seq(tsh.getString(1), tsh.getString(2)))
     } finally {
       spark.stop()
+      SparkSession.clearActiveSession()
+      SparkSession.clearDefaultSession()
+    }
+
+    val plain = SparkSession.builder()
+      .master("local[2]")
+      .appName("graft-extensions-spec-plain")
+      .config("spark.sql.shuffle.partitions", "2")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    try {
+      def exists(name: String): Boolean =
+        plain.sessionState.functionRegistry.functionExists(FunctionIdentifier(name))
+      NativeFunctions.all.foreach(f => assert(!exists(f.name), f.name))
+      Seq(CleanMarginIndexExpr.register _, TextHashExprs.register _, UrlExprs.register _,
+        RobotsExprs.register _, CharsetExprs.register _, PiiExprs.register _,
+        OfficeExprs.register _, UnicodeNorm.register _, FeedExprs.register _,
+        QualityExprs.register _, VecExprs.register _, TopKMinAgg.register _)
+        .foreach(_(plain))
+      assertResolvesAll(plain)
+    } finally {
+      plain.stop()
       SparkSession.clearActiveSession()
       SparkSession.clearDefaultSession()
     }

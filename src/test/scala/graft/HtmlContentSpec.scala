@@ -102,8 +102,14 @@ class HtmlContentSpec extends AnyFunSuite {
     }
     // fully-linked block has link density 1 -> boilerplate
     assert(HtmlContent.extract(cases.last).isEmpty)
-    // bare src attribute parsed
+    // bare src attribute parsed; an unquoted value runs to whitespace or
+    // '>' (HTML5), so a '/' inside it does not end it
     assert(HtmlContent.extract(cases(11)).exists(_.media_ref == "bare-src-no-quotes.png"))
+    Seq("/images/a.png", "img/a.png").foreach { src =>
+      val refs = HtmlContent.extract(s"<img src=$src><p>" + longText + "</p>")
+        .filter(_.kind == "media").map(_.media_ref)
+      assert(refs == Seq(src))
+    }
   }
 
   test("fuzz: 3000 seeded garbage documents never throw and emit well-formed spans") {
