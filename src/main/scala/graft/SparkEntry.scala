@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.extract.ExtractAll
-import graft.pipeline.{CorpusGen, ExtractJob, PiiOps, ReportJob}
+import graft.pipeline.{AnnJobs, CorpusGen, ExtractJob, PiiOps, ReportJob}
 
 /** Driver contract (see SURVEY.md §7 and the per-operator inventory §2).
   *
@@ -461,10 +461,7 @@ object SparkEntry {
       graft.plans.VecExprs.register(s)
       import graft.plans.VecExprs.vec_dot
       val e = t(s, dir, "embeddings")
-      val bucket = (1 to 8).map(i =>
-        when(element_at(col("embedding"), i) > 0, 1 << (i - 1)).otherwise(0))
-        .reduce(_ + _)
-      val withB = e.withColumn("bucket", bucket)
+      val withB = e.withColumn("bucket", AnnJobs.signBucket(col("embedding")))
         .withColumn("nrm", sqrt(vec_dot(col("embedding"), col("embedding"))))
       val a = withB.select(col("vec_id").as("id_a"), col("embedding").as("a_emb"),
         col("nrm").as("a_nrm"), col("bucket"))
@@ -504,10 +501,7 @@ object SparkEntry {
     "q_ann_lsh_bucket" -> ((s, dir) => {
       // Axis-aligned hyperplane LSH: bucket = sign bits of dims 1..8.
       val e = t(s, dir, "embeddings")
-      val bucket = (1 to 8).map(i =>
-        when(element_at(col("embedding"), i) > 0, 1 << (i - 1)).otherwise(0))
-        .reduce(_ + _)
-      e.withColumn("bucket", bucket)
+      e.withColumn("bucket", AnnJobs.signBucket(col("embedding")))
         .groupBy(col("bucket"))
         .agg(count(lit(1)).as("n"), min(col("vec_id")).as("rep"))
         .orderBy(col("bucket"))
@@ -517,14 +511,11 @@ object SparkEntry {
       // The scale path: candidates restricted to the query's LSH bucket,
       // then exact cosine top-3 within the bucket.
       val e = t(s, dir, "embeddings")
-      val bucket = (1 to 8).map(i =>
-        when(element_at(col("embedding"), i) > 0, 1 << (i - 1)).otherwise(0))
-        .reduce(_ + _)
       // vec_dot kernel + per-side norms once per row pre-join (identical
       // doubles — see q_ann_cosine)
       graft.plans.VecExprs.register(s)
       import graft.plans.VecExprs.vec_dot
-      val withB = e.withColumn("bucket", bucket)
+      val withB = e.withColumn("bucket", AnnJobs.signBucket(col("embedding")))
         .withColumn("nrm", sqrt(vec_dot(col("embedding"), col("embedding"))))
       val q = withB.filter(col("vec_id") < 10)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),

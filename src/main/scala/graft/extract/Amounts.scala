@@ -1,7 +1,9 @@
 package graft.extract
 
+import java.util.Locale
+
 import graft.text.Py
-import graft.text.Py.I
+import graft.text.Py.{I, Rx}
 
 /** P23/P24/P25 — three-tier positional amount search, context-scored
   * candidate top-k, and rule-based amount normalization (the reference's
@@ -17,21 +19,21 @@ object Amounts {
     else extractJudgmentEnhanced(text, language)
 
   /** `_extract_claim_amount_enhanced` (`src/extractor.py:2135-2157`). */
-  def extractClaimEnhanced(text: String, language: String): String = {
-    val precise = extractPrecise(text, language, "claim")
-    if (precise.nonEmpty) return precise
-    val extended = extractExtended(text, language, "claim")
-    if (extended.nonEmpty) return extended
-    extractByKeywords(text, language, "claim", 1.0)
-  }
+  def extractClaimEnhanced(text: String, language: String): String =
+    extractEnhanced(text, language, "claim")
 
   /** `_extract_judgment_amount_enhanced` (`src/extractor.py:2159-2181`). */
-  def extractJudgmentEnhanced(text: String, language: String): String = {
-    val precise = extractPrecise(text, language, "judgment")
+  def extractJudgmentEnhanced(text: String, language: String): String =
+    extractEnhanced(text, language, "judgment")
+
+  /** The cascade both enhanced extractors share: precise windows, then
+    * extended windows, then the whole text at threshold 1.0. */
+  private def extractEnhanced(text: String, language: String, amountType: String): String = {
+    val precise = extractPrecise(text, language, amountType)
     if (precise.nonEmpty) return precise
-    val extended = extractExtended(text, language, "judgment")
+    val extended = extractExtended(text, language, amountType)
     if (extended.nonEmpty) return extended
-    extractByKeywords(text, language, "judgment", 1.0)
+    extractByKeywords(text, language, amountType, 1.0)
   }
 
   /** `_extract_amounts_precise` (`src/extractor.py:2183-2210`): claim =
@@ -104,103 +106,48 @@ object Amounts {
     }
   }
 
+  // Amount patterns as [[Py.Rx]]: each carries its start anchor and, where
+  // a cheaper required literal exists elsewhere in the match, its guard.
+  private val dollarWords = Seq("dollar", "usd", "hkd")
+  private val yuan = Seq("港元", "美元", "人民", "元")
+
   /** `_get_enhanced_amount_patterns` (`src/extractor.py:2345-2380`). */
-  def enhancedAmountPatterns(language: String): Seq[String] = {
-    val base = Seq(
-      """HK\$[\d,]+(?:\.\d{2})?(?:\s*(?:million|billion|thousand))?""",
-      """USD?[\d,]+(?:\.\d{2})?(?:\s*(?:million|billion|thousand))?""",
-      """US\$[\d,]+(?:\.\d{2})?(?:\s*(?:million|billion|thousand))?""",
-      """RMB[\d,]+(?:\.\d{2})?(?:\s*(?:million|billion|thousand))?""",
-      """(?:Hong Kong|US|United States)\s+Dollars?\s*[\d,]+(?:\.\d{2})?""",
-      """(?:the\s+)?sum of\s+HK\$[\d,]+(?:\.\d{2})?""",
-      """(?:the\s+)?amount of\s+USD?[\d,]+(?:\.\d{2})?""",
-      """HK\$[\d,]+(?:\.\d{2})?\s+(?:plus|together with|and)\s+interest""",
-      """principal sum of\s+HK\$[\d,]+(?:\.\d{2})?""",
-      """outstanding balance of\s+USD?[\d,]+(?:\.\d{2})?""",
-      """[\d,]+(?:\.\d{2})?\s*(?:Hong Kong Dollars|US Dollars|USD|HKD)""",
-      """[\d,]+(?:\.\d{2})?\s*(?:million|billion|thousand)?\s*(?:dollars?|USD|HKD)""",
-      """\$[\d,]+(?:\.\d{2})?(?:\s*(?:million|billion|thousand))?""",
-      """[\d]{1,3}(?:,\d{3})+(?:\.\d{2})?""")
-    if (language == "chinese") base ++ Seq(
-      """(?:港幣|港币|美金|美元|人民幣|人民币)[\d,\.]+(?:萬|万|億|亿)?""",
-      """[\d,]+(?:\.\d{2})?\s*(?:港元|美元|人民币)""",
-      """[\d,]+\s*(?:萬|万|億|亿)\s*(?:港元|美元)""")
-    else base
-  }
+  private val enhancedBase = Seq(
+    Rx("""HK\$[\d,]+(?:\.\d{2})?(?:\s*(?:million|billion|thousand))?""", I, Py.lit("hk$")),
+    Rx("""USD?[\d,]+(?:\.\d{2})?(?:\s*(?:million|billion|thousand))?""", I, Py.lit("us")),
+    Rx("""US\$[\d,]+(?:\.\d{2})?(?:\s*(?:million|billion|thousand))?""", I, Py.lit("us$")),
+    Rx("""RMB[\d,]+(?:\.\d{2})?(?:\s*(?:million|billion|thousand))?""", I, Py.lit("rmb")),
+    Rx("""(?:Hong Kong|US|United States)\s+Dollars?\s*[\d,]+(?:\.\d{2})?""", I,
+      Py.lit("hong kong", "us", "united states"), Seq("dollar")),
+    Rx("""(?:the\s+)?sum of\s+HK\$[\d,]+(?:\.\d{2})?""", I, Py.lit("the", "sum of"), Seq("sum of")),
+    Rx("""(?:the\s+)?amount of\s+USD?[\d,]+(?:\.\d{2})?""", I, Py.lit("the", "amount of"), Seq("amount of")),
+    Rx("""HK\$[\d,]+(?:\.\d{2})?\s+(?:plus|together with|and)\s+interest""", I, Py.lit("hk$")),
+    Rx("""principal sum of\s+HK\$[\d,]+(?:\.\d{2})?""", I, Py.lit("principal sum of")),
+    Rx("""outstanding balance of\s+USD?[\d,]+(?:\.\d{2})?""", I, Py.lit("outstanding balance of")),
+    Rx("""[\d,]+(?:\.\d{2})?\s*(?:Hong Kong Dollars|US Dollars|USD|HKD)""", I, Py.DigitOrComma, dollarWords),
+    Rx("""[\d,]+(?:\.\d{2})?\s*(?:million|billion|thousand)?\s*(?:dollars?|USD|HKD)""", I,
+      Py.DigitOrComma, dollarWords),
+    Rx("""\$[\d,]+(?:\.\d{2})?(?:\s*(?:million|billion|thousand))?""", I, Py.lit("$")),
+    Rx("""[\d]{1,3}(?:,\d{3})+(?:\.\d{2})?""", I, Py.DigitStart, Seq(",")))
 
-  /** Required-literal guard per amount pattern: guard false ⟹ the
-    * (case-insensitive) regex cannot match, so skipping the scan is a pure
-    * speedup. Keys are checked against the lowercased window. */
-  private def patternGuards(p: String): Seq[String] = p match {
-    case s if s.startsWith("""HK\$""") => Seq("hk$")
-    case s if s.startsWith("""US\$""") => Seq("us$")
-    case s if s.startsWith("""USD?""") => Seq("us")
-    case s if s.startsWith("RMB") => Seq("rmb")
-    case s if s.contains("USD|HKD") => Seq("dollar", "usd", "hkd")
-    case s if s.contains("Hong Kong") => Seq("dollar")
-    case s if s.contains("sum of") => Seq("sum of")
-    case s if s.contains("amount of") => Seq("amount of")
-    case s if s.contains("principal sum") => Seq("principal sum")
-    case s if s.contains("outstanding balance") => Seq("outstanding balance")
-    case s if s.contains("dollars?|USD|HKD") => Seq("dollar", "usd", "hkd")
-    case s if s.contains("""\$[\d""") => Seq("$")
-    case s if s.startsWith("""[\d]{1,3}""") => Seq(",")
-    case s if s.startsWith("damages?") => Seq("damage")
-    case s if s.startsWith("compensation") => Seq("compensation")
-    case s if s.startsWith("costs?") => Seq("cost")
-    case s if s.contains("港幣|港币") => Seq("港", "美", "人民")
-    case s if s.contains("港元") => Seq("港元", "美元", "人民", "元")
-    case _ => Seq.empty // no safe guard — always scan
-  }
+  private val enhancedChinese = enhancedBase ++ Seq(
+    Rx("""(?:港幣|港币|美金|美元|人民幣|人民币)[\d,\.]+(?:萬|万|億|亿)?""", I,
+      Py.lit("港幣", "港币", "美金", "美元", "人民幣", "人民币")),
+    Rx("""[\d,]+(?:\.\d{2})?\s*(?:港元|美元|人民币)""", I, Py.DigitOrComma, yuan),
+    Rx("""[\d,]+\s*(?:萬|万|億|亿)\s*(?:港元|美元)""", I, Py.DigitOrComma, yuan))
 
-  /** Start-of-match anchor per amount pattern (see [[Py.Anchor]]): every
-    * match of the pattern provably begins with one of the listed literals
-    * (under the regex engine's own case folding) or at a digit/comma —
-    * letting the scan skip between `indexOf` candidates instead of
-    * attempting the pattern at every position. Differentially pinned
-    * against the plain scan in AnchoredScanSpec. */
-  private[graft] def anchorFor(p: String): Option[Py.Anchor] = p match {
-    case s if s.startsWith("""HK\$""") => Some(Py.LitAnchor(Seq("hk$")))
-    case s if s.startsWith("""US\$""") => Some(Py.LitAnchor(Seq("us$")))
-    case s if s.startsWith("USD?") => Some(Py.LitAnchor(Seq("us")))
-    case s if s.startsWith("RMB") => Some(Py.LitAnchor(Seq("rmb")))
-    case s if s.startsWith("""(?:Hong Kong|US|United States)""") =>
-      Some(Py.LitAnchor(Seq("hong kong", "us", "united states")))
-    case s if s.startsWith("""(?:the\s+)?sum of""") => Some(Py.LitAnchor(Seq("the", "sum of")))
-    case s if s.startsWith("""(?:the\s+)?amount of""") => Some(Py.LitAnchor(Seq("the", "amount of")))
-    case s if s.startsWith("principal sum of") => Some(Py.LitAnchor(Seq("principal sum of")))
-    case s if s.startsWith("outstanding balance of") => Some(Py.LitAnchor(Seq("outstanding balance of")))
-    case s if s.startsWith("""\$""") => Some(Py.LitAnchor(Seq("$")))
-    case s if s.startsWith("""[\d]{1,3}""") => Some(Py.DigitStart)
-    case s if s.startsWith("""[\d,]+""") => Some(Py.DigitOrComma)
-    case s if s.startsWith("damages?") => Some(Py.LitAnchor(Seq("damage")))
-    case s if s.startsWith("compensation") => Some(Py.LitAnchor(Seq("compensation")))
-    case s if s.startsWith("costs?") => Some(Py.LitAnchor(Seq("cost")))
-    case s if s.startsWith("(?:港幣") || s.startsWith("(?:港币") =>
-      Some(Py.LitAnchor(Seq("港幣", "港币", "美金", "美元", "人民幣", "人民币")))
-    case _ => None
-  }
+  private[graft] def enhancedAmountPatterns(language: String): Seq[Rx] =
+    if (language == "chinese") enhancedChinese else enhancedBase
 
   /** `_find_potential_amounts` (`src/extractor.py:2382-2404`). */
-  def findPotentialAmounts(text: String, patterns: Seq[String]): List[Candidate] = {
+  def findPotentialAmounts(text: String, patterns: Seq[Rx]): List[Candidate] = {
     val out = scala.collection.mutable.ListBuffer.empty[Candidate]
-    // fold-exact lowercasing: sound for the guards (regex-consistent) and
-    // shared by every LitAnchor skip-scan below
-    val folded = Py.foldCase(text)
-    for (p <- patterns) {
-      val guards = patternGuards(p)
-      if (guards.isEmpty || guards.exists(folded.contains)) {
-        val matches = anchorFor(p) match {
-          case Some(a) => Py.findIterA(p, text, I, a, folded = folded)
-          case None    => Py.findIter(p, text, I)
-        }
-        for ((m, ms, me) <- matches) {
-          val start = math.max(0, ms - 150)
-          val end = math.min(text.length, me + 150)
-          val context = Py.wsCollapse(Py.strip(Py.slice(text, start, end)))
-          out += Candidate(m, context, ms, text.length)
-        }
-      }
+    val folded = Py.foldCase(text) // shared by every pattern's guard and anchor
+    for (p <- patterns; (m, ms, me) <- p.findIter(text, folded)) {
+      val start = math.max(0, ms - 150)
+      val end = math.min(text.length, me + 150)
+      val context = Py.wsCollapse(Py.strip(Py.slice(text, start, end)))
+      out += Candidate(m, context, ms, text.length)
     }
     out.toList
   }
@@ -208,12 +155,12 @@ object Amounts {
   /** `_validate_amount_context` (`src/extractor.py:2406-2445`). */
   def validateAmountContext(c: Candidate, amountType: String, language: String,
                             keywords: Seq[String], contextWords: Seq[String]): Double = {
-    val context = c.context.toLowerCase
+    val context = c.context.toLowerCase(Locale.ROOT)
     var score = 0.0
-    for (kw <- keywords if context.contains(kw.toLowerCase)) {
+    for (kw <- keywords if context.contains(kw.toLowerCase(Locale.ROOT))) {
       score += (if (kw.length > 10) 3 else if (kw.length > 5) 2 else 1)
     }
-    for (w <- contextWords if context.contains(w.toLowerCase)) score += 1
+    for (w <- contextWords if context.contains(w.toLowerCase(Locale.ROOT))) score += 1
     val negatives =
       if (amountType == "claim")
         Seq("costs", "legal fees", "court fees", "filing fee", "ordered to pay")
@@ -252,23 +199,31 @@ object Amounts {
   }
 
   private[graft] val numberAnalysisPatterns = Seq(
-    """HK\$[\d,]+(?:\.\d{2})?(?:\s*(?:million|billion|thousand))?""",
-    """USD?\s*[\d,]+(?:\.\d{2})?(?:\s*(?:million|billion|thousand))?""",
-    """US\$[\d,]+(?:\.\d{2})?(?:\s*(?:million|billion|thousand))?""",
-    """RMB[\d,]+(?:\.\d{2})?(?:\s*(?:million|billion|thousand))?""",
-    """(?:Hong Kong|US|United States)\s+Dollars?\s*[\d,]+(?:\.\d{2})?""",
-    """(?:the\s+)?sum of\s+(?:HK\$|USD?|US\$)[\d,]+(?:\.\d{2})?""",
-    """(?:the\s+)?amount of\s+(?:HK\$|USD?|US\$)[\d,]+(?:\.\d{2})?""",
-    """[\d,]+(?:\.\d{2})?\s*(?:Hong Kong Dollars|US Dollars|USD|HKD)""",
-    """[\d,]+(?:\.\d{2})?\s*(?:million|billion|thousand)?\s*(?:dollars?|USD|HKD)""",
-    """\$[\d,]+(?:\.\d{2})?(?:\s*(?:million|billion|thousand))?""",
-    """[\d]{1,3}(?:,\d{3})+(?:\.\d{2})?""",
-    """(?:港币|港幣|美金|美元|人民币|人民幣)[\d,]+(?:\.\d{2})?(?:\s*(?:万|萬|亿|億))?""",
-    """[\d,]+(?:\.\d{2})?\s*(?:港元|美元|人民币|元)""",
-    """[\d,]+\s*(?:万|萬|亿|億)\s*(?:港元|美元|元)""",
-    """damages?\s+(?:of|in the sum of|totaling|amounting to)\s+(?:HK\$|USD?|US\$|\$)[\d,]+(?:\.\d{2})?""",
-    """compensation\s+(?:of|in the sum of)\s+(?:HK\$|USD?|US\$|\$)[\d,]+(?:\.\d{2})?""",
-    """costs?\s+(?:of|in the sum of|assessed at)\s+(?:HK\$|USD?|US\$|\$)[\d,]+(?:\.\d{2})?""")
+    Rx("""HK\$[\d,]+(?:\.\d{2})?(?:\s*(?:million|billion|thousand))?""", I, Py.lit("hk$")),
+    Rx("""USD?\s*[\d,]+(?:\.\d{2})?(?:\s*(?:million|billion|thousand))?""", I, Py.lit("us")),
+    Rx("""US\$[\d,]+(?:\.\d{2})?(?:\s*(?:million|billion|thousand))?""", I, Py.lit("us$")),
+    Rx("""RMB[\d,]+(?:\.\d{2})?(?:\s*(?:million|billion|thousand))?""", I, Py.lit("rmb")),
+    Rx("""(?:Hong Kong|US|United States)\s+Dollars?\s*[\d,]+(?:\.\d{2})?""", I,
+      Py.lit("hong kong", "us", "united states"), Seq("dollar")),
+    Rx("""(?:the\s+)?sum of\s+(?:HK\$|USD?|US\$)[\d,]+(?:\.\d{2})?""", I,
+      Py.lit("the", "sum of"), Seq("sum of")),
+    Rx("""(?:the\s+)?amount of\s+(?:HK\$|USD?|US\$)[\d,]+(?:\.\d{2})?""", I,
+      Py.lit("the", "amount of"), Seq("amount of")),
+    Rx("""[\d,]+(?:\.\d{2})?\s*(?:Hong Kong Dollars|US Dollars|USD|HKD)""", I, Py.DigitOrComma, dollarWords),
+    Rx("""[\d,]+(?:\.\d{2})?\s*(?:million|billion|thousand)?\s*(?:dollars?|USD|HKD)""", I,
+      Py.DigitOrComma, dollarWords),
+    Rx("""\$[\d,]+(?:\.\d{2})?(?:\s*(?:million|billion|thousand))?""", I, Py.lit("$")),
+    Rx("""[\d]{1,3}(?:,\d{3})+(?:\.\d{2})?""", I, Py.DigitStart, Seq(",")),
+    Rx("""(?:港币|港幣|美金|美元|人民币|人民幣)[\d,]+(?:\.\d{2})?(?:\s*(?:万|萬|亿|億))?""", I,
+      Py.lit("港幣", "港币", "美金", "美元", "人民幣", "人民币")),
+    Rx("""[\d,]+(?:\.\d{2})?\s*(?:港元|美元|人民币|元)""", I, Py.DigitOrComma, yuan),
+    Rx("""[\d,]+\s*(?:万|萬|亿|億)\s*(?:港元|美元|元)""", I, Py.DigitOrComma, yuan),
+    Rx("""damages?\s+(?:of|in the sum of|totaling|amounting to)\s+(?:HK\$|USD?|US\$|\$)[\d,]+(?:\.\d{2})?""", I,
+      Py.lit("damage")),
+    Rx("""compensation\s+(?:of|in the sum of)\s+(?:HK\$|USD?|US\$|\$)[\d,]+(?:\.\d{2})?""", I,
+      Py.lit("compensation")),
+    Rx("""costs?\s+(?:of|in the sum of|assessed at)\s+(?:HK\$|USD?|US\$|\$)[\d,]+(?:\.\d{2})?""", I,
+      Py.lit("cost")))
 
   /** `_extract_amount_numbers_from_text` (`src/extractor.py:2526-2589`):
     * single currency → sum; multiple currencies → max by value. */
@@ -278,20 +233,13 @@ object Amounts {
     val currencies = scala.collection.mutable.LinkedHashSet.empty[String]
     val folded = Py.foldCase(text)
 
-    for (p <- numberAnalysisPatterns) {
-      val guards = patternGuards(p)
-      if (guards.isEmpty || guards.exists(folded.contains))
-      for (m <- anchorFor(p) match {
-        case Some(a) => Py.findAllA(p, text, I, a, folded = folded)
-        case None    => Py.findAll(p, text, I)
-      }) {
-        parseAmountMatch(m) match {
-          case Some((value, currency)) if value > 0 =>
-            amountValues += value
-            currencies += currency
-            foundAmounts += s"$currency${formatThousands(value)}"
-          case _ =>
-        }
+    for (p <- numberAnalysisPatterns; m <- p.findAll(text, folded)) {
+      parseAmountMatch(m) match {
+        case Some((value, currency)) if value > 0 =>
+          amountValues += value
+          currencies += currency
+          foundAmounts += s"$currency${formatThousands(value)}"
+        case _ =>
       }
     }
 
@@ -310,7 +258,7 @@ object Amounts {
 
   /** `_parse_amount_match` (`src/extractor.py:2591-2627`). */
   def parseAmountMatch(m: String): Option[(Double, String)] = {
-    val up = m.toUpperCase
+    val up = m.toUpperCase(Locale.ROOT)
     val currency =
       if (up.contains("HK") || m.contains("港")) "HK$"
       else if (up.contains("USD") || up.contains("US$") || up.contains("US ") || m.contains("美")) "USD"
@@ -332,10 +280,14 @@ object Amounts {
   /** Python `f"{value:,.0f}"` — round-half-even on the exact binary double,
     * comma thousands grouping. `Math.rint` IS half-even rounding of the
     * exact binary value, so the long fast path equals the BigDecimal path
-    * for every double it accepts (|v| < 2^53 keeps the long exact). */
+    * for every double it accepts (|v| < 2^53 keeps the long exact).
+    * Non-finite values print as Python prints them (`inf`, `-inf`, `nan`):
+    * a 400-digit claim parses to `Infinity`. */
   def formatThousands(value: Double): String = {
     val r = Math.rint(value)
-    if (math.abs(r) < 9.007199254740992e15) groupThousands(r.toLong)
+    if (value.isNaN) "nan"
+    else if (value.isInfinite) (if (value > 0) "inf" else "-inf")
+    else if (math.abs(r) < 9.007199254740992e15) groupThousands(r.toLong)
     else {
       val rounded = new java.math.BigDecimal(value)
         .setScale(0, java.math.RoundingMode.HALF_EVEN)

@@ -1,5 +1,7 @@
 package graft.extract
 
+import java.util.Locale
+
 import graft.text.Py
 import graft.text.Py.I
 
@@ -54,7 +56,7 @@ object CaseNumber {
     var i = 0
     while (i < lines.length) {
       val line = Py.strip(lines(i))
-      if (line.toUpperCase.startsWith("ACTION")) {
+      if (line.toUpperCase(Locale.ROOT).startsWith("ACTION")) {
         if (Py.matches("""ACTION\s+(?:N\s+)?O\s*\.?\s*\d+[A-Z]?\s+OF\s+\d{4}""", line, I)) {
           return fixups(Py.wsCollapse(Py.strip(line)))
         } else if (Py.matches("""ACTION\s+(?:N\s+)?O\s*\.?\s*\d+[A-Z]?\s+OF\s+\d{2,3}\s+\d{1,2}""", line, I)) {

@@ -1,7 +1,9 @@
 package graft.extract
 
+import java.util.Locale
+
 import graft.text.Py
-import graft.text.Py.{I, S}
+import graft.text.Py.{I, Rx, S}
 
 /** P21 — case-type segment extraction with the weight-sorted,
   * prefix-deduped, budgeted combiner
@@ -17,143 +19,85 @@ object CaseType {
     else extractChineseComprehensive(text)
   }
 
-  /** `_extract_english_case_type_comprehensive` (`src/extractor.py:1706-1780`).
-    * Each pattern carries a required-literal guard over the lowercased text:
-    * guard false ⟹ the (case-insensitive) regex cannot match, so skipping the
-    * scan is a pure speedup (validated by the golden suite). */
-  // Layer 1: key sections, weights 10..6, ≤2 matches each. Each row:
-  // (pattern, weight, contains-guard, start-of-match anchor) — the anchor
-  // lists every literal a match can begin with (AnchoredScanSpec pins the
-  // skip-scan == plain-scan equivalence).
-  private val keySectionPatterns = Seq(
-    ("""Introduction\s*[:\.]?\s*\n((?:[^\n]+\n){3,20})""", 10,
-      Seq("introduction"), Py.LitAnchor(Seq("introduction"))),
-    ("""(?:BACKGROUND|Background)\s*[:\.]?\s*\n((?:[^\n]+\n){5,25})""", 9,
-      Seq("background"), Py.LitAnchor(Seq("background"))),
-    ("""(?:FACTS?|Facts?)\s*[:\.]?\s*\n((?:[^\n]+\n){3,20})""", 8,
-      Seq("fact"), Py.LitAnchor(Seq("fact"))),
-    ("""(?:This is|These are)\s+(?:an?\s+)?(action|application|proceeding|matter|case|appeal|motion|summons)([^\n.]{20,300})""", 7,
-      Seq("this is", "these are"), Py.LitAnchor(Seq("this is", "these are"))),
-    ("""(?:The|This)\s+(?:plaintiff|applicant|defendant|appellant)\s+(?:seeks?|applies?|brings?|claims?)\s+([^\n.]{30,400})""", 6,
-      Seq("plaintiff", "applicant", "defendant", "appellant"),
-      Py.LitAnchor(Seq("the", "this"))))
+  /** A layer of weighted patterns: up to two matches of each, cleaned,
+    * kept when the cleaned length is within `min..max`. */
+  private final case class Layer(rows: Seq[(Rx, Int)], min: Int, max: Int)
 
-  // Layer 2: judgment-context patterns, weights 5,4
-  private val judgmentContextPatterns = Seq(
-    ("""(?:ORDER|ORDERS|JUDGMENT|HELD|DISPOSITION)\s*[:\.]?\s*\n((?:[^\n]+\n){2,15})""", 5,
-      Seq("order", "judgment", "held", "disposition"),
-      Py.LitAnchor(Seq("order", "judgment", "held", "disposition"))),
-    ("""(?:For (?:these reasons|the foregoing reasons)|Accordingly|In (?:conclusion|the result))\s*[,.]?\s*([^\n.]{50,500})""", 4,
-      Seq("for these reasons", "for the foregoing reasons", "accordingly",
-        "in conclusion", "in the result"),
-      Py.LitAnchor(Seq("for these reasons", "for the foregoing reasons",
-        "accordingly", "in conclusion", "in the result"))))
+  // `_extract_english_case_type_comprehensive` (`src/extractor.py:1706-1780`)
+  // layer 1: key sections, weights 10..6; layer 2: judgment context, 5 and 4
+  private val englishLayers = Seq(
+    Layer(Seq(
+      Rx("""Introduction\s*[:\.]?\s*\n((?:[^\n]+\n){3,20})""", I | S, Py.lit("introduction")) -> 10,
+      Rx("""(?:BACKGROUND|Background)\s*[:\.]?\s*\n((?:[^\n]+\n){5,25})""", I | S, Py.lit("background")) -> 9,
+      Rx("""(?:FACTS?|Facts?)\s*[:\.]?\s*\n((?:[^\n]+\n){3,20})""", I | S, Py.lit("fact")) -> 8,
+      Rx("""(?:This is|These are)\s+(?:an?\s+)?(action|application|proceeding|matter|case|appeal|motion|summons)([^\n.]{20,300})""",
+        I | S, Py.lit("this is", "these are")) -> 7,
+      Rx("""(?:The|This)\s+(?:plaintiff|applicant|defendant|appellant)\s+(?:seeks?|applies?|brings?|claims?)\s+([^\n.]{30,400})""",
+        I | S, Py.lit("the", "this"), Seq("plaintiff", "applicant", "defendant", "appellant")) -> 6),
+      50, 2000),
+    Layer(Seq(
+      Rx("""(?:ORDER|ORDERS|JUDGMENT|HELD|DISPOSITION)\s*[:\.]?\s*\n((?:[^\n]+\n){2,15})""", I | S,
+        Py.lit("order", "judgment", "held", "disposition")) -> 5,
+      Rx("""(?:For (?:these reasons|the foregoing reasons)|Accordingly|In (?:conclusion|the result))\s*[,.]?\s*([^\n.]{50,500})""",
+        I | S, Py.lit("for these reasons", "for the foregoing reasons", "accordingly", "in conclusion",
+          "in the result")) -> 4),
+      30, 1500))
 
-  private[graft] def englishPatternRows
-      : Seq[(String, Int, Seq[String], Py.LitAnchor)] =
-    keySectionPatterns ++ judgmentContextPatterns
+  // `_extract_chinese_case_type_comprehensive` (`src/extractor.py:1846-1916`)
+  private val chineseLayers = Seq(
+    Layer(Seq(
+      Rx("""(?:背景|事實|案情|簡介)\s*[：:.]?\s*\n((?:[^\n]+\n){3,20})""", 0, Py.lit("背景", "事實", "案情", "簡介")) -> 10,
+      Rx("""(?:爭議|問題|焦點|糾紛)\s*[：:.]?\s*\n((?:[^\n]+\n){2,15})""", 0, Py.lit("爭議", "問題", "焦點", "糾紛")) -> 9,
+      Rx("""(?:申請人|原告人?)\s*(?:申請|請求|要求|尋求|指稱)\s*([^\n。]{50,500})""", 0, Py.lit("申請人", "原告")) -> 8,
+      Rx("""(?:本案|該案|此案)\s*(?:涉及|關於|係|為)\s*([^\n。]{30,400})""", 0, Py.lit("本案", "該案", "此案")) -> 7),
+      30, 1500),
+    Layer(Seq(
+      Rx("""(?:命令|判令|裁定|判決)\s*[：:.]?\s*\n((?:[^\n]+\n){2,15})""", 0, Py.lit("命令", "判令", "裁定", "判決")) -> 6,
+      Rx("""(?:綜上所述|因此|故此|據此)\s*[，,]?\s*([^\n。]{30,400})""", 0, Py.lit("綜上所述", "因此", "故此", "據此")) -> 5),
+      20, 1000))
 
-  def extractEnglishComprehensive(text: String): String = {
+  private[graft] def englishPatterns: Seq[Rx] = englishLayers.flatMap(_.rows.map(_._1))
+  private[graft] def chinesePatterns: Seq[Rx] = chineseLayers.flatMap(_.rows.map(_._1))
+
+  private val englishKeywords = Seq("application", "proceeding", "action", "dispute",
+    "matter", "claim", "relief", "judgment", "order")
+  private val chineseKeywords = Seq("申請", "爭議", "糾紛", "案件", "法庭", "法院", "判決", "命令", "裁定")
+
+  def extractEnglishComprehensive(text: String): String =
+    comprehensive(text, englishLayers, paragraphLen = (200, 2000), cleanLen = (100, 1500), maxLength = 3000)(
+      p => englishKeywords.exists(p.toLowerCase(Locale.ROOT).contains))
+
+  def extractChineseComprehensive(text: String): String =
+    comprehensive(text, chineseLayers, paragraphLen = (150, 1500), cleanLen = (80, 1200), maxLength = 2500)(
+      p => chineseKeywords.exists(p.contains))
+
+  /** The pattern layers, then layer 3: paragraphs of `paragraphLen` chars
+    * with a case keyword, cleaned to `cleanLen`, weight 2 — stopping once a
+    * paragraph brings the total to 8 segments. */
+  private def comprehensive(text: String, layers: Seq[Layer], paragraphLen: (Int, Int),
+                            cleanLen: (Int, Int), maxLength: Int)(hasKeyword: String => Boolean): String = {
     val segments = scala.collection.mutable.ListBuffer.empty[Segment]
     val folded = Py.foldCase(text)
-
-    for ((p, weight, guards, anchor) <- keySectionPatterns if guards.exists(folded.contains)) {
-      val matches = Py.findIterA(p, text, I | S, anchor, maxMatches = 2, folded = folded)
-      for ((g1, _, _) <- matches) {
-        val clean = cleanComprehensiveContent(g1)
-        if (clean.length >= 50 && clean.length <= 2000)
-          segments += Segment(clean, weight)
-      }
+    for (layer <- layers; (p, weight) <- layer.rows; (g1, _, _) <- p.findIter(text, folded, maxMatches = 2)) {
+      val clean = cleanComprehensiveContent(g1)
+      if (clean.length >= layer.min && clean.length <= layer.max) segments += Segment(clean, weight)
     }
-
-    for ((p, weight, guards, anchor) <- judgmentContextPatterns if guards.exists(folded.contains)) {
-      val matches = Py.findIterA(p, text, I | S, anchor, maxMatches = 2, folded = folded)
-      for ((g1, _, _) <- matches) {
-        val clean = cleanComprehensiveContent(g1)
-        if (clean.length >= 30 && clean.length <= 1500)
-          segments += Segment(clean, weight)
-      }
-    }
-
-    // Layer 3: long paragraphs with case keywords, weight 2, stop at 8 total
-    val caseKeywords = Seq("application", "proceeding", "action", "dispute",
-      "matter", "claim", "relief", "judgment", "order")
-    val paragraphs = Py.resplit("""\n\s*\n""", text)
     var stop = false
-    for (paragraph <- paragraphs if !stop) {
-      if (paragraph.length >= 200 && paragraph.length <= 2000 &&
-          caseKeywords.exists(paragraph.toLowerCase.contains)) {
+    for (paragraph <- Py.resplit("""\n\s*\n""", text) if !stop) {
+      if (paragraph.length >= paragraphLen._1 && paragraph.length <= paragraphLen._2 && hasKeyword(paragraph)) {
         val clean = cleanComprehensiveContent(paragraph)
-        if (clean.length >= 100 && clean.length <= 1500) {
+        if (clean.length >= cleanLen._1 && clean.length <= cleanLen._2) {
           segments += Segment(clean, 2)
           if (segments.length >= 8) stop = true
         }
       }
     }
-
-    combineComprehensiveSegments(segments.toList, 3000)
+    combineComprehensiveSegments(segments.toList, maxLength)
   }
 
-  /** `_extract_chinese_case_type_comprehensive` (`src/extractor.py:1846-1916`). */
-  private val zhKeySectionPatterns = Seq(
-    ("""(?:背景|事實|案情|簡介)\s*[：:.]?\s*\n((?:[^\n]+\n){3,20})""", 10,
-      Py.LitAnchor(Seq("背景", "事實", "案情", "簡介"))),
-    ("""(?:爭議|問題|焦點|糾紛)\s*[：:.]?\s*\n((?:[^\n]+\n){2,15})""", 9,
-      Py.LitAnchor(Seq("爭議", "問題", "焦點", "糾紛"))),
-    ("""(?:申請人|原告人?)\s*(?:申請|請求|要求|尋求|指稱)\s*([^\n。]{50,500})""", 8,
-      Py.LitAnchor(Seq("申請人", "原告"))),
-    ("""(?:本案|該案|此案)\s*(?:涉及|關於|係|為)\s*([^\n。]{30,400})""", 7,
-      Py.LitAnchor(Seq("本案", "該案", "此案"))))
-
-  private val zhJudgmentPatterns = Seq(
-    ("""(?:命令|判令|裁定|判決)\s*[：:.]?\s*\n((?:[^\n]+\n){2,15})""", 6,
-      Py.LitAnchor(Seq("命令", "判令", "裁定", "判決"))),
-    ("""(?:綜上所述|因此|故此|據此)\s*[，,]?\s*([^\n。]{30,400})""", 5,
-      Py.LitAnchor(Seq("綜上所述", "因此", "故此", "據此"))))
-
-  private[graft] def chinesePatternRows: Seq[(String, Int, Py.LitAnchor)] =
-    zhKeySectionPatterns ++ zhJudgmentPatterns
-
-  def extractChineseComprehensive(text: String): String = {
-    val segments = scala.collection.mutable.ListBuffer.empty[Segment]
-    val folded = Py.foldCase(text)
-
-    for ((p, weight, anchor) <- zhKeySectionPatterns) {
-      val matches = Py.findIterA(p, text, 0, anchor, maxMatches = 2, folded = folded)
-      for ((g1, _, _) <- matches) {
-        val clean = cleanComprehensiveContent(g1)
-        if (clean.length >= 30 && clean.length <= 1500)
-          segments += Segment(clean, weight)
-      }
-    }
-
-    for ((p, weight, anchor) <- zhJudgmentPatterns) {
-      val matches = Py.findIterA(p, text, 0, anchor, maxMatches = 2, folded = folded)
-      for ((g1, _, _) <- matches) {
-        val clean = cleanComprehensiveContent(g1)
-        if (clean.length >= 20 && clean.length <= 1000)
-          segments += Segment(clean, weight)
-      }
-    }
-
-    val caseKeywords = Seq("申請", "爭議", "糾紛", "案件", "法庭", "法院", "判決", "命令", "裁定")
-    val paragraphs = Py.resplit("""\n\s*\n""", text)
-    var stop = false
-    for (paragraph <- paragraphs if !stop) {
-      if (paragraph.length >= 150 && paragraph.length <= 1500 &&
-          caseKeywords.exists(paragraph.contains)) {
-        val clean = cleanComprehensiveContent(paragraph)
-        if (clean.length >= 80 && clean.length <= 1200) {
-          segments += Segment(clean, 2)
-          if (segments.length >= 8) stop = true
-        }
-      }
-    }
-
-    combineComprehensiveSegments(segments.toList, 2500)
-  }
-
-  /** `_clean_comprehensive_content` (`src/extractor.py:1782-1802`). */
+  /** `_clean_comprehensive_content` (`src/extractor.py:1782-1802`); the
+    * reference's `_clean_judgment_content` (`src/extractor.py:2087-2107`)
+    * has the same body, so JudgmentResult uses this one too. */
   def cleanComprehensiveContent(content: String): String = {
     if (content == null || content.isEmpty) return ""
     var c = Py.wsCollapse(Py.strip(content))

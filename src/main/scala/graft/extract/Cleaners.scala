@@ -1,5 +1,7 @@
 package graft.extract
 
+import java.util.Locale
+
 import graft.text.Py
 
 /** P1 — margin-index boilerplate strip.
@@ -35,7 +37,7 @@ object Cleaners {
 
     // Protect first-page content: skip cleaning entirely when the first 50
     // lines contain critical court information (src/extractor.py:157-167).
-    val early = lines.take(50).mkString("\n").toUpperCase
+    val early = lines.take(50).mkString("\n").toUpperCase(Locale.ROOT)
     if (criticalKeywords.exists(early.contains)) return text
 
     var consecutive = 0
@@ -50,7 +52,7 @@ object Cleaners {
         consecutive += 1
         maxConsecutive = math.max(maxConsecutive, consecutive)
       } else if (consecutive > 0) {
-        val up = stripped.toUpperCase
+        val up = stripped.toUpperCase(Locale.ROOT)
         if (maxConsecutive >= 15 && contentKeywords.exists(up.contains)) {
           contentStart = i
           break = true
@@ -66,7 +68,7 @@ object Cleaners {
     if (maxConsecutive >= 10 && contentStart > 0) {
       val cleaned = lines.drop(contentStart).mkString("\n")
       if (cleaned.length > 200 &&
-          validateKeywords.exists(cleaned.toUpperCase.contains))
+          validateKeywords.exists(cleaned.toUpperCase(Locale.ROOT).contains))
         return cleaned
     }
 
@@ -79,7 +81,7 @@ object Cleaners {
       if (singleLetterCount > 30) {
         var j = 0
         while (j < lines.length) {
-          val up = Py.strip(lines(j)).toUpperCase
+          val up = Py.strip(lines(j)).toUpperCase(Locale.ROOT)
           if (fallbackKeywords.exists(up.contains)) {
             val cleaned = lines.drop(j).mkString("\n")
             if (cleaned.length > 500) return cleaned

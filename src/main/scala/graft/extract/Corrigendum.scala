@@ -1,5 +1,7 @@
 package graft.extract
 
+import java.util.Locale
+
 import graft.model.CaseRecord
 import graft.text.Py
 import graft.text.Py.I
@@ -54,7 +56,7 @@ object Corrigendum {
     val summary =
       if (corrections.nonEmpty) corrections.take(2).mkString("; ")
       else {
-        val lower = text.toLowerCase
+        val lower = text.toLowerCase(Locale.ROOT)
         if (lower.contains("names") && lower.contains("added")) "添加律师姓名"
         else if (lower.contains("corrected")) "文字更正"
         else "格式或内容更正"

@@ -1,13 +1,16 @@
 package graft.extract
 
+import java.util.Locale
+
 import graft.text.Py
-import graft.text.Py.{I, S}
+import graft.text.Py.{I, Rx, S}
 
 /** P7 — court-name extraction, cleaning and validation
   * (`/root/reference/src/extractor.py:330-437`). The validator is part of
   * the cascade: an invalid match falls through to the next pattern. */
 object CourtName {
 
+  // every English pattern starts with the literal "IN THE"
   private[graft] val englishPatterns = Seq(
     """IN THE\s+(HIGH COURT OF THE\s+HONG KONG SPECIAL ADMINISTRATIVE REGION\s+COURT OF FIRST INSTANCE)""",
     """IN THE\s+(HIGH COURT OF THE\s+HONG KONG SPECIAL ADMINISTRATIVE REGION\s+COURT OF APPEAL)""",
@@ -19,6 +22,7 @@ object CourtName {
     """IN THE\s+(HIGH COURT OF THE\s+HONG KONG SPECIAL ADMINISTRATIVE REGION)""",
     """IN THE\s+(.*?HIGH COURT.*?)(?=ACTION|PROCEEDING|BETWEEN)""",
     """IN THE\s+(.*?COURT.*?)(?=ACTION|PROCEEDING|BETWEEN)""")
+    .map(Rx(_, I | S, Py.lit("in the")))
 
   private[graft] val chinesePatterns = Seq(
     """(香港特別行政區高等法院原訟法庭)""",
@@ -28,34 +32,20 @@ object CourtName {
     """(高等法院原訟法庭)""",
     """(.*?高等法院.*?原訟法庭)""",
     """(.*?高等法院.*?法庭)""")
+    .map(Rx(_))
 
+  /** The first match, in pattern order, that cleans to a valid court name.
+    * Every English pattern needs "IN THE" and captures a "...COURT...": a
+    * document without both is skipped before any pattern runs. */
   def extract(text: String, language: String): String = {
-    if (language == "english") {
-      // every English pattern starts with literal "IN THE" and captures a
-      // "...COURT..." — absent those, no pattern can match (pure speedup);
-      // the same prefix anchors the skip-scan (AnchoredScanSpec pins it)
-      val folded = Py.foldCase(text)
-      if (!folded.contains("in the") || !folded.contains("court")) return ""
-      val anchor = Py.LitAnchor(Seq("in the"))
-      for (p <- englishPatterns) {
-        Py.search1A(p, text, I | S, anchor, folded) match {
-          case Some(raw) =>
-            val cleaned = cleanCourtName(Py.strip(raw))
-            if (validateCourtName(cleaned, language)) return cleaned
-          case None =>
-        }
-      }
-    } else {
-      for (p <- chinesePatterns) {
-        Py.search1(p, text) match {
-          case Some(raw) =>
-            val cleaned = cleanCourtName(Py.strip(raw))
-            if (validateCourtName(cleaned, language)) return cleaned
-          case None =>
-        }
-      }
-    }
-    ""
+    val english = language == "english"
+    val folded = if (english) Py.foldCase(text) else null
+    if (english && !(folded.contains("in the") && folded.contains("court"))) return ""
+    (if (english) englishPatterns else chinesePatterns).iterator
+      .flatMap(_.search1(text, folded))
+      .map(raw => cleanCourtName(Py.strip(raw)))
+      .find(validateCourtName(_, language))
+      .getOrElse("")
   }
 
   /** `_clean_court_name` (`src/extractor.py:381-399`) — normalizes
@@ -78,7 +68,7 @@ object CourtName {
     if (courtName.length > 200) return false
 
     if (language == "english") {
-      val up = courtName.toUpperCase
+      val up = courtName.toUpperCase(Locale.ROOT)
       if (!up.contains("COURT")) return false
       val bad = Seq("BETWEEN", "PLAINTIFF", "DEFENDANT", "ACTION NO", "PROCEEDING", "BEFORE")
       if (bad.exists(up.contains)) return false

@@ -1,7 +1,7 @@
 package graft.extract
 
 import graft.text.Py
-import graft.text.Py.I
+import graft.text.Py.{I, Rx}
 
 /** P15/P16/P17 — judge extraction and the two cleaning chains
   * (`/root/reference/src/extractor.py:1349-1592`).
@@ -16,73 +16,51 @@ object Judge {
     if (language == "english") extractEnglishJudge(text)
     else extractChineseJudge(text)
 
-  private val specialPatterns = Seq(
-    """(?i)(?:mr\.?\s+|ms\.?\s+)?recorder\s+([A-Z][A-Za-z]+(?:\s+[A-Z][A-Za-z]+)+)(?:\s*,?\s*sc)?(?=\s+in\s+(?:court|chambers)|\n|$)""",
-    """(?i)master\s+([A-Z][A-Za-z]+(?:\s+[A-Z][A-Za-z]+)+)(?=\s+in\s+(?:court|chambers)|\n|$)""",
-    """\(([A-Z][A-Za-z]{2,}(?:\s+[A-Z][A-Za-z]+)*)\s*,?\s*sc?\)""",
-    """(?i)(?:deputy\s+(?:high\s+court\s+)?judge\s+|dhcj\s+)([A-Z][A-Za-z]+(?:\s+[A-Z][A-Za-z]+)+)(?:\s+sc)?(?=\s+in\s+(?:court|chambers)|\n|$)""")
+  // Each English pattern with the literal its matches require (Py.Rx guard).
+  private[graft] val specialPatterns = Seq(
+    Rx("""(?i)(?:mr\.?\s+|ms\.?\s+)?recorder\s+([A-Z][A-Za-z]+(?:\s+[A-Z][A-Za-z]+)+)(?:\s*,?\s*sc)?(?=\s+in\s+(?:court|chambers)|\n|$)""",
+      guard = Seq("recorder")),
+    Rx("""(?i)master\s+([A-Z][A-Za-z]+(?:\s+[A-Z][A-Za-z]+)+)(?=\s+in\s+(?:court|chambers)|\n|$)""",
+      guard = Seq("master")),
+    Rx("""\(([A-Z][A-Za-z]{2,}(?:\s+[A-Z][A-Za-z]+)*)\s*,?\s*sc?\)"""),
+    Rx("""(?i)(?:deputy\s+(?:high\s+court\s+)?judge\s+|dhcj\s+)([A-Z][A-Za-z]+(?:\s+[A-Z][A-Za-z]+)+)(?:\s+sc)?(?=\s+in\s+(?:court|chambers)|\n|$)""",
+      guard = Seq("judge", "dhcj")))
 
-  private val beforePatterns = Seq(
+  private[graft] val beforePatterns = Seq(
     """(?i)before:\s*(?:the\s+hon(?:ourable)?\.\s+)?([A-Z][A-Za-z]+(?:\s+[A-Z][A-Za-z]+)+)(?:\s+j\.?)?(?=\s+in\s+(?:court|chambers)|\n)""",
     """(?i)before:\s*(?:deputy\s+(?:high\s+court\s+)?judge\s+)?([A-Z][A-Za-z]+(?:\s+[A-Z][A-Za-z]+)+)(?:\s+j\.?)?(?=\s+sitting|\n)""",
     """(?i)before:\s*([A-Z][A-Za-z]{2,}(?:\s+[A-Z][A-Za-z]+)*(?:\s+j\.?)?)""")
+    .map(Rx(_, guard = Seq("before:")))
 
-  private val alternativePatterns = Seq(
-    """(?i)(deputy\s+(?:high\s+court\s+)?judge\s+[A-Z][A-Za-z]+(?:\s+[A-Z][A-Za-z]+)+)(?=\s+sitting|\s+in\s+(?:court|chambers)|\n)""",
-    """(?i)(justice\s+[A-Z][A-Za-z]+(?:\s+[A-Z][A-Za-z]+)+)(?=\s+sitting|\s+in\s+(?:court|chambers)|\n)""",
-    """(?i)(the\s+hon(?:ourable)?\.\s+[A-Z][A-Za-z]+(?:\s+[A-Z][A-Za-z]+)+\s+j\.?)(?=\s|\n)""",
-    """(?i)\(([A-Z][A-Za-z]{2,}(?:\s+[A-Z][A-Za-z]+)+)\s*\)\s*(?:deputy\s+high\s+court\s+)?judge\s+of\s+the\s+court""",
-    """(?i)\(([A-Z][A-Za-z]{2,}(?:\s+[A-Z][A-Za-z]+)+)\s*\)\s*recorder\s+of\s+the\s+high\s+court""")
+  private[graft] val alternativePatterns = Seq(
+    Rx("""(?i)(deputy\s+(?:high\s+court\s+)?judge\s+[A-Z][A-Za-z]+(?:\s+[A-Z][A-Za-z]+)+)(?=\s+sitting|\s+in\s+(?:court|chambers)|\n)""",
+      guard = Seq("judge")),
+    Rx("""(?i)(justice\s+[A-Z][A-Za-z]+(?:\s+[A-Z][A-Za-z]+)+)(?=\s+sitting|\s+in\s+(?:court|chambers)|\n)""",
+      guard = Seq("justice")),
+    Rx("""(?i)(the\s+hon(?:ourable)?\.\s+[A-Z][A-Za-z]+(?:\s+[A-Z][A-Za-z]+)+\s+j\.?)(?=\s|\n)""",
+      guard = Seq("hon")),
+    Rx("""(?i)\(([A-Z][A-Za-z]{2,}(?:\s+[A-Z][A-Za-z]+)+)\s*\)\s*(?:deputy\s+high\s+court\s+)?judge\s+of\s+the\s+court""",
+      guard = Seq("judge")),
+    Rx("""(?i)\(([A-Z][A-Za-z]{2,}(?:\s+[A-Z][A-Za-z]+)+)\s*\)\s*recorder\s+of\s+the\s+high\s+court""",
+      guard = Seq("recorder")))
 
-  private val specialGuards = Seq(
-    Seq("recorder"), Seq("master"), Seq.empty, Seq("judge", "dhcj"))
-  private val alternativeGuards = Seq(
-    Seq("judge"), Seq("justice"), Seq("hon"), Seq("judge"), Seq("recorder"))
-
-  /** `_extract_english_judge` (`src/extractor.py:1356-1435`).
-    * Required-literal guards (case-insensitive): guard false => the pattern
-    * cannot match, skipping the 15k-char scan is a pure speedup. */
+  /** `_extract_english_judge` (`src/extractor.py:1356-1435`): special
+    * formats, then `Before:` formats, then signature-block and title
+    * formats; the first match that passes its tier's check and cleans to a
+    * non-empty name wins (`findall()[0]` ≡ the first match). */
   def extractEnglishJudge(text: String): String = {
-    val lower = text.toLowerCase
-    // Tier 1: special formats
-    for ((p, g) <- specialPatterns.zip(specialGuards)
-         if g.isEmpty || g.exists(lower.contains)) {
-      // findall()[0] ≡ first match (src/extractor.py:1375-1377) — stop early
-      Py.search1(p, text).foreach { m =>
-        val raw = Py.strip(m)
-        if (raw.length >= 3 &&
-            !Py.matches("""^(?:to|at|in|on|for|and|or|the|of|with|from)$""", raw, I)) {
-          val clean = cleanJudgeNameEnhanced(raw)
-          if (clean.nonEmpty) return clean
-        }
-      }
-    }
-    // Tier 2: Before: formats — every pattern requires literal "before:"
-    if (lower.contains("before:"))
-    for (p <- beforePatterns) {
-      Py.search1(p, text).foreach { m =>
-        val raw = Py.strip(m)
-        if (raw.length >= 3 &&
-            !Py.matches("""^(?:to|at|in|on|for|and|or|the|of|with|from|by|this|that|these|those)$""", raw, I) &&
-            !Py.matches("""^(?:court|chambers|sitting|hearing|judgment|decision|order)$""", raw, I)) {
-          val clean = cleanJudgeNameEnhanced(raw)
-          if (clean.nonEmpty) return clean
-        }
-      }
-    }
-    // Tier 3: signature-block / title formats
-    for ((p, g) <- alternativePatterns.zip(alternativeGuards)
-         if g.exists(lower.contains)) {
-      Py.search1(p, text).foreach { m =>
-        val raw = Py.strip(m)
-        if (raw.length >= 5 && raw.contains(" ") &&
-            !Py.matches("""^(?:court|chambers|sitting|hearing|judgment|decision|order).*""", raw, I)) {
-          val clean = cleanJudgeNameEnhanced(raw)
-          if (clean.nonEmpty) return clean
-        }
-      }
-    }
-    ""
+    val folded = Py.foldCase(text) // shared by every pattern's guard
+    def first(patterns: Seq[Rx])(valid: String => Boolean): Option[String] =
+      patterns.iterator.flatMap(_.search1(text, folded)).map(Py.strip).filter(valid)
+        .map(cleanJudgeNameEnhanced).find(_.nonEmpty)
+    first(specialPatterns)(raw => raw.length >= 3 &&
+        !Py.matches("""^(?:to|at|in|on|for|and|or|the|of|with|from)$""", raw, I))
+      .orElse(first(beforePatterns)(raw => raw.length >= 3 &&
+        !Py.matches("""^(?:to|at|in|on|for|and|or|the|of|with|from|by|this|that|these|those)$""", raw, I) &&
+        !Py.matches("""^(?:court|chambers|sitting|hearing|judgment|decision|order)$""", raw, I)))
+      .orElse(first(alternativePatterns)(raw => raw.length >= 5 && raw.contains(" ") &&
+        !Py.matches("""^(?:court|chambers|sitting|hearing|judgment|decision|order).*""", raw, I)))
+      .getOrElse("")
   }
 
   /** `_extract_chinese_judge` (`src/extractor.py:1437-1453`). */

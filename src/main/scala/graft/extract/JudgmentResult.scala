@@ -1,7 +1,7 @@
 package graft.extract
 
 import graft.text.Py
-import graft.text.Py.{I, S}
+import graft.text.Py.{I, Rx, S}
 
 /** P22 — judgment-result extraction over the last-15% window
   * (`/root/reference/src/extractor.py:1918-2107`). */
@@ -16,133 +16,80 @@ object JudgmentResult {
     else extractFocusedChinese(section)
   }
 
-  private val orderPatterns = Seq(
-    """(?:ORDER|ORDERS|JUDGMENT|CONCLUSION|DISPOSITION)\s*[:\.]?\s*\n((?:[^\n]+\n?){2,12})""",
-    """(?:IT IS ORDERED|I ORDER|THE COURT ORDERS?)\s*[:\.]?\s*((?:[^\n]+\n?){1,8})""",
-    """(?:For (?:these reasons|the foregoing reasons)|Accordingly|Therefore)\s*[,.]?\s*([^\n.]{30,500})""",
-    """(I (?:make an )?[Oo]rder[^.]*?(?:that|in terms of)[^.]*?[.\n])""",
-    """(I (?:would )?(?:make|grant|allow|dismiss|refuse)[^.]*?(?:order|application|claim)[^.]*?[.\n])""",
-    """([Bb]ased on the above[^.]*?[Oo]rder[^.]*?[.\n])""",
-    """([Ii]n conclusion[^.]*?(?:order|grant|dismiss|allow)[^.]*?[.\n])""",
-    """([Ff]or the (?:above )?reasons?[^.]*?(?:order|grant|dismiss|allow)[^.]*?[.\n])""")
+  // Each pattern with its start anchor and, where the anchor alone does not
+  // imply it, a required-literal guard (see Py.Rx).
+  private[graft] val orderPatterns = Seq(
+    Rx("""(?:ORDER|ORDERS|JUDGMENT|CONCLUSION|DISPOSITION)\s*[:\.]?\s*\n((?:[^\n]+\n?){2,12})""", I | S,
+      Py.lit("order", "judgment", "conclusion", "disposition")),
+    Rx("""(?:IT IS ORDERED|I ORDER|THE COURT ORDERS?)\s*[:\.]?\s*((?:[^\n]+\n?){1,8})""", I | S,
+      Py.lit("it is ordered", "i order", "the court order")),
+    Rx("""(?:For (?:these reasons|the foregoing reasons)|Accordingly|Therefore)\s*[,.]?\s*([^\n.]{30,500})""", I | S,
+      Py.lit("for these reasons", "for the foregoing reasons", "accordingly", "therefore")),
+    Rx("""(I (?:make an )?[Oo]rder[^.]*?(?:that|in terms of)[^.]*?[.\n])""", I | S,
+      Py.lit("i "), Seq("order")),
+    Rx("""(I (?:would )?(?:make|grant|allow|dismiss|refuse)[^.]*?(?:order|application|claim)[^.]*?[.\n])""", I | S,
+      Py.lit("i "), Seq("make", "grant", "allow", "dismiss", "refuse")),
+    Rx("""([Bb]ased on the above[^.]*?[Oo]rder[^.]*?[.\n])""", I | S, Py.lit("based on the above")),
+    Rx("""([Ii]n conclusion[^.]*?(?:order|grant|dismiss|allow)[^.]*?[.\n])""", I | S, Py.lit("in conclusion")),
+    Rx("""([Ff]or the (?:above )?reasons?[^.]*?(?:order|grant|dismiss|allow)[^.]*?[.\n])""", I | S,
+      Py.lit("for the "), Seq("reason")))
 
-  private val decisionPatterns = Seq(
-    """((?:dismiss|grant|refuse|allow|upheld|affirmed).*?(?:application|claim|appeal|action))""",
-    """((?:Judgment|judgment)\s+(?:be\s+)?entered\s+for.*?)""",
-    """(I\s+(?:dismiss|grant|order|hold|refuse|allow).*?)""",
-    """((?:The\s+)?(?:application|appeal|claim)\s+(?:is|shall be)\s+(?:granted|dismissed|refused|allowed).*?)""",
-    """((?:The\s+)?[Dd]efendants?.*?(?:pay|liable|responsible)[^.]*?(?:costs|damages|compensation)[^.]*?[.\n])""",
-    """((?:The\s+)?[Pp]laintiffs?.*?(?:entitled|succeed)[^.]*?[.\n])""",
-    """([Ss]ummary judgment.*?(?:granted|entered|allowed)[^.]*?[.\n])""",
-    """([Cc]osts.*?(?:assessed|taxed|awarded)[^.]*?[.\n])""",
-    """([Ii]nterest.*?(?:awarded|granted|payable)[^.]*?[.\n])""",
-    """([Aa]pplication.*?(?:granted|dismissed|refused|allowed)[^.]*?[.\n])""")
-
-  // Required-literal guards (case-insensitive, aligned 1:1 with the pattern
-  // lists): guard false ⟹ the pattern cannot match — pure speedup.
-  private val orderGuards = Seq(
-    Seq("order", "judgment", "conclusion", "disposition"),
-    Seq("it is ordered", "i order", "the court order"),
-    Seq("for these reasons", "for the foregoing reasons", "accordingly", "therefore"),
-    Seq("order"),
-    Seq("make", "grant", "allow", "dismiss", "refuse"),
-    Seq("based on the above"),
-    Seq("in conclusion"),
-    Seq("reason"))
-
-  private val decisionGuards = Seq(
-    Seq("dismiss", "grant", "refuse", "allow", "upheld", "affirmed"),
-    Seq("entered"),
-    Seq("dismiss", "grant", "order", "hold", "refuse", "allow"),
-    Seq("granted", "dismissed", "refused", "allowed"),
-    Seq("pay", "liable", "responsible"),
-    Seq("entitled", "succeed"),
-    Seq("judgment"),
-    Seq("assessed", "taxed", "awarded"),
-    Seq("awarded", "granted", "payable"),
-    Seq("granted", "dismissed", "refused", "allowed"))
-
-  // Start-of-match anchors (aligned 1:1 with the pattern lists): every
-  // match of the pattern begins with one of these literals, so the scan
-  // can skip between their occurrences (AnchoredScanSpec pins equivalence).
-  private val orderAnchors: Seq[Py.Anchor] = Seq(
-    Py.LitAnchor(Seq("order", "judgment", "conclusion", "disposition")),
-    Py.LitAnchor(Seq("it is ordered", "i order", "the court order")),
-    Py.LitAnchor(Seq("for these reasons", "for the foregoing reasons", "accordingly", "therefore")),
-    Py.LitAnchor(Seq("i ")),
-    Py.LitAnchor(Seq("i ")),
-    Py.LitAnchor(Seq("based on the above")),
-    Py.LitAnchor(Seq("in conclusion")),
-    Py.LitAnchor(Seq("for the ")))
-
-  private val decisionAnchors: Seq[Py.Anchor] = Seq(
-    Py.LitAnchor(Seq("dismiss", "grant", "refuse", "allow", "upheld", "affirmed")),
-    Py.LitAnchor(Seq("judgment")),
-    Py.LitAnchor(Seq("i")),
-    Py.LitAnchor(Seq("the", "application", "appeal", "claim")),
-    Py.LitAnchor(Seq("the", "defendant")),
-    Py.LitAnchor(Seq("the", "plaintiff")),
-    Py.LitAnchor(Seq("summary judgment")),
-    Py.LitAnchor(Seq("costs")),
-    Py.LitAnchor(Seq("interest")),
-    Py.LitAnchor(Seq("application")))
-
-  private[graft] def englishPatternRows: Seq[(String, Int, Seq[String], Py.Anchor)] =
-    orderPatterns.zip(orderGuards).zip(orderAnchors).map { case ((p, g), a) => (p, I | S, g, a) } ++
-      decisionPatterns.zip(decisionGuards).zip(decisionAnchors).map { case ((p, g), a) => (p, I, g, a) }
+  private[graft] val decisionPatterns = Seq(
+    Rx("""((?:dismiss|grant|refuse|allow|upheld|affirmed).*?(?:application|claim|appeal|action))""", I,
+      Py.lit("dismiss", "grant", "refuse", "allow", "upheld", "affirmed")),
+    Rx("""((?:Judgment|judgment)\s+(?:be\s+)?entered\s+for.*?)""", I, Py.lit("judgment"), Seq("entered")),
+    Rx("""(I\s+(?:dismiss|grant|order|hold|refuse|allow).*?)""", I,
+      Py.lit("i"), Seq("dismiss", "grant", "order", "hold", "refuse", "allow")),
+    Rx("""((?:The\s+)?(?:application|appeal|claim)\s+(?:is|shall be)\s+(?:granted|dismissed|refused|allowed).*?)""", I,
+      Py.lit("the", "application", "appeal", "claim"), Seq("granted", "dismissed", "refused", "allowed")),
+    Rx("""((?:The\s+)?[Dd]efendants?.*?(?:pay|liable|responsible)[^.]*?(?:costs|damages|compensation)[^.]*?[.\n])""", I,
+      Py.lit("the", "defendant"), Seq("pay", "liable", "responsible")),
+    Rx("""((?:The\s+)?[Pp]laintiffs?.*?(?:entitled|succeed)[^.]*?[.\n])""", I,
+      Py.lit("the", "plaintiff"), Seq("entitled", "succeed")),
+    Rx("""([Ss]ummary judgment.*?(?:granted|entered|allowed)[^.]*?[.\n])""", I, Py.lit("summary judgment")),
+    Rx("""([Cc]osts.*?(?:assessed|taxed|awarded)[^.]*?[.\n])""", I,
+      Py.lit("costs"), Seq("assessed", "taxed", "awarded")),
+    Rx("""([Ii]nterest.*?(?:awarded|granted|payable)[^.]*?[.\n])""", I,
+      Py.lit("interest"), Seq("awarded", "granted", "payable")),
+    Rx("""([Aa]pplication.*?(?:granted|dismissed|refused|allowed)[^.]*?[.\n])""", I,
+      Py.lit("application"), Seq("granted", "dismissed", "refused", "allowed")))
 
   /** `_extract_judgment_result_focused` (`src/extractor.py:1941-2022`). */
-  def extractFocusedEnglish(section: String): String = {
-    if (section == null || section.length < 100) return ""
-    val segments = scala.collection.mutable.ListBuffer.empty[String]
-    val folded = Py.foldCase(section)
+  def extractFocusedEnglish(section: String): String =
+    focused(section, Seq((orderPatterns, 20, 1000), (decisionPatterns, 15, 800)),
+      prefixLen = 30, maxLen = 2500, fold = true)
 
-    for (((p, g), a) <- orderPatterns.zip(orderGuards).zip(orderAnchors)
-         if g.exists(folded.contains)) {
-      for ((g1, _, _) <- Py.findIterA(p, section, I | S, a, maxMatches = 2, folded = folded)) {
-        val clean = cleanJudgmentContent(g1)
-        if (clean.length >= 20 && clean.length <= 1000) segments += clean
-      }
-    }
-    for (((p, g), a) <- decisionPatterns.zip(decisionGuards).zip(decisionAnchors)
-         if g.exists(folded.contains)) {
-      for ((g1, _, _) <- Py.findIterA(p, section, I, a, maxMatches = 2, folded = folded)) {
-        val clean = cleanJudgmentContent(g1)
-        if (clean.length >= 15 && clean.length <= 800) segments += clean
-      }
-    }
+  private val orderZh = Seq(
+    Rx("""(?:命令|判令|裁定|判決|判决)\s*[：:.]?\s*\n((?:[^\n]+\n?){2,10})"""),
+    Rx("""(?:本庭|法庭|法院)\s*(?:命令|判令|裁定|判決|判决)\s*([^\n。]{15,400})"""),
+    Rx("""(?:綜上所述|因此|故此|據此)\s*[，,：:.]*\s*([^\n。]{20,400})"""))
 
-    combine(segments.toList, prefixLen = 30, maxSegments = 4, maxLen = 2500)
-  }
+  private val decisionZh = Seq(
+    Rx("""((?:批准|拒絕|駁回|允許|准許|不准).*?(?:申請|請求|上訴))"""),
+    Rx("""((?:勝訴|敗訴|得直|不得直).*?)"""),
+    Rx("""((?:撤回|撤訴).*?)"""))
 
   /** `_extract_chinese_judgment_result_focused` (`src/extractor.py:2024-2085`). */
-  def extractFocusedChinese(section: String): String = {
+  def extractFocusedChinese(section: String): String =
+    focused(section, Seq((orderZh, 10, 800), (decisionZh, 8, 600)),
+      prefixLen = 20, maxLen = 2000, fold = false)
+
+  /** The first two matches of each pattern, cleaned (`_clean_judgment_content`
+    * is `_clean_comprehensive_content`), kept when their length is within the
+    * layer's bounds, then prefix-deduped and budgeted. `fold` shares one
+    * case fold among patterns that have guards or anchors. */
+  private def focused(section: String, layers: Seq[(Seq[Rx], Int, Int)],
+                      prefixLen: Int, maxLen: Int, fold: Boolean): String = {
     if (section == null || section.length < 100) return ""
-    val segments = scala.collection.mutable.ListBuffer.empty[String]
-
-    val orderZh = Seq(
-      """(?:命令|判令|裁定|判決|判决)\s*[：:.]?\s*\n((?:[^\n]+\n?){2,10})""",
-      """(?:本庭|法庭|法院)\s*(?:命令|判令|裁定|判決|判决)\s*([^\n。]{15,400})""",
-      """(?:綜上所述|因此|故此|據此)\s*[，,：:.]*\s*([^\n。]{20,400})""")
-    for (p <- orderZh) {
-      for ((g1, _, _) <- Py.findIter(p, section).take(2)) {
-        val clean = cleanJudgmentContent(g1)
-        if (clean.length >= 10 && clean.length <= 800) segments += clean
-      }
-    }
-
-    val decisionZh = Seq(
-      """((?:批准|拒絕|駁回|允許|准許|不准).*?(?:申請|請求|上訴))""",
-      """((?:勝訴|敗訴|得直|不得直).*?)""",
-      """((?:撤回|撤訴).*?)""")
-    for (p <- decisionZh) {
-      for ((g1, _, _) <- Py.findIter(p, section).take(2)) {
-        val clean = cleanJudgmentContent(g1)
-        if (clean.length >= 8 && clean.length <= 600) segments += clean
-      }
-    }
-
-    combine(segments.toList, prefixLen = 20, maxSegments = 4, maxLen = 2000)
+    val folded = if (fold) Py.foldCase(section) else null
+    val segments = for {
+      (patterns, lo, hi) <- layers.toList
+      p <- patterns
+      (g1, _, _) <- p.findIter(section, folded, maxMatches = 2)
+      clean = CaseType.cleanComprehensiveContent(g1)
+      if clean.length >= lo && clean.length <= hi
+    } yield clean
+    combine(segments, prefixLen, maxSegments = 4, maxLen)
   }
 
   private def combine(segments: List[String], prefixLen: Int,
@@ -158,22 +105,5 @@ object JudgmentResult {
     val result = capped.mkString(" | ")
     if (result.length > maxLen) Py.sliceTo(result, maxLen - 3) + "..."
     else result
-  }
-
-  /** `_clean_judgment_content` (`src/extractor.py:2087-2107`). */
-  def cleanJudgmentContent(content: String): String = {
-    if (content == null || content.isEmpty) return ""
-    var c = Py.wsCollapse(Py.strip(content))
-    // guard rationale mirrors CaseType.cleanComprehensiveContent
-    val hasPage = {
-      val f = Py.foldCase(c); f.contains("page") || f.contains("頁")
-    }
-    if (c.indexOf('-') >= 0) c = Py.sub("""\s*-\s*\d+\s*-\s*""", " ", c)
-    if (c.contains("___")) c = Py.sub("""\s*_{3,}\s*""", " ", c)
-    if (hasPage) c = Py.sub("""\s*(?:page|頁)\s*\d+.*$""", "", c, I)
-    c = Py.sub("""^\s*(?:\d+\.\s*)?""", "", c)
-    c = Py.sub("""^[,;.:\s]+""", "", c)
-    c = Py.sub("""[.\s]+$""", "", c)
-    Py.strip(c)
   }
 }

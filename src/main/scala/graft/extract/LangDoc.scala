@@ -1,5 +1,7 @@
 package graft.extract
 
+import java.util.Locale
+
 import graft.text.Py
 
 /** P2/P3/P4/P5 — language detection, Chinese-document routing, document-type
@@ -37,7 +39,7 @@ object LangDoc {
 
   def detectDocumentType(fileName: String): String = {
     if (fileName != null && fileName.nonEmpty) {
-      val up = fileName.toUpperCase
+      val up = fileName.toUpperCase(Locale.ROOT)
       docTypes.find(up.contains).getOrElse("GENERIC")
     } else "GENERIC"
   }
@@ -46,7 +48,7 @@ object LangDoc {
     * (`chinese_document_extractor.py:365-378`). */
   def determineChineseDocumentType(fileName: String): String = {
     if (fileName == null || fileName.isEmpty) return "HCA"
-    val up = fileName.toUpperCase
+    val up = fileName.toUpperCase(Locale.ROOT)
     if (up.contains("HCA")) "HCA"
     else if (up.contains("HCAL")) "HCAL"
     else if (up.contains("HCMP")) "HCMP"

@@ -1,7 +1,9 @@
 package graft.extract
 
+import java.util.Locale
+
 import graft.text.Py
-import graft.text.Py.I
+import graft.text.Py.Rx
 
 /** P19/P20 — lawyer-segment extraction over the last-20% window, with
   * last-10-lines and last-30% fallbacks, 30-char-prefix dedupe and the
@@ -16,39 +18,37 @@ object Lawyers {
     else extractChineseLawyerSegment(lastSection, text)
   }
 
-  // each pattern paired with its start-of-match anchor literals (what every
-  // match must begin with, case-insensitively) — AnchoredScanSpec pins the
-  // skip-scan == plain-scan equivalence
-  private[graft] val lawyerPatternRows = Seq(
-    ("""(?i)(?:mr|ms|miss)\.?\s+[A-Z][a-z]+[^.]*?instructed\s+by[^.]*?for\s+(?:the\s+)?(?:plaintiff|defendant)""",
-      Seq("mr", "ms", "miss")),
-    ("""(?i)instructed\s+by[^.]*?for\s+(?:the\s+)?(?:plaintiff|defendant)""",
-      Seq("instructed")),
-    ("""(?i)counsel\s+for\s+(?:the\s+)?(?:plaintiff|defendant)[:\s]+([^\n\.]+)""",
-      Seq("counsel")),
-    ("""(?i)(?:plaintiff|defendant).*?represented\s+by[^.]*?instructed\s+by""",
-      Seq("plaintiff", "defendant")),
-    ("""(?i)for\s+(?:the\s+)?(?:plaintiff|defendant)[:\s]+(?:mr|ms|miss)\.?\s+[A-Z][a-z]+""",
-      Seq("for")),
-    ("""(?i)(?:mr|ms|miss)\.?\s+[A-Z][a-z]+.*?(?:instructed\s+by|of\s+[A-Z][a-z]+.*?(?:chambers|solicitors?))""",
-      Seq("mr", "ms", "miss")),
-    ("""(?i)(?:mr|ms|miss)\.?\s+[A-Z][a-z]+.*?for\s+(?:the\s+)?(?:plaintiff|defendant|1st|2nd|3rd|4th)""",
-      Seq("mr", "ms", "miss")),
-    ("""(?i)(?:leading\s+)?counsel.*?(?:instructed\s+by|for\s+(?:the\s+)?(?:plaintiff|defendant))""",
-      Seq("leading", "counsel")),
-    ("""(?i)(?:the\s+)?(?:plaintiff|defendant).*?(?:was\s+)?not\s+represented""",
-      Seq("the", "plaintiff", "defendant")))
+  // Method-1 patterns, each anchored at the literals its matches begin with
+  private[graft] val lawyerPatterns = Seq(
+    Rx("""(?i)(?:mr|ms|miss)\.?\s+[A-Z][a-z]+[^.]*?instructed\s+by[^.]*?for\s+(?:the\s+)?(?:plaintiff|defendant)""",
+      anchor = Py.lit("mr", "ms", "miss")),
+    Rx("""(?i)instructed\s+by[^.]*?for\s+(?:the\s+)?(?:plaintiff|defendant)""", anchor = Py.lit("instructed")),
+    Rx("""(?i)counsel\s+for\s+(?:the\s+)?(?:plaintiff|defendant)[:\s]+([^\n\.]+)""", anchor = Py.lit("counsel")),
+    Rx("""(?i)(?:plaintiff|defendant).*?represented\s+by[^.]*?instructed\s+by""",
+      anchor = Py.lit("plaintiff", "defendant")),
+    Rx("""(?i)for\s+(?:the\s+)?(?:plaintiff|defendant)[:\s]+(?:mr|ms|miss)\.?\s+[A-Z][a-z]+""", anchor = Py.lit("for")),
+    Rx("""(?i)(?:mr|ms|miss)\.?\s+[A-Z][a-z]+.*?(?:instructed\s+by|of\s+[A-Z][a-z]+.*?(?:chambers|solicitors?))""",
+      anchor = Py.lit("mr", "ms", "miss")),
+    Rx("""(?i)(?:mr|ms|miss)\.?\s+[A-Z][a-z]+.*?for\s+(?:the\s+)?(?:plaintiff|defendant|1st|2nd|3rd|4th)""",
+      anchor = Py.lit("mr", "ms", "miss")),
+    Rx("""(?i)(?:leading\s+)?counsel.*?(?:instructed\s+by|for\s+(?:the\s+)?(?:plaintiff|defendant))""",
+      anchor = Py.lit("leading", "counsel")),
+    Rx("""(?i)(?:the\s+)?(?:plaintiff|defendant).*?(?:was\s+)?not\s+represented""",
+      anchor = Py.lit("the", "plaintiff", "defendant")))
 
-  // Method-3 strict patterns (same anchor convention as lawyerPatternRows)
-  private[graft] val clearPatternRows = Seq(
-    ("""(?i)(?:mr|ms|miss)\.?\s+[A-Z][a-z]+.*?instructed\s+by.*?for\s+(?:the\s+)?(?:plaintiff|defendant)""",
-      Seq("mr", "ms", "miss")),
-    ("""(?i)for\s+(?:the\s+)?(?:plaintiff|defendant)[:\s]+(?:mr|ms|miss)\.?\s+[A-Z][a-z]+.*?(?:instructed|chambers)""",
-      Seq("for")),
-    ("""(?i)(?:the\s+)?(?:plaintiff|defendant).*?not\s+represented""",
-      Seq("the", "plaintiff", "defendant")),
-    ("""(?i)(?:the\s+)?(?:plaintiff|defendant).*?did\s+not\s+appear""",
-      Seq("the", "plaintiff", "defendant")))
+  /** Every Method-1 pattern's match contains one of these literals. */
+  private val lawyerPatternLiterals = Seq("instructed", "counsel", "represented", "mr", "ms", "miss")
+
+  private[graft] val namePattern = Rx("""(?i)(?:mr|ms|miss)\.?\s+[A-Z][a-z]+""", anchor = Py.lit("mr", "ms", "miss"))
+
+  // Method-3 strict patterns
+  private[graft] val clearPatterns = Seq(
+    Rx("""(?i)(?:mr|ms|miss)\.?\s+[A-Z][a-z]+.*?instructed\s+by.*?for\s+(?:the\s+)?(?:plaintiff|defendant)""",
+      anchor = Py.lit("mr", "ms", "miss")),
+    Rx("""(?i)for\s+(?:the\s+)?(?:plaintiff|defendant)[:\s]+(?:mr|ms|miss)\.?\s+[A-Z][a-z]+.*?(?:instructed|chambers)""",
+      anchor = Py.lit("for")),
+    Rx("""(?i)(?:the\s+)?(?:plaintiff|defendant).*?not\s+represented""", anchor = Py.lit("the", "plaintiff", "defendant")),
+    Rx("""(?i)(?:the\s+)?(?:plaintiff|defendant).*?did\s+not\s+appear""", anchor = Py.lit("the", "plaintiff", "defendant")))
 
   private val lawyerKeywords = Seq(
     "instructed by", "counsel for", "represented by", "chambers", "solicitor",
@@ -65,18 +65,13 @@ object Lawyers {
     for (p0 <- paragraphs) {
       val paragraph = Py.strip(p0)
       if (paragraph.length >= 30) {
-        val lower = paragraph.toLowerCase // semantic (reference .lower())
-        // Every lawyerPattern requires one of these literals (case-insens);
-        // guard false ⟹ none can match — pure speedup over the 9-regex scan.
-        val patternGuard = Seq("instructed", "counsel", "represented",
-          "mr", "ms", "miss").exists(lower.contains)
-        lazy val folded = Py.foldCase(paragraph) // shared by the skip-scans
-        val hasLawyerInfo = patternGuard && lawyerPatternRows.exists {
-          case (p, needles) => Py.containsA(p, paragraph, 0, Py.LitAnchor(needles), folded)
-        }
+        val lower = paragraph.toLowerCase(Locale.ROOT) // the reference's .lower()
+        val folded = Py.foldCase(paragraph) // the regex engine's fold
+        // a cascade-level early-out: no literal, no Method-1 pattern can match
+        val hasLawyerInfo = lawyerPatternLiterals.exists(folded.contains) &&
+          lawyerPatterns.exists(_.contains(paragraph, folded))
         val hasKeywords = lawyerKeywords.exists(lower.contains)
-        val hasNamePattern = Py.containsA("""(?i)(?:mr|ms|miss)\.?\s+[A-Z][a-z]+""",
-          paragraph, 0, Py.LitAnchor(Seq("mr", "ms", "miss")), folded)
+        val hasNamePattern = namePattern.contains(paragraph, folded)
         if (hasLawyerInfo || (hasKeywords && hasNamePattern)) {
           val cleaned = cleanLawyerSegment(paragraph)
           if (cleaned.length >= 15 && cleaned.length <= 1000) segments += cleaned
@@ -93,7 +88,7 @@ object Lawyers {
       while (i < lines.length && !break) {
         val line = Py.strip(lines(i))
         if (line.nonEmpty) {
-          val lower = line.toLowerCase
+          val lower = line.toLowerCase(Locale.ROOT)
           if (Seq("instructed", "counsel", "represented", "chambers").exists(lower.contains)) {
             val startIdx = math.max(0, i - 2)
             val endIdx = math.min(lines.length, i + 3)
@@ -119,8 +114,8 @@ object Lawyers {
       val ext = Py.sliceFrom(fullText, extStart)
       val buf = scala.collection.mutable.ListBuffer.empty[String]
       val extFolded = Py.foldCase(ext)
-      for ((p, needles) <- clearPatternRows) {
-        val iter = Py.findIterA(p, ext, 0, Py.LitAnchor(needles), folded = extFolded)
+      for (p <- clearPatterns) {
+        val iter = p.findIter(ext, extFolded)
         var stop = false
         for ((_, ms, me) <- iter if !stop) {
           val s = math.max(0, ms - 100)

@@ -1,5 +1,7 @@
 package graft.extract
 
+import java.util.Locale
+
 import graft.text.Py
 import graft.text.Py.{I, M, S}
 
@@ -202,7 +204,7 @@ object Parties {
     if (name.length > 200) return false
     if (!Py.contains("""[A-Za-z]""", name)) return false
     if (Py.matches("""^\d+$""", name)) return false
-    if (badPartyWords.contains(Py.strip(name.toLowerCase))) return false
+    if (badPartyWords.contains(Py.strip(name.toLowerCase(Locale.ROOT)))) return false
     true
   }
 

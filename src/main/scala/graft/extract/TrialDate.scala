@@ -1,56 +1,44 @@
 package graft.extract
 
 import graft.text.Py
-import graft.text.Py.{I, S}
+import graft.text.Py.{I, Rx}
 
 /** P6 — trial-date extraction + 11-step cleaning chain
   * (`/root/reference/src/extractor.py:254-328`). */
 object TrialDate {
 
-  // each pattern paired with its start-of-match literal (the pattern's own
-  // fixed prefix) for the skip-scan — AnchoredScanSpec pins equivalence
+  // each pattern anchored at its own fixed prefix
   private[graft] val englishPatterns = Seq(
-    ("""Dates of Hearing\s*:?\s*([^\n]+)""", "dates of hearing"),
-    ("""Date of Decision\s*:?\s*([^\n]+)""", "date of decision"),
-    ("""Date of Judgment\s*:?\s*([^\n]+)""", "date of judgment"),
-    ("""Date of Trial\s*:?\s*([^\n]+)""", "date of trial"),
-    ("""Date of Hearing\s*:?\s*([^\n]+)""", "date of hearing"),
-    ("""Hearing Date\s*:?\s*([^\n]+)""", "hearing date"),
-    ("""Date of (?:Hearing|Decision|Judgment|Trial|Decision on Costs)\s*:?\s*([^\n]+)""", "date of "))
+    """Dates of Hearing\s*:?\s*([^\n]+)""" -> "dates of hearing",
+    """Date of Decision\s*:?\s*([^\n]+)""" -> "date of decision",
+    """Date of Judgment\s*:?\s*([^\n]+)""" -> "date of judgment",
+    """Date of Trial\s*:?\s*([^\n]+)""" -> "date of trial",
+    """Date of Hearing\s*:?\s*([^\n]+)""" -> "date of hearing",
+    """Hearing Date\s*:?\s*([^\n]+)""" -> "hearing date",
+    """Date of (?:Hearing|Decision|Judgment|Trial|Decision on Costs)\s*:?\s*([^\n]+)""" -> "date of ")
+    .map { case (p, start) => Rx(p, I, Py.lit(start)) }
 
   private[graft] val chinesePatterns = Seq(
-    ("""聆訊日期\s*[：:︰]\s*([^\n]+)""", "聆訊日期"),
-    ("""判決日期\s*[：:︰]\s*([^\n]+)""", "判決日期"),
-    ("""判案書日期\s*[：:︰]\s*([^\n]+)""", "判案書日期"),
-    ("""審訊日期\s*[：:︰]\s*([^\n]+)""", "審訊日期"),
-    ("""開庭日期\s*[：:︰]\s*([^\n]+)""", "開庭日期"))
+    """聆訊日期\s*[：:︰]\s*([^\n]+)""" -> "聆訊日期",
+    """判決日期\s*[：:︰]\s*([^\n]+)""" -> "判決日期",
+    """判案書日期\s*[：:︰]\s*([^\n]+)""" -> "判案書日期",
+    """審訊日期\s*[：:︰]\s*([^\n]+)""" -> "審訊日期",
+    """開庭日期\s*[：:︰]\s*([^\n]+)""" -> "開庭日期")
+    .map { case (p, start) => Rx(p, 0, Py.lit(start)) }
 
+  /** The first match, in pattern order, whose cleaned form is longer than
+    * 5 chars (English) or 3 (Chinese). Every English pattern requires the
+    * literal "date" and every Chinese one "日期": a document without it is
+    * skipped before any pattern runs. */
   def extract(text: String, language: String): String = {
-    if (language == "english") {
-      // every English pattern requires the literal "date" (case-insensitive)
-      val folded = Py.foldCase(text)
-      if (!folded.contains("date")) return ""
-      for ((p, needle) <- englishPatterns) {
-        Py.search1A(p, text, I, Py.LitAnchor(Seq(needle)), folded) match {
-          case Some(raw) =>
-            val cleaned = cleanTrialDate(Py.strip(raw))
-            if (cleaned.nonEmpty && cleaned.length > 5) return cleaned
-          case None =>
-        }
-      }
-    } else {
-      if (!text.contains("日期")) return ""
-      val folded = Py.foldCase(text)
-      for ((p, needle) <- chinesePatterns) {
-        Py.search1A(p, text, 0, Py.LitAnchor(Seq(needle)), folded) match {
-          case Some(raw) =>
-            val cleaned = cleanTrialDate(Py.strip(raw))
-            if (cleaned.nonEmpty && cleaned.length > 3) return cleaned
-          case None =>
-        }
-      }
-    }
-    ""
+    val english = language == "english"
+    val folded = Py.foldCase(text)
+    if (!folded.contains(if (english) "date" else "日期")) return ""
+    (if (english) englishPatterns else chinesePatterns).iterator
+      .flatMap(_.search1(text, folded))
+      .map(raw => cleanTrialDate(Py.strip(raw)))
+      .find(_.length > (if (english) 5 else 3))
+      .getOrElse("")
   }
 
   /** `_clean_trial_date` (`src/extractor.py:297-328`). */

@@ -91,17 +91,20 @@ object ExtractJob {
       .as[Doc]
   }
 
-  /** One-shot extraction (no lineage) — the bench/throughput path.
-    * ST2: a document that throws inside the kernel is dropped, never
-    * job-fatal (the reference's continue-on-error contract,
-    * `src/parallel_processor.py:142-152`, `src/config.py:176-180`). */
+  /** The per-partition kernel of every extraction job (one-shot,
+    * resumable and streaming). ST2: a document that throws inside the
+    * kernel is dropped, never job-fatal (the reference's continue-on-error
+    * contract, `src/parallel_processor.py:142-152`, `src/config.py:176-180`). */
+  def extractPartition(docs: Iterator[Doc]): Iterator[CaseRecord] =
+    docs.flatMap(d =>
+      try ExtractAll.extractRecord(d)
+      catch { case _: Exception => None })
+
+  /** One-shot extraction (no lineage) — the bench/throughput path. */
   def extractRecords(spark: SparkSession, docs: Dataset[Doc],
                      numPartitions: Int): Dataset[CaseRecord] = {
     import spark.implicits._
-    partitionForExtraction(spark, docs, numPartitions)
-      .mapPartitions(_.flatMap(d =>
-        try ExtractAll.extractRecord(d)
-        catch { case _: Exception => None }))
+    partitionForExtraction(spark, docs, numPartitions).mapPartitions(extractPartition)
   }
 
   def extractOutSpans(spark: SparkSession, docs: Dataset[Doc],
@@ -128,8 +131,8 @@ object ExtractJob {
           .select($"partition_id").as[Int].collect().toSet
       } else Set.empty
 
-    val bucketed = docs.toDF()
-      .withColumn("bucket", pmod(xxhash64($"doc_id"), lit(numBuckets)).cast("int"))
+    val bucket = pmod(xxhash64($"doc_id"), lit(numBuckets)).cast("int")
+    val bucketed = docs.toDF().withColumn("bucket", bucket)
 
     val appended = Seq.newBuilder[PartitionLineage]
     val remaining = (0 until numBuckets).filterNot(doneBuckets)
@@ -138,16 +141,10 @@ object ExtractJob {
       val waveDf = bucketed.filter($"bucket".isin(wave: _*)).cache()
       val started = System.currentTimeMillis()
 
-      val waveRecords = waveDf
-        .select($"doc_id", $"spans", $"bucket").as[(String, Seq[graft.model.Span], Int)]
-        .mapPartitions { it =>
-          it.flatMap { case (id, spans, bucket) =>
-            ExtractAll.extractRecord(Doc(id, spans)).map(r => (bucket, r))
-          }
-        }
-        .map { case (bucket, r) => RecordWithBucket(bucket, r) }
-        .toDF()
-        .select($"bucket", $"r.*")
+      // a record's doc_id is its doc's, so its bucket is the doc's
+      val waveRecords = waveDf.select($"doc_id", $"spans").as[Doc]
+        .mapPartitions(extractPartition)
+        .withColumn("bucket", bucket)
 
       // Dynamic overwrite: replaying a killed wave rewrites only its buckets.
       waveRecords.write.mode(SaveMode.Overwrite)
@@ -186,6 +183,3 @@ object ExtractJob {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 }
-
-/** Flat carrier so the record columns survive a `select($"r.*")`. */
-final case class RecordWithBucket(bucket: Int, r: CaseRecord)

@@ -3,9 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.extract.ExtractAll
 import graft.model.Doc
-import graft.pipeline.DocsSource
+import graft.pipeline.{DocsSource, ExtractJob}
 
 /** Streaming ingestion mode (SURVEY.md §2.9 stretch): `readStream` on the
   * docs span table → the same extraction kernel inside `foreachBatch` →
@@ -33,8 +32,7 @@ object StreamingExtract {
       .option("checkpointLocation", checkpointPath)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val records = batch.as[Doc]
-          .mapPartitions(_.flatMap(ExtractAll.extractRecord))
+        val records = batch.as[Doc].mapPartitions(ExtractJob.extractPartition)
         // Append is idempotent across restarts at the batch level: the
         // streaming checkpoint ensures a source file is processed exactly
         // once, and doc_id keys make downstream dedupe trivial.

@@ -205,38 +205,37 @@ object Py {
   // Fast exact scanning. The JDK regex engine finds unanchored matches by
   // attempting the pattern at every position in turn; for the extraction
   // kernel's keyword-prefixed patterns that per-position attempt (with
-  // case folding) dominates the whole pipeline's CPU. The helpers below
-  // keep the match semantics bit-exact while skipping between candidate
-  // start positions with `String.indexOf` (an intrinsic) instead:
-  // a pattern every match of which must BEGIN with one of a set of
-  // literals (case-insensitively) can only start where one of those
-  // literals occurs. Equivalence with the plain scanners is pinned by
-  // AnchoredScanSpec (differential over corpus + adversarial fuzz).
+  // case folding) dominates the whole pipeline's CPU. [[Rx]] keeps the
+  // match semantics bit-exact while skipping work with `String.indexOf`
+  // (an intrinsic) over the case-folded text.
   // ---------------------------------------------------------------------
 
-  /** Candidate-start description for [[findIterA]]/[[search1A]]/etc.
+  /** Where every match of a pattern may start.
     *
-    * The contract for `LitAnchor(needles)`: EVERY match of the pattern
-    * starts, at its first character, with one of `needles` compared under
-    * the regex engine's own case folding (`toLowerCase(toUpperCase(cp))`
-    * per code point — [[foldCase]]). For `PredAnchor(pred)`: every match
-    * starts at a code point satisfying `pred`. The pattern must not
-    * contain `^`, `\A`, `\G`, a leading `\b`, or lookbehind (the scan
-    * uses opaque match regions anchored at each candidate). */
+    * `LitAnchor(needles)`: EVERY match starts, at its first character, with
+    * one of `needles` compared under the regex engine's own case folding
+    * (`toLowerCase(toUpperCase(cp))` per code point — [[foldCase]]).
+    * `PredAnchor(pred)`: every match starts at a code point satisfying
+    * `pred`. The pattern must not contain `^`, `\A`, `\G`, a leading `\b`,
+    * or lookbehind (the scan uses opaque match regions anchored at each
+    * candidate). */
   sealed trait Anchor
   final case class LitAnchor(needles: Seq[String]) extends Anchor
   final case class PredAnchor(pred: Int => Boolean, desc: String) extends Anchor
 
+  /** `Some(LitAnchor(needles))` — the usual [[Rx]] anchor. */
+  def lit(needles: String*): Option[Anchor] = Some(LitAnchor(needles))
+
   /** Start-of-match predicate for `[\d,]`-headed amount patterns:
     * regex `\d` under UNICODE_CHARACTER_CLASS is Unicode Nd. */
-  final val DigitOrComma: Anchor =
-    PredAnchor(cp => Character.isDigit(cp) || cp == ',', "digit-or-comma")
-  final val DigitStart: Anchor = PredAnchor(Character.isDigit _, "digit")
+  final val DigitOrComma: Option[Anchor] =
+    Some(PredAnchor(cp => Character.isDigit(cp) || cp == ',', "digit-or-comma"))
+  final val DigitStart: Option[Anchor] = Some(PredAnchor(Character.isDigit _, "digit"))
 
   /** The JDK regex case-fold transform (what `Pattern$SliceU`/`CIBackRef`
     * apply per code point): `toLowerCase(toUpperCase(cp))`. Unlike
     * `String.toLowerCase` it is length-preserving, so folded indices map
-    * 1:1 onto the original string. */
+    * 1:1 onto the original string, and it never reads the default locale. */
   def foldCase(s: String): String = {
     val n = s.length
     val a = new Array[Char](n)
@@ -266,96 +265,113 @@ object Py {
     new String(a)
   }
 
-  /** Core anchored find loop: visits candidate starts in increasing order,
-    * attempts the pattern anchored at each, and reproduces the JDK
-    * `while (m.find())` iteration exactly (continue from match end;
-    * advance by one past empty matches). */
-  private def anchoredLoop(p: String, s: String, flags: Int, anchor: Anchor,
-                           folded0: String, maxMatches: Int)(emit: Matcher => Unit): Unit = {
-    val m = pattern(p, flags).matcher(s)
-    val n = s.length
-    var pos = 0
-    var found = 0
-    anchor match {
-      case LitAnchor(needles) =>
-        val folded = if (folded0 != null) folded0 else foldCase(s)
-        val nf = needles.iterator.map(foldCase).toArray
-        val nextOcc = nf.map(folded.indexOf(_))
-        while (found < maxMatches && pos <= n) {
-          var cand = Int.MaxValue
+  /** One extraction pattern: the regex, its flags, its start [[Anchor]] and
+    * its required-literal guard, declared together and scanned by one loop.
+    *
+    * The contract:
+    *  - `guard`: every match of the pattern contains at least one of these
+    *    literals, compared under [[foldCase]]. When none occurs in the
+    *    folded text, the scan returns at once.
+    *  - `anchor`: every match starts with one of its literals (or at a code
+    *    point its predicate accepts); see [[Anchor]]. The scan attempts the
+    *    pattern only at those candidates, in increasing order, and
+    *    reproduces the JDK `while (m.find())` iteration exactly (continue
+    *    from the match end; advance by one past an empty match).
+    *
+    * Both are pure speedups: every method returns what the string API
+    * (`Py.findIter(p, s, flags)` and the rest, no guard, no anchor) returns
+    * for the same regex and flags. AnchoredScanSpec pins that equivalence
+    * for every `Rx` the kernel ships, over corpus, adversarial case-fold
+    * traps and fuzz. A guard whose literals are the anchor's needles adds
+    * nothing: the anchored loop already returns when no needle occurs.
+    *
+    * `folded`, where a method takes it, may pass a precomputed
+    * [[foldCase]] of `s` so several patterns share one fold. */
+  final case class Rx(p: String, flags: Int = 0, anchor: Option[Anchor] = None,
+                      guard: Seq[String] = Nil) {
+    private[this] val compiled = pattern(p, flags)
+    private[this] val guardF = guard.map(foldCase).toArray
+    private[this] val needles: Array[String] = anchor match {
+      case Some(LitAnchor(ns)) => ns.map(foldCase).toArray
+      case _ => null
+    }
+    private[this] val pred: Int => Boolean = anchor match {
+      case Some(PredAnchor(f, _)) => f
+      case _ => null
+    }
+
+    /** `re.finditer` → (group1-or-0, start, end), at most `maxMatches`. */
+    def findIter(s: String, folded: String = null,
+                 maxMatches: Int = Int.MaxValue): List[(String, Int, Int)] = {
+      val out = List.newBuilder[(String, Int, Int)]
+      scan(s, folded, maxMatches)(m => out += ((group1(m), m.start(), m.end())))
+      out.result()
+    }
+
+    /** `re.findall` (one group or none). */
+    def findAll(s: String, folded: String = null): List[String] = {
+      val out = List.newBuilder[String]
+      scan(s, folded, Int.MaxValue)(m => out += group1(m))
+      out.result()
+    }
+
+    /** `re.search` → group(1)-or-0 of the first match. */
+    def search1(s: String, folded: String = null): Option[String] = {
+      var res: Option[String] = None
+      scan(s, folded, 1)(m => res = Option(if (m.groupCount() >= 1) m.group(1) else m.group(0)))
+      res
+    }
+
+    /** `bool(re.search(...))`. */
+    def contains(s: String, folded: String = null): Boolean = {
+      var hit = false
+      scan(s, folded, 1)(_ => hit = true)
+      hit
+    }
+
+    private def group1(m: Matcher): String = {
+      val g = if (m.groupCount() >= 1) m.group(1) else m.group(0)
+      if (g == null) "" else g
+    }
+
+    private def scan(s: String, folded0: String, maxMatches: Int)(emit: Matcher => Unit): Unit = {
+      val folded =
+        if (folded0 == null && (guardF.nonEmpty || needles != null)) foldCase(s) else folded0
+      if (guardF.nonEmpty && !guardF.exists(folded.contains)) return
+      val m = compiled.matcher(s)
+      var found = 0
+      if (anchor.isEmpty) {
+        while (found < maxMatches && m.find()) { emit(m); found += 1 }
+        return
+      }
+      val n = s.length
+      val nextOcc = if (needles != null) needles.map(folded.indexOf(_)) else null
+      var pos = 0
+      while (found < maxMatches && pos <= n) {
+        var cand = -1
+        if (needles != null) {
           var i = 0
-          while (i < nf.length) {
+          while (i < needles.length) {
             var o = nextOcc(i)
-            if (o >= 0 && o < pos) { o = folded.indexOf(nf(i), pos); nextOcc(i) = o }
-            if (o >= 0 && o < cand) cand = o
+            if (o >= 0 && o < pos) { o = folded.indexOf(needles(i), pos); nextOcc(i) = o }
+            if (o >= 0 && (cand < 0 || o < cand)) cand = o
             i += 1
           }
-          if (cand == Int.MaxValue) return
-          m.region(cand, n)
-          if (m.lookingAt()) {
-            emit(m); found += 1
-            pos = if (m.end > m.start) m.end else cand + 1
-          } else pos = cand + 1
-        }
-      case PredAnchor(pred, _) =>
-        while (found < maxMatches && pos < n) {
-          // next candidate code point
-          var cand = -1
+        } else {
           var i = pos
           while (cand < 0 && i < n) {
             val cp = s.codePointAt(i)
             if (pred(cp)) cand = i else i += Character.charCount(cp)
           }
-          if (cand < 0) return
-          m.region(cand, n)
-          if (m.lookingAt()) {
-            emit(m); found += 1
-            pos = if (m.end > m.start) m.end else cand + 1
-          } else pos = cand + 1
         }
+        if (cand < 0) return
+        m.region(cand, n)
+        if (m.lookingAt()) {
+          emit(m); found += 1
+          pos = if (m.end() > m.start()) m.end() else cand + 1
+        } else pos = cand + 1
+      }
     }
-  }
-
-  /** [[findIter]] restricted to anchored patterns — identical output (up to
-    * `maxMatches`), candidate-skipping scan. `folded` may pass a
-    * precomputed [[foldCase]] of `s` shared across patterns. */
-  def findIterA(p: String, s: String, flags: Int, anchor: Anchor,
-                maxMatches: Int = Int.MaxValue, folded: String = null): List[(String, Int, Int)] = {
-    val out = List.newBuilder[(String, Int, Int)]
-    anchoredLoop(p, s, flags, anchor, folded, maxMatches) { m =>
-      val g = if (m.groupCount() >= 1) m.group(1) else m.group(0)
-      out += ((if (g == null) "" else g, m.start(), m.end()))
-    }
-    out.result()
-  }
-
-  /** [[findAll]] via anchored scan — identical output. */
-  def findAllA(p: String, s: String, flags: Int, anchor: Anchor,
-               folded: String = null): List[String] = {
-    val out = List.newBuilder[String]
-    anchoredLoop(p, s, flags, anchor, folded, Int.MaxValue) { m =>
-      val g = if (m.groupCount() >= 1) m.group(1) else m.group(0)
-      out += (if (g == null) "" else g)
-    }
-    out.result()
-  }
-
-  /** [[search1]] via anchored scan — identical output. */
-  def search1A(p: String, s: String, flags: Int, anchor: Anchor,
-               folded: String = null): Option[String] = {
-    var res: Option[String] = None
-    anchoredLoop(p, s, flags, anchor, folded, 1) { m =>
-      res = Option(if (m.groupCount() >= 1) m.group(1) else m.group(0))
-    }
-    res
-  }
-
-  /** [[contains]] via anchored scan — identical output. */
-  def containsA(p: String, s: String, flags: Int, anchor: Anchor,
-                folded: String = null): Boolean = {
-    var hit = false
-    anchoredLoop(p, s, flags, anchor, folded, 1) { _ => hit = true }
-    hit
   }
 
   /** Regex `\s` under UNICODE_CHARACTER_CLASS (the Unicode White_Space

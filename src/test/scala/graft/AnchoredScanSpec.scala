@@ -4,18 +4,20 @@ import java.util.regex.Pattern
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.extract.{Amounts, CaseType, Cleaners, CourtName, ExtractAll, JudgmentResult, Lawyers, TrialDate}
+import graft.extract.{Amounts, CaseType, Cleaners, CourtName, ExtractAll, Judge, JudgmentResult, Lawyers, TrialDate}
 import graft.pipeline.CorpusGen
 import graft.text.Py
+import graft.text.Py.Rx
 
-/** Differential gate for the anchored skip-scans (Py.findIterA /
-  * search1A / containsA / findAllA) and the single-pass whitespace
-  * collapse: every (pattern, flags, anchor) triple the kernel ships is
-  * compared against the plain JDK-scan implementation over the synthetic
-  * corpus AND adversarial fuzz strings (Unicode case-fold traps, needle
-  * boundary cases). Any divergence is a correctness bug, not a perf
-  * trade-off — the anchors assert "every match starts with one of these
-  * literals", and this spec is what makes that assertion safe. */
+/** Differential gate for the kernel's [[Py.Rx]] patterns and the
+  * single-pass whitespace collapse: every `Rx` the extraction fields ship
+  * is compared, through one helper, against the plain JDK scan of the same
+  * regex with no guard and no anchor, over the synthetic corpus AND
+  * adversarial inputs (Unicode case-fold traps, needle boundary cases) AND
+  * fuzz. Any divergence is a correctness bug, not a perf trade-off: a guard
+  * asserts "every match contains one of these literals", an anchor "every
+  * match starts with one of these literals", and this spec is what makes
+  * those assertions safe. */
 class AnchoredScanSpec extends AnyFunSuite {
 
   // ---- corpus + adversarial inputs ------------------------------------
@@ -27,6 +29,11 @@ class AnchoredScanSpec extends AnyFunSuite {
       Seq(t, Py.sliceTo(t, 15000), Py.sliceFrom(t, math.max(0, t.length - 8000)))
     }
   }
+
+  private val JusticeDotted = "Reasons for decision\nJUSTİCE Alan Brown sitting\nin open court.\n"
+  private val JusticeLongS = "Reasons for decision\nJuſtice Alan Brown sitting\nin open court.\n"
+  // no other Method-1 lawyer literal ("counsel", "represented", "mr", "ms", "miss")
+  private val InstructedParagraph = "İnstructed by Wong & Co for the plaintiff at the trial of this action."
 
   // Unicode case-folding traps: long s (ſ folds to s), Kelvin sign (K
   // folds to k), dotted capital I (İ folds to i), full-width digits and
@@ -63,7 +70,13 @@ class AnchoredScanSpec extends AnyFunSuite {
     ",123,456 HKD",
     "     spaced text with odd whitespace",
     "tab\tand\nnewline\r\nand verticalspace.",
-    "İİİ ſſſ KKK mixed with MILLION and Thousand")
+    "İİİ ſſſ KKK mixed with MILLION and Thousand",
+    // fold traps for guards: İ and ſ fold onto ASCII under the regex fold
+    // but not under String.toLowerCase
+    JusticeDotted, JusticeLongS, InstructedParagraph,
+    // required-literal traps for the amount phrases
+    "damages of HK$1,000 were awarded", "compensation of US$2,500.50 only",
+    "costs assessed at $12,345 and costs of USD 99")
 
   private lazy val allInputs: Seq[String] = corpusTexts ++ adversarial ++ fuzzStrings
 
@@ -95,72 +108,70 @@ class AnchoredScanSpec extends AnyFunSuite {
 
   // ---- helper ----------------------------------------------------------
 
-  private def checkTriple(p: String, flags: Int, anchor: Py.Anchor, where: String): Unit = {
+  /** Every scan of `rx` equals the plain string-API scan of its regex (no
+    * guard, no anchor), with and without a caller-supplied fold. */
+  private def checkRx(rx: Rx, where: String): Unit = {
     allInputs.foreach { s =>
-      val plain = Py.findIter(p, s, flags)
-      val fast = Py.findIterA(p, s, flags, anchor)
-      assert(fast == plain, s"findIterA != findIter for [$where] pattern <$p> on <${s.take(120)}>")
-      // truncated form must equal take(2) of the plain scan
-      val fast2 = Py.findIterA(p, s, flags, anchor, maxMatches = 2)
-      assert(fast2 == plain.take(2), s"findIterA(max=2) mismatch for [$where] <$p>")
-      assert(Py.search1A(p, s, flags, anchor) == Py.search1(p, s, flags),
-        s"search1A mismatch for [$where] <$p> on <${s.take(120)}>")
-      assert(Py.containsA(p, s, flags, anchor) == Py.contains(p, s, flags),
-        s"containsA mismatch for [$where] <$p>")
-      assert(Py.findAllA(p, s, flags, anchor) == Py.findAll(p, s, flags),
-        s"findAllA mismatch for [$where] <$p>")
+      val plain = Py.findIter(rx.p, s, rx.flags)
+      val at = s"[$where] <${rx.p}> on <${s.take(120)}>"
+      assert(rx.findIter(s) == plain, s"findIter mismatch $at")
+      assert(rx.findIter(s, Py.foldCase(s)) == plain, s"findIter(folded) mismatch $at")
+      assert(rx.findIter(s, maxMatches = 2) == plain.take(2), s"findIter(max=2) mismatch $at")
+      assert(rx.search1(s) == Py.search1(rx.p, s, rx.flags), s"search1 mismatch $at")
+      assert(rx.contains(s) == Py.contains(rx.p, s, rx.flags), s"contains mismatch $at")
+      assert(rx.findAll(s) == Py.findAll(rx.p, s, rx.flags), s"findAll mismatch $at")
     }
   }
 
-  // ---- the shipped triples ----------------------------------------------
+  // ---- the shipped patterns ---------------------------------------------
 
   test("Amounts window patterns: anchored == plain") {
-    for (lang <- Seq("english", "chinese"); p <- Amounts.enhancedAmountPatterns(lang)) {
-      Amounts.anchorFor(p) match {
-        case Some(a) => checkTriple(p, Py.I, a, s"Amounts/$lang")
-        case None    => fail(s"amount pattern without an anchor mapping: $p")
-      }
-    }
+    for (lang <- Seq("english", "chinese"); rx <- Amounts.enhancedAmountPatterns(lang))
+      checkRx(rx, s"Amounts/$lang")
   }
 
   test("Amounts number-analysis patterns: anchored == plain") {
-    for (p <- Amounts.numberAnalysisPatterns) {
-      Amounts.anchorFor(p) match {
-        case Some(a) => checkTriple(p, Py.I, a, "Amounts/analysis")
-        case None    => fail(s"analysis pattern without an anchor mapping: $p")
-      }
-    }
+    Amounts.numberAnalysisPatterns.foreach(checkRx(_, "Amounts/analysis"))
+    // the damages/compensation/costs phrases need no "sum of": the phrase
+    // match and the bare "$" match both count, as in the unguarded scan
+    assert(Amounts.extractAmountNumbersFromText("damages of $500 were awarded") == "$1,000")
   }
 
   test("CaseType english + chinese rows: anchored == plain") {
-    for ((p, _, _, a) <- CaseType.englishPatternRows) checkTriple(p, Py.I | Py.S, a, "CaseType/en")
-    for ((p, _, a) <- CaseType.chinesePatternRows) checkTriple(p, 0, a, "CaseType/zh")
+    CaseType.englishPatterns.foreach(checkRx(_, "CaseType/en"))
+    CaseType.chinesePatterns.foreach(checkRx(_, "CaseType/zh"))
   }
 
   test("TrialDate patterns: anchored == plain") {
-    for ((p, needle) <- TrialDate.englishPatterns)
-      checkTriple(p, Py.I, Py.LitAnchor(Seq(needle)), "TrialDate/en")
-    for ((p, needle) <- TrialDate.chinesePatterns)
-      checkTriple(p, 0, Py.LitAnchor(Seq(needle)), "TrialDate/zh")
+    TrialDate.englishPatterns.foreach(checkRx(_, "TrialDate/en"))
+    TrialDate.chinesePatterns.foreach(checkRx(_, "TrialDate/zh"))
   }
 
   test("CourtName english patterns: anchored == plain") {
-    for (p <- CourtName.englishPatterns)
-      checkTriple(p, Py.I | Py.S, Py.LitAnchor(Seq("in the")), "CourtName/en")
+    CourtName.englishPatterns.foreach(checkRx(_, "CourtName/en"))
+    CourtName.chinesePatterns.foreach(checkRx(_, "CourtName/zh"))
   }
 
   test("Lawyers patterns: anchored == plain") {
-    for ((p, needles) <- Lawyers.lawyerPatternRows)
-      checkTriple(p, 0, Py.LitAnchor(needles), "Lawyers/main")
-    for ((p, needles) <- Lawyers.clearPatternRows)
-      checkTriple(p, 0, Py.LitAnchor(needles), "Lawyers/clear")
-    checkTriple("""(?i)(?:mr|ms|miss)\.?\s+[A-Z][a-z]+""", 0,
-      Py.LitAnchor(Seq("mr", "ms", "miss")), "Lawyers/name")
+    Lawyers.lawyerPatterns.foreach(checkRx(_, "Lawyers/main"))
+    Lawyers.clearPatterns.foreach(checkRx(_, "Lawyers/clear"))
+    checkRx(Lawyers.namePattern, "Lawyers/name")
+    // the cascade-level literal check folds the way the regex does
+    assert(Lawyers.extractEnglishLawyerSegment(InstructedParagraph, InstructedParagraph) ==
+      Lawyers.cleanLawyerSegment(InstructedParagraph))
   }
 
   test("JudgmentResult rows: anchored == plain") {
-    for ((p, flags, _, a) <- JudgmentResult.englishPatternRows)
-      checkTriple(p, flags, a, "JudgmentResult/en")
+    (JudgmentResult.orderPatterns ++ JudgmentResult.decisionPatterns)
+      .foreach(checkRx(_, "JudgmentResult/en"))
+  }
+
+  test("Judge patterns: guarded == plain, and the guards fold like the regex") {
+    (Judge.specialPatterns ++ Judge.beforePatterns ++ Judge.alternativePatterns)
+      .foreach(checkRx(_, "Judge/en"))
+    // the (?i) name pattern takes "sitting" too, as it does after "JUSTICE"
+    assert(Judge.extractEnglishJudge(JusticeDotted) == "JUSTİCE Alan Brown sitting")
+    assert(Judge.extractEnglishJudge(JusticeLongS) == "Juſtice Alan Brown sitting")
   }
 
   // ---- whitespace collapse ----------------------------------------------
@@ -237,15 +248,15 @@ class AnchoredScanSpec extends AnyFunSuite {
       val plainDate: String = {
         if (lang == "english") {
           TrialDate.englishPatterns.collectFirst {
-            case (p, _) if Py.search1(p, t, Py.I).exists { raw =>
+            case rx if Py.search1(rx.p, t, Py.I).exists { raw =>
               val c = TrialDate.cleanTrialDate(Py.strip(raw)); c.nonEmpty && c.length > 5
-            } => TrialDate.cleanTrialDate(Py.strip(Py.search1(p, t, Py.I).get))
+            } => TrialDate.cleanTrialDate(Py.strip(Py.search1(rx.p, t, Py.I).get))
           }.getOrElse("")
         } else {
           TrialDate.chinesePatterns.collectFirst {
-            case (p, _) if Py.search1(p, t).exists { raw =>
+            case rx if Py.search1(rx.p, t).exists { raw =>
               val c = TrialDate.cleanTrialDate(Py.strip(raw)); c.nonEmpty && c.length > 3
-            } => TrialDate.cleanTrialDate(Py.strip(Py.search1(p, t).get))
+            } => TrialDate.cleanTrialDate(Py.strip(Py.search1(rx.p, t).get))
           }.getOrElse("")
         }
       }

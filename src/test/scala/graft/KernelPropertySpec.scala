@@ -2,8 +2,9 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.extract.{Amounts, CaseType, Cleaners, Parties}
-import graft.pipeline.KgJob
+import graft.extract.{Amounts, CaseType, Cleaners, ExtractAll, Parties}
+import graft.model.{Doc, Span}
+import graft.pipeline.{CorpusGen, ExtractJob, KgJob}
 import graft.text.Py
 
 /** Property-style tests (SURVEY.md §5.2.4) over the pure kernel functions,
@@ -72,6 +73,27 @@ class KernelPropertySpec extends AnyFunSuite {
     assert(Amounts.formatThousands(101.5) == "102")
     assert(Amounts.formatThousands(0.4) == "0")
     assert(Amounts.formatThousands(1e9) == "1,000,000,000")
+    // Python: f"{float('9' * 400):,.0f}" == "inf"
+    assert(Amounts.formatThousands(Double.PositiveInfinity) == "inf")
+    assert(Amounts.formatThousands(Double.NegativeInfinity) == "-inf")
+    assert(Amounts.formatThousands(Double.NaN) == "nan")
+  }
+
+  test("a claim too large for a double still yields a record") {
+    val text = "IN THE HIGH COURT OF THE HONG KONG SPECIAL ADMINISTRATIVE REGION\n" +
+      "The plaintiff claims the sum of HK$" + ("9" * 400) + " together with interest and costs.\n" +
+      ("The parties filed evidence and the matter proceeded to trial before the court.\n" * 40)
+    val doc = Doc("HCA000001_2020", Seq(Span("text", text, "", 0)))
+    val record = ExtractAll.extractRecord(doc)
+    assert(record.map(_.claim_amount).contains("HK$inf"), record.toString)
+    assert(ExtractJob.extractPartition(Iterator(doc)).map(_.doc_id).toList == List(doc.doc_id))
+  }
+
+  test("extractPartition drops a document whose kernel throws and keeps the rest") {
+    val good = CorpusGen.genDoc(0L)
+    val bad = Doc("BAD0001_2020", LazyList.fill[Span](1)(throw new IllegalStateException("bad span")))
+    assert(ExtractJob.extractPartition(Iterator(good, bad, good)).map(_.doc_id).toList ==
+      List(good.doc_id, good.doc_id))
   }
 
   test("artifact cleaner output is always a suffix of its input") {
