@@ -21,7 +21,22 @@ object CaseType {
 
   /** A layer of weighted patterns: up to two matches of each, cleaned,
     * kept when the cleaned length is within `min..max`. */
-  private final case class Layer(rows: Seq[(Rx, Int)], min: Int, max: Int)
+  private[extract] final case class Layer(rows: Seq[(Rx, Int)], min: Int, max: Int)
+
+  /** The segments of `layers` in order: the first two matches of each
+    * pattern, cleaned, within the layer's bounds. One case fold of `text`
+    * is shared by the patterns when any has a guard or an anchor. */
+  private[extract] def layerSegments(text: String, layers: Seq[Layer]): List[Segment] = {
+    val needsFold = layers.exists(_.rows.exists { case (p, _) => p.anchor.nonEmpty || p.guard.nonEmpty })
+    val folded = if (needsFold) Py.foldCase(text) else null
+    for {
+      layer <- layers.toList
+      (p, weight) <- layer.rows
+      (g1, _, _) <- p.findIter(text, folded, maxMatches = 2)
+      clean = cleanComprehensiveContent(g1)
+      if clean.length >= layer.min && clean.length <= layer.max
+    } yield Segment(clean, weight)
+  }
 
   // `_extract_english_case_type_comprehensive` (`src/extractor.py:1706-1780`)
   // layer 1: key sections, weights 10..6; layer 2: judgment context, 5 and 4
@@ -76,12 +91,7 @@ object CaseType {
     * paragraph brings the total to 8 segments. */
   private def comprehensive(text: String, layers: Seq[Layer], paragraphLen: (Int, Int),
                             cleanLen: (Int, Int), maxLength: Int)(hasKeyword: String => Boolean): String = {
-    val segments = scala.collection.mutable.ListBuffer.empty[Segment]
-    val folded = Py.foldCase(text)
-    for (layer <- layers; (p, weight) <- layer.rows; (g1, _, _) <- p.findIter(text, folded, maxMatches = 2)) {
-      val clean = cleanComprehensiveContent(g1)
-      if (clean.length >= layer.min && clean.length <= layer.max) segments += Segment(clean, weight)
-    }
+    val segments = scala.collection.mutable.ListBuffer.from(layerSegments(text, layers))
     var stop = false
     for (paragraph <- Py.resplit("""\n\s*\n""", text) if !stop) {
       if (paragraph.length >= paragraphLen._1 && paragraph.length <= paragraphLen._2 && hasKeyword(paragraph)) {

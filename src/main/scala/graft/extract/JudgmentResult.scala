@@ -1,5 +1,6 @@
 package graft.extract
 
+import graft.extract.CaseType.Layer
 import graft.text.Py
 import graft.text.Py.{I, Rx, S}
 
@@ -56,8 +57,8 @@ object JudgmentResult {
 
   /** `_extract_judgment_result_focused` (`src/extractor.py:1941-2022`). */
   def extractFocusedEnglish(section: String): String =
-    focused(section, Seq((orderPatterns, 20, 1000), (decisionPatterns, 15, 800)),
-      prefixLen = 30, maxLen = 2500, fold = true)
+    focused(section, Seq(layer(orderPatterns, 20, 1000), layer(decisionPatterns, 15, 800)),
+      prefixLen = 30, maxLen = 2500)
 
   private val orderZh = Seq(
     Rx("""(?:命令|判令|裁定|判決|判决)\s*[：:.]?\s*\n((?:[^\n]+\n?){2,10})"""),
@@ -71,25 +72,17 @@ object JudgmentResult {
 
   /** `_extract_chinese_judgment_result_focused` (`src/extractor.py:2024-2085`). */
   def extractFocusedChinese(section: String): String =
-    focused(section, Seq((orderZh, 10, 800), (decisionZh, 8, 600)),
-      prefixLen = 20, maxLen = 2000, fold = false)
+    focused(section, Seq(layer(orderZh, 10, 800), layer(decisionZh, 8, 600)),
+      prefixLen = 20, maxLen = 2000)
 
-  /** The first two matches of each pattern, cleaned (`_clean_judgment_content`
-    * is `_clean_comprehensive_content`), kept when their length is within the
-    * layer's bounds, then prefix-deduped and budgeted. `fold` shares one
-    * case fold among patterns that have guards or anchors. */
-  private def focused(section: String, layers: Seq[(Seq[Rx], Int, Int)],
-                      prefixLen: Int, maxLen: Int, fold: Boolean): String = {
+  /** An unweighted layer: the results are combined in match order. */
+  private def layer(patterns: Seq[Rx], min: Int, max: Int): Layer = Layer(patterns.map(_ -> 0), min, max)
+
+  /** The layers' segments (`_clean_judgment_content` is
+    * `_clean_comprehensive_content`), prefix-deduped and budgeted. */
+  private def focused(section: String, layers: Seq[Layer], prefixLen: Int, maxLen: Int): String = {
     if (section == null || section.length < 100) return ""
-    val folded = if (fold) Py.foldCase(section) else null
-    val segments = for {
-      (patterns, lo, hi) <- layers.toList
-      p <- patterns
-      (g1, _, _) <- p.findIter(section, folded, maxMatches = 2)
-      clean = CaseType.cleanComprehensiveContent(g1)
-      if clean.length >= lo && clean.length <= hi
-    } yield clean
-    combine(segments, prefixLen, maxSegments = 4, maxLen)
+    combine(CaseType.layerSegments(section, layers).map(_.content), prefixLen, maxSegments = 4, maxLen)
   }
 
   private def combine(segments: List[String], prefixLen: Int,

@@ -18,37 +18,38 @@ object Lawyers {
     else extractChineseLawyerSegment(lastSection, text)
   }
 
-  // Method-1 patterns, each anchored at the literals its matches begin with
+  // Method-1 patterns, each anchored at the literals its matches begin with,
+  // and guarded by a second literal where the anchor is a common word
   private[graft] val lawyerPatterns = Seq(
     Rx("""(?i)(?:mr|ms|miss)\.?\s+[A-Z][a-z]+[^.]*?instructed\s+by[^.]*?for\s+(?:the\s+)?(?:plaintiff|defendant)""",
       anchor = Py.lit("mr", "ms", "miss")),
     Rx("""(?i)instructed\s+by[^.]*?for\s+(?:the\s+)?(?:plaintiff|defendant)""", anchor = Py.lit("instructed")),
     Rx("""(?i)counsel\s+for\s+(?:the\s+)?(?:plaintiff|defendant)[:\s]+([^\n\.]+)""", anchor = Py.lit("counsel")),
     Rx("""(?i)(?:plaintiff|defendant).*?represented\s+by[^.]*?instructed\s+by""",
-      anchor = Py.lit("plaintiff", "defendant")),
-    Rx("""(?i)for\s+(?:the\s+)?(?:plaintiff|defendant)[:\s]+(?:mr|ms|miss)\.?\s+[A-Z][a-z]+""", anchor = Py.lit("for")),
+      anchor = Py.lit("plaintiff", "defendant"), guard = Seq("represented")),
+    Rx("""(?i)for\s+(?:the\s+)?(?:plaintiff|defendant)[:\s]+(?:mr|ms|miss)\.?\s+[A-Z][a-z]+""",
+      anchor = Py.lit("for"), guard = Seq("mr", "ms", "miss")),
     Rx("""(?i)(?:mr|ms|miss)\.?\s+[A-Z][a-z]+.*?(?:instructed\s+by|of\s+[A-Z][a-z]+.*?(?:chambers|solicitors?))""",
       anchor = Py.lit("mr", "ms", "miss")),
     Rx("""(?i)(?:mr|ms|miss)\.?\s+[A-Z][a-z]+.*?for\s+(?:the\s+)?(?:plaintiff|defendant|1st|2nd|3rd|4th)""",
       anchor = Py.lit("mr", "ms", "miss")),
     Rx("""(?i)(?:leading\s+)?counsel.*?(?:instructed\s+by|for\s+(?:the\s+)?(?:plaintiff|defendant))""",
-      anchor = Py.lit("leading", "counsel")),
+      anchor = Py.lit("leading", "counsel"), guard = Seq("counsel")),
     Rx("""(?i)(?:the\s+)?(?:plaintiff|defendant).*?(?:was\s+)?not\s+represented""",
-      anchor = Py.lit("the", "plaintiff", "defendant")))
-
-  /** Every Method-1 pattern's match contains one of these literals. */
-  private val lawyerPatternLiterals = Seq("instructed", "counsel", "represented", "mr", "ms", "miss")
+      anchor = Py.lit("the", "plaintiff", "defendant"), guard = Seq("represented")))
 
   private[graft] val namePattern = Rx("""(?i)(?:mr|ms|miss)\.?\s+[A-Z][a-z]+""", anchor = Py.lit("mr", "ms", "miss"))
 
-  // Method-3 strict patterns
+  // Method-3 strict patterns, guarded the same way
   private[graft] val clearPatterns = Seq(
     Rx("""(?i)(?:mr|ms|miss)\.?\s+[A-Z][a-z]+.*?instructed\s+by.*?for\s+(?:the\s+)?(?:plaintiff|defendant)""",
       anchor = Py.lit("mr", "ms", "miss")),
     Rx("""(?i)for\s+(?:the\s+)?(?:plaintiff|defendant)[:\s]+(?:mr|ms|miss)\.?\s+[A-Z][a-z]+.*?(?:instructed|chambers)""",
-      anchor = Py.lit("for")),
-    Rx("""(?i)(?:the\s+)?(?:plaintiff|defendant).*?not\s+represented""", anchor = Py.lit("the", "plaintiff", "defendant")),
-    Rx("""(?i)(?:the\s+)?(?:plaintiff|defendant).*?did\s+not\s+appear""", anchor = Py.lit("the", "plaintiff", "defendant")))
+      anchor = Py.lit("for"), guard = Seq("instructed", "chambers")),
+    Rx("""(?i)(?:the\s+)?(?:plaintiff|defendant).*?not\s+represented""",
+      anchor = Py.lit("the", "plaintiff", "defendant"), guard = Seq("represented")),
+    Rx("""(?i)(?:the\s+)?(?:plaintiff|defendant).*?did\s+not\s+appear""",
+      anchor = Py.lit("the", "plaintiff", "defendant"), guard = Seq("appear")))
 
   private val lawyerKeywords = Seq(
     "instructed by", "counsel for", "represented by", "chambers", "solicitor",
@@ -67,9 +68,7 @@ object Lawyers {
       if (paragraph.length >= 30) {
         val lower = paragraph.toLowerCase(Locale.ROOT) // the reference's .lower()
         val folded = Py.foldCase(paragraph) // the regex engine's fold
-        // a cascade-level early-out: no literal, no Method-1 pattern can match
-        val hasLawyerInfo = lawyerPatternLiterals.exists(folded.contains) &&
-          lawyerPatterns.exists(_.contains(paragraph, folded))
+        val hasLawyerInfo = lawyerPatterns.exists(_.contains(paragraph, folded))
         val hasKeywords = lawyerKeywords.exists(lower.contains)
         val hasNamePattern = namePattern.contains(paragraph, folded)
         if (hasLawyerInfo || (hasKeywords && hasNamePattern)) {

@@ -126,12 +126,17 @@ class AnchoredScanSpec extends AnyFunSuite {
   // ---- the shipped patterns ---------------------------------------------
 
   test("Amounts window patterns: anchored == plain") {
-    for (lang <- Seq("english", "chinese"); rx <- Amounts.enhancedAmountPatterns(lang))
+    for (lang <- Seq("english", "chinese"); rx <- Amounts.enhancedAmountPatterns(lang)) {
+      assert(rx.anchor.nonEmpty, s"amount pattern without an anchor: ${rx.p}")
       checkRx(rx, s"Amounts/$lang")
+    }
   }
 
   test("Amounts number-analysis patterns: anchored == plain") {
-    Amounts.numberAnalysisPatterns.foreach(checkRx(_, "Amounts/analysis"))
+    Amounts.numberAnalysisPatterns.foreach { rx =>
+      assert(rx.anchor.nonEmpty, s"analysis pattern without an anchor: ${rx.p}")
+      checkRx(rx, "Amounts/analysis")
+    }
     // the damages/compensation/costs phrases need no "sum of": the phrase
     // match and the bare "$" match both count, as in the unguarded scan
     assert(Amounts.extractAmountNumbersFromText("damages of $500 were awarded") == "$1,000")
