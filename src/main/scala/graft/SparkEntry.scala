@@ -334,7 +334,7 @@ object SparkEntry {
       // The band table feeds BOTH sides of BOTH band self-joins (4 plan
       // references): persist it once (released via releaseCached) so the
       // signature scan over the corpus runs once, not four times.
-      val bands = graft.pipeline.DedupJobs.cacheTracked(d.withColumn("toks", toks)
+      val bands = graft.pipeline.DedupJobs.cache(d.withColumn("toks", toks)
         .filter(size(col("toks")) > 0)
         .withColumn("sig", graft.plans.TextHashExprs.minhash_sig(col("toks"), lit(4)))
         .select(col("doc_id"),

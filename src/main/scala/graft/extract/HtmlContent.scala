@@ -2,6 +2,8 @@ package graft.extract
 
 import scala.collection.mutable
 
+import graft.text.Markup
+
 /** HTML main-content extraction — the north-rule's "HTML boilerplate
   * stripping (text-density/link-density DOM heuristics a la Readability /
   * boilerplate classification)" component, built from scratch on public
@@ -21,13 +23,11 @@ import scala.collection.mutable
   * extractor.py:146-235` → [[Cleaners]]); this component exists because the
   * north rule makes HTML stripping a first-class part of the engine.
   *
-  * Everything here is pure Scala over a `String` — no parser library (the
-  * container has none, and a hand-rolled single-pass tokenizer keeps the
-  * whole extraction inside one `mapPartitions` pass with zero allocation
-  * beyond the block buffers). The tokenizer is deliberately forgiving:
-  * unclosed tags, attributes containing `>`, comments, CDATA, raw-text
-  * elements and malformed entities must never throw — a 10^12-document
-  * crawl corpus contains every possible malformation.
+  * Everything here is pure Scala over a `String` — no parser library; the
+  * markup is read by the engine's one lexer, [[graft.text.Markup]], which
+  * is total on every malformation a crawl corpus holds (unclosed tags,
+  * attributes containing `>`, comments, CDATA, raw-text elements,
+  * malformed entities).
   */
 object HtmlContent {
 
@@ -55,10 +55,6 @@ object HtmlContent {
   private val negativeTags: Set[String] =
     Set("nav", "aside", "header", "footer", "form")
 
-  /** Raw-text / non-content elements: skip to the matching close tag. */
-  private val rawTextTags: Set[String] =
-    Set("script", "style", "textarea", "title", "noscript", "svg")
-
   private val headingTags: Set[String] =
     Set("h1", "h2", "h3", "h4", "h5", "h6")
 
@@ -68,13 +64,10 @@ object HtmlContent {
 
   // ------------------------------------------------------------- tokenizer
 
-  /** Single-pass tokenize + block segmentation. Never throws. */
+  /** Single-pass tokenize + block segmentation over [[Markup]]. Never throws. */
   def tokenize(html: String): Vector[Ev] = {
     if (html == null || html.isEmpty) return Vector.empty
     val out = Vector.newBuilder[Ev]
-    val n = html.length
-    var i = 0
-
     val text = new java.lang.StringBuilder   // raw block text (entities decoded)
     val anchorText = new java.lang.StringBuilder
     var negDepth = 0
@@ -93,161 +86,46 @@ object HtmlContent {
       anchorText.setLength(0)
     }
 
-    while (i < n) {
-      val c = html.charAt(i)
-      if (c == '<') {
-        if (html.startsWith("<!--", i)) {
-          val e = html.indexOf("-->", i + 4)
-          i = if (e < 0) n else e + 3
-        } else if (html.startsWith("<![CDATA[", i)) {
-          val e = html.indexOf("]]>", i + 9)
-          // CDATA payload is character data in XML-ish documents.
-          val end = if (e < 0) n else e
-          text.append(html, i + 9, end)
-          if (anchorDepth > 0) anchorText.append(html, i + 9, end)
-          i = if (e < 0) n else e + 3
-        } else if (i + 1 < n && (html.charAt(i + 1) == '!' || html.charAt(i + 1) == '?')) {
-          // doctype / processing instruction
-          val e = html.indexOf('>', i)
-          i = if (e < 0) n else e + 1
-        } else if (i + 1 < n && (isNameStart(html.charAt(i + 1)) || html.charAt(i + 1) == '/')) {
-          val closing = html.charAt(i + 1) == '/'
-          val nameStart = if (closing) i + 2 else i + 1
-          var j = nameStart
-          while (j < n && isNameChar(html.charAt(j))) j += 1
-          val name = html.substring(nameStart, j).toLowerCase(java.util.Locale.ROOT)
-          // scan attributes to the tag end, honoring quotes
-          var srcVal: String = null
-          var selfClose = false
-          var k = j
-          while (k < n && html.charAt(k) != '>') {
-            val ch = html.charAt(k)
-            if (ch == '"' || ch == '\'') {
-              val q = html.indexOf(ch, k + 1)
-              k = if (q < 0) n else q + 1
-            } else if (!closing && (ch == 's' || ch == 'S') &&
-                html.regionMatches(true, k, "src", 0, 3) &&
-                (k == j || !isNameChar(html.charAt(k - 1)))) {
-              // parse src=... value
-              var m = k + 3
-              while (m < n && Character.isWhitespace(html.charAt(m))) m += 1
-              if (m < n && html.charAt(m) == '=') {
-                m += 1
-                while (m < n && Character.isWhitespace(html.charAt(m))) m += 1
-                if (m < n && (html.charAt(m) == '"' || html.charAt(m) == '\'')) {
-                  val q = html.indexOf(html.charAt(m), m + 1)
-                  if (q > m) { srcVal = html.substring(m + 1, q); k = q + 1 }
-                  else k = n
-                } else {
-                  // HTML5 unquoted attribute value: runs to whitespace or
-                  // '>'; '/' is part of the value (as in LinkExtract.scan)
-                  var e2 = m
-                  while (e2 < n && !Character.isWhitespace(html.charAt(e2)) &&
-                    html.charAt(e2) != '>') e2 += 1
-                  srcVal = html.substring(m, e2)
-                  k = e2
-                }
-              } else k += 1
-            } else {
-              if (ch == '/' && k + 1 < n && html.charAt(k + 1) == '>') selfClose = true
-              k += 1
-            }
-          }
-          i = if (k < n) k + 1 else n
-
-          if (name.isEmpty) {
-            // "<" followed by junk the name scan rejected; already skipped
-          } else if (!closing && rawTextTags.contains(name) && !selfClose) {
-            // skip raw content to the matching close tag, case-insensitive
-            val closeTag = "</" + name
-            var e = i
-            var found = -1
-            while (found < 0 && e <= n - closeTag.length) {
-              if (html.regionMatches(true, e, closeTag, 0, closeTag.length)) found = e
-              else e += 1
-            }
-            if (found < 0) i = n
-            else {
-              val gt = html.indexOf('>', found)
-              i = if (gt < 0) n else gt + 1
-            }
-          } else if (mediaTags.contains(name) && !closing) {
-            if (srcVal != null && srcVal.nonEmpty) {
-              flush()
-              out += MediaRef(srcVal, negDepth > 0)
-            }
-          } else {
-            if (blockTags.contains(name)) flush()
-            if (negativeTags.contains(name)) {
-              if (closing) negDepth = math.max(0, negDepth - 1)
-              else if (!selfClose) negDepth += 1
-            }
-            if (headingTags.contains(name)) {
-              if (closing) headingDepth = math.max(0, headingDepth - 1)
-              else if (!selfClose) headingDepth += 1
-            }
-            if (name == "a") {
-              // word-separate adjacent anchors so anchor word counts sum
-              // per anchor (boilerpipe counts tokens per <a>, not the
-              // concatenation: "<a>x</a><a>y</a>" is 2 anchor words)
-              anchorText.append(' ')
-              if (closing) anchorDepth = math.max(0, anchorDepth - 1)
-              else if (!selfClose) anchorDepth += 1
-            }
+    val m = Markup.html(html, "src")
+    var ev = m.next()
+    while (ev != Markup.End) {
+      if (ev == Markup.Text) {
+        text.append(m.text)
+        if (anchorDepth > 0) anchorText.append(m.text)
+      } else {
+        val closing = ev == Markup.Close
+        val name = m.name.toLowerCase(java.util.Locale.ROOT)
+        if (mediaTags.contains(name) && !closing) {
+          val src = m.attr(0)
+          if (src != null && src.nonEmpty) {
+            flush()
+            out += MediaRef(src, negDepth > 0)
           }
         } else {
-          // lone '<' that is not a tag — literal text
-          text.append('<')
-          if (anchorDepth > 0) anchorText.append('<')
-          i += 1
+          val opens = !closing && !m.selfClosing
+          if (blockTags.contains(name)) flush()
+          if (negativeTags.contains(name)) {
+            if (closing) negDepth = math.max(0, negDepth - 1)
+            else if (opens) negDepth += 1
+          }
+          if (headingTags.contains(name)) {
+            if (closing) headingDepth = math.max(0, headingDepth - 1)
+            else if (opens) headingDepth += 1
+          }
+          if (name == "a") {
+            // word-separate adjacent anchors so anchor word counts sum
+            // per anchor (boilerpipe counts tokens per <a>, not the
+            // concatenation: "<a>x</a><a>y</a>" is 2 anchor words)
+            anchorText.append(' ')
+            if (closing) anchorDepth = math.max(0, anchorDepth - 1)
+            else if (opens) anchorDepth += 1
+          }
         }
-      } else if (c == '&') {
-        val (decoded, next) = decodeEntity(html, i)
-        text.append(decoded)
-        if (anchorDepth > 0) anchorText.append(decoded)
-        i = next
-      } else {
-        text.append(c)
-        if (anchorDepth > 0) anchorText.append(c)
-        i += 1
       }
+      ev = m.next()
     }
     flush()
     out.result()
-  }
-
-  private def isNameStart(c: Char): Boolean =
-    (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z')
-  private def isNameChar(c: Char): Boolean =
-    isNameStart(c) || (c >= '0' && c <= '9') || c == '-' || c == ':'
-
-  /** Decode one entity starting at `html(i) == '&'`; returns (text, nextIndex).
-    * Unknown or unterminated entities pass through literally. */
-  private[graft] def decodeEntity(html: String, i: Int): (String, Int) = {
-    val n = html.length
-    val semi = html.indexOf(';', i + 1)
-    if (semi < 0 || semi - i > 10) return ("&", i + 1)
-    val body = html.substring(i + 1, semi)
-    val decoded: String = body match {
-      case "amp" => "&"
-      case "lt" => "<"
-      case "gt" => ">"
-      case "quot" => "\""
-      case "apos" => "'"
-      case "nbsp" => " "
-      case _ if body.startsWith("#x") || body.startsWith("#X") =>
-        try {
-          val cp = Integer.parseInt(body.substring(2), 16)
-          if (Character.isValidCodePoint(cp)) new String(Character.toChars(cp)) else null
-        } catch { case _: Exception => null }
-      case _ if body.startsWith("#") =>
-        try {
-          val cp = Integer.parseInt(body.substring(1))
-          if (Character.isValidCodePoint(cp)) new String(Character.toChars(cp)) else null
-        } catch { case _: Exception => null }
-      case _ => null
-    }
-    if (decoded == null) ("&", i + 1) else (decoded, semi + 1)
   }
 
   /** ASCII whitespace only — the regex `\s` class, matching both the

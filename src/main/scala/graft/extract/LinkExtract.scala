@@ -1,18 +1,19 @@
 package graft.extract
 
+import graft.text.Markup
+
 /** Hyperlink extraction from untrusted HTML — the crawl-pipeline step
   * that turns fetched pages into the web link graph (outlink discovery,
   * anchor-text corpus, host-graph edges for link analysis).
   *
-  * Same engineering rules as [[HtmlContent.tokenize]] (the boilerplate
-  * tokenizer this scanner is a sibling of): a single forward pass, no
-  * regex, entity decoding shared with the tokenizer, raw-text elements
-  * (`script`/`style`/…) skipped wholesale, and total on garbage — a
-  * truncated or malformed page yields the links scanned so far, never a
-  * throw. Per the HTML parsing spec, `<a>` elements do not nest: an open
-  * `<a>` implicitly closes a still-open one (browsers' adoption-agency
-  * behavior for the common malformed case), so every href maps to the
-  * anchor text up to the next boundary.
+  * The markup is read by [[graft.text.Markup]], the lexer
+  * [[HtmlContent.tokenize]] also runs on: a single forward pass, no
+  * regex, raw-text elements (`script`/`style`/…) skipped wholesale, and
+  * total on garbage — a truncated or malformed page yields the links
+  * scanned so far, never a throw. Per the HTML parsing spec, `<a>`
+  * elements do not nest: an open `<a>` implicitly closes a still-open one
+  * (browsers' adoption-agency behavior for the common malformed case), so
+  * every href maps to the anchor text up to the next boundary.
   *
   * What is captured per anchor:
   *  - `href` — the raw attribute value, entity-decoded (attribute values
@@ -33,16 +34,11 @@ object LinkExtract {
   /** One extracted anchor. `href` is raw (entity-decoded, unresolved). */
   final case class RawLink(href: String, text: String, nofollow: Boolean)
 
-  private val rawTextTags: Set[String] =
-    Set("script", "style", "textarea", "title", "noscript", "svg")
-
   /** Scan `html` once; returns (baseHref, anchors in document order).
     * `baseHref` is None when the page has no usable `<base href>`. */
   def scan(html: String): (Option[String], Vector[RawLink]) = {
     if (html == null || html.isEmpty) return (None, Vector.empty)
     val out = Vector.newBuilder[RawLink]
-    val n = html.length
-    var i = 0
     var base: Option[String] = None
 
     // open-anchor state
@@ -59,143 +55,36 @@ object LinkExtract {
       text.setLength(0)
     }
 
-    while (i < n) {
-      val c = html.charAt(i)
-      if (c == '<') {
-        if (html.startsWith("<!--", i)) {
-          val e = html.indexOf("-->", i + 4)
-          i = if (e < 0) n else e + 3
-        } else if (html.startsWith("<![CDATA[", i)) {
-          val e = html.indexOf("]]>", i + 9)
-          val end = if (e < 0) n else e
-          if (href != null) text.append(html, i + 9, end)
-          i = if (e < 0) n else e + 3
-        } else if (i + 1 < n && (html.charAt(i + 1) == '!' || html.charAt(i + 1) == '?')) {
-          val e = html.indexOf('>', i)
-          i = if (e < 0) n else e + 1
-        } else if (i + 1 < n && (isNameStart(html.charAt(i + 1)) || html.charAt(i + 1) == '/')) {
-          val closing = html.charAt(i + 1) == '/'
-          val nameStart = if (closing) i + 2 else i + 1
-          var j = nameStart
-          while (j < n && isNameChar(html.charAt(j))) j += 1
-          val name = html.substring(nameStart, j).toLowerCase(java.util.Locale.ROOT)
-
-          // generic attribute walk: collect the few attributes we need
-          var aHref: String = null
-          var aRel: String = null
-          var selfClose = false
-          var k = j
-          while (k < n && html.charAt(k) != '>') {
-            val ch = html.charAt(k)
-            if (Character.isWhitespace(ch)) k += 1
-            else if (ch == '/') {
-              if (k + 1 < n && html.charAt(k + 1) == '>') selfClose = true
-              k += 1
-            } else if (closing) k += 1 // close tags carry no attributes
-            else {
-              // attribute name
-              var m = k
-              while (m < n && {
-                val a = html.charAt(m)
-                a != '=' && a != '>' && a != '/' && !Character.isWhitespace(a)
-              }) m += 1
-              val attr = html.substring(k, m).toLowerCase(java.util.Locale.ROOT)
-              k = m
-              while (k < n && Character.isWhitespace(html.charAt(k))) k += 1
-              var value: String = null
-              if (k < n && html.charAt(k) == '=') {
-                k += 1
-                while (k < n && Character.isWhitespace(html.charAt(k))) k += 1
-                if (k < n && (html.charAt(k) == '"' || html.charAt(k) == '\'')) {
-                  val q = html.indexOf(html.charAt(k), k + 1)
-                  if (q > k) { value = html.substring(k + 1, q); k = q + 1 }
-                  else { value = html.substring(k + 1); k = n }
-                } else {
-                  // HTML5 unquoted attribute value: runs to whitespace or
-                  // '>'; '/' is PART of the value (the self-closing solidus
-                  // only exists outside attribute-value state)
-                  var e2 = k
-                  while (e2 < n && !Character.isWhitespace(html.charAt(e2)) &&
-                    html.charAt(e2) != '>') e2 += 1
-                  value = html.substring(k, e2)
-                  k = e2
-                }
-              }
-              if (attr == "href" && aHref == null && value != null)
-                aHref = decodeAttr(value)
-              else if (attr == "rel" && aRel == null && value != null)
-                aRel = decodeAttr(value)
-            }
-          }
-          i = if (k < n) k + 1 else n
-
-          if (name.isEmpty) {
-            // junk "<" the name scan rejected; skipped above
-          } else if (!closing && rawTextTags.contains(name) && !selfClose) {
-            val closeTag = "</" + name
-            var e = i
-            var found = -1
-            while (found < 0 && e <= n - closeTag.length) {
-              if (html.regionMatches(true, e, closeTag, 0, closeTag.length)) found = e
-              else e += 1
-            }
-            if (found < 0) i = n
-            else {
-              val gt = html.indexOf('>', found)
-              i = if (gt < 0) n else gt + 1
-            }
-          } else if (name == "a") {
-            if (closing) closeAnchor()
-            else {
-              closeAnchor() // implicit close: <a> does not nest
-              // HTML5 ignores the self-closing flag on non-void elements:
-              // <a href=x/> opens an anchor exactly like <a href=x>
-              if (aHref != null && aHref.nonEmpty) {
-                href = aHref
-                nofollow = aRel != null && relHasNofollow(aRel)
-              }
-            }
-          } else if (name == "base" && !closing && base.isEmpty &&
-            aHref != null && aHref.nonEmpty) {
-            base = Some(aHref.trim)
-          }
-        } else {
-          if (href != null) text.append('<')
-          i += 1
-        }
-      } else if (c == '&') {
-        val (decoded, next) = HtmlContent.decodeEntity(html, i)
-        if (href != null) text.append(decoded)
-        i = next
+    val m = Markup.html(html, "href", "rel")
+    var ev = m.next()
+    while (ev != Markup.End) {
+      if (ev == Markup.Text) {
+        if (href != null) text.append(m.text)
       } else {
-        if (href != null) text.append(c)
-        i += 1
+        val name = m.name.toLowerCase(java.util.Locale.ROOT)
+        val aHref = m.attr(0)
+        if (name == "a") {
+          if (ev == Markup.Close) closeAnchor()
+          else {
+            closeAnchor() // implicit close: <a> does not nest
+            // HTML5 ignores the self-closing flag on non-void elements:
+            // <a href=x/> opens an anchor exactly like <a href=x>
+            if (aHref != null && aHref.nonEmpty) {
+              href = aHref
+              nofollow = m.attr(1) != null && relHasNofollow(m.attr(1))
+            }
+          }
+        } else if (name == "base" && ev == Markup.Open && base.isEmpty &&
+          aHref != null && aHref.nonEmpty) {
+          base = Some(aHref.trim)
+        }
       }
+      ev = m.next()
     }
     closeAnchor()
     (base, out.result())
   }
 
-  /** Entity-decode an attribute value (character data per the HTML spec). */
-  private def decodeAttr(v: String): String = {
-    if (v.indexOf('&') < 0) return v
-    val sb = new java.lang.StringBuilder(v.length)
-    var i = 0
-    while (i < v.length) {
-      val c = v.charAt(i)
-      if (c == '&') {
-        val (d, next) = HtmlContent.decodeEntity(v, i)
-        sb.append(d); i = next
-      } else { sb.append(c); i += 1 }
-    }
-    sb.toString
-  }
-
   private def relHasNofollow(rel: String): Boolean =
     rel.split("[ \t\r\n\f]+").exists(_.equalsIgnoreCase("nofollow"))
-
-  private def isNameStart(c: Char): Boolean =
-    (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z')
-  private def isNameChar(c: Char): Boolean =
-    isNameStart(c) || (c >= '0' && c <= '9') || c == '-' || c == ':'
 }

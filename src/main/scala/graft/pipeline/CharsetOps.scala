@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import java.nio.charset.StandardCharsets
+import java.util.Locale
 
 /** Charset sniffing, transcoding, and mojibake repair for crawl payload
   * bytes — the step between "we have the HTTP entity bytes" and "we have
@@ -150,7 +151,7 @@ object CharsetOps {
     * windows-1252 fallback — never a throw. */
   def decodeAs(b: Array[Byte], label: String): String = {
     if (b == null) return null
-    val l = if (label == null) "" else label.trim.toLowerCase
+    val l = if (label == null) "" else label.trim.toLowerCase(Locale.ROOT)
     l match {
       case "utf-8" | "utf8" | "unicode-1-1-utf-8" =>
         val from = if (b.length >= 3 && (b(0) & 0xFF) == 0xEF &&
@@ -205,7 +206,7 @@ object CharsetOps {
     * back to the sniff — the "server lied" path). */
   def decodeWithHeader(b: Array[Byte], headerLabel: String): String = {
     if (b == null) return null
-    val l = if (headerLabel == null) "" else headerLabel.trim.toLowerCase
+    val l = if (headerLabel == null) "" else headerLabel.trim.toLowerCase(Locale.ROOT)
     val utf8ish = l == "utf-8" || l == "utf8" || l == "unicode-1-1-utf-8"
     if (utf8ish && !validUtf8(b)._1) decode(b)
     else if (l.isEmpty) decode(b)
@@ -220,7 +221,7 @@ object CharsetOps {
     * ascii drops non-ASCII chars. */
   def encodeAs(s: String, label: String): Array[Byte] = {
     if (s == null) return null
-    val l = if (label == null) "" else label.trim.toLowerCase
+    val l = if (label == null) "" else label.trim.toLowerCase(Locale.ROOT)
     l match {
       case "utf-16le" | "utf-16" =>
         val body = s.getBytes(StandardCharsets.UTF_16LE)

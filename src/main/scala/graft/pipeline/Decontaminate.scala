@@ -70,7 +70,7 @@ object Decontaminate {
     // DedupJobs.releaseCached) instead of re-shingling the corpus per
     // consumer; the test side stays lazy (its doc_id filter pushes below
     // the explode, so it shingles ~1/testMod of the docs)
-    val corpus = DedupJobs.cacheTracked(sh.filter(col("doc_id") % testMod =!= 0))
+    val corpus = DedupJobs.cache(sh.filter(col("doc_id") % testMod =!= 0))
     val keep = corpus.groupBy("shingle")
       .agg(count(lit(1)).as("df"))
       .filter(col("df") <= maxDf)

@@ -46,11 +46,15 @@ object DedupJobs {
   private val cachedIntermediates =
     new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
 
-  /** Persist + track for [[releaseCached]]. (An eager count-barrier variant
-    * was measured and rejected: the 9-26 s bimodal runs it was meant to fix
-    * were really heap-EXPANSION GC pauses — see build.sbt Xms note — and
-    * with a fixed heap the barrier's extra pass only cost time.) */
-  private def cache(df: DataFrame): DataFrame = {
+  /** Persist + track for [[releaseCached]] — also for sibling operators
+    * (Decontaminate, SubstrDedup, the SparkEntry pipelines) whose
+    * multiply-consumed intermediates follow the same persist/release
+    * lifecycle, so one [[releaseCached]] frees everything at once. (An
+    * eager count-barrier variant was measured and rejected: the 9-26 s
+    * bimodal runs it was meant to fix were really heap-EXPANSION GC
+    * pauses — see build.sbt Xms note — and with a fixed heap the
+    * barrier's extra pass only cost time.) */
+  private[graft] def cache(df: DataFrame): DataFrame = {
     // Plan-identical persists (two pipelines sharing an intermediate)
     // would each make CacheManager log a benign "Asked to cache already
     // cached data" WARN; if this exact plan is already cached, reuse it —
@@ -62,13 +66,6 @@ object DedupJobs {
       p
     }
   }
-
-  /** [[cache]] for sibling operators (Decontaminate, SubstrDedup, the
-    * SparkEntry pipelines) whose multiply-consumed intermediates follow
-    * the same persist/release lifecycle — one queue, one
-    * [[releaseCached]], so a long-lived session (and the bench's
-    * between-reps release) frees everything at once. */
-  private[graft] def cacheTracked(df: DataFrame): DataFrame = cache(df)
 
   /** Unpersist every intermediate persisted by dedup pipelines since the
     * last release. Safe to call anytime; lazily recomputed if a returned
@@ -198,18 +195,27 @@ object DedupJobs {
     // nothing and the prune win is real (2.0 -> 1.6 s, outlier-free).
     val toks = cache(tokenSets(docs))
     val cand = bandCandidates(signatureBands(toks, numHashes, bands), bucketCap)
+    jaccardVerify(cand, toks, toks, jaccardThreshold)
+  }
+
+  /** The verify step of both MinHash pipelines: join each candidate pair
+    * `(doc_a, doc_b)` to its two distinct-token arrays (`tokA`/`tokB`:
+    * `doc_id`, `toks`), intersect them in-row and keep the pairs whose
+    * Jaccard similarity reaches `threshold`. */
+  private def jaccardVerify(cand: DataFrame, tokA: DataFrame, tokB: DataFrame,
+                            threshold: Double): DataFrame = {
     val jac = col("inter").cast("double") /
       (col("na") + col("nb") - col("inter"))
     cand
-      .join(toks.select(col("doc_id").as("doc_a"), col("toks").as("toks_a")),
+      .join(tokA.select(col("doc_id").as("doc_a"), col("toks").as("toks_a")),
         Seq("doc_a"))
-      .join(toks.select(col("doc_id").as("doc_b"), col("toks").as("toks_b")),
+      .join(tokB.select(col("doc_id").as("doc_b"), col("toks").as("toks_b")),
         Seq("doc_b"))
       .select(col("doc_a"), col("doc_b"),
         size(array_intersect(col("toks_a"), col("toks_b"))).as("inter"),
         size(col("toks_a")).as("na"), size(col("toks_b")).as("nb"))
       .withColumn("jaccard", jac)
-      .filter(col("jaccard") >= jaccardThreshold)
+      .filter(col("jaccard") >= threshold)
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
   }
 
@@ -555,9 +561,9 @@ object DedupJobs {
     // tokens come from the corpus table, new docs' tokens from the
     // snapshot — only docs in a candidate pair are ever tokenized here,
     // ONE distinct-token array per doc, and the intersection is computed
-    // IN-ROW per pair (`array_intersect`/`size` — the same shape as the
-    // batch [[minhashVerifiedPairs]] verify; the former token-explode
-    // joins shuffled pairs × tokens rows through two joins + a groupBy).
+    // IN-ROW per pair by [[jaccardVerify]], shared with the batch
+    // [[minhashVerifiedPairs]] (the former token-explode joins shuffled
+    // pairs × tokens rows through two joins + a groupBy).
     // Broadcast the pair-bounded id sets so the text-bearing corpus and
     // snapshot scans are pruned MAP-SIDE (same rationale as the batch
     // verify: un-hinted, these semi-joins sort-merge and shuffle the full
@@ -570,19 +576,6 @@ object DedupJobs {
       .join(broadcast(cand.select(col("doc_b").as("doc_id")).distinct()),
         Seq("doc_id"), "left_semi")
       .select(col("doc_id"), array_distinct(tokens(col("text"))).as("toks"))
-
-    val jac = col("inter").cast("double") /
-      (col("na") + col("nb") - col("inter"))
-    cand
-      .join(tokA.select(col("doc_id").as("doc_a"), col("toks").as("toks_a")),
-        Seq("doc_a"))
-      .join(tokB.select(col("doc_id").as("doc_b"), col("toks").as("toks_b")),
-        Seq("doc_b"))
-      .select(col("doc_a"), col("doc_b"),
-        size(array_intersect(col("toks_a"), col("toks_b"))).as("inter"),
-        size(col("toks_a")).as("na"), size(col("toks_b")).as("nb"))
-      .withColumn("jaccard", jac)
-      .filter(col("jaccard") >= jaccardThreshold)
-      .select(col("doc_a"), col("doc_b"), col("jaccard"))
+    jaccardVerify(cand, tokA, tokB, jaccardThreshold)
   }
 }

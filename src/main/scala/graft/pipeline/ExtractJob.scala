@@ -91,14 +91,20 @@ object ExtractJob {
       .as[Doc]
   }
 
+  private val log = org.slf4j.LoggerFactory.getLogger("graft.pipeline.ExtractJob")
+
   /** The per-partition kernel of every extraction job (one-shot,
     * resumable and streaming). ST2: a document that throws inside the
     * kernel is dropped, never job-fatal (the reference's continue-on-error
-    * contract, `src/parallel_processor.py:142-152`, `src/config.py:176-180`). */
+    * contract, `src/parallel_processor.py:142-152`, `src/config.py:176-180`),
+    * with one WARN line naming its `doc_id` and the exception. */
   def extractPartition(docs: Iterator[Doc]): Iterator[CaseRecord] =
     docs.flatMap(d =>
       try ExtractAll.extractRecord(d)
-      catch { case _: Exception => None })
+      catch { case e: Exception =>
+        log.warn(s"extraction dropped doc_id=${d.doc_id}: ${e.getClass.getName}: ${e.getMessage}")
+        None
+      })
 
   /** One-shot extraction (no lineage) — the bench/throughput path. */
   def extractRecords(spark: SparkSession, docs: Dataset[Doc],

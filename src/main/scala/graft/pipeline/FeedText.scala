@@ -1,20 +1,22 @@
 package graft.pipeline
 
+import graft.text.Markup
+
 /** Web-feed and sitemap parsing — RSS 2.0 (RSS Advisory Board spec),
   * Atom (RFC 4287), and XML sitemaps (sitemaps.org protocol) — the
   * crawl-frontier surface of a web-scale pipeline: feeds and sitemaps
   * are how a crawler discovers the URLs the rest of this engine
   * ingests (same family as [[UrlOps]] / [[RobotsOps]] / [[WarcIO]]).
   *
-  * One single-pass scanner covers all three: track the enclosing entry
-  * container (`item` / `entry` / `url`), capture character data of the
-  * per-format field elements, decode the five XML named entities,
-  * numeric charrefs, and CDATA sections inline. Atom links are an
-  * `href` attribute on a self-closed element — the one attribute read.
-  * Namespace prefixes on element names are stripped (RFC 4287 feeds
-  * commonly arrive as `<atom:feed>`). No XML library, no DOM; bounded
-  * and total (malformed input → null/partial, never a thrown task —
-  * the [[MediaJob]] discipline).
+  * One pass over the [[graft.text.Markup]] lexer covers all three: track
+  * the enclosing entry container (`item` / `entry` / `url`) and capture
+  * the character data of the per-format field elements (entities
+  * decoded, CDATA sections literal). Atom links are an `href` attribute
+  * on a self-closed element — the one attribute read. Namespace prefixes
+  * on element names are stripped (RFC 4287 feeds commonly arrive as
+  * `<atom:feed>`); names compare case-sensitively (`pubDate`). No XML
+  * library, no DOM; bounded and total (malformed input → null/partial,
+  * never a thrown task — the [[MediaJob]] discipline).
   *
   * Shape at 100 TB: per-row scan-stage kernels surfaced as the
   * codegen'd expressions `feed_kind` / `feed_entries`
@@ -28,29 +30,16 @@ object FeedText {
 
   /** Root-element sniff: `rss | atom | sitemap | null`. */
   def kind(xml: String): String = {
-    if (xml == null) return null
-    var i = 0
-    val n = xml.length
-    while (i < n) {
-      val lt = xml.indexOf('<', i)
-      if (lt < 0 || lt + 1 >= n) return null
-      val c = xml.charAt(lt + 1)
-      if (c == '?' || c == '!') { // prolog / comment / doctype: skip it
-        val gt = xml.indexOf('>', lt)
-        if (gt < 0) return null
-        i = gt + 1
-      } else {
-        val gt = xml.indexOf('>', lt)
-        if (gt < 0) return null
-        localName(xml.substring(lt + 1, gt)) match {
-          case "rss" => return "rss"
-          case "feed" => return "atom"
-          case "urlset" | "sitemapindex" => return "sitemap"
-          case _ => return null
-        }
-      }
+    val m = Markup.xml(xml)
+    var ev = m.next()
+    while (ev == Markup.Text) ev = m.next()
+    if (ev != Markup.Open) null
+    else localName(m.name) match {
+      case "rss" => "rss"
+      case "feed" => "atom"
+      case "urlset" | "sitemapindex" => "sitemap"
+      case _ => null
     }
-    null
   }
 
   /** All entries of a recognized feed, document order; null when the
@@ -69,128 +58,44 @@ object FeedText {
     var field: String = null // which field element we're capturing
     var title: String = null; var link: String = null; var ts: String = null
     val sb = new java.lang.StringBuilder()
-    var i = 0
-    val n = xml.length
-    try {
-      while (i < n) {
-        val c = xml.charAt(i)
-        if (c == '<') {
-          if (xml.startsWith("<![CDATA[", i)) {
-            val end = xml.indexOf("]]>", i + 9)
-            if (end < 0) return out.result().toArray // truncated
-            if (field != null) sb.append(xml, i + 9, end)
-            i = end + 3
-          } else if (xml.startsWith("<!--", i)) {
-            val end = xml.indexOf("-->", i + 4)
-            if (end < 0) return out.result().toArray
-            i = end + 3
-          } else {
-            val gt = xml.indexOf('>', i)
-            if (gt < 0) return out.result().toArray
-            val inner = xml.substring(i + 1, gt)
-            val isEnd = inner.startsWith("/")
-            val isSelf = inner.endsWith("/")
-            val body = inner.stripPrefix("/").stripSuffix("/").trim
-            val tag = localName(body)
-            if (isEnd) {
-              if (tag == container && inEntry) {
-                out += Entry(title, link, ts)
-                inEntry = false; title = null; link = null; ts = null
-              } else if (inEntry && field != null && tag == field) {
-                val v = decodeEntities(sb.toString)
-                if (field == titleEl) title = v
-                else if (field == linkEl) link = v
-                else ts = v
-                field = null; sb.setLength(0)
-              }
-            } else {
-              if (tag == container && !inEntry) {
-                inEntry = true; title = null; link = null; ts = null
-              } else if (inEntry) {
-                // Atom <link href="..."/> — attribute, not char data
-                if (k == "atom" && tag == linkEl) {
-                  val href = attr(body, "href")
-                  if (href != null) link = decodeEntities(href)
-                } else if (!isSelf &&
-                    (tag == titleEl || tag == linkEl || tag == tsEl)) {
-                  field = tag; sb.setLength(0)
-                }
-              }
-            }
-            i = gt + 1
+    val m = Markup.xml(xml, "href")
+    var ev = m.next()
+    while (ev != Markup.End) {
+      if (ev == Markup.Text) {
+        if (field != null) sb.append(m.text)
+      } else {
+        val tag = localName(m.name)
+        if (ev == Markup.Close) {
+          if (tag == container && inEntry) {
+            out += Entry(title, link, ts)
+            inEntry = false; title = null; link = null; ts = null
+          } else if (inEntry && field != null && tag == field) {
+            val v = sb.toString
+            if (field == titleEl) title = v
+            else if (field == linkEl) link = v
+            else ts = v
+            field = null; sb.setLength(0)
           }
-        } else {
-          if (field != null) sb.append(c)
-          i += 1
+        } else if (tag == container && !inEntry) {
+          inEntry = true; title = null; link = null; ts = null
+        } else if (inEntry) {
+          // Atom <link href="..."/> — attribute, not char data
+          if (k == "atom" && tag == linkEl) {
+            if (m.attr(0) != null) link = m.attr(0)
+          } else if (!m.selfClosing &&
+              (tag == titleEl || tag == linkEl || tag == tsEl)) {
+            field = tag; sb.setLength(0)
+          }
         }
       }
-      out.result().toArray
-    } catch { case _: Exception => null }
+      ev = m.next()
+    }
+    out.result().toArray
   }
 
   /** Element name with any namespace prefix stripped. */
-  private def localName(tagBody: String): String = {
-    val name = tagBody.takeWhile(ch => !ch.isWhitespace)
-    val colon = name.indexOf(':')
-    if (colon >= 0) name.substring(colon + 1) else name
-  }
-
-  /** Value of one attribute in a tag body, or null. */
-  private def attr(tagBody: String, name: String): String = {
-    var from = 0
-    while (true) {
-      val at = tagBody.indexOf(name + "=", from)
-      if (at < 0) return null
-      // must start an attribute name: only whitespace may precede it —
-      // a letter/digit would be a suffix match (xhref), and '-' '.' ':'
-      // '_' are legal NAME chars, so data-href / xlink:href must not
-      // be misread as href (attributes are whitespace-separated in XML)
-      if (at == 0 || Character.isWhitespace(tagBody.charAt(at - 1))) {
-        val q = at + name.length + 1
-        if (q < tagBody.length && (tagBody.charAt(q) == '"' || tagBody.charAt(q) == '\'')) {
-          val quote = tagBody.charAt(q)
-          val end = tagBody.indexOf(quote, q + 1)
-          if (end < 0) return null
-          return tagBody.substring(q + 1, end)
-        }
-      }
-      from = at + 1
-    }
-    null
-  }
-
-  /** The five XML named entities + numeric charrefs. */
-  private def decodeEntities(s: String): String = {
-    if (s.indexOf('&') < 0) return s
-    val sb = new java.lang.StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '&') {
-        val semi = s.indexOf(';', i)
-        if (semi > i && semi - i <= 10) {
-          val ent = s.substring(i + 1, semi)
-          val dec = ent match {
-            case "amp" => "&"
-            case "lt" => "<"
-            case "gt" => ">"
-            case "quot" => "\""
-            case "apos" => "'"
-            case e if e.startsWith("#x") || e.startsWith("#X") =>
-              try new String(Character.toChars(Integer.parseInt(e.drop(2), 16)))
-              catch { case _: Exception => null }
-            case e if e.startsWith("#") =>
-              try new String(Character.toChars(Integer.parseInt(e.drop(1))))
-              catch { case _: Exception => null }
-            case _ => null
-          }
-          if (dec != null) { sb.append(dec); i = semi + 1 }
-          else { sb.append(c); i += 1 }
-        } else { sb.append(c); i += 1 }
-      } else { sb.append(c); i += 1 }
-    }
-    sb.toString
-  }
+  private def localName(name: String): String =
+    name.substring(name.indexOf(':') + 1)
 
   // ------------------------------------------------------------- encoders
 

@@ -7,6 +7,8 @@ import java.util.zip.{ZipEntry, ZipInputStream, ZipOutputStream}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
+import graft.text.Markup
+
 /** Office-document text extraction — DOCX (OOXML WordprocessingML,
   * ECMA-376) and ODT (OpenDocument, OASIS ODF §5) — the web's second
   * document population after HTML/PDF. Both formats are ZIP containers
@@ -20,8 +22,8 @@ import org.apache.spark.sql.functions.col
   *    `<text:h>` elements at any span depth; `<text:tab/>` and
   *    `<text:line-break/>` as above (ODF §6.1).
   *
-  * Paragraphs join with `\n`; the five XML named entities and numeric
-  * character references decode. Everything is a bounded, total per-row
+  * Paragraphs join with `\n`; entities decode and CDATA stays literal
+  * ([[graft.text.Markup]]). Everything is a bounded, total per-row
   * byte walk (the [[MediaJob]] discipline: malformed input → null,
   * never a thrown task); container reading is `java.util.zip` streaming
   * — no XML library, no DOM allocation proportional to nesting.
@@ -73,15 +75,13 @@ object OfficeText {
     val part = if (k == "docx") "word/document.xml" else "content.xml"
     val xml = readPart(bytes, part)
     if (xml == null) return null
-    try {
-      if (k == "docx")
-        scanXml(xml, captureIn = "w:t", paraEnds = Set("w:p"),
-          tabs = Set("w:tab"), breaks = Set("w:br", "w:cr"), nestedCapture = false)
-      else
-        scanXml(xml, captureIn = "text:p", paraEnds = Set("text:p", "text:h"),
-          tabs = Set("text:tab"), breaks = Set("text:line-break"),
-          nestedCapture = true, alsoCaptureIn = Set("text:h"))
-    } catch { case _: Exception => null }
+    if (k == "docx")
+      scanXml(xml, captureIn = "w:t", paraEnds = Set("w:p"),
+        tabs = Set("w:tab"), breaks = Set("w:br", "w:cr"), nestedCapture = false)
+    else
+      scanXml(xml, captureIn = "text:p", paraEnds = Set("text:p", "text:h"),
+        tabs = Set("text:tab"), breaks = Set("text:line-break"),
+        nestedCapture = true, alsoCaptureIn = Set("text:h"))
   }
 
   /** Decompressed bytes of one named entry (size-capped), else null. */
@@ -108,9 +108,10 @@ object OfficeText {
     } catch { case _: Exception => null }
   }
 
-  /** Single-pass character-data scan of the documented text model.
-    * DOCX captures only directly inside `captureIn` elements
-    * (`nestedCapture = false`); ODT captures everything inside a
+  /** Single-pass character-data scan of the documented text model over
+    * the [[graft.text.Markup]] lexer; element names compare with their
+    * prefix (`w:t`). DOCX captures only directly inside `captureIn`
+    * elements (`nestedCapture = false`); ODT captures everything inside a
     * paragraph element at any depth (`nestedCapture = true`). */
   private def scanXml(xml: String, captureIn: String, paraEnds: Set[String],
                       tabs: Set[String], breaks: Set[String],
@@ -118,25 +119,20 @@ object OfficeText {
                       alsoCaptureIn: Set[String] = Set.empty): String = {
     val sb = new java.lang.StringBuilder()
     var capture = 0
-    var i = 0
-    val n = xml.length
-    while (i < n) {
-      val c = xml.charAt(i)
-      if (c == '<') {
-        val close = xml.indexOf('>', i)
-        if (close < 0) return finishParas(sb) // truncated tag: emit what we have
-        val inner = xml.substring(i + 1, close)
-        val isEnd = inner.startsWith("/")
-        val isSelf = inner.endsWith("/")
-        val body = inner.stripPrefix("/").stripSuffix("/").trim
-        val tag = body.takeWhile(ch => !ch.isWhitespace)
+    val m = Markup.xml(xml)
+    var ev = m.next()
+    while (ev != Markup.End) {
+      if (ev == Markup.Text) {
+        if (capture > 0) sb.append(m.text)
+      } else {
+        val tag = m.name
         val opens = captureIn == tag || alsoCaptureIn.contains(tag)
-        if (isSelf) {
+        if (m.selfClosing) {
           if (capture > 0 || !nestedCapture) {
             if (tabs.contains(tag)) sb.append('\t')
             else if (breaks.contains(tag)) sb.append('\n')
           }
-        } else if (isEnd) {
+        } else if (ev == Markup.Close) {
           if (opens && capture > 0) capture -= 1
           if (paraEnds.contains(tag)) sb.append('\u0000') // paragraph sentinel
         } else {
@@ -145,34 +141,8 @@ object OfficeText {
           if ((capture > 0 || !nestedCapture) && tabs.contains(tag)) sb.append('\t')
           else if ((capture > 0 || !nestedCapture) && breaks.contains(tag)) sb.append('\n')
         }
-        i = close + 1
-      } else {
-        if (capture > 0) {
-          // entity-decode character data as it streams
-          if (c == '&') {
-            val semi = xml.indexOf(';', i)
-            if (semi > i && semi - i <= 10) {
-              val ent = xml.substring(i + 1, semi)
-              val dec = ent match {
-                case "amp" => "&"
-                case "lt" => "<"
-                case "gt" => ">"
-                case "quot" => "\""
-                case "apos" => "'"
-                case e if e.startsWith("#x") || e.startsWith("#X") =>
-                  try new String(Character.toChars(Integer.parseInt(e.drop(2), 16)))
-                  catch { case _: Exception => null }
-                case e if e.startsWith("#") =>
-                  try new String(Character.toChars(Integer.parseInt(e.drop(1))))
-                  catch { case _: Exception => null }
-                case _ => null
-              }
-              if (dec != null) { sb.append(dec); i = semi } else sb.append(c)
-            } else sb.append(c)
-          } else sb.append(c)
-        }
-        i += 1
       }
+      ev = m.next()
     }
     finishParas(sb)
   }

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import java.util.Locale
 import java.util.regex.Pattern
 
 /** Robots Exclusion Protocol (RFC 9309) evaluation — the crawl-pipeline
@@ -69,7 +70,7 @@ object RobotsOps {
     * parse-what-you-can stance). */
   def parse(robots: String, agent: String): Policy = {
     if (robots == null || agent == null) return EmptyPolicy
-    val want = agent.trim.toLowerCase
+    val want = agent.trim.toLowerCase(Locale.ROOT)
     // collect (uaTokens, rules, delay) groups, then merge the applicable ones
     val groups = scala.collection.mutable.ArrayBuffer
       .empty[(List[String], scala.collection.mutable.ArrayBuffer[(Boolean, String)], Option[Double])]
@@ -93,12 +94,12 @@ object RobotsOps {
       }
       val colon = line.indexOf(':')
       if (colon > 0) {
-        val key = line.substring(0, colon).trim.toLowerCase
+        val key = line.substring(0, colon).trim.toLowerCase(Locale.ROOT)
         val value = line.substring(colon + 1).trim
         key match {
           case "user-agent" =>
             if (!collectingUa) { closeGroup(); collectingUa = true }
-            uas = value.toLowerCase :: uas
+            uas = value.toLowerCase(Locale.ROOT) :: uas
           case "allow" | "disallow" if uas.nonEmpty =>
             collectingUa = false
             if (cur == null) cur = scala.collection.mutable.ArrayBuffer.empty

@@ -73,7 +73,7 @@ object SubstrDedup {
     // 12-byte (pos, h) pairs, the same O(total chars) volume the groupBy
     // shuffles anyway; at cluster scale this is the intermediate you'd
     // checkpoint (or recompute if storage is tighter than CPU).
-    val wd = DedupJobs.cacheTracked(windows(docs, w))
+    val wd = DedupJobs.cache(windows(docs, w))
 
     // duplicate-hash candidates: windows whose hash is seen in >= 2
     // distinct docs — tested as min(doc_id) != max(doc_id), which is a

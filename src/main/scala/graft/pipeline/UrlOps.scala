@@ -1,5 +1,7 @@
 package graft.pipeline
 
+import java.util.Locale
+
 /** URL canonicalization for web-crawl pipelines — the normalization a
   * crawler/dedup stage applies before using a URL as a key (frontier
   * dedup, crawl-index join, per-site aggregation). Everything here is
@@ -109,7 +111,7 @@ object UrlOps {
         val c = s.charAt(i)
         Character.isLetterOrDigit(c) || c == '+' || c == '-' || c == '.'
       }) i += 1
-      if (i < n && s.charAt(i) == ':') { scheme = s.substring(0, i).toLowerCase; p = i + 1 }
+      if (i < n && s.charAt(i) == ':') { scheme = s.substring(0, i).toLowerCase(Locale.ROOT); p = i + 1 }
     }
     var authority: String = null
     if (p + 1 < n && s.charAt(p) == '/' && s.charAt(p + 1) == '/') {
@@ -204,12 +206,12 @@ object UrlOps {
         val colon = hostPort.lastIndexOf(':')
         if (colon >= 0) hostPort.substring(0, colon) else hostPort
       }
-    host.toLowerCase
+    host.toLowerCase(Locale.ROOT)
   }
 
   /** Query-parameter names a crawl key should not depend on. */
   private def isTrackingParam(name: String): Boolean = {
-    val n = name.toLowerCase
+    val n = name.toLowerCase(Locale.ROOT)
     n.startsWith("utm_") || n == "gclid" || n == "fbclid"
   }
 
@@ -232,7 +234,7 @@ object UrlOps {
     }) i += 1
     if (i + 2 >= n || s.charAt(i) != ':' || s.charAt(i + 1) != '/' || s.charAt(i + 2) != '/')
       return s
-    val scheme = s.substring(0, i).toLowerCase
+    val scheme = s.substring(0, i).toLowerCase(Locale.ROOT)
     var p = i + 3
     // authority runs to the first '/', '?' or '#'
     var authEnd = p
@@ -273,7 +275,7 @@ object UrlOps {
         port = hostPort.substring(colon + 1)
       }
     }
-    host = pctNormalize(host).toLowerCase
+    host = pctNormalize(host).toLowerCase(Locale.ROOT)
     val defaultPort = scheme match {
       case "http" | "ws"   => "80"
       case "https" | "wss" => "443"

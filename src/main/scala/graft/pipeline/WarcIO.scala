@@ -2,6 +2,7 @@ package graft.pipeline
 
 import java.io.ByteArrayOutputStream
 import java.nio.charset.StandardCharsets
+import java.util.Locale
 import java.util.zip.{GZIPOutputStream, Inflater}
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
@@ -166,7 +167,7 @@ object WarcIO {
   def recordId(recordType: String, uri: String, date: String): String = {
     val md = java.security.MessageDigest.getInstance("MD5")
     val h = md.digest(s"$recordType|$uri|$date".getBytes(StandardCharsets.UTF_8))
-      .map(x => f"${x & 0xff}%02x").mkString
+      .map(x => "%02x".formatLocal(Locale.ROOT, x & 0xff)).mkString
     s"<urn:uuid:${h.substring(0, 8)}-${h.substring(8, 12)}-${h.substring(12, 16)}-" +
       s"${h.substring(16, 20)}-${h.substring(20, 32)}>"
   }
@@ -317,7 +318,7 @@ object WarcIO {
       if (l.isEmpty) blank = true
       else {
         val c = l.indexOf(':')
-        if (c > 0) headers(l.substring(0, c).trim.toLowerCase) = l.substring(c + 1).trim
+        if (c > 0) headers(l.substring(0, c).trim.toLowerCase(Locale.ROOT)) = l.substring(c + 1).trim
       }
     }
     // Content-Length is mandatory; crafted values are clamped to the
@@ -337,17 +338,17 @@ object WarcIO {
   private def mimeOf(ct: String): (String, String) = {
     if (ct == null) return (null, null)
     val parts = ct.split(";")
-    val primary = parts(0).trim.toLowerCase
+    val primary = parts(0).trim.toLowerCase(Locale.ROOT)
     val cs = parts.iterator.drop(1).map(_.trim)
-      .find(_.toLowerCase.startsWith("charset="))
-      .map(_.substring(8).trim.stripPrefix("\"").stripSuffix("\"").toLowerCase)
+      .find(_.toLowerCase(Locale.ROOT).startsWith("charset="))
+      .map(_.substring(8).trim.stripPrefix("\"").stripSuffix("\"").toLowerCase(Locale.ROOT))
       .orNull
     (primary, cs)
   }
 
   private def interpret(h: scala.collection.mutable.Map[String, String],
                         block: Array[Byte]): WarcRec = {
-    val rtype = h.getOrElse("warc-type", "unknown").toLowerCase
+    val rtype = h.getOrElse("warc-type", "unknown").toLowerCase(Locale.ROOT)
     val uri = h.get("warc-target-uri").orNull
     val date = h.get("warc-date").orNull
     val (blockType, blockCs) = mimeOf(h.get("content-type").orNull)
@@ -369,7 +370,7 @@ object WarcIO {
     * degrades to the bytes framed so far. */
   private def parseHttp(b: Array[Byte]): (Option[Int], String, String, Array[Byte]) = {
     val (status0, afterStatus) = line(b, 0)
-    if (status0 == null || !status0.toUpperCase.startsWith("HTTP/"))
+    if (status0 == null || !status0.toUpperCase(Locale.ROOT).startsWith("HTTP/"))
       return (None, "application/octet-stream", null, b)
     val status = status0.split("\\s+") match {
       case a if a.length >= 2 =>
@@ -389,14 +390,14 @@ object WarcIO {
       else {
         val c = l.indexOf(':')
         if (c > 0) {
-          val k = l.substring(0, c).trim.toLowerCase
+          val k = l.substring(0, c).trim.toLowerCase(Locale.ROOT)
           val v = l.substring(c + 1).trim
           k match {
             case "content-type" => ct = v
             case "content-length" =>
               cl = try v.toLong catch { case _: Exception => -1L }
             case "transfer-encoding" =>
-              chunked = chunked || v.toLowerCase.contains("chunked")
+              chunked = chunked || v.toLowerCase(Locale.ROOT).contains("chunked")
             case _ =>
           }
         }
@@ -489,7 +490,7 @@ object WarcJob {
         if (!it.hasNext) Iterator.empty
         else {
           val pid = org.apache.spark.TaskContext.getPartitionId()
-          val shard = f"graft-crawl-$pid%05d.warc.gz"
+          val shard = "graft-crawl-%05d.warc.gz".formatLocal(Locale.ROOT, pid)
           val out = new ByteArrayOutputStream(1 << 16)
           out.write(gzipMember(warcinfoRecord(shard, FixedDate)))
           it.foreach { case (id, text, lang, source) =>

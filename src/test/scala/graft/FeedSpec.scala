@@ -64,6 +64,14 @@ class FeedSpec extends AnyFunSuite {
       "<item><title>i1</title><link>https://i1</link><pubDate>d1</pubDate></item>" +
       "</channel></rss>"
     assert(FeedText.entries(rss).toSeq == Seq(Entry("i1", "https://i1", "d1")))
+    // CDATA is literal character data: its entities stay undecoded
+    val cdata = "<rss><channel><item><title><![CDATA[AT&amp;T news]]></title>" +
+      "<link>https://c</link><pubDate>d2</pubDate></item></channel></rss>"
+    assert(FeedText.entries(cdata).toSeq == Seq(Entry("AT&amp;T news", "https://c", "d2")))
+    // a '>' inside a quoted attribute value does not end the tag
+    val gt = "<feed><entry><title>g</title><link href=\"https://e.example/?a>b\"/>" +
+      "<updated>t2</updated></entry></feed>"
+    assert(FeedText.entries(gt).toSeq == Seq(Entry("g", "https://e.example/?a>b", "t2")))
   }
 
   test("hyphenated/namespaced attributes do not shadow href") {

@@ -141,6 +141,8 @@ class GraphSpec extends AnyFunSuite {
       LinkExtract.scan(html.substring(0, cut))
     assert(LinkExtract.scan(null)._2.isEmpty)
     assert(LinkExtract.scan("")._2.isEmpty)
+    // a tag the end of input cuts off is not emitted (HTML5 eof-in-tag)
+    assert(LinkExtract.scan("<a href=x")._2.isEmpty)
   }
 
   // ---------------------------------------------------- end-to-end pages

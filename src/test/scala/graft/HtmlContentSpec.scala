@@ -110,6 +110,18 @@ class HtmlContentSpec extends AnyFunSuite {
         .filter(_.kind == "media").map(_.media_ref)
       assert(refs == Seq(src))
     }
+    // HTML5 tag reading: a stray quote is part of an attribute name or
+    // unquoted value, not the start of a value that swallows the page
+    assert(HtmlContent.extract("<p class=a\"b>" + longText + "</p><p>x\" more</p>").map(_.text) ==
+      Seq(longText, "x\" more"))
+    // `src` is a whole attribute name, the first of two wins, its value is
+    // entity-decoded, and a tag cut off by the end of input is dropped
+    Seq("<img title=src=a.png><p>" + longText + "</p>" -> Seq(),
+      "<img src=a.png src=b.png><p>" + longText + "</p>" -> Seq("a.png"),
+      "<img src=\"a?x=1&amp;y=2\"><p>" + longText + "</p>" -> Seq("a?x=1&y=2"),
+      "<p>" + longText + "</p><img src=x" -> Seq()).foreach { case (h, want) =>
+      assert(HtmlContent.extract(h).filter(_.kind == "media").map(_.media_ref) == want, h)
+    }
   }
 
   test("fuzz: 3000 seeded garbage documents never throw and emit well-formed spans") {

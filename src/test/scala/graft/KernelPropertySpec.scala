@@ -96,6 +96,34 @@ class KernelPropertySpec extends AnyFunSuite {
       List(good.doc_id, good.doc_id))
   }
 
+  test("extractPartition logs one WARN per dropped document with its doc_id and exception") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("extract-drops", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        lines.add(s"${e.getLevel} ${e.getMessage.getFormattedMessage}")
+    }
+    val logger = LogManager.getLogger("graft.pipeline.ExtractJob").asInstanceOf[CoreLogger]
+    val level = logger.getLevel
+    appender.start()
+    logger.addAppender(appender)
+    logger.setLevel(Level.WARN)
+    try {
+      val good = CorpusGen.genDoc(0L)
+      val bad = Doc("BAD0002_2020", LazyList.fill[Span](1)(throw new IllegalStateException("bad span")))
+      assert(ExtractJob.extractPartition(Iterator(bad, good)).map(_.doc_id).toList == List(good.doc_id))
+    } finally {
+      logger.removeAppender(appender)
+      logger.setLevel(level)
+      appender.stop()
+    }
+    assert(lines.toArray.toList ==
+      List("WARN extraction dropped doc_id=BAD0002_2020: java.lang.IllegalStateException: bad span"))
+  }
+
   test("artifact cleaner output is always a suffix of its input") {
     val r = rng
     val pool = Seq("A", "B", "C", "Z", "", "IN THE HIGH COURT OF THE",
