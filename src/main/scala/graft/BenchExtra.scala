@@ -64,7 +64,8 @@ object BenchExtra {
       name -> reps
     }
     results.foreach { case (n, reps) =>
-      println(f"BENCHX $n min=${reps.min}%.3f reps=${reps.map(r => f"$r%.3f").mkString(",")}")
+      println("BENCHX %s min=%.3f reps=%s".formatLocal(java.util.Locale.ROOT, n, reps.min,
+        reps.map(r => "%.3f".formatLocal(java.util.Locale.ROOT, r)).mkString(",")))
     }
     spark.stop()
   }

@@ -452,51 +452,22 @@ object SparkEntry {
       // bucket (same 8-bit bucketing as the ANN family), exact cosine on
       // in-bucket pairs only — never all-pairs. The synthetic embeddings
       // are near-orthogonal, so the demonstrative threshold is low; at a
-      // real corpus it would sit at ~0.95.
-      // Dot products run in the compiled vec_dot kernel (bit-identical
-      // fold to the interpreted zip_with/aggregate form it replaced), and
-      // each vector's norm is computed ONCE per row BEFORE the join
-      // instead of once per candidate pair — identical doubles, O(rows)
-      // instead of O(pairs) norm work.
-      graft.plans.VecExprs.register(s)
-      import graft.plans.VecExprs.vec_dot
-      val e = t(s, dir, "embeddings")
-      val withB = e.withColumn("bucket", AnnJobs.signBucket(col("embedding")))
-        .withColumn("nrm", sqrt(vec_dot(col("embedding"), col("embedding"))))
-      val a = withB.select(col("vec_id").as("id_a"), col("embedding").as("a_emb"),
-        col("nrm").as("a_nrm"), col("bucket"))
-      val b = withB.select(col("vec_id").as("id_b"), col("embedding").as("b_emb"),
-        col("nrm").as("b_nrm"), col("bucket"))
-      a.join(b, Seq("bucket")).filter(col("id_a") < col("id_b"))
-        .withColumn("cos_sim", round(
-          vec_dot(col("a_emb"), col("b_emb")) / (col("a_nrm") * col("b_nrm")), 4))
+      // real corpus it would sit at ~0.95. The ANN family's sides and
+      // cosine: each norm once per row, before the join.
+      val withB = t(s, dir, "embeddings")
+        .withColumn("bucket", AnnJobs.signBucket(col("embedding")))
+      def side(p: String) = AnnJobs.side(withB, p, col("embedding"), int8 = false, col("bucket"))
+      side("q").join(side("n"), Seq("bucket")).filter(col("q_id") < col("n_id"))
+        .withColumn("cos_sim", AnnJobs.cosine())
         .filter(col("cos_sim") >= 0.2)
-        .select(col("id_a"), col("id_b"), col("cos_sim"))
+        .select(col("q_id").as("id_a"), col("n_id").as("id_b"), col("cos_sim"))
         .orderBy(col("id_a"), col("id_b"))
     }),
 
     // Similarity search ----------------------------------------------------
-    "q_ann_cosine" -> ((s, dir) => {
-      // vec_dot kernel + per-side norms computed once per ROW before the
-      // join (identical doubles; the post-join form re-ran each O(dim)
-      // norm once per candidate pair).
-      graft.plans.VecExprs.register(s)
-      import graft.plans.VecExprs.vec_dot
-      val e = t(s, dir, "embeddings")
-      val q = e.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-          sqrt(vec_dot(col("embedding"), col("embedding"))).as("qn"))
-      val c = e.select(col("vec_id").as("n_id"), col("embedding").as("n_emb"),
-        sqrt(vec_dot(col("embedding"), col("embedding"))).as("nn"))
-      val joined = q.join(broadcast(c), col("q_id") =!= col("n_id"))
-        .withColumn("dot", vec_dot(col("q_emb"), col("n_emb")))
-        .withColumn("sim", round(col("dot") / (col("qn") * col("nn")), 4))
-      val w = Window.partitionBy(col("q_id")).orderBy(desc("sim"), col("n_id"))
-      joined.withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 5)
-        .select(col("q_id"), col("n_id"), col("sim"), col("rn"))
-        .orderBy(col("q_id"), col("rn"))
-    }),
+    "q_ann_cosine" -> ((s, dir) =>
+      // Exact cosine top-5 over all pairs: the brute-force ANN path.
+      AnnJobs.bruteForceTopK(s, t(s, dir, "embeddings"), col("vec_id") < 10, k = 5)),
 
     "q_ann_lsh_bucket" -> ((s, dir) => {
       // Axis-aligned hyperplane LSH: bucket = sign bits of dims 1..8.
@@ -507,36 +478,16 @@ object SparkEntry {
         .orderBy(col("bucket"))
     }),
 
-    "q_ann_lsh_topk" -> ((s, dir) => {
+    "q_ann_lsh_topk" -> ((s, dir) =>
       // The scale path: candidates restricted to the query's LSH bucket,
       // then exact cosine top-3 within the bucket.
-      val e = t(s, dir, "embeddings")
-      // vec_dot kernel + per-side norms once per row pre-join (identical
-      // doubles — see q_ann_cosine)
-      graft.plans.VecExprs.register(s)
-      import graft.plans.VecExprs.vec_dot
-      val withB = e.withColumn("bucket", AnnJobs.signBucket(col("embedding")))
-        .withColumn("nrm", sqrt(vec_dot(col("embedding"), col("embedding"))))
-      val q = withB.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-          col("nrm").as("qn"), col("bucket"))
-      val c = withB.select(col("vec_id").as("n_id"), col("embedding").as("n_emb"),
-        col("nrm").as("nn"), col("bucket"))
-      val joined = q.join(c, Seq("bucket")).filter(col("q_id") =!= col("n_id"))
-        .withColumn("dot", vec_dot(col("q_emb"), col("n_emb")))
-        .withColumn("sim", round(col("dot") / (col("qn") * col("nn")), 4))
-      val w = Window.partitionBy(col("q_id")).orderBy(desc("sim"), col("n_id"))
-      joined.withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 3)
-        .select(col("q_id"), col("bucket"), col("n_id"), col("sim"), col("rn"))
-        .orderBy(col("q_id"), col("rn"))
-    }),
+      AnnJobs.lshTopK(t(s, dir, "embeddings"), col("vec_id") < 10, k = 3)),
 
     "q_ann_ivf" -> ((s, dir) => {
       // IVF coarse-quantizer ANN (rows-only check: KMeans training is not
       // DuckDB-expressible; recall vs brute force is asserted in AnnSpec).
       val e = t(s, dir, "embeddings")
-      graft.pipeline.AnnJobs.ivfTopK(s, e, col("vec_id") < 10,
+      AnnJobs.ivfTopK(s, e, col("vec_id") < 10,
         k = 5, nlist = 8, nprobe = 2)
     }),
 
@@ -547,7 +498,7 @@ object SparkEntry {
       // happens probe-side. The scale paths are q_ann_lsh_quantized /
       // q_ann_ivf_quantized below.
       val e = t(s, dir, "embeddings")
-      graft.pipeline.AnnJobs.quantizedTopK(e, col("vec_id") < 10, k = 5)
+      AnnJobs.quantizedTopK(e, col("vec_id") < 10, k = 5)
     }),
 
     "q_ann_lsh_quantized" -> ((s, dir) => {
@@ -556,7 +507,7 @@ object SparkEntry {
       // generation — 1 byte/dim through the join, exact cosine on
       // probe-side reconstructed vectors. Fully DuckDB-expressible.
       val e = t(s, dir, "embeddings")
-      graft.pipeline.AnnJobs.lshQuantizedTopK(e, col("vec_id") < 10, k = 3)
+      AnnJobs.lshQuantizedTopK(e, col("vec_id") < 10, k = 3)
     }),
 
     "q_ann_ivf_quantized" -> ((s, dir) => {
@@ -564,7 +515,7 @@ object SparkEntry {
       // a 100-TB deployment runs (rows-only check: KMeans training is not
       // DuckDB-expressible; AnnSpec asserts recall vs brute force).
       val e = t(s, dir, "embeddings")
-      graft.pipeline.AnnJobs.ivfQuantizedTopK(s, e, col("vec_id") < 10,
+      AnnJobs.ivfQuantizedTopK(s, e, col("vec_id") < 10,
         k = 5, nlist = 8, nprobe = 2)
     }),
 
@@ -574,7 +525,7 @@ object SparkEntry {
       // collapse (AnnSpec's correlated-dims fixture). The oracle bakes the
       // identical seeded matrix into SQL, so this is fully oracle-checked.
       val e = t(s, dir, "embeddings")
-      graft.pipeline.AnnJobs.hyperplaneQuantizedTopK(e, col("vec_id") < 10,
+      AnnJobs.hyperplaneQuantizedTopK(e, col("vec_id") < 10,
         dim = 64, k = 3, nBits = 8, seed = 7L)
     }),
 
@@ -595,11 +546,11 @@ object SparkEntry {
         ivfIndexDirs.getOrElseUpdate(dir, {
           val d = java.nio.file.Files
             .createTempDirectory("graft_ivf_index_").toString
-          graft.pipeline.AnnJobs.buildIndex(s, e, d, nlist = 8)
+          AnnJobs.buildIndex(s, e, d, nlist = 8)
           d
         })
       }
-      graft.pipeline.AnnJobs.probeIndex(s, idx,
+      AnnJobs.probeIndex(s, idx,
         e.filter(col("vec_id") < 10).select(col("vec_id"), col("embedding")),
         k = 5, nprobe = 2)
     }),

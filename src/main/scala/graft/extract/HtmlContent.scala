@@ -102,15 +102,16 @@ object HtmlContent {
             out += MediaRef(src, negDepth > 0)
           }
         } else {
-          val opens = !closing && !m.selfClosing
+          // HTML5 ignores `/>` on non-void elements, and no tag with a
+          // depth here is void: `<a href=x/>` opens an anchor
           if (blockTags.contains(name)) flush()
           if (negativeTags.contains(name)) {
             if (closing) negDepth = math.max(0, negDepth - 1)
-            else if (opens) negDepth += 1
+            else negDepth += 1
           }
           if (headingTags.contains(name)) {
             if (closing) headingDepth = math.max(0, headingDepth - 1)
-            else if (opens) headingDepth += 1
+            else headingDepth += 1
           }
           if (name == "a") {
             // word-separate adjacent anchors so anchor word counts sum
@@ -118,7 +119,7 @@ object HtmlContent {
             // concatenation: "<a>x</a><a>y</a>" is 2 anchor words)
             anchorText.append(' ')
             if (closing) anchorDepth = math.max(0, anchorDepth - 1)
-            else if (opens) anchorDepth += 1
+            else anchorDepth += 1
           }
         }
       }

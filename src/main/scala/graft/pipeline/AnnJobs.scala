@@ -4,8 +4,14 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** IVF-style approximate nearest neighbour over an embedding column — the
-  * scale path beyond the axis-aligned LSH buckets in SparkEntry:
+/** Nearest-neighbour search over an embedding column. Each path is a
+  * candidate generator over one shared cosine and one top-k ranking (the
+  * similarity-join core below; blocking-then-comparison, as in SparkER):
+  * broadcast all-pairs ([[bruteForceTopK]], [[quantizedTopK]]), an
+  * equi-join on a sign-LSH or random-hyperplane bucket ([[lshTopK]],
+  * [[lshQuantizedTopK]], [[hyperplaneQuantizedTopK]]) or on a probed IVF
+  * cell ([[ivfTopK]], [[ivfQuantizedTopK]], [[probeIndex]]). IVF is the
+  * scale path beyond the buckets:
   *
   *  1. a KMeans coarse quantizer (nlist centroids, fixed seed) partitions
   *     the vector space;
@@ -53,10 +59,73 @@ object AnnJobs {
   private def letD(v: Column)(body: Column => Column): Column =
     element_at(transform(array(v), x => body(x)), 1)
 
-  /** Cosine similarity rounded to 4dp — same rounding as the oracle-checked
-    * q_ann_cosine, so brute force and IVF rank identically. */
-  private def cosine(a: Column, b: Column): Column =
-    round(dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b))), 4)
+  // The similarity-join core. Every path below composes the same three
+  // pieces: `side` builds the query and candidate sides, `topK` generates
+  // candidate pairs (broadcast all-pairs, or an equi-join on a bucket or
+  // a probed cell) and ranks them by the one `cosine`.
+
+  /** A join payload read as a vector: floats as they are, the
+    * [[int8Quantize]] struct dequantized. */
+  private def vector(payload: Column, int8: Boolean): Column =
+    if (int8) int8Dequantize(payload) else payload
+
+  /** One side of a similarity join, prefixed `q` (queries) or `n`
+    * (candidates): `<p>_id`, the payload `<p>_vec` that crosses the join,
+    * `<p>n` — the norm of its vector form, computed ONCE per row before the
+    * join — and the join `keys`. An `int8` payload is the [[int8Quantize]]
+    * struct: only its scalar norm travels next to it, and [[cosine]]
+    * dequantizes it on the probe side, above the join. */
+  private[graft] def side(rows: DataFrame, p: String, payload: Column,
+                          int8: Boolean, keys: Column*): DataFrame = {
+    val v = vector(payload, int8)
+    rows.select(Seq(col("vec_id").as(s"${p}_id"), payload.as(s"${p}_vec"),
+      sqrt(dot(v, v)).as(s"${p}n")) ++ keys: _*)
+  }
+
+  /** Cosine of a joined (q, n) pair rounded to 4dp — the oracle-checked
+    * q_ann_cosine rounding, so every path ranks alike. */
+  private[graft] def cosine(int8: Boolean = false): Column =
+    round(dot(col("q_vec"), vector(col("n_vec"), int8)) / (col("qn") * col("nn")), 4)
+
+  /** Each query's `k` most similar candidates, ties to the lower id,
+    * ordered by (q_id, rn). Candidate pairs are the broadcast all-pairs
+    * product when `key` is None (the brute-force baselines), else the
+    * equi-join on that bucket or probed cell: each corpus vector sits in
+    * ONE bucket or cell, so a pair meets at most once and needs no dedup.
+    * `keep` names join keys the output carries after q_id. */
+  private def topK(q: DataFrame, n: DataFrame, k: Int, int8: Boolean,
+                   key: Option[String], keep: String*): DataFrame = {
+    val pairs = key.fold(q.join(broadcast(n), col("q_id") =!= col("n_id")))(
+      c => q.join(n, Seq(c)).filter(col("q_id") =!= col("n_id")))
+    val w = Window.partitionBy(col("q_id")).orderBy(desc("sim"), col("n_id"))
+    pairs.withColumn("sim", cosine(int8))
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= k)
+      .select((col("q_id") +: keep.map(col)) ++ Seq(col("n_id"), col("sim"), col("rn")): _*)
+      .orderBy(col("q_id"), col("rn"))
+  }
+
+  /** [[topK]] of the `queryIds` rows of a corpus (vec_id, embedding and
+    * the `key` column) against the whole corpus. Floats cross the join as
+    * they are; with `int8` the candidates ship the [[int8Quantize]] struct
+    * and the queries rank with its dequantized form, so both sides see the
+    * same reconstruction. `qKey` replaces `key` on the query side (IVF
+    * queries join on their [[probe]]d cells, not their own). */
+  private def corpusTopK(rows: DataFrame, queryIds: Column, k: Int, int8: Boolean,
+                         key: Option[String] = None, qKey: Option[Column] = None,
+                         keep: Seq[String] = Nil): DataFrame = {
+    val qz = if (int8) rows.withColumn("qs", int8Quantize(col("embedding"))) else rows
+    val payload = col(if (int8) "qs" else "embedding")
+    val nKeys = key.map(col).toSeq
+    val q = side(qz.filter(queryIds), "q", vector(payload, int8), int8 = false,
+      qKey.fold(nKeys)(Seq(_)): _*)
+    topK(q, side(qz, "n", payload, int8, nKeys: _*), k, int8, key, keep: _*)
+  }
+
+  /** The query side's IVF key: one row per probed cell, the `nprobe`
+    * cells nearest the row's `embedding`. */
+  private def probe(centroids: Array[Array[Double]], nprobe: Int): Column =
+    explode(nearestCells(col("embedding"), centroids, nprobe)).as("cell")
 
   /** The `nprobe` nearest centroids of `emb` (unit-normalized — cosine IVF
     * = L2 IVF on the unit sphere), as an array of cell indices ordered by
@@ -209,25 +278,14 @@ object AnnJobs {
   /** IVF top-k: queries probe their `nprobe` nearest cells only. */
   def ivfTopK(spark: SparkSession, embeddings: DataFrame, queryIds: Column,
               k: Int = 5, nlist: Int = 8, nprobe: Int = 2,
-              maxTrainRows: Long = 100000L): DataFrame = {
+              maxTrainRows: Long = 100000L): DataFrame =
+    ivf(spark, embeddings, queryIds, k, nlist, nprobe, maxTrainRows, int8 = false)
+
+  /** Both IVF paths: train and assign, then rank within the probed cells. */
+  private def ivf(spark: SparkSession, embeddings: DataFrame, queryIds: Column, k: Int,
+                  nlist: Int, nprobe: Int, maxTrainRows: Long, int8: Boolean): DataFrame = {
     val (assigned, centroids) = assign(spark, embeddings, nlist, maxTrainRows = maxTrainRows)
-
-    val queries = assigned.filter(queryIds)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        explode(nearestCells(col("embedding"), centroids, nprobe)).as("cell"))
-    val candidates = assigned
-      .select(col("vec_id").as("n_id"), col("embedding").as("n_emb"), col("cell"))
-
-    val w = Window.partitionBy(col("q_id")).orderBy(desc("sim"), col("n_id"))
-    queries.join(candidates, Seq("cell"))
-      .filter(col("q_id") =!= col("n_id"))
-      .withColumn("sim", cosine(col("q_emb"), col("n_emb")))
-      // no dedup shuffle needed: each corpus vector is assigned exactly ONE
-      // cell, so a (q_id, n_id) pair can match at most once
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("q_id"), col("n_id"), col("sim"), col("rn"))
-      .orderBy(col("q_id"), col("rn"))
+    corpusTopK(assigned, queryIds, k, int8, Some("cell"), Some(probe(centroids, nprobe)))
   }
 
   /** Int8 max-abs (symmetric) quantization of a float-vector column:
@@ -277,20 +335,8 @@ object AnnJobs {
     * schema). Same rounding and tiebreak as [[bruteForceTopK]], so recall
     * vs the exact ranking is directly measurable (AnnSpec). */
   def quantizedTopK(embeddings: DataFrame, queryIds: Column,
-                    k: Int = 5): DataFrame = {
-    val qz = embeddings.select(col("vec_id"), int8Quantize(col("embedding")).as("qs"))
-    val q = qz.filter(queryIds)
-      .select(col("vec_id").as("q_id"), int8Dequantize(col("qs")).as("q_emb"))
-    val c = qz.select(col("vec_id").as("n_id"), col("qs").as("n_qs"))
-    val w = Window.partitionBy(col("q_id")).orderBy(desc("sim"), col("n_id"))
-    q.join(broadcast(c), col("q_id") =!= col("n_id"))
-      .withColumn("n_emb", int8Dequantize(col("n_qs")))
-      .withColumn("sim", cosine(col("q_emb"), col("n_emb")))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("q_id"), col("n_id"), col("sim"), col("rn"))
-      .orderBy(col("q_id"), col("rn"))
-  }
+                    k: Int = 5): DataFrame =
+    corpusTopK(embeddings, queryIds, k, int8 = true)
 
   /** Sign-LSH bucket of the first `nBits` dimensions — identical to the
     * oracle-checked q_ann_lsh_bucket/q_ann_lsh_topk keying, factored here
@@ -299,26 +345,18 @@ object AnnJobs {
     (1 to nBits).map(i =>
       when(element_at(emb, i) > 0, 1 << (i - 1)).otherwise(0)).reduce(_ + _)
 
-  /** Shared body of the bucketed int8 paths: `qz` is (vec_id, bucket, qs);
-    * candidates carry only `(n_id, bucket, int8 struct)` — 1 byte/dim
-    * through the bucket equi-join — and are reconstructed on the probe side
-    * for the exact cosine ranking within the bucket. */
-  private def bucketedQuantizedTopK(qz: DataFrame, queryIds: Column,
-                                    k: Int): DataFrame = {
-    val q = qz.filter(queryIds)
-      .select(col("vec_id").as("q_id"), col("bucket"),
-        int8Dequantize(col("qs")).as("q_emb"))
-    val c = qz.select(col("vec_id").as("n_id"), col("bucket"), col("qs").as("n_qs"))
-    val w = Window.partitionBy(col("q_id")).orderBy(desc("sim"), col("n_id"))
-    q.join(c, Seq("bucket"))
-      .filter(col("q_id") =!= col("n_id"))
-      .withColumn("n_emb", int8Dequantize(col("n_qs")))
-      .withColumn("sim", cosine(col("q_emb"), col("n_emb")))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("q_id"), col("bucket"), col("n_id"), col("sim"), col("rn"))
-      .orderBy(col("q_id"), col("rn"))
-  }
+  /** Top-k within the buckets of `bucket`, an equi-join key computed from
+    * the original vector; int8 candidates carry only `(n_id, int8 struct,
+    * norm, bucket)` through the join — 1 byte/dim. */
+  private def bucketedTopK(embeddings: DataFrame, bucket: Column, queryIds: Column,
+                           k: Int, int8: Boolean): DataFrame =
+    corpusTopK(embeddings.withColumn("bucket", bucket), queryIds, k, int8,
+      Some("bucket"), keep = Seq("bucket"))
+
+  /** Exact cosine top-k within sign-LSH buckets (q_ann_lsh_topk): the
+    * float form of [[lshQuantizedTopK]]. */
+  def lshTopK(embeddings: DataFrame, queryIds: Column, k: Int = 3): DataFrame =
+    bucketedTopK(embeddings, signBucket(col("embedding")), queryIds, k, int8 = false)
 
   /** The quantized SCALE path over LSH candidates: bucket on the sign bits
     * of the original vector (computed at index time). Same
@@ -326,11 +364,7 @@ object AnnJobs {
     * DuckDB-expressible and oracle-checked (q_ann_lsh_quantized). */
   def lshQuantizedTopK(embeddings: DataFrame, queryIds: Column,
                        k: Int = 3, nBits: Int = 8): DataFrame =
-    bucketedQuantizedTopK(
-      embeddings.select(col("vec_id"),
-        signBucket(col("embedding"), nBits).as("bucket"),
-        int8Quantize(col("embedding")).as("qs")),
-      queryIds, k)
+    bucketedTopK(embeddings, signBucket(col("embedding"), nBits), queryIds, k, int8 = true)
 
   /** Seeded ±1 (Rademacher) hyperplane matrix for random-hyperplane sign
     * LSH (Charikar 2002; ±1 entries as in SimHash-style constructions).
@@ -362,11 +396,8 @@ object AnnJobs {
   def hyperplaneQuantizedTopK(embeddings: DataFrame, queryIds: Column,
                               dim: Int, k: Int = 3, nBits: Int = 8,
                               seed: Long = 7L): DataFrame =
-    bucketedQuantizedTopK(
-      embeddings.select(col("vec_id"),
-        hyperplaneBucket(col("embedding"), hyperplanes(dim, nBits, seed)).as("bucket"),
-        int8Quantize(col("embedding")).as("qs")),
-      queryIds, k)
+    bucketedTopK(embeddings, hyperplaneBucket(col("embedding"), hyperplanes(dim, nBits, seed)),
+      queryIds, k, int8 = true)
 
   /** The quantized scale path over IVF candidates — what a real 100-TB
     * deployment runs: cell assignment and probing use the original vectors
@@ -376,25 +407,8 @@ object AnnJobs {
     * (KMeans is not DuckDB-expressible) + AnnSpec recall vs brute force. */
   def ivfQuantizedTopK(spark: SparkSession, embeddings: DataFrame,
                        queryIds: Column, k: Int = 5, nlist: Int = 8,
-                       nprobe: Int = 2, maxTrainRows: Long = 100000L): DataFrame = {
-    val (assigned, centroids) = assign(spark, embeddings, nlist, maxTrainRows = maxTrainRows)
-    val qz = assigned.withColumn("qs", int8Quantize(col("embedding")))
-    val queries = qz.filter(queryIds)
-      .select(col("vec_id").as("q_id"), int8Dequantize(col("qs")).as("q_emb"),
-        explode(nearestCells(col("embedding"), centroids, nprobe)).as("cell"))
-    val candidates = qz.select(col("vec_id").as("n_id"), col("qs").as("n_qs"), col("cell"))
-    val w = Window.partitionBy(col("q_id")).orderBy(desc("sim"), col("n_id"))
-    queries.join(candidates, Seq("cell"))
-      .filter(col("q_id") =!= col("n_id"))
-      .withColumn("n_emb", int8Dequantize(col("n_qs")))
-      .withColumn("sim", cosine(col("q_emb"), col("n_emb")))
-      // no dedup shuffle needed: each corpus vector is assigned exactly ONE
-      // cell, so a (q_id, n_id) pair can match at most once
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("q_id"), col("n_id"), col("sim"), col("rn"))
-      .orderBy(col("q_id"), col("rn"))
-  }
+                       nprobe: Int = 2, maxTrainRows: Long = 100000L): DataFrame =
+    ivf(spark, embeddings, queryIds, k, nlist, nprobe, maxTrainRows, int8 = true)
 
   /** Build a PERSISTED IVF index (round-4 verdict #2): at 100 TB the index
     * is built once and probed many times — the fused [[ivfQuantizedTopK]]
@@ -435,46 +449,24 @@ object AnnJobs {
     val centroids: Array[Array[Double]] = spark.read.parquet(s"$dir/centroids")
       .orderBy(col("cell")).collect()
       .map(_.getSeq[Double](1).toArray)
-    // two projections: the struct's field names only finalize at a
-    // projection boundary (a direct dequantize∘quantize composition fails
-    // getField resolution inside the letD lambda)
-    val q0 = queries.select(col("vec_id").as("q_id"),
-      int8Quantize(col("embedding")).as("qqs"), col("embedding"))
-    val q = q0.select(col("q_id"),
-      int8Dequantize(col("qqs")).as("q_emb"),
-      explode(nearestCells(col("embedding"), centroids, nprobe)).as("cell"))
+    // the quantized struct is its own projection: its field names only
+    // finalize at a projection boundary (a direct dequantize∘quantize
+    // composition fails getField resolution inside the letD lambda)
+    val q = side(queries.withColumn("qs", int8Quantize(col("embedding"))), "q",
+      int8Dequantize(col("qs")), int8 = false, probe(centroids, nprobe))
     // Bounded driver-side read: the distinct probed cells — at most nlist
     // ints regardless of query count — is what turns the candidate scan
     // into a partition-pruned read instead of a full-index join.
     val cells = q.select(col("cell")).distinct().collect().map(_.getInt(0))
     val candidates = spark.read.parquet(s"$dir/vectors")
       .filter(col("cell").isin(cells.map(Integer.valueOf): _*))
-      .select(col("vec_id").as("n_id"), col("qs").as("n_qs"), col("cell"))
-    val w = Window.partitionBy(col("q_id")).orderBy(desc("sim"), col("n_id"))
-    q.join(candidates, Seq("cell"))
-      .filter(col("q_id") =!= col("n_id"))
-      .withColumn("n_emb", int8Dequantize(col("n_qs")))
-      .withColumn("sim", cosine(col("q_emb"), col("n_emb")))
-      // no dedup shuffle needed: each corpus vector is assigned exactly ONE
-      // cell, so a (q_id, n_id) pair can match at most once
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("q_id"), col("n_id"), col("sim"), col("rn"))
-      .orderBy(col("q_id"), col("rn"))
+    topK(q, side(candidates, "n", col("qs"), int8 = true, col("cell")), k,
+      int8 = true, Some("cell"))
   }
 
-  /** Brute-force baseline (same cosine rounding) for recall measurement. */
+  /** Brute-force baseline (same cosine rounding) for recall measurement,
+    * and the oracle-checked q_ann_cosine. */
   def bruteForceTopK(spark: SparkSession, embeddings: DataFrame,
-                     queryIds: Column, k: Int = 5): DataFrame = {
-    val q = embeddings.filter(queryIds)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val c = embeddings.select(col("vec_id").as("n_id"), col("embedding").as("n_emb"))
-    val w = Window.partitionBy(col("q_id")).orderBy(desc("sim"), col("n_id"))
-    q.join(broadcast(c), col("q_id") =!= col("n_id"))
-      .withColumn("sim", cosine(col("q_emb"), col("n_emb")))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("q_id"), col("n_id"), col("sim"), col("rn"))
-      .orderBy(col("q_id"), col("rn"))
-  }
+                     queryIds: Column, k: Int = 5): DataFrame =
+    corpusTopK(embeddings, queryIds, k, int8 = false)
 }

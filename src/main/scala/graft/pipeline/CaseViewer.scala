@@ -20,7 +20,7 @@ object CaseViewer {
     * blank/'unknown' (lowercase compare on the RAW string — " unknown "
     * survives as "unknown"), else trimmed. */
   def cleanText(text: String): Option[String] = {
-    if (text == null || Py.strip(text).isEmpty || text.toLowerCase == "unknown") None
+    if (text == null || Py.strip(text).isEmpty || text.toLowerCase(java.util.Locale.ROOT) == "unknown") None
     else Some(Py.strip(text))
   }
 
@@ -189,6 +189,8 @@ object CaseViewer {
     if (term == null || term.isEmpty) return casesTable(records)
     val fields = Seq("case_number", "file_name", "plaintiff", "defendant",
       "judge", "case_type")
+    // the term lowers in the default locale on purpose: Spark's `lower`
+    // (UTF8String.toLowerCase) lowers the fields it is matched against so
     val cond = fields.map(f =>
       lower(coalesce(col(f).cast("string"), lit(""))).contains(term.toLowerCase))
       .reduce(_ || _)

@@ -1,5 +1,7 @@
 package graft.pipeline
 
+import java.util.Locale
+
 import org.apache.spark.sql.{Dataset, SparkSession}
 
 import graft.model.{Doc, Span}
@@ -64,7 +66,7 @@ object CorpusGen {
     val num = 1 + rng.nextInt(2999)
     val year = 2015 + rng.nextInt(10)
     val prefix = if (dccj) "DCCJ" else "HCA"
-    val docId = f"$prefix$num%06d_$year%d_$idx%d"
+    val docId = "%s%06d_%d_%d".formatLocal(Locale.ROOT, prefix, num, year, idx)
     val pl = if (rng.nextBoolean()) person(rng) else companies(rng.nextInt(companies.length))
     val df = if (rng.nextInt(10) < 4) person(rng) else companies(rng.nextInt(companies.length))
     val judge = judges(rng.nextInt(judges.length))
@@ -86,14 +88,14 @@ object CorpusGen {
 
     val intro = "Introduction\n" +
       "This action arises out of a commercial dispute between the parties.\n" +
-      s"The plaintiff seeks payment of the sum of HK$$${"%,d".format(claim)} together with interest.\n" +
+      s"The plaintiff seeks payment of the sum of HK$$${"%,d".formatLocal(Locale.ROOT, claim)} together with interest.\n" +
       "The defendant denies liability and counterclaims for set-off.\n"
 
     val nBody = if (oversized) 150 + rng.nextInt(100) else 3 + rng.nextInt(10)
     val body = (0 until nBody).map(_ => bodyPage(rng))
 
     val order = "ORDER\n" +
-      s"1. Judgment be entered for the plaintiff in the sum of HK$$${"%,d".format(claim / 2)}.\n" +
+      s"1. Judgment be entered for the plaintiff in the sum of HK$$${"%,d".formatLocal(Locale.ROOT, claim / 2)}.\n" +
       "2. Costs of the action be paid by the defendant.\n"
     val footer = s"Mr John Tse, instructed by Wong & Co, for the plaintiff\n" +
       s"Ms Mary Cheung, instructed by Lee Partners, for the defendant"
@@ -105,7 +107,7 @@ object CorpusGen {
   private def genChinese(idx: Long, rng: java.util.Random): Doc = {
     val num = 1 + rng.nextInt(1999)
     val year = 2016 + rng.nextInt(9)
-    val docId = f"HCA$num%06d_$year%dC_$idx%d"
+    val docId = "HCA%06d_%dC_%d".formatLocal(Locale.ROOT, num, year, idx)
     val pl = zhNames(rng.nextInt(zhNames.length))
     val df = zhNames(rng.nextInt(zhNames.length))
     val judge = zhJudges(rng.nextInt(zhJudges.length))

@@ -37,13 +37,13 @@ object EnrichmentJob {
     * for judgment result, and the KG lawyer-segment parser. */
   object RuleBasedEnricher extends Enricher {
     def enrichBatch(batch: Seq[CaseRecord]): Seq[Enriched] = batch.map { r =>
-      val ct = Option(r.case_type).getOrElse("").toLowerCase
+      val ct = Option(r.case_type).getOrElse("").toLowerCase(java.util.Locale.ROOT)
       val caseType =
         if (ct.isEmpty) "Unknown"
         else if (ct.contains("application")) "Application"
         else if (ct.contains("action")) "Action"
         else "Other"
-      val jr = Option(r.judgment_result).getOrElse("").toLowerCase
+      val jr = Option(r.judgment_result).getOrElse("").toLowerCase(java.util.Locale.ROOT)
       val judgment =
         if (jr.isEmpty) "Unknown"
         else if (jr.contains("dismiss")) "Dismissed"

@@ -59,8 +59,8 @@ object KgJob {
   }
 
   private val parsePartiesUdf = udf(parseMultipleParties _)
-  private val parseLawyersUdf = udf((s: String) => parseLawyerSegment(s)._1)
-  private val parseFirmsUdf = udf((s: String) => parseLawyerSegment(s)._2)
+  /** One parse per lawyer segment: struct(_1 lawyers, _2 firms). */
+  private val parseLawyerSegmentUdf = udf(parseLawyerSegment _)
 
   /** `clean_field` (`data_importer.py:120-123`): blank / whitespace-only /
     * 'unknown' (case-insensitive) → "", else trimmed. */
@@ -119,10 +119,14 @@ object KgJob {
       cleanField(col("judge")).as("judge"),
       parsePartiesUdf(col("plaintiff")).as("plaintiffs"),
       parsePartiesUdf(col("defendant")).as("defendants"),
-      parseLawyersUdf(col("lawyer")).as("lawyers"),
-      parseFirmsUdf(col("lawyer")).as("firms"),
+      parseLawyerSegmentUdf(col("lawyer")).as("lawyer_segment"),
       lower(coalesce(col("lawyer"), lit(""))).as("lawyer_segment_lc"),
       caseProps(records).as("case_props"))
+      // both fields read the one parse: the optimizer does not inline a
+      // UDF column into two readers, so it still runs once per row
+      .withColumn("lawyers", col("lawyer_segment._1"))
+      .withColumn("firms", col("lawyer_segment._2"))
+      .drop("lawyer_segment")
 
   /** Case-node property map (`data_importer.py:135-155`): every extraction
     * field clean_field'd, plus the _cn display-name lookups on the raw

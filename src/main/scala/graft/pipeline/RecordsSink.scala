@@ -63,7 +63,7 @@ object RecordsSink {
       case '\n' => sb.append("\\n")
       case '\r' => sb.append("\\r")
       case '\t' => sb.append("\\t")
-      case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
+      case c if c < ' ' => sb.append("\\u%04x".formatLocal(java.util.Locale.ROOT, c.toInt))
       case c => sb.append(c) // ensure_ascii=False: keep non-ASCII raw
     }
     sb.toString

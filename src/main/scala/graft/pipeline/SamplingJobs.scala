@@ -29,7 +29,7 @@ object SamplingJobs {
   private[graft] def thresholdHex(rate: Double): Option[String] = {
     require(rate >= 0.0, s"negative sampling rate $rate")
     val n = math.round(rate * 256).toInt
-    if (n >= 256) None else Some(f"$n%02x")
+    if (n >= 256) None else Some("%02x".formatLocal(java.util.Locale.ROOT, n))
   }
 
   /** 256-bucket key hash: first two hex chars of md5(key as string). */

@@ -438,6 +438,8 @@ object TextHashExprs {
     // an all-whitespace input collapses to a single space when untrimmed
     if (!doTrim && (trailing || (lead && o == 0))) { out(o) = ' '; o += 1 }
     val s = UTF8String.fromBytes(out, 0, o)
+    // UTF8String.toLowerCase, the call Spark's `lower` makes (default
+    // locale for non-ASCII): ws_normalize's lower matches the builtin's
     if (doLower) s.toLowerCase else s
   }
 
@@ -466,6 +468,7 @@ object TextHashExprs {
     * Non-overlapping leftmost maximal runs == the regex's match set.
     * Non-null input always yields an array (possibly empty). */
   def asciiTokens(raw: UTF8String): ArrayData = {
+    // the builtin `lower`'s own call, default locale included (see above)
     val b = raw.toLowerCase.getBytes
     val n = b.length
     @inline def isTok(x: Byte): Boolean =

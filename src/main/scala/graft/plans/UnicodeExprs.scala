@@ -31,7 +31,7 @@ object UnicodeNorm {
     * is null-on-non-null. */
   def norm(s: UTF8String, form: UTF8String): UTF8String = {
     if (s == null || form == null) return null
-    val f = form.toString.toUpperCase match {
+    val f = form.toString.toUpperCase(java.util.Locale.ROOT) match {
       case "NFC" => Normalizer.Form.NFC
       case "NFD" => Normalizer.Form.NFD
       case "NFKC" => Normalizer.Form.NFKC

@@ -39,7 +39,9 @@ package graft.text
   * code point; a reference must close with `;` within 10 characters of its
   * `&`, anything else stays literal. In HTML mode the raw-text elements
   * (`script`, `style`, `textarea`, `title`, `noscript`, `svg`) are skipped
-  * to their close tag, and attribute names match ASCII-case-insensitively;
+  * to their close tag, and their tag names and attribute names match
+  * ASCII-case-insensitively, as in HTML5 (`</ſcript>` does not close a
+  * `<script>`);
   * XML mode has no raw-text elements and matches names exactly.
   *
   * The lexer is total: no input makes it throw or loop, and it allocates
@@ -155,7 +157,8 @@ final class Markup private (src: String, html: Boolean, attrNames: Array[String]
     tagName = src.substring(nameStart, nameEnd)
     if (closing) Close
     else {
-      if (html && !tagSelfClosing && RawText.exists(_.equalsIgnoreCase(tagName))) rawClose = tagName
+      if (html && !tagSelfClosing)
+        rawClose = RawText.find(r => r.length == nameEnd - nameStart && nameMatches(nameStart, r)).orNull
       Open
     }
   }
@@ -179,6 +182,8 @@ final class Markup private (src: String, html: Boolean, attrNames: Array[String]
     }
   }
 
+  /** `src` at `at` spells the lowercase name `want`; HTML folds only ASCII
+    * `A-Z`, so no other character's case mapping can make a name match. */
   private def nameMatches(at: Int, want: String): Boolean = {
     var j = 0
     while (j < want.length) {
@@ -191,12 +196,12 @@ final class Markup private (src: String, html: Boolean, attrNames: Array[String]
   }
 
   /** After an HTML raw-text open tag: move to its close tag (`</` + the
-    * name, case-insensitive), which the next read lexes as a tag. */
+    * name, ASCII-case-insensitive), which the next read lexes as a tag. */
   private def skipRawText(): Unit = {
     val len = rawClose.length
     var e = pos
     while (e <= n - len - 2 && !(src.charAt(e) == '<' && src.charAt(e + 1) == '/' &&
-        src.regionMatches(true, e + 2, rawClose, 0, len))) e += 1
+        nameMatches(e + 2, rawClose))) e += 1
     pos = if (e <= n - len - 2) e else n
     rawClose = null
   }

@@ -39,7 +39,8 @@ object KernelProfile {
         (System.nanoTime() - t0) / 1e9
       }
       val best = times.min
-      println(f"""{"metric":"thread_scaling","threads":$k,"docs":$nDocs,"best_sec":$best%.2f,"docs_per_sec":${nDocs / best}%.1f}""")
+      println("""{"metric":"thread_scaling","threads":%s,"docs":%s,"best_sec":%.2f,"docs_per_sec":%.1f}"""
+        .formatLocal(java.util.Locale.ROOT, k, nDocs, best, nDocs / best))
     }
   }
 
@@ -62,7 +63,7 @@ object KernelProfile {
       val t0 = System.nanoTime()
       f
       val dt = (System.nanoTime() - t0) / 1e9
-      println(f"$name%-22s $dt%7.2fs  ${totalChars / dt / 1e6}%8.1f Mchars/s")
+      println("%-22s %7.2fs  %8.1f Mchars/s".formatLocal(java.util.Locale.ROOT, name, dt, totalChars / dt / 1e6))
     }
 
     // warmup
@@ -109,6 +110,6 @@ object KernelProfile {
         Amounts.extract(t, "english", "claim"); Amounts.extract(t, "english", "judgment")
       }
     }
-    println(f"docs=$n totalChars=$totalChars")
+    println(s"docs=$n totalChars=$totalChars")
   }
 }

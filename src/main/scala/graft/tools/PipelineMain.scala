@@ -35,8 +35,9 @@ object PipelineMain {
     val nRec = records.count()
     val totalDocs = lineage.map(_.docs).sum
     val totalSpans = lineage.map(_.spans).sum
-    println(f"processed_buckets=${lineage.size} docs=$totalDocs spans=$totalSpans " +
-      f"records=$nRec elapsed=$dt%.1fs docs_per_sec=${totalDocs / math.max(dt, 0.001)}%.1f")
+    println(("processed_buckets=%s docs=%s spans=%s records=%s elapsed=%.1fs " +
+      "docs_per_sec=%.1f").formatLocal(java.util.Locale.ROOT, lineage.size, totalDocs, totalSpans, nRec, dt,
+      totalDocs / math.max(dt, 0.001)))
 
     ReportJob.writeReport(spark, records, s"$outDir/report")
     val nodes = KgJob.nodes(records)

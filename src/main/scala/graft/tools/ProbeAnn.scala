@@ -88,7 +88,9 @@ object ProbeAnn {
       s"probe plan must scan ONLY the index, got: ${roots.mkString(", ")}")
 
     println(
-      f"""{"metric":"ann_index_lifecycle","build_sec":$buildSec%.3f,"build_jobs":$buildJobs,"probe_sec":$probeSec%.3f,"probe_jobs":$probeJobs,"probe_rows":$rows,"probe_scan_roots":${roots.map("\"" + _ + "\"").mkString("[", ",", "]")},"index_dir":"$idx"}""")
+      """{"metric":"ann_index_lifecycle","build_sec":%.3f,"build_jobs":%s,"probe_sec":%.3f,"probe_jobs":%s,"probe_rows":%s,"probe_scan_roots":%s,"index_dir":"%s"}"""
+        .formatLocal(java.util.Locale.ROOT, buildSec, buildJobs, probeSec, probeJobs, rows,
+          roots.map("\"" + _ + "\"").mkString("[", ",", "]"), idx))
     spark.stop()
   }
 }

@@ -63,7 +63,9 @@ object ScalingBench {
         }
         val best = times.min
         println(
-          f"""{"metric":"scaling_run","cores":$cores,"docs":$n,"best_sec":$best%.2f,"times":[${times.map(t => f"$t%.2f").mkString(",")}],"docs_per_sec":${n / best}%.1f}""")
+          """{"metric":"scaling_run","cores":%s,"docs":%s,"best_sec":%.2f,"times":[%s],"docs_per_sec":%.1f}"""
+            .formatLocal(java.util.Locale.ROOT, cores, n, best,
+              times.map(t => "%.2f".formatLocal(java.util.Locale.ROOT, t)).mkString(","), n / best))
         spark.stop()
 
       case _ =>

@@ -100,18 +100,26 @@ class AnnSpec extends AnyFunSuite {
   }
 
   test("ivfQuantizedTopK at nprobe = nlist equals the all-pairs quantized ranking") {
-    // With every cell probed the candidate set is the full corpus, so the
-    // bucketed int8 path must reproduce the quantized brute-force baseline
-    // exactly (same dequantize math, same 4dp rounding, same id tiebreak).
+    // With every cell probed the candidate set is the full corpus, so each
+    // IVF path must reproduce its all-pairs baseline row for row, `sim` and
+    // `rn` included (same dequantize math, same 4dp cosine, same id
+    // tiebreak): int8 against the quantized baseline, float against brute
+    // force. No oracle checks these rows-only paths, so this pins their
+    // cosine.
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val isQuery = col("vec_id") < 20
-    def sets(df: org.apache.spark.sql.DataFrame): Map[Long, Seq[Long]] =
-      df.collect().groupBy(_.getAs[Long]("q_id"))
-        .view.mapValues(_.sortBy(_.getAs[Int]("rn")).map(_.getAs[Long]("n_id")).toSeq).toMap
-    val base = sets(AnnJobs.quantizedTopK(emb, isQuery, k = 5))
-    val ivf = sets(AnnJobs.ivfQuantizedTopK(spark, emb, isQuery, k = 5,
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
+      df.collect().toSeq.map(_.toSeq)
+    val base = rows(AnnJobs.quantizedTopK(emb, isQuery, k = 5))
+    val ivf = rows(AnnJobs.ivfQuantizedTopK(spark, emb, isQuery, k = 5,
       nlist = 8, nprobe = 8))
+    assert(base.size == 100)
     assert(ivf == base, "full-probe IVF-quantized must equal the quantized baseline")
+    val brute = rows(AnnJobs.bruteForceTopK(spark, emb, isQuery, k = 5))
+    val ivfFloat = rows(AnnJobs.ivfTopK(spark, emb, isQuery, k = 5,
+      nlist = 8, nprobe = 8))
+    assert(brute.size == 100)
+    assert(ivfFloat == brute, "full-probe float IVF must equal brute force")
   }
 
   test("probeIndex over a persisted index row-equals the fused ivfQuantizedTopK") {

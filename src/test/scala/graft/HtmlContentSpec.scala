@@ -91,6 +91,8 @@ class HtmlContentSpec extends AnyFunSuite {
       "<p>" + longText + "<p>5 < 6 and 7 > 2",
       "<![CDATA[raw & chars]]><p>" + longText + "</p>",
       "<img src=bare-src-no-quotes.png><p>" + longText + "</p>",
+      // U+017F folds to 's' only under Unicode case folding: not a close tag
+      "<script>evil()</\u017Fcript><p>" + longText + "</p>",
       "<a href='/x'>" + longText + "</a>"  // fully-linked block: boilerplate
     )
     cases.foreach { h =>
@@ -102,6 +104,12 @@ class HtmlContentSpec extends AnyFunSuite {
     }
     // fully-linked block has link density 1 -> boilerplate
     assert(HtmlContent.extract(cases.last).isEmpty)
+    // HTML5 folds tag names ASCII-only, so the script runs to the end
+    assert(HtmlContent.extract(cases(12)).isEmpty)
+    // and ignores `/>` on a non-void element: the anchor still opens, so
+    // its 18 words make the block fully linked
+    val words18 = longText.split(' ').take(18).mkString(" ")
+    assert(HtmlContent.extract("<p><a href=\"/u\"/>" + words18 + "</a></p>").isEmpty)
     // bare src attribute parsed; an unquoted value runs to whitespace or
     // '>' (HTML5), so a '/' inside it does not end it
     assert(HtmlContent.extract(cases(11)).exists(_.media_ref == "bare-src-no-quotes.png"))
