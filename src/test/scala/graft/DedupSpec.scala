@@ -1,10 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.pipeline.DedupJobs
+import graft.pipeline.{Decontaminate, DedupJobs, SubstrDedup}
 
 /** Properties of the scale-hardened MinHash dedup: verification soundness
   * (verified ⊆ banded candidates; reported Jaccard is the exact set
@@ -237,5 +237,64 @@ class DedupSpec extends AnyFunSuite {
     comp.groupBy(_._2).foreach { case (c, members) =>
       assert(members.keys.min == c, s"component $c not named by its min member")
     }
+  }
+
+  test("every frequency cap keeps a key held by exactly cap docs and drops one held by cap + 1") {
+    import spark.implicits._
+    val cap = 3
+    // `cap` clones of one text and `cap + 1` clones of a text sharing no
+    // token, trigram or shingle with it: every key of the first group is
+    // held by exactly `cap` docs, every key of the second by `cap + 1`
+    val atCap = "alpha beta gamma delta"
+    val overCap = "one two three four"
+    val d = ((1L to cap).map(_ -> atCap) ++ (11L to 11L + cap).map(_ -> overCap))
+      .toDF("doc_id", "text").withColumn("lang", lit("en"))
+    def pairs(df: DataFrame): Set[(Long, Long)] =
+      df.select("doc_a", "doc_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val atCapPairs = (for (a <- 1L to cap; b <- a + 1 to cap) yield (a, b)).toSet
+    // decontamination: one test doc per text (test split: doc_id % 1000 == 0)
+    val withTests = d.unionByName(
+      Seq((1000L, atCap, "en"), (2000L, overCap, "en")).toDF("doc_id", "text", "lang"))
+    // incremental probe: the cap is on index + new rows — 2 + 1 for the
+    // first text, 2 + 2 for the second
+    val idx = java.nio.file.Files.createTempDirectory("cap_boundary_idx").toString
+    DedupJobs.buildMinhashIndex(d.filter(col("doc_id").isin(1L, 2L, 11L, 12L)), idx)
+    val probe = d.filter(col("doc_id").isin(3L, 13L, 14L))
+    val cases: Seq[(String, () => Any, Any)] = Seq(
+      ("LSH bucket cap: candidatePairs",
+        () => pairs(DedupJobs.candidatePairs(d, 8, 4, bucketCap = cap)), atCapPairs),
+      ("LSH bucket cap: droppedBuckets (bucket size per band)",
+        () => DedupJobs.droppedBuckets(d, 8, 4, bucketCap = cap)
+          .collect().map(_.getLong(2)).toSeq, Seq.fill(4)(cap + 1L)),
+      ("ngram dfCap",
+        () => pairs(DedupJobs.ngramJaccardCapped(d, n = 3, dfCap = cap, threshold = 0.6)),
+        atCapPairs),
+      ("Decontaminate maxDf",
+        () => Decontaminate.contaminated(withTests, k = 4, testMod = 1000L, maxDf = cap)
+          .collect().map(_.getLong(0)).toSet, (1L to cap).toSet),
+      ("dedupAgainstIndex combined cap",
+        () => pairs(DedupJobs.dedupAgainstIndex(spark, idx, probe, d, bucketCap = cap)),
+        Set((1L, 3L), (2L, 3L))))
+    try cases.foreach { case (name, run, expected) =>
+      assert(run() == expected, name)
+    } finally DedupJobs.releaseCached()
+  }
+
+  test("releaseCached frees every intermediate the dedup family persists") {
+    // suites share one session and its cache: start from an empty one
+    spark.catalog.clearCache()
+    val dir = "/root/testdata/sf0.001"
+    val d = spark.read.parquet(s"$dir/documents.parquet")
+    Seq(
+      DedupJobs.minhashVerifiedPairs(d.select(col("doc_id"), col("text"))),
+      DedupJobs.candidatePairs(d, 8, 4, 200),
+      DedupJobs.ngramJaccardCapped(d),
+      Decontaminate.contaminated(d, k = 4, testMod = 97L, maxDf = 50L),
+      SubstrDedup.dedupText(d),
+      SparkEntry.queries("q_dedup_minhash")(spark, dir)
+    ).foreach(_.write.format("noop").mode("overwrite").save())
+    assert(!spark.sharedState.cacheManager.isEmpty, "the entry points persist intermediates")
+    DedupJobs.releaseCached()
+    assert(spark.sharedState.cacheManager.isEmpty)
   }
 }
