@@ -320,36 +320,11 @@ object SparkEntry {
         .orderBy(col("fp"))
     }),
 
-    "q_dedup_minhash" -> ((s, dir) => {
-      // Signature stage is fully in-row (one compiled pass over the token
-      // array, graft.plans.TextHashExprs.minhashSig — no token ever leaves its row);
-      // the only shuffles left are the banded equi-joins, which are the
-      // algorithm's point — plus the single-split parallelism guard for the
-      // signature projection (no-op at real scale).
-      graft.plans.TextHashExprs.register(s)
-      val d = graft.pipeline.ScanParallelism.ensure(t(s, dir, "documents"))
-      val toks = graft.plans.TextHashExprs.ascii_tokens(col("text"))
-      // in-row min over the array = groupBy-min over exploded tokens; docs
-      // with zero tokens fell out of the GROUP BY, so filter them the same.
-      // The band table feeds BOTH sides of BOTH band self-joins (4 plan
-      // references): persist it once (released via releaseCached) so the
-      // signature scan over the corpus runs once, not four times.
-      val bands = graft.pipeline.DedupJobs.cache(d.withColumn("toks", toks)
-        .filter(size(col("toks")) > 0)
-        .withColumn("sig", graft.plans.TextHashExprs.minhash_sig(col("toks"), lit(4)))
-        .select(col("doc_id"),
-          md5(concat(element_at(col("sig"), 1), element_at(col("sig"), 2))).as("b0"),
-          md5(concat(element_at(col("sig"), 3), element_at(col("sig"), 4))).as("b1")))
-      def pairsOn(b: String): DataFrame = {
-        val l = bands.select(col("doc_id").as("doc_a"), col(b).as("bh"))
-        val r = bands.select(col("doc_id").as("doc_b"), col(b).as("bh"))
-        l.join(r, Seq("bh")).filter(col("doc_a") < col("doc_b"))
-          .select(col("doc_a"), col("doc_b"))
-      }
-      pairsOn("b0").union(pairsOn("b1")).distinct()
+    "q_dedup_minhash" -> ((s, dir) =>
+      // banded MinHash candidates: 4 hashes in 2 bands, no bucket cap
+      graft.pipeline.DedupJobs.candidatePairs(t(s, dir, "documents"), 4, 2, Int.MaxValue)
         .filter(col("doc_a") < 25)
-        .orderBy(col("doc_a"), col("doc_b"))
-    }),
+        .orderBy(col("doc_a"), col("doc_b"))),
 
     "q_dedup_minhash_verified" -> ((s, dir) =>
       graft.pipeline.DedupJobs.minhashVerified(
@@ -413,33 +388,13 @@ object SparkEntry {
         .orderBy(col("doc_id"))
     }),
 
-    "q_dedup_ngram" -> ((s, dir) => {
-      // DEMO-SCALE ONLY: uncapped shingle self-join behind a doc_a filter —
+    "q_dedup_ngram" -> ((s, dir) =>
+      // DEMO-SCALE ONLY: uncapped trigram Jaccard behind a doc_a filter —
       // never benchmark or run this form at corpus scale; the scale path is
       // q_dedup_ngram_capped (DF-capped join key, full corpus).
-      views(s, dir)
-      s.sql("""
-        WITH norm AS (
-          SELECT doc_id, lang, lower(regexp_replace(text, '\\s+', ' ')) AS nt
-          FROM documents),
-        tri AS (
-          SELECT DISTINCT doc_id, lang, substring(nt, i, 3) AS g
-          FROM norm
-          LATERAL VIEW explode(sequence(1, greatest(length(nt) - 2, 1))) t AS i),
-        sizes AS (SELECT doc_id, count(*) AS n FROM tri GROUP BY doc_id),
-        pairs AS (
-          SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-          FROM tri a JOIN tri b ON a.g = b.g AND a.lang = b.lang AND a.doc_id < b.doc_id
-          WHERE a.doc_id < 30
-          GROUP BY a.doc_id, b.doc_id)
-        SELECT doc_a, doc_b,
-               cast(inter AS double) / (sa.n + sb.n - inter) AS jaccard
-        FROM pairs
-        JOIN sizes sa ON doc_a = sa.doc_id
-        JOIN sizes sb ON doc_b = sb.doc_id
-        WHERE cast(inter AS double) / (sa.n + sb.n - inter) > 0.6
-        ORDER BY doc_a, doc_b""")
-    }),
+      graft.pipeline.DedupJobs.ngramJaccardCapped(t(s, dir, "documents"), 3, Int.MaxValue, 0.6)
+        .filter(col("doc_a") < 30)
+        .orderBy(col("doc_a"), col("doc_b"))),
 
     "q_dedup_ngram_capped" -> ((s, dir) =>
       // Full-corpus ngram Jaccard made feasible by the document-frequency

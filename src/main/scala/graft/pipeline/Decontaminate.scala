@@ -66,18 +66,12 @@ object Decontaminate {
     val test = sh.filter(col("doc_id") % testMod === 0)
       .select(col("doc_id").as("test_doc_id"), col("shingle"))
     // the corpus-side shingle explode feeds BOTH the document-frequency
-    // cap and the overlap join — persist it once (released via
+    // purge and the overlap join — persist it once (released via
     // DedupJobs.releaseCached) instead of re-shingling the corpus per
     // consumer; the test side stays lazy (its doc_id filter pushes below
     // the explode, so it shingles ~1/testMod of the docs)
     val corpus = DedupJobs.cache(sh.filter(col("doc_id") % testMod =!= 0))
-    val keep = corpus.groupBy("shingle")
-      .agg(count(lit(1)).as("df"))
-      .filter(col("df") <= maxDf)
-      .select("shingle")
-    corpus
-      .join(keep, Seq("shingle"), "left_semi")
-      .join(test, "shingle")
+    DedupJobs.purge(corpus, Seq("shingle"), maxDf).join(test, "shingle")
   }
 
   /** Removal AUDIT (round-4 verdict #7): one row per (contaminated training

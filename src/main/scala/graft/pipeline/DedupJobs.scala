@@ -8,24 +8,24 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructTyp
   * with a true-Jaccard verification stage (the corpus-scale form of the
   * reference's first-file-wins dedupe intent, `merge_json_files.py:48-62`).
   *
-  * Shape at 100 TB:
-  *  - each doc is tokenized ONCE into a distinct-token array (one row per
-  *    doc); in [[minhashVerifiedPairs]] that table is persisted and feeds
-  *    both the signature stage and the verify join, so no doc is
-  *    tokenized twice and no candidate-doc semi-join re-reads the text;
-  *  - signatures are computed entirely IN-ROW (one compiled pass over the
-  *    token array) — no token ever leaves its row, so the signature stage
-  *    is map-only;
-  *  - the only shuffle is the banded equi-join on (band index, band hash),
-  *    i.e. the algorithm's candidate generation itself;
-  *  - hot buckets (a band hash shared by > bucketCap docs) are dropped
-  *    BEFORE the self-join — within-bucket pair count is quadratic, so one
-  *    degenerate bucket (e.g. boilerplate-only docs) would otherwise emit
-  *    billions of pairs. Drops are observable via [[droppedBuckets]] —
-  *    never silent;
-  *  - candidate pairs are then verified with exact Jaccard over the same
-  *    distinct token arrays, joined onto the (candidate-bounded) pair table
-  *    by doc id.
+  * The dedup family (this object, [[Decontaminate]], [[SubstrDedup]]) is
+  * built from the entity-resolution stages of SparkER (EDBT 2019):
+  *  - blocks: a plain `(key cols…, doc_id)` table — MinHash band rows
+  *    `(bi, bh)` ([[bandRows]]), ngram rows `(lang, g)`, decontamination
+  *    shingles `(shingle)`, substring windows `(h)`. Each is computed
+  *    IN-ROW (one compiled pass per doc, e.g. the MinHash signature over
+  *    the distinct-token array), so block building is map-only;
+  *  - purge: [[purge]] drops every key held by more than `cap` rows
+  *    BEFORE any join — within-block pair count is quadratic, so one
+  *    degenerate block (e.g. boilerplate-only docs) would otherwise emit
+  *    billions of pairs. The one size aggregate behind it, [[blockSizes]],
+  *    also reports the drops ([[droppedBuckets]]) — never silent;
+  *  - pairs: [[pairs]] self-joins a purged block table within each key,
+  *    `doc_a < doc_b` — the only shuffle of candidate generation;
+  *  - verify: [[jaccardVerify]] scores each candidate pair by exact
+  *    Jaccard over the distinct token arrays, joined on by doc id;
+  *  - components: [[connectedComponents]] turns verified pairs into
+  *    one canonical doc per near-dup cluster.
   */
 object DedupJobs {
 
@@ -114,38 +114,50 @@ object DedupJobs {
   def bandRows(docs: DataFrame, numHashes: Int, bands: Int): DataFrame =
     signatureBands(tokenSets(docs), numHashes, bands)
 
+  /** The MinHash block key: (band index, band hash). */
+  private val Bucket = Seq("bi", "bh")
+
+  /** `(key cols…, n)`: the rows each block of `blocks` holds — the one size
+    * aggregate behind every frequency cap, the dropped-bucket report and
+    * the index's `bucket_sizes`. */
+  private def blockSizes(blocks: DataFrame, keys: Seq[String]): DataFrame =
+    blocks.groupBy(keys.map(col): _*).agg(count(lit(1)).as("n"))
+
+  /** Block purging: the rows of `blocks` whose key holds at most `cap`
+    * rows (a key held by exactly `cap` rows survives). */
+  private[pipeline] def purge(blocks: DataFrame, keys: Seq[String], cap: Long): DataFrame =
+    blocks.join(blockSizes(blocks, keys).filter(col("n") <= cap), keys, "left_semi")
+
+  /** `(doc_a, doc_b)` with `doc_a < doc_b`, one row per key the two docs
+    * share in `blocks`. */
+  private def pairs(blocks: DataFrame, keys: Seq[String]): DataFrame = {
+    def side(doc: String) = blocks.select(keys.map(col) :+ col("doc_id").as(doc): _*)
+    side("doc_a").join(side("doc_b"), keys).filter(col("doc_a") < col("doc_b"))
+      .select(col("doc_a"), col("doc_b"))
+  }
+
   /** Buckets that exceed the cap — surfaced so truncation is never silent.
     * Returns (bi, bh, n) for every dropped bucket. */
   def droppedBuckets(docs: DataFrame, numHashes: Int, bands: Int,
                      bucketCap: Int): DataFrame =
-    bandRows(docs, numHashes, bands)
-      .groupBy(col("bi"), col("bh")).agg(count(lit(1)).as("n"))
-      .filter(col("n") > bucketCap)
+    blockSizes(bandRows(docs, numHashes, bands), Bucket).filter(col("n") > bucketCap)
 
   /** Candidate pairs (doc_a < doc_b, distinct) from the banded self-join,
     * with over-cap buckets excluded.
     *
     * The band-row table (bands rows per doc — tiny next to the corpus) is
-    * persisted: it feeds the bucket-size aggregate, both sides of the
-    * self-join, and the cap filter, and each DataFrame reuse would
-    * otherwise re-run the full signature scan over the corpus (the md5
-    * passes dominate; measured 5-10 re-evaluations without the persist).
-    * At cluster scale this is the table you'd write out / checkpoint.
+    * persisted: it feeds the bucket-size aggregate, the purge and both
+    * sides of the self-join, and each DataFrame reuse would otherwise
+    * re-run the full signature scan over the corpus (the md5 passes
+    * dominate; measured 5-10 re-evaluations without the persist). At
+    * cluster scale this is the table you'd write out / checkpoint.
     * Persisted intermediates are released via [[releaseCached]]. */
   def candidatePairs(docs: DataFrame, numHashes: Int, bands: Int,
                      bucketCap: Int): DataFrame =
     bandCandidates(bandRows(docs, numHashes, bands), bucketCap)
 
-  private def bandCandidates(bandTable: DataFrame, bucketCap: Int): DataFrame = {
-    val rows = cache(bandTable)
-    val sizes = rows.groupBy(col("bi"), col("bh")).agg(count(lit(1)).as("n"))
-    val kept = rows.join(sizes.filter(col("n") <= bucketCap), Seq("bi", "bh"))
-      .select(col("bi"), col("bh"), col("doc_id"))
-    val l = kept.select(col("bi"), col("bh"), col("doc_id").as("doc_a"))
-    val r = kept.select(col("bi"), col("bh"), col("doc_id").as("doc_b"))
-    l.join(r, Seq("bi", "bh")).filter(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b")).distinct()
-  }
+  private def bandCandidates(bandTable: DataFrame, bucketCap: Int): DataFrame =
+    pairs(purge(cache(bandTable), Bucket, bucketCap), Bucket).distinct()
 
   /** Candidates verified by exact Jaccard over distinct token sets:
     * returns (doc_a, doc_b, jaccard) with jaccard >= threshold, sorted. */
@@ -203,9 +215,7 @@ object DedupJobs {
     * `doc_id`, `toks`), intersect them in-row and keep the pairs whose
     * Jaccard similarity reaches `threshold`. */
   private def jaccardVerify(cand: DataFrame, tokA: DataFrame, tokB: DataFrame,
-                            threshold: Double): DataFrame = {
-    val jac = col("inter").cast("double") /
-      (col("na") + col("nb") - col("inter"))
+                            threshold: Double): DataFrame =
     cand
       .join(tokA.select(col("doc_id").as("doc_a"), col("toks").as("toks_a")),
         Seq("doc_a"))
@@ -214,10 +224,14 @@ object DedupJobs {
       .select(col("doc_a"), col("doc_b"),
         size(array_intersect(col("toks_a"), col("toks_b"))).as("inter"),
         size(col("toks_a")).as("na"), size(col("toks_b")).as("nb"))
-      .withColumn("jaccard", jac)
+      .withColumn("jaccard", jaccard)
       .filter(col("jaccard") >= threshold)
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
-  }
+
+  /** `inter / (na + nb - inter)`: set Jaccard from the intersection size
+    * and the two set sizes. */
+  private val jaccard: Column =
+    col("inter").cast("double") / (col("na") + col("nb") - col("inter"))
 
   /** Connected components over a near-duplicate pair table — the step that
     * turns PAIRS into dedup decisions: every doc gets its cluster id (the
@@ -444,27 +458,22 @@ object DedupJobs {
     val shingles = when(length(col("nt")) < n, array(col("nt")))
       .otherwise(array_distinct(
         graft.plans.TextHashExprs.char_ngrams(col("nt"), lit(n))))
-    // tri feeds the document-frequency aggregate and the cap join; kept
-    // feeds the size aggregate and both pair-join sides. Persist both (the
-    // distinct-shingle rows are corpus-vocabulary-bounded, far smaller than
-    // the text) so the shingle explode over the corpus runs exactly once;
-    // released via [[releaseCached]].
+    // tri feeds the document-frequency purge; kept feeds the size
+    // aggregate and both pair-join sides. Persist both (the distinct-shingle
+    // rows are corpus-vocabulary-bounded, far smaller than the text) so the
+    // shingle explode over the corpus runs exactly once; released via
+    // [[releaseCached]].
     val tri = cache(ScanParallelism.ensure(docs)
       .withColumn("nt", nt)
       .select(col("doc_id"), col("lang"), explode(shingles).as("g")))
-    val dfreq = tri.groupBy(col("lang"), col("g")).agg(count(lit(1)).as("df"))
-    val kept = cache(tri.join(dfreq.filter(col("df") <= dfCap), Seq("lang", "g"))
-      .select(col("doc_id"), col("lang"), col("g")))
-    val sizes = kept.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val pairs = kept.select(col("doc_id").as("doc_a"), col("lang"), col("g"))
-      .join(kept.select(col("doc_id").as("doc_b"), col("lang"), col("g")), Seq("lang", "g"))
-      .filter(col("doc_a") < col("doc_b"))
+    val gram = Seq("lang", "g")
+    val kept = cache(purge(tri, gram, dfCap))
+    val sizes = blockSizes(kept, Seq("doc_id"))
+    pairs(kept, gram)
       .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("inter"))
-    val jac = col("inter").cast("double") / (col("na") + col("nb") - col("inter"))
-    pairs
       .join(sizes.select(col("doc_id").as("doc_a"), col("n").as("na")), Seq("doc_a"))
       .join(sizes.select(col("doc_id").as("doc_b"), col("n").as("nb")), Seq("doc_b"))
-      .withColumn("jaccard", jac)
+      .withColumn("jaccard", jaccard)
       .filter(col("jaccard") > threshold)
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
       .orderBy(col("doc_a"), col("doc_b"))
@@ -504,8 +513,7 @@ object DedupJobs {
       .write.mode("overwrite").parquet(s"$indexPath/bands")
     // aggregate the persisted rows (cheaper than re-running the signature
     // scan that produced them)
-    spark.read.parquet(s"$indexPath/bands")
-      .groupBy(col("bi"), col("bh")).agg(count(lit(1)).as("n"))
+    blockSizes(spark.read.parquet(s"$indexPath/bands"), Bucket)
       .write.mode("overwrite").parquet(s"$indexPath/bucket_sizes")
     Seq((numHashes, bands)).toDF("num_hashes", "bands")
       .coalesce(1).write.mode("overwrite").parquet(s"$indexPath/meta")
@@ -538,23 +546,20 @@ object DedupJobs {
     // size aggregate and the candidate join (persist, release via
     // releaseCached — same policy as the batch path).
     val newBand = cache(bandRows(newDocs, numHashes, bands))
-    val newSizes = newBand.groupBy(col("bi"), col("bh"))
-      .agg(count(lit(1)).as("n_new"))
     // Only buckets the new side touches can form a cross pair; cap on the
     // combined size so semantics equal the batch run over the union.
-    val keptBuckets = newSizes
-      .join(idxSizes, Seq("bi", "bh"), "left")
-      .filter(coalesce(col("n_idx"), lit(0L)) + col("n_new") <= bucketCap)
-      .select(col("bi"), col("bh"))
+    val keptBuckets = blockSizes(newBand, Bucket)
+      .join(idxSizes, Bucket, "left")
+      .filter(coalesce(col("n_idx"), lit(0L)) + col("n") <= bucketCap)
     // Eager cut for the same broadcast-vs-lazy-persist race as the batch
     // verify (see minhashVerifiedPairs): the two broadcast id-set prunes
     // below execute this lineage from the broadcast thread pool at action
     // start.
     val cand =
       idxBands.select(col("bi"), col("bh"), col("doc_id").as("doc_a"))
-        .join(newBand.join(keptBuckets, Seq("bi", "bh"))
+        .join(newBand.join(keptBuckets, Bucket, "left_semi")
           .select(col("bi"), col("bh"), col("doc_id").as("doc_b")),
-          Seq("bi", "bh"))
+          Bucket)
         .select(col("doc_a"), col("doc_b")).distinct().localCheckpoint()
 
     // Exact-Jaccard verify, candidate-bounded on BOTH sides: indexed docs'

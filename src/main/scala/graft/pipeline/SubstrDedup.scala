@@ -55,6 +55,16 @@ object SubstrDedup {
       .select(col("doc_id"), col("win.pos").as("pos"), col("win.h").as("h"))
   }
 
+  /** The values of `key` seen in at least 2 distinct docs of `rows` —
+    * tested as min(doc_id) != max(doc_id), which is a SINGLE
+    * partial-aggregating pass; count_distinct(doc_id) re-groups on
+    * (key, doc_id) first, a second exchange-and-aggregate the >= 2
+    * predicate never needed. */
+  private def crossDoc(rows: DataFrame, key: String): DataFrame =
+    rows.groupBy(key)
+      .agg(min(col("doc_id")).as("d0"), max(col("doc_id")).as("d1"))
+      .filter(col("d0") =!= col("d1")).select(key)
+
   /** `(doc_id, n_cov, kept_md5, n_kept)` per document — the audit
     * projection of the dedup (callers wanting the rewritten corpus use
     * [[dedupText]]). */
@@ -76,14 +86,9 @@ object SubstrDedup {
     val wd = DedupJobs.cache(windows(docs, w))
 
     // duplicate-hash candidates: windows whose hash is seen in >= 2
-    // distinct docs — tested as min(doc_id) != max(doc_id), which is a
-    // SINGLE partial-aggregating pass; count_distinct(doc_id) re-groups
-    // on (h, doc_id) first, a second exchange-and-aggregate the >= 2
-    // predicate never needed. (Output is duplicate-rate bounded and AQE
-    // broadcasts it into the probe join.)
-    val hot = wd.groupBy("h")
-      .agg(min(col("doc_id")).as("d0"), max(col("doc_id")).as("d1"))
-      .filter(col("d0") =!= col("d1")).select("h")
+    // distinct docs (output is duplicate-rate bounded and AQE broadcasts
+    // it into the probe join)
+    val hot = crossDoc(wd, "h")
 
     // verify on the actual text: candidate rows re-extract their window
     // and must STILL be cross-doc duplicated as strings. Positions are
@@ -98,10 +103,7 @@ object SubstrDedup {
         .windows_at(col("t"), col("cps"), lit(w))).as("win"))
       .select(col("doc_id"), col("win.pos").as("pos"), col("win.s").as("s"))
       .localCheckpoint()
-    // same single-pass >= 2-distinct-docs test as `hot`
-    val verified = candS.groupBy("s")
-      .agg(min(col("doc_id")).as("d0"), max(col("doc_id")).as("d1"))
-      .filter(col("d0") =!= col("d1")).select("s")
+    val verified = crossDoc(candS, "s")
     val covered = candS.join(verified, "s").select(col("doc_id"), col("pos"))
 
     // per-doc sorted interval starts (small ints), then one equi-join

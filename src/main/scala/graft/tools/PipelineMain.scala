@@ -9,17 +9,20 @@ import graft.pipeline._
   * extraction (with lineage) → report + KG. Re-running with the same outDir
   * and runId must process zero buckets (everything resumed).
   *
-  * `sbt "runMain graft.tools.PipelineMain <nDocs> <outDir> [runId]"` */
+  * `sbt "runMain graft.tools.PipelineMain <nDocs> <outDir> [runId]"`;
+  * `SPARK_GRAFT_CPUS` sets `local[N]` (default: the available processors). */
 object PipelineMain {
   def main(args: Array[String]): Unit = {
     val nDocs = if (args.length > 0) args(0).toLong else 500L
     val outDir = if (args.length > 1) args(1) else "/tmp/graft_pipeline"
     val runId = if (args.length > 2) args(2) else "run1"
 
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
-      .master("local[8]")
+      .master(s"local[$cpus]")
       .appName("graft-pipeline")
-      .config("spark.sql.shuffle.partitions", "8")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
