@@ -281,9 +281,12 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("releaseCached frees every intermediate the dedup family persists") {
+    import spark.implicits._
     // suites share one session and its cache: start from an empty one
     spark.catalog.clearCache()
-    val dir = "/root/testdata/sf0.001"
+    val dir = java.nio.file.Files.createTempDirectory("release_cached").toString
+    (0L until 40L).map(i => (i, s"document ${i % 7} shares these words with its near twins", "en"))
+      .toDF("doc_id", "text", "lang").write.parquet(s"$dir/documents.parquet")
     val d = spark.read.parquet(s"$dir/documents.parquet")
     Seq(
       DedupJobs.minhashVerifiedPairs(d.select(col("doc_id"), col("text"))),
