@@ -58,13 +58,8 @@ object SparkEntry {
     * stage-count summary as a local DataFrame.
     *
     * Every stage boundary whose output is consumed MORE THAN ONCE is cut
-    * exactly once with an eager localCheckpoint (round-3 verdict #2: Spark
-    * re-executes a DataFrame's lineage per consumer). localCheckpoint here =
-    * persist-to-executors in local mode; a real 100-TB run would use
-    * reliable checkpoint()/an intermediate table for the same cut. (A lazy
-    * tracked persist at these boundaries was MEASURED SLOWER — independent
-    * consumer stages race on uncached partitions and duplicate the stage
-    * compute; the eager cut serializes each stage exactly once.)
+    * exactly once ([[graft.pipeline.Materialize.cut]]; round-3 verdict #2:
+    * Spark re-executes a DataFrame's lineage per consumer).
     *
     * Stage counts are OBSERVED on the cuts that run anyway
     * (`Dataset.observe`): each count is an accumulator filled in the same
@@ -93,13 +88,13 @@ object SparkEntry {
       .select(col("doc_id"), col("text"),
         graft.plans.TextHashExprs.norm_md5(coalesce(col("text"), lit(""))).as("nthash"))
       .observe(obsQuality, n.as("n_quality"))
-      .localCheckpoint()
+      .transform(graft.pipeline.Materialize.cut)
     val dedAll = q
       .withColumn("rn", row_number().over(
         Window.partitionBy(col("nthash")).orderBy(col("doc_id"))))
       .select(col("doc_id"), col("text"), col("rn"))
       .observe(obsDedup, sum(when(col("rn") === 1, 1L).otherwise(0L)).as("n_dedup"))
-      .localCheckpoint()
+      .transform(graft.pipeline.Materialize.cut)
     val ded = dedAll.filter(col("rn") === 1)
       .select(col("doc_id").cast("long").as("doc_id"), col("text"))
     // near-dup pairs over the exact-dedup survivors (exact dups are
@@ -115,7 +110,7 @@ object SparkEntry {
         .select(col("doc_id").cast("long").as("doc_id"))
       ded.join(dropIds, Seq("doc_id"), "left_anti")
         .observe(obsNear, n.as("n_neardup"))
-        .localCheckpoint()
+        .transform(graft.pipeline.Materialize.cut)
     }
     val contam = graft.pipeline.Decontaminate
       .contaminated(kept, k = 4, testMod = 97L, maxDf = 50L)
@@ -123,13 +118,13 @@ object SparkEntry {
     val train = kept.filter(col("doc_id") % 97 =!= 0)
       .join(contam, Seq("doc_id"), "left_anti")
       .observe(obsTrain, n.as("n_train"))
-      .localCheckpoint()
+      .transform(graft.pipeline.Materialize.cut)
     // chunk metadata only: packing never reads chunk text (ChunkJobs),
     // and neither does the n_chunks count.
     val chunkMeta = graft.pipeline.ChunkJobs.chunk(train, 32, 8)
       .select(col("doc_id"), col("chunk_id"), col("n_tokens"))
       .observe(obsChunks, n.as("n_chunks"))
-      .localCheckpoint()
+      .transform(graft.pipeline.Materialize.cut)
     graft.pipeline.ChunkJobs.packMeta(s, chunkMeta, 100).toDF()
       .observe(obsPacks, n.as("n_packs"))
       .write.format("noop").mode("overwrite").save()
@@ -835,12 +830,9 @@ object SparkEntry {
       // (furniture bands, per-doc page counts, per-doc totals); without a
       // materialization each consumer re-runs the word explode. A real
       // deployment reads blocks from a (re-scannable, pushdown-friendly)
-      // table — one eager localCheckpoint is the synthetic stand-in's
-      // honest equivalent (a lazy persist was MEASURED SLOWER here:
-      // independent consumer stages race on the uncached blocks and
-      // duplicate the explode — r6 bench 1.25 s eager vs 2.11 s lazy).
+      // table — one cut is the synthetic stand-in's honest equivalent.
       val blocks = graft.pipeline.LayoutJob.synthesizeBlocks(s, docs)
-        .localCheckpoint()
+        .transform(graft.pipeline.Materialize.cut)
       val kept = graft.pipeline.LayoutJob.removeFurniture(s, blocks)
       val ordered = graft.pipeline.LayoutJob.readingOrder(s, kept).toDF()
       val total = blocks.toDF().groupBy("doc_id").agg(count(lit(1)).as("n_total"))

@@ -67,10 +67,10 @@ object Decontaminate {
       .select(col("doc_id").as("test_doc_id"), col("shingle"))
     // the corpus-side shingle explode feeds BOTH the document-frequency
     // purge and the overlap join — persist it once (released via
-    // DedupJobs.releaseCached) instead of re-shingling the corpus per
+    // Materialize.release) instead of re-shingling the corpus per
     // consumer; the test side stays lazy (its doc_id filter pushes below
     // the explode, so it shingles ~1/testMod of the docs)
-    val corpus = DedupJobs.cache(sh.filter(col("doc_id") % testMod =!= 0))
+    val corpus = Materialize.cache(sh.filter(col("doc_id") % testMod =!= 0))
     DedupJobs.purge(corpus, Seq("shingle"), maxDf).join(test, "shingle")
   }
 

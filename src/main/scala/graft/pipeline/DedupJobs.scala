@@ -37,46 +37,11 @@ object DedupJobs {
   def tokens(textCol: Column): Column =
     graft.plans.TextHashExprs.ascii_tokens(textCol)
 
-  /** Intermediates persisted by the pipelines below, so long-lived sessions
-    * can release them: persist-and-never-unpersist would otherwise
-    * accumulate cached tables across invocations (the bench previously had
-    * to clearCache() the whole session between reps). Each pipeline tracks
-    * what it persists; callers invoke [[releaseCached]] once they have
-    * materialized (written/collected) the returned DataFrame. */
-  private val cachedIntermediates =
-    new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-
-  /** Persist + track for [[releaseCached]] — also for sibling operators
-    * (Decontaminate, SubstrDedup, the SparkEntry pipelines) whose
-    * multiply-consumed intermediates follow the same persist/release
-    * lifecycle, so one [[releaseCached]] frees everything at once. (An
-    * eager count-barrier variant was measured and rejected: the 9-26 s
-    * bimodal runs it was meant to fix were really heap-EXPANSION GC
-    * pauses — see build.sbt Xms note — and with a fixed heap the
-    * barrier's extra pass only cost time.) */
-  private[graft] def cache(df: DataFrame): DataFrame = {
-    // Plan-identical persists (two pipelines sharing an intermediate)
-    // would each make CacheManager log a benign "Asked to cache already
-    // cached data" WARN; if this exact plan is already cached, reuse it —
-    // the first caller owns the entry in cachedIntermediates.
-    if (df.storageLevel != org.apache.spark.storage.StorageLevel.NONE) df
-    else {
-      val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      cachedIntermediates.add(p)
-      p
-    }
-  }
-
-  /** Unpersist every intermediate persisted by dedup pipelines since the
-    * last release. Safe to call anytime; lazily recomputed if a returned
-    * DataFrame is re-consumed afterwards. */
-  def releaseCached(blocking: Boolean = false): Unit = {
-    var df = cachedIntermediates.poll()
-    while (df != null) {
-      df.unpersist(blocking)
-      df = cachedIntermediates.poll()
-    }
-  }
+  /** Frees every intermediate the engine has materialised since the last
+    * release ([[Materialize.release]]). A DataFrame built on a freed cut can
+    * no longer be read: consume every result first, and build a fresh one
+    * after the release. */
+  def releaseCached(blocking: Boolean = false): Unit = Materialize.release(blocking)
 
   /** One row per doc with tokens: (doc_id, toks) where `toks` is the
     * doc's DISTINCT word tokens ([[tokens]] + `array_distinct`, one
@@ -157,7 +122,7 @@ object DedupJobs {
     bandCandidates(bandRows(docs, numHashes, bands), bucketCap)
 
   private def bandCandidates(bandTable: DataFrame, bucketCap: Int): DataFrame =
-    pairs(purge(cache(bandTable), Bucket, bucketCap), Bucket).distinct()
+    pairs(purge(Materialize.cache(bandTable), Bucket, bucketCap), Bucket).distinct()
 
   /** Candidates verified by exact Jaccard over distinct token sets:
     * returns (doc_a, doc_b, jaccard) with jaccard >= threshold, sorted. */
@@ -205,7 +170,7 @@ object DedupJobs {
     // probe (dedupAgainstIndex) KEEPS broadcast+eager — there the candidate
     // lineage is index-read-bounded and cheap, so the serialization costs
     // nothing and the prune win is real (2.0 -> 1.6 s, outlier-free).
-    val toks = cache(tokenSets(docs))
+    val toks = Materialize.cache(tokenSets(docs))
     val cand = bandCandidates(signatureBands(toks, numHashes, bands), bucketCap)
     jaccardVerify(cand, toks, toks, jaccardThreshold)
   }
@@ -249,7 +214,7 @@ object DedupJobs {
     * hop — the same idea as the large-star/small-star MapReduce CC
     * algorithm). Each round is two equi-joins on ids: no all-pairs, state
     * is one (id, comp) row per distinct doc in the pair table, and the
-    * per-round result is persisted + materialized so lineage never stacks
+    * per-round result is cut ([[Materialize.cut]]) so lineage never stacks
     * across rounds. Monotone (comp only decreases, bounded by the component
     * min), so the fixpoint is exact, not approximate.
     *
@@ -269,58 +234,50 @@ object DedupJobs {
     * budget of the IVF trainer; pass 0 to force the distributed path. */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 25,
                           driverEdgeLimit: Long = 500000L): DataFrame = {
-    // Iterative algorithms MUST truncate lineage per round: the stepped/
-    // jumped plan references the previous round's plan several times, so
-    // the logical tree doubles every round and Catalyst's re-analysis and
-    // plan rendering go exponential long before execution is the problem
-    // (persist alone does NOT shorten the logical plan). localCheckpoint
-    // (eager) replaces each round's result with its materialized RDD; on a
-    // real cluster use reliable checkpoint() for executor-loss tolerance.
-    // Checkpoint blocks are freed by the ContextCleaner once unreferenced.
+    // Each round is cut ([[Materialize]]): the stepped/jumped plan reads
+    // the previous round's plan several times, so an uncut logical tree
+    // doubles every round and Catalyst's re-analysis goes exponential long
+    // before execution is the problem (persist does NOT shorten it).
     // Symmetrize in ONE pass over `pairs` (in-row explode of both edge
     // directions): the union-of-two-selects form referenced the incoming
     // plan twice, and when the pairs arrive as an unmaterialized pipeline
     // (q_dedup_components feeds minhashVerified straight in) Spark executes
     // the whole verify-join lineage once per reference. No `distinct`:
     // min-aggregation is idempotent to duplicate edges, so deduping them is
-    // a pure extra shuffle at any scale.
-    val sym = pairs
+    // a pure extra shuffle at any scale. The cut's observed row count
+    // decides the path (see the SIZE DISPATCH note above).
+    val (sym, nEdges) = Materialize.counted(pairs
       .select(explode(array(
         struct(col("doc_a").as("src"), col("doc_b").as("dst")),
         struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .localCheckpoint()
-    // One cheap count over the just-checkpointed blocks decides the path
-    // (see the SIZE DISPATCH note above).
-    if (driverEdgeLimit > 0 && sym.count() <= driverEdgeLimit)
+      .select(col("e.src").as("src"), col("e.dst").as("dst")))
+    if (driverEdgeLimit > 0 && nEdges <= driverEdgeLimit)
       return componentsDriverLocal(pairs.sparkSession, sym)
     // The FIRST neighbor-min round folds into label initialization:
     // comp0(v) = min(v, min N(v)) costs the same single shuffle that the
     // identity labeling needed anyway (distinct over src) — so near-clique
     // graphs (the near-dup common case) arrive at the loop already
     // converged and the first window is pure verification.
-    var labels = sym.groupBy(col("src"))
+    val init = Materialize.cut(sym.groupBy(col("src"))
       .agg(least(min(col("dst")), col("src")).as("comp"))
-      .select(col("src").as("id"), col("comp"))
-      .localCheckpoint()
+      .select(col("src").as("id"), col("comp")))
     // Self-loop edges fold a node's OWN label into the same neighbor-min
     // aggregate — comp(v) := min over (N(v) ∪ {v}) of comp — removing the
     // per-round left-join back onto the labels. NOT checkpointed: both
     // union inputs already are, so materializing the union would only add
     // a job to re-store rows the block manager already holds.
     val symSelf = sym
-      .union(labels.select(col("id").as("src"), col("id").as("dst")))
+      .union(init.select(col("id").as("src"), col("id").as("dst")))
     // One neighbor-min round on a (id, old, comp) table — `old` (the label
     // at the start of the current checkpoint window) rides along in the
     // aggregate via the self-loop row (each src group has exactly one), so
-    // convergence is decided from the window's own materialization with no
-    // extra join back onto previous labels. With `jump`, the round also
-    // path-halves (comp(v) := comp(comp(v))): the stepped table feeds both
-    // sides of the jump self-join, so it is persisted (tiny — one row per
-    // labeled id) to keep the join+agg at one execution, not one per
-    // reference.
-    def step(lbl: DataFrame, jump: Boolean,
-             release: scala.collection.mutable.Buffer[DataFrame]): DataFrame = {
+    // convergence is observed on the window's own cut with no extra join
+    // back onto previous labels. With `jump`, the round also path-halves
+    // (comp(v) := comp(comp(v))): the stepped table feeds both sides of the
+    // jump self-join, so it is persisted (tiny — one row per labeled id,
+    // held until release) to keep the join+agg at one execution, not one
+    // per reference.
+    def step(lbl: DataFrame, jump: Boolean): DataFrame = {
       val stepped = symSelf
         .join(lbl.select(col("id").as("dst"), col("comp").as("ncomp"), col("old")), Seq("dst"))
         .groupBy(col("src")).agg(
@@ -329,42 +286,39 @@ object DedupJobs {
         .select(col("src").as("id"), col("old"), col("comp"))
       if (!jump) stepped
       else {
-        val p = stepped.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        release += p
+        val p = Materialize.cache(stepped)
         val hop = p.select(col("id").as("jid"), col("comp").as("jcomp"))
         p.join(hop, p("comp") === hop("jid"), "left")
           .select(p("id"), p("old"), coalesce(col("jcomp"), p("comp")).as("comp"))
       }
     }
+    var labels = init
     var changed = 1L
     var iter = 0
     // The FIRST window is one neighbor-min round with NO jump: the folded
     // init already did a neighbor-min, so on clique-shaped graphs (the
     // near-dup norm) labels are final before the loop and window 1 is the
     // minimal possible verification — one equi-join round whose jump would
-    // be the identity anyway. Later windows run TWO jump-rounds per
-    // checkpoint + convergence count (round-4 verdict #3): at steady state
-    // the per-round cost is barrier/stage latency over tiny id-keyed
-    // tables, not compute, so halving the checkpoint/count frequency
-    // halves the loop's job count, and the path-halving keeps adversarial
-    // chains at O(log diameter) windows. Labels are monotone decreasing,
-    // so comp < old detects a change in EITHER half-round. Plan depth
-    // stays bounded: each window is cut by one localCheckpoint.
-    var firstWindow = true
+    // be the identity anyway. Later windows run TWO jump-rounds per cut
+    // (round-4 verdict #3): at steady state the per-round cost is
+    // barrier/stage latency over tiny id-keyed tables, not compute, so
+    // halving the cut frequency halves the loop's job count, and the
+    // path-halving keeps adversarial chains at O(log diameter) windows.
+    // Labels are monotone decreasing, so comp < old detects a change in
+    // EITHER half-round. A window's cut frees the previous window's.
     while (changed > 0 && iter < maxIter) {
-      val release = scala.collection.mutable.Buffer[DataFrame]()
       val withOld = labels.select(col("id"), col("comp").as("old"), col("comp"))
       val window =
-        if (firstWindow) { firstWindow = false; step(withOld, jump = false, release) }
+        if (labels eq init) step(withOld, jump = false)
         else {
-          val once = step(withOld, jump = true, release)
-          if (iter + 1 < maxIter) { iter += 1; step(once, jump = true, release) }
+          val once = step(withOld, jump = true)
+          if (iter + 1 < maxIter) { iter += 1; step(once, jump = true) }
           else once
         }
-      val jumped = window.localCheckpoint()
-      changed = jumped.filter(col("comp") < col("old")).count()
-      release.foreach(_.unpersist(false))
-      labels = jumped.select(col("id"), col("comp"))
+      val (jumped, moved) = Materialize.counted(window, count(when(col("comp") < col("old"), 1)))
+      if (labels ne init) Materialize.free(labels)
+      labels = jumped
+      changed = moved
       iter += 1
     }
     require(changed == 0,
@@ -463,11 +417,11 @@ object DedupJobs {
     // rows are corpus-vocabulary-bounded, far smaller than the text) so the
     // shingle explode over the corpus runs exactly once; released via
     // [[releaseCached]].
-    val tri = cache(ScanParallelism.ensure(docs)
+    val tri = Materialize.cache(ScanParallelism.ensure(docs)
       .withColumn("nt", nt)
       .select(col("doc_id"), col("lang"), explode(shingles).as("g")))
     val gram = Seq("lang", "g")
-    val kept = cache(purge(tri, gram, dfCap))
+    val kept = Materialize.cache(purge(tri, gram, dfCap))
     val sizes = blockSizes(kept, Seq("doc_id"))
     pairs(kept, gram)
       .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("inter"))
@@ -545,7 +499,7 @@ object DedupJobs {
     // Signature the new snapshot only; the band table is consumed by the
     // size aggregate and the candidate join (persist, release via
     // releaseCached — same policy as the batch path).
-    val newBand = cache(bandRows(newDocs, numHashes, bands))
+    val newBand = Materialize.cache(bandRows(newDocs, numHashes, bands))
     // Only buckets the new side touches can form a cross pair; cap on the
     // combined size so semantics equal the batch run over the union.
     val keptBuckets = blockSizes(newBand, Bucket)
@@ -560,7 +514,7 @@ object DedupJobs {
         .join(newBand.join(keptBuckets, Bucket, "left_semi")
           .select(col("bi"), col("bh"), col("doc_id").as("doc_b")),
           Bucket)
-        .select(col("doc_a"), col("doc_b")).distinct().localCheckpoint()
+        .select(col("doc_a"), col("doc_b")).distinct().transform(Materialize.cut)
 
     // Exact-Jaccard verify, candidate-bounded on BOTH sides: indexed docs'
     // tokens come from the corpus table, new docs' tokens from the

@@ -144,7 +144,7 @@ object ExtractJob {
     val remaining = (0 until numBuckets).filterNot(doneBuckets)
 
     for (wave <- remaining.grouped(bucketsPerWave)) {
-      val waveDf = bucketed.filter($"bucket".isin(wave: _*)).cache()
+      val waveDf = Materialize.cache(bucketed.filter($"bucket".isin(wave: _*)))
       val started = System.currentTimeMillis()
 
       // a record's doc_id is its doc's, so its bucket is the doc's
@@ -179,7 +179,7 @@ object ExtractJob {
       }
       rows.toDS().write.mode(SaveMode.Append).parquet(lineagePath)
       appended ++= rows
-      waveDf.unpersist()
+      Materialize.free(waveDf)
     }
     appended.result()
   }

@@ -153,19 +153,19 @@ object GraphJobs {
     *
     * Distributed shape: rank state is one row per node; an iteration is
     * one equi-join (edges ⋈ ranks on src) + one groupBy(dst) + a
-    * broadcast one-row dangling aggregate, materialized once per
-    * iteration via localCheckpoint (lineage truncation — same pattern as
+    * broadcast one-row dangling aggregate, cut once per iteration
+    * ([[Materialize.cut]]; lineage truncation — same pattern as
     * connectedComponents). The fixed iteration count is the published
     * practical choice for web graphs (convergence to ranking stability
     * in tens of iterations; callers pick). */
   def pageRank(edges: DataFrame, iterations: Int, damping: Double,
                driverEdgeLimit: Long = 500000L): DataFrame = {
     // Materialize the edge table ONCE: every downstream consumer (node
-    // set, out-weights, dangling set — and the size dispatch's count)
-    // previously re-executed the full incoming lineage (link extraction →
-    // host aggregation) per reference.
-    val e = edges.select(col("src"), col("dst"), col("weight").cast("double").as("w"))
-      .localCheckpoint(true)
+    // set, out-weights, dangling set) previously re-executed the full
+    // incoming lineage (link extraction → host aggregation) per reference.
+    // Its cut observes the edge count the size dispatch reads.
+    val (e, nEdges) = Materialize.counted(
+      edges.select(col("src"), col("dst"), col("weight").cast("double").as("w")))
     // SIZE DISPATCH (the [[DedupJobs.connectedComponents]] discipline):
     // host-level graphs are orders of magnitude below page counts; when
     // the edge table fits the bounded-driver-work budget, the iteration
@@ -177,22 +177,20 @@ object GraphJobs {
     if (driverEdgeLimit > 0 &&
         e.schema("src").dataType == org.apache.spark.sql.types.StringType &&
         e.schema("dst").dataType == org.apache.spark.sql.types.StringType &&
-        e.count() <= driverEdgeLimit)
+        nEdges <= driverEdgeLimit)
       return pageRankDriverLocal(e, iterations, damping)
-    val nodes = e.select(col("src").as("site"))
+    val (nodes, nNodes) = Materialize.counted(e.select(col("src").as("site"))
       .union(e.select(col("dst").as("site")))
-      .distinct()
-      .localCheckpoint(true)
-    val n = nodes.count().toDouble // one bounded scalar: the node count
+      .distinct())
+    val n = nNodes.toDouble
     require(n > 0, "pageRank: empty graph")
     val outW = e.groupBy(col("src")).agg(sum(col("w")).as("out_w"))
     // per-edge share of its source's rank; static across iterations
-    val shares = e.join(outW, "src")
-      .select(col("src"), col("dst"), (col("w") / col("out_w")).as("share"))
-      .localCheckpoint(true)
+    val shares = Materialize.cut(e.join(outW, "src")
+      .select(col("src"), col("dst"), (col("w") / col("out_w")).as("share")))
     val dangling = nodes.join(outW.select(col("src").as("site")), Seq("site"), "left_anti")
-      .localCheckpoint(true)
-    var ranks = nodes.select(col("site"), lit(1.0 / n).as("rank")).localCheckpoint(true)
+      .transform(Materialize.cut)
+    var ranks = nodes.select(col("site"), lit(1.0 / n).as("rank")).transform(Materialize.cut)
     var i = 0
     while (i < iterations) {
       val danglingMass = ranks.join(dangling, Seq("site"), "left_semi")
@@ -200,12 +198,14 @@ object GraphJobs {
       val contrib = shares.join(ranks.withColumnRenamed("site", "src"), Seq("src"))
         .groupBy(col("dst").as("site"))
         .agg(sum(col("share") * col("rank")).as("c"))
-      ranks = nodes.join(contrib, Seq("site"), "left")
+      // each round's cut frees the previous round's
+      val next = Materialize.cut(nodes.join(contrib, Seq("site"), "left")
         .crossJoin(broadcast(danglingMass))
         .select(col("site"),
           (lit((1.0 - damping) / n) +
-            lit(damping) * (coalesce(col("c"), lit(0.0)) + col("dm") / n)).as("rank"))
-        .localCheckpoint(true)
+            lit(damping) * (coalesce(col("c"), lit(0.0)) + col("dm") / n)).as("rank")))
+      Materialize.free(ranks)
+      ranks = next
       i += 1
     }
     ranks

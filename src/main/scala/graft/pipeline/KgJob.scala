@@ -204,37 +204,33 @@ object KgJob {
       .select(col("type"), col("name"), col("props"))
   }
 
+  /** One edge row's columns: `(src_type, src_name, rel_type, dst_type,
+    * dst_name)`. */
+  private def edge(srcType: String, src: Column, rel: String, dstType: String,
+                   dst: Column): Seq[Column] =
+    Seq(lit(srcType).as("src_type"), src.as("src_name"), lit(rel).as("rel_type"),
+      lit(dstType).as("dst_type"), dst.as("dst_name"))
+
   /** Edges: HEARD_IN, JUDGED_BY, INVOLVES_PLAINTIFF, INVOLVES_DEFENDANT,
     * and the per-case plaintiff×defendant SUES cross product
     * (`data_importer.py:252-295`) — an equi-join on case_key carrying a
     * local cross product, expressed as explode × explode. */
   def edges(records: DataFrame): DataFrame = {
-    val ev = entityView(records).cache()
-    val heardIn = ev.filter(col("court_name") =!= "").select(
-      lit("Case").as("src_type"), col("case_key").as("src_name"),
-      lit("HEARD_IN").as("rel_type"),
-      lit("Court").as("dst_type"), col("court_name").as("dst_name"))
-    val judgedBy = ev.filter(col("judge") =!= "").select(
-      lit("Case").as("src_type"), col("case_key").as("src_name"),
-      lit("JUDGED_BY").as("rel_type"),
-      lit("Judge").as("dst_type"), col("judge").as("dst_name"))
-    val invP = ev.select(col("case_key"), explode(col("plaintiffs")).as("p")).select(
-      lit("Case").as("src_type"), col("case_key").as("src_name"),
-      lit("INVOLVES_PLAINTIFF").as("rel_type"),
-      lit("Plaintiff").as("dst_type"), col("p").as("dst_name"))
-    val invD = ev.select(col("case_key"), explode(col("defendants")).as("d")).select(
-      lit("Case").as("src_type"), col("case_key").as("src_name"),
-      lit("INVOLVES_DEFENDANT").as("rel_type"),
-      lit("Defendant").as("dst_type"), col("d").as("dst_name"))
+    val ev = Materialize.cache(entityView(records))
+    val heardIn = ev.filter(col("court_name") =!= "")
+      .select(edge("Case", col("case_key"), "HEARD_IN", "Court", col("court_name")): _*)
+    val judgedBy = ev.filter(col("judge") =!= "")
+      .select(edge("Case", col("case_key"), "JUDGED_BY", "Judge", col("judge")): _*)
+    val invP = ev.select(col("case_key"), explode(col("plaintiffs")).as("p"))
+      .select(edge("Case", col("case_key"), "INVOLVES_PLAINTIFF", "Plaintiff", col("p")): _*)
+    val invD = ev.select(col("case_key"), explode(col("defendants")).as("d"))
+      .select(edge("Case", col("case_key"), "INVOLVES_DEFENDANT", "Defendant", col("d")): _*)
     // SUES: per-case local cross product — both explodes stay on the same
     // row (no join/shuffle needed at all).
     val sues = ev
       .select(col("case_key"), explode(col("plaintiffs")).as("p"), col("defendants"))
       .select(col("p"), explode(col("defendants")).as("d"))
-      .select(
-        lit("Plaintiff").as("src_type"), col("p").as("src_name"),
-        lit("SUES").as("rel_type"),
-        lit("Defendant").as("dst_type"), col("d").as("dst_name"))
+      .select(edge("Plaintiff", col("p"), "SUES", "Defendant", col("d")): _*)
     // REPRESENTED_BY (`data_importer.py:306-322`): lawyer → party, gated on
     // the lawyer segment mentioning the party's role (the reference's
     // coarse 'plaintiff'/'defendant' substring check).
@@ -242,20 +238,14 @@ object KgJob {
       ev.filter(col("lawyer_segment_lc").contains(roleWord))
         .select(explode(col("lawyers")).as("l"), col(partiesCol))
         .select(col("l"), explode(col(partiesCol)).as("p"))
-        .select(
-          lit("Lawyer").as("src_type"), col("l").as("src_name"),
-          lit("REPRESENTED_BY").as("rel_type"),
-          lit(dstType).as("dst_type"), col("p").as("dst_name"))
+        .select(edge("Lawyer", col("l"), "REPRESENTED_BY", dstType, col("p")): _*)
     val repP = representedBy("plaintiff", "plaintiffs", "Plaintiff")
     val repD = representedBy("defendant", "defendants", "Defendant")
     // WORKS_FOR (`data_importer.py:324-329`): lawyer → firm, per case.
     val worksFor = ev
       .select(explode(col("lawyers")).as("l"), col("firms"))
       .select(col("l"), explode(col("firms")).as("f"))
-      .select(
-        lit("Lawyer").as("src_type"), col("l").as("src_name"),
-        lit("WORKS_FOR").as("rel_type"),
-        lit("LawFirm").as("dst_type"), col("f").as("dst_name"))
+      .select(edge("Lawyer", col("l"), "WORKS_FOR", "LawFirm", col("f")): _*)
     heardIn.unionByName(judgedBy).unionByName(invP).unionByName(invD)
       .unionByName(sues).unionByName(repP).unionByName(repD)
       .unionByName(worksFor)

@@ -89,7 +89,7 @@ object LmQuality {
     // explode+aggregate runs ONCE — model, floors, and any downstream
     // broadcast all re-read the small materialization, not the lineage
     val counts = tris.groupBy("lang", "tri").agg(count(lit(1)).as("c"))
-      .localCheckpoint()
+      .transform(Materialize.cut)
     val totals = counts.groupBy("lang")
       .agg(sum("c").as("n_lang"), count(lit(1)).as("v_lang"))
     val denom = (col("n_lang") * 2 + col("v_lang")).cast("double")

@@ -38,7 +38,7 @@ import org.apache.spark.sql.functions._
   * hop map each round (hop ⋈ hop on dst = src, composing paths nobody
   * asked for); with the crawler-conventional small fixed hop budget
   * (browsers and crawlers cap at 5-20), linear rounds over a shrinking
-  * pending set move strictly less data. Each round localCheckpoints the
+  * pending set move strictly less data. Each round cuts the
   * pending set — the same lineage-truncation pattern as
   * [[DedupJobs.connectedComponents]] and [[GraphJobs.pageRank]].
   */
@@ -74,13 +74,10 @@ object RedirectJobs {
   def resolveChains(spark: SparkSession, fetches: DataFrame,
                     maxHops: Int = 8): DataFrame = {
     require(maxHops >= 1, "resolveChains: maxHops must be >= 1")
-    // Per-round EAGER localCheckpoints, deliberately: each round's
-    // stepped table is consumed twice (done split + next pending), and a
-    // lazy persist was MEASURED SLOWER (r6 bench 0.48 s eager vs 0.74 s
-    // lazy) — the done/pending consumer stages race on the uncached
-    // rounds and duplicate the join work; the eager cut runs each round
-    // exactly once.
-    val hops = hopTable(spark, fetches).localCheckpoint(true)
+    // Each round's stepped table is read twice (done split + next
+    // pending), so it is cut ([[Materialize.cut]]); the result reads every
+    // round's cut, so all of them live until release.
+    val hops = hopTable(spark, fetches).transform(Materialize.cut)
     val info = hops.select(col("url").as("cur"),
       col("status").as("cur_status"), col("dst"))
 
@@ -90,7 +87,7 @@ object RedirectJobs {
     var resolved: DataFrame = null
     var round = 0
     while (round < maxHops) {
-      val stepped = pending.join(info, Seq("cur"), "left").localCheckpoint(true)
+      val stepped = pending.join(info, Seq("cur"), "left").transform(Materialize.cut)
       val done = stepped
         .filter(col("dst").isNull)
         .select(col("url"),

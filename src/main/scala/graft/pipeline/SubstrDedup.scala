@@ -78,12 +78,12 @@ object SubstrDedup {
     val t = coalesce(col("text"), lit(""))
     // the window table feeds the duplicate-hash aggregate AND the
     // candidate probe join — persist it once (released via
-    // DedupJobs.releaseCached) so the stride-1 hash pass over the corpus
+    // Materialize.release) so the stride-1 hash pass over the corpus
     // runs once, not once per consumer. The persisted rows are the fixed
     // 12-byte (pos, h) pairs, the same O(total chars) volume the groupBy
     // shuffles anyway; at cluster scale this is the intermediate you'd
     // checkpoint (or recompute if storage is tighter than CPU).
-    val wd = DedupJobs.cache(windows(docs, w))
+    val wd = Materialize.cache(windows(docs, w))
 
     // duplicate-hash candidates: windows whose hash is seen in >= 2
     // distinct docs (output is duplicate-rate bounded and AQE broadcasts
@@ -102,7 +102,7 @@ object SubstrDedup {
       .select(col("doc_id"), explode(graft.plans.TextHashExprs
         .windows_at(col("t"), col("cps"), lit(w))).as("win"))
       .select(col("doc_id"), col("win.pos").as("pos"), col("win.s").as("s"))
-      .localCheckpoint()
+      .transform(Materialize.cut)
     val verified = crossDoc(candS, "s")
     val covered = candS.join(verified, "s").select(col("doc_id"), col("pos"))
 

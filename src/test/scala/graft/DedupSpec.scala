@@ -1,10 +1,14 @@
 package graft
 
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.pipeline.{Decontaminate, DedupJobs, SubstrDedup}
+import graft.pipeline.{CorpusGen, Decontaminate, DedupJobs, ExtractJob, KgJob, SubstrDedup}
 
 /** Properties of the scale-hardened MinHash dedup: verification soundness
   * (verified ⊆ banded candidates; reported Jaccard is the exact set
@@ -181,6 +185,13 @@ class DedupSpec extends AnyFunSuite {
       Seq(1L, 2L, 3L, 4L).foreach(id => assert(out(id) == (1L, 4L, if (id == 1L) 1 else 0)))
       Seq(10L, 11L, 12L).foreach(id => assert(out(id) == (10L, 3L, if (id == 10L) 1 else 0)))
       Seq(20L, 21L).foreach(id => assert(out(id) == (20L, 2L, if (id == 20L) 1 else 0)))
+      // an empty pair table: the path decision and the loop's convergence
+      // are observed on cuts over no rows, and every observation must
+      // report (a lost one would block its `get` forever)
+      val none = Await.result(Future(DedupJobs.connectedComponents(
+        pairs.filter(col("doc_a") < 0), driverEdgeLimit = limit).collect()), 5.minutes)
+      DedupJobs.releaseCached()
+      assert(none.isEmpty)
     }
   }
 
@@ -284,20 +295,32 @@ class DedupSpec extends AnyFunSuite {
     import spark.implicits._
     // suites share one session and its cache: start from an empty one
     spark.catalog.clearCache()
+    def persistentRdds = spark.sparkContext.getPersistentRDDs.keySet
+    val before = persistentRdds
     val dir = java.nio.file.Files.createTempDirectory("release_cached").toString
     (0L until 40L).map(i => (i, s"document ${i % 7} shares these words with its near twins", "en"))
       .toDF("doc_id", "text", "lang").write.parquet(s"$dir/documents.parquet")
     val d = spark.read.parquet(s"$dir/documents.parquet")
+    DedupJobs.buildMinhashIndex(d, s"$dir/index")
+    val records = ExtractJob.extractRecords(spark, CorpusGen.generate(spark, 12, 2), 2).toDF()
     Seq(
       DedupJobs.minhashVerifiedPairs(d.select(col("doc_id"), col("text"))),
       DedupJobs.candidatePairs(d, 8, 4, 200),
       DedupJobs.ngramJaccardCapped(d),
       Decontaminate.contaminated(d, k = 4, testMod = 97L, maxDf = 50L),
       SubstrDedup.dedupText(d),
-      SparkEntry.queries("q_dedup_minhash")(spark, dir)
+      SparkEntry.queries("q_dedup_minhash")(spark, dir),
+      KgJob.edges(records),
+      DedupJobs.dedupAgainstIndex(spark, s"$dir/index", d.filter(col("doc_id") < 10), d)
     ).foreach(_.write.format("noop").mode("overwrite").save())
     assert(!spark.sharedState.cacheManager.isEmpty, "the entry points persist intermediates")
+    assert(persistentRdds != before, "the entry points persist and cut intermediates")
     DedupJobs.releaseCached()
+    // checkpointed cuts are RDDs outside the cache manager. Another suite's
+    // unreferenced RDD may be cleaned up meanwhile and leave `before`, so
+    // the check is that no RDD the calls persisted is left
+    val left = persistentRdds -- before
+    assert(left.isEmpty, s"persisted RDDs left after releaseCached: $left")
     assert(spark.sharedState.cacheManager.isEmpty)
   }
 }

@@ -1,5 +1,9 @@
 package graft
 
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration._
+
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -26,6 +30,11 @@ class RedirectSpec extends AnyFunSuite {
   private def resolve(df: DataFrame, maxHops: Int = 8): Map[String, Row] =
     RedirectJobs.resolveChains(spark, df, maxHops)
       .collect().map(r => r.getString(0) -> r).toMap
+
+  test("an empty fetch log resolves to no rows") {
+    val out = Await.result(Future(resolve(log())), 5.minutes)
+    assert(out.isEmpty)
+  }
 
   test("terminal statuses resolve to themselves with zero hops") {
     val out = resolve(log(
