@@ -73,7 +73,6 @@ object SparkEntry {
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
     val n = count(lit(1))
     val obsInput, obsQuality, obsDedup, obsNear, obsTrain, obsChunks, obsPacks = Observation()
-    graft.plans.TextHashExprs.register(s)
     // Gopher gate + exact-dedup fingerprint (the one-pass norm_md5 kernel,
     // == md5(trim(regexp_replace(text, "\\s+", " "))) bit-for-bit) in one
     // shuffle-free cut. n_input is observed here and not under the dedup
@@ -299,7 +298,6 @@ object SparkEntry {
       // The duplicated shard (every 5th doc re-landing under a shifted id —
       // test scaffolding for the dedup) is fanned out IN-ROW from one scan
       // instead of the former UNION ALL double-scan of the table.
-      graft.plans.TextHashExprs.register(s)
       val d = t(s, dir, "documents")
       val ids = filter(
         array(col("doc_id"),
@@ -373,7 +371,6 @@ object SparkEntry {
       // ScanParallelism.ensure fans the heavy projection out across cores
       // when the table arrives as a single input split (the round-2 local
       // regression); at real scale it is a no-op.
-      graft.plans.TextHashExprs.register(s)
       val d = graft.pipeline.ScanParallelism.ensure(t(s, dir, "documents"))
       val toks = graft.plans.TextHashExprs.ascii_tokens(col("text"))
       d.withColumn("toks", toks)
@@ -579,7 +576,6 @@ object SparkEntry {
       // character position into a row and shuffled ~8× the corpus bytes
       // back through a groupBy. No explode, identical output; the only
       // shuffles are the output sort and the single-split parallelism guard.
-      graft.plans.TextHashExprs.register(s)
       val d = graft.pipeline.ScanParallelism.ensure(t(s, dir, "documents"))
       val nt = graft.plans.TextHashExprs
         .ws_normalize(col("text"), doTrim = false, doLower = true)
@@ -704,7 +700,6 @@ object SparkEntry {
     // Spark runs the real kernel inside whole-stage codegen while the
     // oracle states the expected canonical string per variant. -------------
     "q_url_canonicalize" -> ((s, dir) => {
-      graft.plans.UrlExprs.register(s)
       import graft.plans.UrlExprs.{url_canonicalize, url_host_reversed, url_registrable_domain}
       val docs = t(s, dir, "documents")
       val v = col("doc_id") % 4
@@ -732,7 +727,6 @@ object SparkEntry {
     // pipeline hangs off the registrable domain. groupBy on a codegen'd
     // native expression; count + exact char sum per site. -----------------
     "q_url_site_stats" -> ((s, dir) => {
-      graft.plans.UrlExprs.register(s)
       import graft.plans.UrlExprs.url_registrable_domain
       val docs = t(s, dir, "documents")
       val v = col("doc_id") % 4
@@ -755,7 +749,6 @@ object SparkEntry {
     // codegen; the oracle states each variant's RFC-mandated verdict
     // literally. ----------------------------------------------------------
     "q_robots_filter" -> ((s, dir) => {
-      graft.plans.RobotsExprs.register(s)
       import graft.plans.RobotsExprs.{robots_allowed, robots_crawl_delay}
       val docs = t(s, dir, "documents")
       val robots = lit(Seq(
@@ -1012,7 +1005,7 @@ object SparkEntry {
     // The oracle derives the expected label from the doc_id arithmetic
     // and the original text in SQL — decode(encode(x)) == x via md5. ----
     "q_charset_sniff" -> ((s, dir) => {
-      graft.plans.CharsetExprs.register(s)
+      import graft.plans.CharsetExprs.{charset_decode, charset_encode, charset_sniff}
       val docs = t(s, dir, "documents")
       val orig = when(col("doc_id") % 4 === 0, concat(col("text"), lit(" — № café ™")))
         .when(col("doc_id") % 4 === 1, concat(col("text"), lit(" • wide text")))
@@ -1022,10 +1015,10 @@ object SparkEntry {
         array(lit("utf-8"), lit("utf-16le"), lit("windows-1252"), lit("ascii")),
         (col("doc_id") % 4 + 1).cast("int"))
       docs.select(col("doc_id"),
-          call_function("charset_encode", orig, label).as("bytes"))
+          charset_encode(orig, label).as("bytes"))
         .select(col("doc_id"),
-          call_function("charset_sniff", col("bytes")).as("charset"),
-          md5(call_function("charset_decode", col("bytes"))).as("md5_text"))
+          charset_sniff(col("bytes")).as("charset"),
+          md5(charset_decode(col("bytes"))).as("md5_text"))
         .orderBy(col("doc_id"))
     }),
 
@@ -1034,16 +1027,15 @@ object SparkEntry {
     // repair with fix_mojibake; the oracle pins fixed == original (md5
     // from SQL) and that exactly the non-ASCII-garnished docs changed. --
     "q_mojibake_fix" -> ((s, dir) => {
-      graft.plans.CharsetExprs.register(s)
+      import graft.plans.CharsetExprs.{charset_decode_as, charset_encode, fix_mojibake}
       val docs = t(s, dir, "documents")
       val orig = when(col("doc_id") % 2 === 0, concat(col("text"), lit(" — № café ™")))
         .otherwise(col("text"))
-      val mangled = call_function("charset_decode_as",
-        call_function("charset_encode", orig, lit("utf-8")), lit("windows-1252"))
+      val mangled = charset_decode_as(charset_encode(orig, lit("utf-8")), lit("windows-1252"))
       docs.select(col("doc_id"), orig.as("orig"), mangled.as("mangled"))
         .select(col("doc_id"),
           (col("mangled") =!= col("orig")).as("was_mangled"),
-          md5(call_function("fix_mojibake", col("mangled"))).as("md5_fixed"))
+          md5(fix_mojibake(col("mangled"))).as("md5_fixed"))
         .orderBy(col("doc_id"))
     }),
 
@@ -1054,7 +1046,6 @@ object SparkEntry {
     // pins the typed-placeholder rewrite; the oracle replays the same
     // patterns, the Luhn checksum, and the same replace chain. ---------
     "q_pii_stats" -> ((s, dir) => {
-      graft.plans.PiiExprs.register(s)
       val docs = t(s, dir, "documents")
       val cardLit = element_at(array(
         lit("4111111111111111"), lit("4111111111111112"),
@@ -1080,7 +1071,7 @@ object SparkEntry {
       // size() it and ran an interpreted filter lambda (regexp_replace +
       // luhn_check per card). Differential-pinned in PiiSpec; the oracle
       // replays the identical counts/md5 in DuckDB.
-      wrapped.select(col("doc_id"), call_function("pii_stats", col("t2")).as("ps"))
+      wrapped.select(col("doc_id"), graft.plans.PiiExprs.pii_stats(col("t2")).as("ps"))
         .select(col("doc_id"),
           col("ps.n_email").as("n_email"),
           col("ps.n_phone").as("n_phone"),
@@ -1115,15 +1106,15 @@ object SparkEntry {
     // back byte-exactly. Oracle: kind from the doc_id rule, md5 of the
     // pre-encode text from SQL. ------------------------------------------
     "q_office_text" -> ((s, dir) => {
-      graft.plans.OfficeExprs.register(s)
+      import graft.plans.OfficeExprs.{office_kind, office_text}
       val docs = t(s, dir, "documents")
       val orig = concat(coalesce(col("text"), lit("")),
         lit("\nmeta & <tags>\tend 'q' \"z\""))
       val wrapped = graft.pipeline.OfficeText.wrapCorpus(s,
         docs.select(col("doc_id"), orig.as("text")))
       wrapped.select(col("doc_id"),
-          call_function("office_kind", col("bytes")).as("kind"),
-          md5(call_function("office_text", col("bytes"))).as("md5_text"))
+          office_kind(col("bytes")).as("kind"),
+          md5(office_text(col("bytes"))).as("md5_text"))
         .orderBy(col("doc_id"))
     }),
 
@@ -1134,7 +1125,7 @@ object SparkEntry {
     // utf8proc implementation — two independent UAX #15 implementations
     // must agree byte-for-byte. --------------------------------------------
     "q_unicode_norm" -> ((s, dir) => {
-      graft.plans.UnicodeNorm.register(s)
+      import graft.plans.UnicodeNorm.{norm_key, unicode_norm}
       val docs = t(s, dir, "documents")
       // DECOMPOSED garnish on the engine side vs PRECOMPOSED in the
       // oracle: only a correct NFC composition makes the hashes meet
@@ -1145,8 +1136,8 @@ object SparkEntry {
           .when(pmod(col("doc_id"), lit(4)) === 2, lit(" \u2126resistance"))
           .otherwise(lit(" E\u0301n\u0303QUOTA")))
       docs.select(col("doc_id"),
-          md5(call_function("unicode_norm", g, lit("NFC"))).as("md5_nfc"),
-          md5(call_function("norm_key", g)).as("md5_key"))
+          md5(unicode_norm(g, "NFC")).as("md5_nfc"),
+          md5(norm_key(g)).as("md5_key"))
         .orderBy(col("doc_id"))
     }),
 
@@ -1154,15 +1145,15 @@ object SparkEntry {
     // a garnish exercising escapes, tabs, and \uN unicode (é, 中);
     // kind + decode(encode(x)) == x, oracle-derived from the rule. -----
     "q_rtf_text" -> ((s, dir) => {
-      graft.plans.OfficeExprs.register(s)
+      import graft.plans.OfficeExprs.{office_kind, office_text}
       val docs = t(s, dir, "documents")
       val orig = concat(coalesce(col("text"), lit("")),
         lit("\nRTF & {braces} \\ tab\t \u00e9\u4e2d"))
       val wrapped = graft.pipeline.RtfText.wrapCorpus(s,
         docs.select(col("doc_id"), orig.as("text")))
       wrapped.select(col("doc_id"),
-          call_function("office_kind", col("bytes")).as("kind"),
-          md5(call_function("office_text", col("bytes"))).as("md5_text"))
+          office_kind(col("bytes")).as("kind"),
+          md5(office_text(col("bytes"))).as("md5_text"))
         .orderBy(col("doc_id"))
     }),
 
@@ -1172,11 +1163,11 @@ object SparkEntry {
     // titles + href links in Atom, loc/lastmod in sitemaps); the oracle
     // re-derives every field from the rule. ---------------------------------
     "q_feed_entries" -> ((s, dir) => {
-      graft.plans.FeedExprs.register(s)
+      import graft.plans.FeedExprs.{feed_entries, feed_kind}
       val feeds = graft.pipeline.FeedText.wrapCorpus(s, t(s, dir, "documents"))
       feeds.select(col("doc_id"),
-          call_function("feed_kind", col("xml")).as("kind"),
-          explode(call_function("feed_entries", col("xml"))).as("e"))
+          feed_kind(col("xml")).as("kind"),
+          explode(feed_entries(col("xml"))).as("e"))
         .select(col("doc_id"), col("kind"),
           col("e.title").as("title"), col("e.link").as("link"),
           col("e.ts").as("ts"))

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.plans.VecExprs.vec_dot
+
 /** Nearest-neighbour search over an embedding column. Each path is a
   * candidate generator over one shared cosine and one top-k ranking (the
   * similarity-join core below; blocking-then-comparison, as in SparkER):
@@ -35,20 +37,6 @@ import org.apache.spark.sql.functions._
   * corpus pass, never an iterative cluster-side fit. */
 object AnnJobs {
 
-  /** Exact dot product of two float/double-array columns as doubles —
-    * the native [[graft.plans.VecDotExpr]] kernel, bit-identical
-    * (fold-left in index order from 0.0, float→double exact widening)
-    * to the `aggregate(zip_with(...))` composed form it replaced, which
-    * ran INTERPRETED with a lambda dispatch per element. Registers on
-    * the active/default session so callers need no prior register()
-    * (the LmQuality.trigramList discipline). */
-  private def dot(x: Column, y: Column): Column = {
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-      .foreach(graft.plans.VecExprs.register)
-    graft.plans.VecExprs.vec_dot(x, y)
-  }
-
   /** Let-binding for Column expressions: evaluate `v` ONCE per row and
     * reference the bound value from `body`. Spark's higher-order builtins
     * (`transform`/`zip_with`/`aggregate`) run INTERPRETED and re-evaluate
@@ -79,13 +67,13 @@ object AnnJobs {
                           int8: Boolean, keys: Column*): DataFrame = {
     val v = vector(payload, int8)
     rows.select(Seq(col("vec_id").as(s"${p}_id"), payload.as(s"${p}_vec"),
-      sqrt(dot(v, v)).as(s"${p}n")) ++ keys: _*)
+      sqrt(vec_dot(v, v)).as(s"${p}n")) ++ keys: _*)
   }
 
   /** Cosine of a joined (q, n) pair rounded to 4dp — the oracle-checked
     * q_ann_cosine rounding, so every path ranks alike. */
   private[graft] def cosine(int8: Boolean = false): Column =
-    round(dot(col("q_vec"), vector(col("n_vec"), int8)) / (col("qn") * col("nn")), 4)
+    round(vec_dot(col("q_vec"), vector(col("n_vec"), int8)) / (col("qn") * col("nn")), 4)
 
   /** Each query's `k` most similar candidates, ties to the lower id,
     * ordered by (q_id, rn). Candidate pairs are the broadcast all-pairs
@@ -144,12 +132,12 @@ object AnnJobs {
       struct(lit(i).as("i"), lit(c.map(x => x * x).sum).as("c2"),
         array(c.map(lit(_)): _*).as("c"))
     }: _*)
-    letD(sqrt(dot(emb, emb))) { nrm =>
+    letD(sqrt(vec_dot(emb, emb))) { nrm =>
       // struct(d, i) sorts lexicographically: score first, index tiebreak
       val dists = transform(centLit, s => struct(
         when(nrm === 0.0, s.getField("c2"))
           .otherwise(s.getField("c2") -
-            lit(2.0) * dot(emb, s.getField("c")) / nrm)
+            lit(2.0) * vec_dot(emb, s.getField("c")) / nrm)
           .as("d"),
         s.getField("i").as("i")))
       transform(slice(array_sort(dists), 1, nprobe), s => s.getField("i"))
@@ -385,7 +373,7 @@ object AnnJobs {
     * across 2^nBits buckets instead of collapsing into two. */
   def hyperplaneBucket(emb: Column, planes: Array[Array[Double]]): Column =
     planes.zipWithIndex.map { case (p, i) =>
-      when(dot(emb, array(p.map(lit(_)): _*)) > 0, 1 << i).otherwise(0)
+      when(vec_dot(emb, array(p.map(lit(_)): _*)) > 0, 1 << i).otherwise(0)
     }.reduce(_ + _)
 
   /** [[lshQuantizedTopK]] with RANDOM-HYPERPLANE buckets (round-4 verdict

@@ -46,7 +46,6 @@ object ChunkJobs {
     require(size > 0 && overlap >= 0 && overlap < size,
       s"need 0 <= overlap < size, got size=$size overlap=$overlap")
     val stride = size - overlap
-    graft.plans.TextHashExprs.register(documents.sparkSession)
     // one-pass kernel form of trim(regexp_replace(.., "\\s+", " "))
     val nt = graft.plans.TextHashExprs
       .ws_normalize(coalesce(col("text"), lit("")), doTrim = true, doLower = false)

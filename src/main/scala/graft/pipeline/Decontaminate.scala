@@ -37,7 +37,6 @@ object Decontaminate {
     * composed form's `nt != ''` and `size(toks) >= k` pre-filters. */
   def shingles(documents: DataFrame, k: Int): DataFrame = {
     require(k > 0, s"shingle size must be positive, got $k")
-    graft.plans.TextHashExprs.register(documents.sparkSession)
     documents
       .select(col("doc_id").cast("long").as("doc_id"),
         coalesce(col("text"), lit("")).as("raw"))

@@ -32,8 +32,7 @@ object DedupJobs {
   /** Word tokens, lowercased — the same tokenization as q_dedup_minhash.
     * One compiled pass ([[graft.plans.TextHashExprs.asciiTokens]]),
     * bit-identical to `regexp_extract_all(lower(text), "[a-z0-9]+", 0)`
-    * (TextHashSpec differential incl. the İ/ſ case-fold traps); callers
-    * must have TextHashExprs registered — every dedup entry point does. */
+    * (TextHashSpec differential incl. the İ/ſ case-fold traps). */
   def tokens(textCol: Column): Column =
     graft.plans.TextHashExprs.ascii_tokens(textCol)
 
@@ -49,7 +48,6 @@ object DedupJobs {
     * have no signature and can't be in a candidate pair). The single
     * tokenization both the signature stage and the verify join read. */
   private def tokenSets(docs: DataFrame): DataFrame = {
-    graft.plans.TextHashExprs.register(docs.sparkSession)
     // the tokenize + signature projection is the compute-heavy stage:
     // don't let a single-split source serialize it (no-op at real scale)
     ScanParallelism.ensure(docs)
@@ -395,7 +393,6 @@ object DedupJobs {
     * ever exploded into the shuffle. */
   def ngramJaccardCapped(docs: DataFrame, n: Int = 3, dfCap: Int = 50,
                          threshold: Double = 0.6): DataFrame = {
-    graft.plans.TextHashExprs.register(docs.sparkSession)
     // normalization via the one-pass ws_normalize kernel (==
     // lower(regexp_replace(text, "\\s+", " ")) bit-for-bit)
     val nt = graft.plans.TextHashExprs

@@ -129,7 +129,6 @@ object GraphJobs {
     * projection runs in whole-stage codegen and the shuffle carries only
     * two short keys per edge. */
   def hostGraph(links: DataFrame): DataFrame = {
-    UrlExprs.register(links.sparkSession)
     import UrlExprs.{url_host, url_registrable_domain}
     links
       .filter(!col("nofollow"))
@@ -277,7 +276,6 @@ object GraphJobs {
     * surface; per-group top-k is a window over the (site, anchor)
     * count table, which is already site-partitioned by the groupBy. */
   def anchorTopK(links: DataFrame, k: Int): DataFrame = {
-    UrlExprs.register(links.sparkSession)
     import UrlExprs.{url_host, url_registrable_domain}
     val counted = links
       .select(url_registrable_domain(url_host(col("dst_url"))).as("dst_site"),

@@ -39,7 +39,6 @@ object LayoutJob {
     */
   def synthesizeBlocks(spark: SparkSession, documents: DataFrame): Dataset[PageBlock] = {
     import spark.implicits._
-    graft.plans.TextHashExprs.register(spark)
     // one-pass kernel form of trim(regexp_replace(.., "\\s+", " "))
     val nt = graft.plans.TextHashExprs
       .ws_normalize(coalesce(col("text"), lit("")), doTrim = true, doLower = false)
@@ -79,7 +78,6 @@ object LayoutJob {
     // native-expression form of PageLayout.normalizeFurniture (stays in
     // whole-stage codegen; LayoutSpec pins the equivalence); the \s+
     // collapse runs in the one-pass ws_normalize kernel
-    graft.plans.TextHashExprs.register(spark)
     val norm = graft.plans.TextHashExprs.ws_normalize(
       regexp_replace(lower(col("text")), "[0-9]+", "#"),
       doTrim = true, doLower = false)

@@ -39,9 +39,7 @@ object LineDedup {
   /** Normalized dedup key for one line (column form) — md5 over the
     * one-pass ws_normalize kernel, ==
     * `md5(lower(trim(regexp_replace(line, "\\s+", " "))))` bit-for-bit
-    * (TextHashSpec pins the normalization equivalence). Callers must
-    * have [[graft.plans.TextHashExprs.register]]ed the session —
-    * [[dedupLines]] does. */
+    * (TextHashSpec pins the normalization equivalence). */
   def lineKey(line: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     md5(graft.plans.TextHashExprs.ws_normalize(line, doTrim = true, doLower = true))
 
@@ -49,7 +47,6 @@ object LineDedup {
     * (doc_id, n_kept, n_removed, text_clean) with survivors rejoined by
     * `\n` in original order. */
   def dedupLines(docs: DataFrame, minDocs: Int): DataFrame = {
-    graft.plans.TextHashExprs.register(docs.sparkSession)
     val lines = docs
       .select(col("doc_id"),
         posexplode(split(coalesce(col("text"), lit("")), "\n")).as(Seq("pos", "line")))

@@ -53,9 +53,7 @@ object LmQuality {
     * `lower(trim(regexp_replace(c, '\\s+', ' ')))` verbatim; this is the
     * one-pass [[graft.plans.TextHashExprs.wsNormalize]] kernel form of
     * the same function — trim and lower commute since no codepoint
-    * lowercases to or from a space, pinned by TextHashSpec). Callers
-    * register TextHashExprs before their first action (both entry
-    * points in this file do). */
+    * lowercases to or from a space, pinned by TextHashSpec). */
   def normalized(c: Column): Column =
     graft.plans.TextHashExprs.ws_normalize(c, doTrim = true, doLower = true)
 
@@ -66,22 +64,14 @@ object LmQuality {
     * `substr` re-scans the UTF8String's variable-width bytes from the
     * start, which made trigram generation dominate the whole stage
     * (measured 31 s → 3 s at sf0.1). Semantics are identical —
-    * codepoint-counted n-grams, empty array below 3 chars. Registers
-    * the kernel on the active/default session first, so callers (and
-    * tests) can use this column factory without a prior `register()`. */
-  def trigramList(nt: Column): Column = {
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-      .foreach(graft.plans.TextHashExprs.register)
-    graft.plans.TextHashExprs.char_ngrams(nt, lit(3))
-  }
+    * codepoint-counted n-grams, empty array below 3 chars. */
+  def trigramList(nt: Column): Column = graft.plans.TextHashExprs.char_ngrams(nt, lit(3))
 
   /** Per-language trigram LM over `docs(doc_id, text, lang)`:
     * `(lang, tri, logp_e9)` plus the per-language unseen floor
     * `(lang, logp0_e9)`. Both are small (alphabet³-bounded) and meant
     * to be broadcast by [[scoreAndBucket]]. */
   def trainTrigramModel(docs: DataFrame): (DataFrame, DataFrame) = {
-    graft.plans.TextHashExprs.register(docs.sparkSession)
     val tris = docs
       .select(col("lang"), explode(trigramList(normalized(col("text")))).as("tri"))
     // counts is alphabet³-bounded (tens of thousands of rows per
@@ -109,7 +99,6 @@ object LmQuality {
     * score — the documented contract). */
   def scoreAndBucket(docs: DataFrame, model: DataFrame,
                      floors: DataFrame): DataFrame = {
-    graft.plans.TextHashExprs.register(docs.sparkSession)
     val docTris = docs
       .select(col("doc_id"), col("lang"),
         explode(trigramList(normalized(col("text")))).as("tri"))

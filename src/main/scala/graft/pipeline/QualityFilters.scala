@@ -38,7 +38,6 @@ object QualityFilters {
     * full differential against the composed form on trap inputs and the
     * DuckDB oracle replays the identical arithmetic independently. */
   def gopherSignals(documents: DataFrame): DataFrame = {
-    graft.plans.QualityExprs.register(documents.sparkSession)
     val g = graft.plans.QualityExprs.gopher_signals(
       coalesce(col("text"), lit("")))
     documents
@@ -74,7 +73,6 @@ object QualityFilters {
     * (doc_id, gram) groupBy — shuffles by doc key only, the same scale
     * shape as the layout furniture removal. */
   def repetitionSignals(documents: DataFrame): DataFrame = {
-    graft.plans.TextHashExprs.register(documents.sparkSession)
     // one-pass kernel form of trim(regexp_replace(.., "\\s+", " "))
     val nt = graft.plans.TextHashExprs
       .ws_normalize(coalesce(col("text"), lit("")), doTrim = true, doLower = false)

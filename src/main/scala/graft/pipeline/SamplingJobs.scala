@@ -84,10 +84,9 @@ object SamplingJobs {
     *     on a 90%-one-host skew fixture). */
   def hostQuota(df: DataFrame, host: Column, key: Column, k: Int): DataFrame = {
     require(k > 0, s"non-positive host quota $k")
-    graft.plans.TopKMinAgg.register(df.sparkSession)
     val winners = df
       .groupBy(host.as("__hq_host"))
-      .agg(call_function("topk_min",
+      .agg(graft.plans.TopKMinAgg.topk_min(
         md5(key.cast("string").cast("binary")), key, lit(k)).as("__top"))
       .select(col("__hq_host"),
         posexplode(col("__top")).as(Seq("__pos", "__e")))

@@ -48,7 +48,6 @@ object SubstrDedup {
     * form computes the same pairs but O(len²): every `substr` re-scans
     * the UTF8String's variable-width bytes from position 0). */
   private def windows(docs: DataFrame, w: Int): DataFrame = {
-    graft.plans.TextHashExprs.register(docs.sparkSession)
     val t = coalesce(col("text"), lit(""))
     docs.select(col("doc_id"),
         explode(graft.plans.TextHashExprs.window_hashes(t, lit(w))).as("win"))

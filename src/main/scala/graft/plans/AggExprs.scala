@@ -2,7 +2,7 @@ package graft.plans
 
 import java.io.{ByteArrayOutputStream, DataOutputStream}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeProjection, UnsafeRow}
@@ -153,5 +153,7 @@ object TopKMinAgg {
   def fromExprs(exprs: Seq[Expression]): TopKMinAgg =
     TopKMinAgg(exprs(0), exprs(1), exprs(2))
 
-  def register(spark: SparkSession): Unit = NativeFunctions.register(spark, this)
+  /** `topk_min(rank, key, k)`: the `k` smallest (rank, key) pairs of a group. */
+  def topk_min(rank: Column, key: Column, k: Column): Column =
+    NativeFunctions.column("topk_min", rank, key, k)
 }

@@ -1,7 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.Column
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.pipeline.CharsetOps
@@ -10,8 +9,7 @@ import graft.pipeline.CharsetOps
   * kernels (BOM/UTF-8/windows-1252 sniff, transcode, ftfy-style mojibake
   * repair) so crawl-byte decoding runs inside whole-stage codegen on the
   * ingest path — same tiering as [[UrlExprs]]: pure shared kernel, thin
-  * UTF8String/byte[] shim, registered per-session and via
-  * [[GraftExtensions]]. */
+  * UTF8String/byte[] shim, one [[NativeFunctions]] entry each. */
 object CharsetExprs {
   /** `charset_sniff(bytes)` — detected encoding label of entity bytes. */
   def sniffB(b: Array[Byte]): UTF8String =
@@ -31,15 +29,11 @@ object CharsetExprs {
   def fixB(s: UTF8String): UTF8String =
     UTF8String.fromString(CharsetOps.fixMojibake(s.toString))
 
-  /** Register all five for SQL/Column use in this session. */
-  def register(spark: SparkSession): Unit = NativeFunctions.register(spark, this)
-
-  /** Column-API forms (require [[register]] on the active session). */
-  def charset_sniff(c: Column): Column = call_function("charset_sniff", c)
-  def charset_decode(c: Column): Column = call_function("charset_decode", c)
+  def charset_sniff(c: Column): Column = NativeFunctions.column("charset_sniff", c)
+  def charset_decode(c: Column): Column = NativeFunctions.column("charset_decode", c)
   def charset_decode_as(c: Column, l: Column): Column =
-    call_function("charset_decode_as", c, l)
+    NativeFunctions.column("charset_decode_as", c, l)
   def charset_encode(c: Column, l: Column): Column =
-    call_function("charset_encode", c, l)
-  def fix_mojibake(c: Column): Column = call_function("fix_mojibake", c)
+    NativeFunctions.column("charset_encode", c, l)
+  def fix_mojibake(c: Column): Column = NativeFunctions.column("fix_mojibake", c)
 }

@@ -1,7 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.Column
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.extract.Cleaners
@@ -16,7 +15,6 @@ import graft.extract.Cleaners
   * Tungsten rows:
   *
   * {{{
-  *   CleanMarginIndexExpr.register(spark)
   *   df.select(CleanMarginIndexExpr.clean_margin_index($"page_text"))
   *   spark.sql("SELECT clean_margin_index(text) FROM t")
   * }}}
@@ -26,10 +24,6 @@ object CleanMarginIndexExpr {
   def evalUtf8(s: UTF8String): UTF8String =
     UTF8String.fromString(Cleaners.cleanPdfIndexArtifacts(s.toString))
 
-  /** Register `clean_margin_index` for SQL/Column use in this session. */
-  def register(spark: SparkSession): Unit = NativeFunctions.register(spark, this)
-
-  /** Column-API form (requires [[register]] on the active session). */
   def clean_margin_index(c: Column): Column =
-    call_function("clean_margin_index", c)
+    NativeFunctions.column("clean_margin_index", c)
 }

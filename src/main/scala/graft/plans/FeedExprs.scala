@@ -1,9 +1,8 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -41,8 +40,6 @@ object FeedExprs {
       InternalRow(u(e.title), u(e.link), u(e.ts))).asInstanceOf[Array[Any]])
   }
 
-  def register(spark: SparkSession): Unit = NativeFunctions.register(spark, this)
-
-  def feed_kind(c: Column): Column = call_function("feed_kind", c)
-  def feed_entries(c: Column): Column = call_function("feed_entries", c)
+  def feed_kind(c: Column): Column = NativeFunctions.column("feed_kind", c)
+  def feed_entries(c: Column): Column = NativeFunctions.column("feed_entries", c)
 }

@@ -1,23 +1,23 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode,
   FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.graft.ExprColumn
 import org.apache.spark.sql.types._
 
 /** One argument of a [[Scalar]] function: its Catalyst type (an array
   * type matches any `containsNull`) and whether it must be a literal. */
 final case class Arg(dataType: DataType, literal: Boolean = false)
 
-/** One SQL function of the engine: its name, the object whose `register`
-  * installs it, and the expression it builds from its arguments. */
+/** One SQL function of the engine: its name and the expression it builds
+  * from its arguments. */
 sealed trait NativeFunction {
   def name: String
-  def owner: AnyRef
   def expressionClass: Class[_ <: Expression]
   def build(children: Seq[Expression]): Expression
   def info: ExpressionInfo = new ExpressionInfo(expressionClass.getName, name)
@@ -42,7 +42,7 @@ final case class Scalar(
 
 /** A function whose expression has its own class and codegen. */
 final case class Bespoke(
-    name: String, owner: AnyRef, expressionClass: Class[_ <: Expression],
+    name: String, expressionClass: Class[_ <: Expression],
     builder: Seq[Expression] => Expression) extends NativeFunction {
   def build(children: Seq[Expression]): Expression = builder(children)
 }
@@ -52,10 +52,13 @@ trait BespokeName extends Expression {
   override def prettyName: String = NativeFunctions.bespokeName(getClass)
 }
 
-/** Every native Catalyst function of the engine, one entry each. Both
-  * install paths read this table: [[GraftExtensions]] (session
-  * extensions) and each kernel object's `register(spark)`, which installs
-  * the entries it owns. Each function's reasoning and exact semantics are
+/** Every native Catalyst function of the engine, one entry each, and the
+  * only place that knows how a name becomes an expression. The Column
+  * builders call [[column]], which builds the entry's expression
+  * directly, so a builder's column resolves in any session with nothing
+  * installed. SQL text finds the names in a session's function registry,
+  * installed from this table by [[GraftExtensions]] (session extensions)
+  * or by [[register]]. Each function's reasoning and exact semantics are
   * documented on its kernel method. */
 object NativeFunctions {
 
@@ -75,7 +78,7 @@ object NativeFunctions {
     Scalar("clean_margin_index", CleanMarginIndexExpr, "evalUtf8", Seq(str), StringType),
 
     // text-hash / dedup family (TextHashExprs)
-    Bespoke("simhash16", TextHashExprs, classOf[SimHash16Expr], e => SimHash16Expr(e.head)),
+    Bespoke("simhash16", classOf[SimHash16Expr], e => SimHash16Expr(e.head)),
     Scalar("minhash_sig", TextHashExprs, "minhashSig", Seq(strs, litInt),
       ArrayType(StringType, containsNull = true)),
     Scalar("shingle_minmax", TextHashExprs, "shingleMinMax", Seq(str, litInt),
@@ -134,26 +137,29 @@ object NativeFunctions {
     Scalar("gopher_signals", QualityExprs, "gopherSignals", Seq(str),
       struct(nullable = false, "word_count" -> LongType, "mean_raw" -> DoubleType,
         "symbol_raw" -> DoubleType, "alpha_raw" -> DoubleType, "n_stopwords" -> LongType)),
-    Bespoke("vec_dot", VecExprs, classOf[VecDotExpr], e => VecDotExpr(e(0), e(1))),
-    Bespoke("topk_min", TopKMinAgg, classOf[TopKMinAgg], TopKMinAgg.fromExprs))
+    Bespoke("vec_dot", classOf[VecDotExpr], e => VecDotExpr(e(0), e(1))),
+    Bespoke("topk_min", classOf[TopKMinAgg], TopKMinAgg.fromExprs))
 
-  private lazy val scalars: Map[String, Scalar] =
-    all.collect { case s: Scalar => s.name -> s }.toMap
+  private lazy val byName: Map[String, NativeFunction] = all.map(f => f.name -> f).toMap
 
   private lazy val bespokeNames: Map[Class[_], String] =
     all.collect { case b: Bespoke => b.expressionClass -> b.name }.toMap
 
-  def scalar(name: String): Scalar = scalars(name)
+  def scalar(name: String): Scalar = byName(name).asInstanceOf[Scalar]
   def bespokeName(c: Class[_]): String = bespokeNames(c)
 
-  /** Install the entries `owner` holds into this session. A name already
+  /** The column of entry `name` applied to `args`: the entry's own
+    * expression, so it needs no function registry. */
+  def column(name: String, args: Column*): Column =
+    ExprColumn(byName(name).build(args.map(ExprColumn.expr)))
+
+  /** Install every entry into this session, for SQL text. A name already
     * registered (by an earlier call or by [[GraftExtensions]]) is left as
-    * it is: query builders call this defensively, and each replacement
-    * would log a `SimpleFunctionRegistry` WARN. */
-  def register(spark: SparkSession, owner: AnyRef): Unit = {
+    * it is: each replacement would log a `SimpleFunctionRegistry` WARN. */
+  def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     all.foreach { f =>
-      if ((f.owner eq owner) && !reg.functionExists(FunctionIdentifier(f.name)))
+      if (!reg.functionExists(FunctionIdentifier(f.name)))
         reg.registerFunction(FunctionIdentifier(f.name), f.info, f.build _)
     }
   }

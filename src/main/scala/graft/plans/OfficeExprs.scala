@@ -1,7 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.Column
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.pipeline.OfficeText
@@ -23,9 +22,6 @@ object OfficeExprs {
     if (t == null) null else UTF8String.fromString(t)
   }
 
-  def register(spark: SparkSession): Unit = NativeFunctions.register(spark, this)
-
-  /** Column-API forms (require [[register]] on the active session). */
-  def office_kind(c: Column): Column = call_function("office_kind", c)
-  def office_text(c: Column): Column = call_function("office_text", c)
+  def office_kind(c: Column): Column = NativeFunctions.column("office_kind", c)
+  def office_text(c: Column): Column = NativeFunctions.column("office_text", c)
 }

@@ -1,9 +1,8 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.pipeline.PiiOps
@@ -62,9 +61,6 @@ object PiiExprs {
       UTF8String.fromString(PiiOps.redact(s))))
   }
 
-  def register(spark: SparkSession): Unit = NativeFunctions.register(spark, this)
-
-  /** Column-API form (requires [[register]] on the active session). */
-  def pii_redact(c: Column): Column = call_function("pii_redact", c)
-  def pii_stats(c: Column): Column = call_function("pii_stats", c)
+  def pii_redact(c: Column): Column = NativeFunctions.column("pii_redact", c)
+  def pii_stats(c: Column): Column = NativeFunctions.column("pii_stats", c)
 }

@@ -1,9 +1,8 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.unsafe.types.UTF8String
 
 object QualityExprs {
@@ -152,8 +151,5 @@ object QualityExprs {
       nTok, meanRaw, symRaw, alphaRaw, java.lang.Long.bitCount(stopMask.toLong).toLong))
   }
 
-  def register(spark: SparkSession): Unit = NativeFunctions.register(spark, this)
-
-  /** Column-API form (requires [[register]] on the active session). */
-  def gopher_signals(c: Column): Column = call_function("gopher_signals", c)
+  def gopher_signals(c: Column): Column = NativeFunctions.column("gopher_signals", c)
 }

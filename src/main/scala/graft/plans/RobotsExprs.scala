@@ -1,7 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.Column
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.pipeline.RobotsOps
@@ -9,8 +8,8 @@ import graft.pipeline.RobotsOps
 /** Native codegen'd column forms of the [[graft.pipeline.RobotsOps]]
   * RFC 9309 evaluator, so robots gating runs inside whole-stage codegen
   * on the full-corpus URL path (the same tiering as [[UrlExprs]]): pure
-  * shared kernel, thin UTF8String shims, per-session + extension
-  * registration. The kernel's bounded (robots, agent) policy cache makes
+  * shared kernel, thin UTF8String shims, one [[NativeFunctions]] entry
+  * each. The kernel's bounded (robots, agent) policy cache makes
   * the per-row cost a cached-rule scan — one robots.txt is shared by
   * every URL of its site. */
 object RobotsExprs {
@@ -23,12 +22,8 @@ object RobotsExprs {
     RobotsOps.crawlDelay(r.toString, a.toString)
       .map(java.lang.Double.valueOf).orNull
 
-  /** Register both for SQL/Column use in this session. */
-  def register(spark: SparkSession): Unit = NativeFunctions.register(spark, this)
-
-  /** Column-API forms (require [[register]] on the active session). */
   def robots_allowed(robots: Column, agent: Column, path: Column): Column =
-    call_function("robots_allowed", robots, agent, path)
+    NativeFunctions.column("robots_allowed", robots, agent, path)
   def robots_crawl_delay(robots: Column, agent: Column): Column =
-    call_function("robots_crawl_delay", robots, agent)
+    NativeFunctions.column("robots_crawl_delay", robots, agent)
 }

@@ -8,7 +8,6 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -495,30 +494,32 @@ object TextHashExprs {
     new GenericArrayData(out)
   }
 
-  def register(spark: SparkSession): Unit = NativeFunctions.register(spark, this)
+  /** Install every [[NativeFunctions]] entry for SQL text; the Column
+    * builders below need no install. */
+  def register(spark: SparkSession): Unit = NativeFunctions.register(spark)
 
-  def simhash16(tokens: Column): Column = call_function("simhash16", tokens)
+  def simhash16(tokens: Column): Column = NativeFunctions.column("simhash16", tokens)
   def minhash_sig(tokens: Column, numHashes: Column): Column =
-    call_function("minhash_sig", tokens, numHashes)
+    NativeFunctions.column("minhash_sig", tokens, numHashes)
   def shingle_minmax(nt: Column, width: Column): Column =
-    call_function("shingle_minmax", nt, width)
+    NativeFunctions.column("shingle_minmax", nt, width)
   def char_ngrams(nt: Column, n: Column): Column =
-    call_function("char_ngrams", nt, n)
+    NativeFunctions.column("char_ngrams", nt, n)
   def window_hashes(t: Column, w: Column): Column =
-    call_function("window_hashes", t, w)
+    NativeFunctions.column("window_hashes", t, w)
   def windows_at(t: Column, ps: Column, w: Column): Column =
-    call_function("windows_at", t, ps, w)
+    NativeFunctions.column("windows_at", t, ps, w)
   def remove_intervals(t: Column, ps: Column, w: Column): Column =
-    call_function("remove_intervals", t, ps, w)
-  def top_2gram(nt: Column): Column = call_function("top_2gram", nt)
+    NativeFunctions.column("remove_intervals", t, ps, w)
+  def top_2gram(nt: Column): Column = NativeFunctions.column("top_2gram", nt)
   def token_shingles_md5(raw: Column, k: Column): Column =
-    call_function("token_shingles_md5", raw, k)
-  def norm_md5(raw: Column): Column = call_function("norm_md5", raw)
+    NativeFunctions.column("token_shingles_md5", raw, k)
+  def norm_md5(raw: Column): Column = NativeFunctions.column("norm_md5", raw)
   def ws_normalize(raw: Column, doTrim: Boolean, doLower: Boolean): Column =
-    call_function("ws_normalize", raw,
+    NativeFunctions.column("ws_normalize", raw,
       org.apache.spark.sql.functions.lit(doTrim),
       org.apache.spark.sql.functions.lit(doLower))
-  def ascii_tokens(raw: Column): Column = call_function("ascii_tokens", raw)
+  def ascii_tokens(raw: Column): Column = NativeFunctions.column("ascii_tokens", raw)
 }
 
 /** NULL on an empty token array: a zero-token doc has no defined simhash —

@@ -2,8 +2,7 @@ package graft.plans
 
 import java.text.Normalizer
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.Column
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Unicode normalization (UAX #15) as native codegen'd expressions — the
@@ -60,9 +59,7 @@ object UnicodeNorm {
     UTF8String.fromString(Normalizer.normalize(sb.toString, Normalizer.Form.NFC))
   }
 
-  def register(spark: SparkSession): Unit = NativeFunctions.register(spark, this)
-
   def unicode_norm(c: Column, form: String): Column =
-    call_function("unicode_norm", c, org.apache.spark.sql.functions.lit(form))
-  def norm_key(c: Column): Column = call_function("norm_key", c)
+    NativeFunctions.column("unicode_norm", c, org.apache.spark.sql.functions.lit(form))
+  def norm_key(c: Column): Column = NativeFunctions.column("norm_key", c)
 }

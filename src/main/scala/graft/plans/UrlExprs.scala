@@ -1,7 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.Column
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.pipeline.UrlOps
@@ -11,7 +10,7 @@ import graft.pipeline.UrlOps
   * reversal), so crawl-key canonicalization participates in whole-stage
   * codegen on full-corpus paths — the same tiering as
   * [[CleanMarginIndexExpr]]: pure shared kernel, thin UTF8String shim,
-  * registered both per-session and via [[GraftExtensions]]. */
+  * one [[NativeFunctions]] entry each. */
 object UrlExprs {
   /** `url_canonicalize(url)` — RFC 3986 §6 + crawl-convention canonical form. */
   def canonUtf8(s: UTF8String): UTF8String =
@@ -29,12 +28,9 @@ object UrlExprs {
     if (h == null) null else UTF8String.fromString(h)
   }
 
-  /** Register all four for SQL/Column use in this session. */
-  def register(spark: SparkSession): Unit = NativeFunctions.register(spark, this)
-
-  /** Column-API forms (require [[register]] on the active session). */
-  def url_canonicalize(c: Column): Column = call_function("url_canonicalize", c)
-  def url_registrable_domain(c: Column): Column = call_function("url_registrable_domain", c)
-  def url_host_reversed(c: Column): Column = call_function("url_host_reversed", c)
-  def url_host(c: Column): Column = call_function("url_host", c)
+  def url_canonicalize(c: Column): Column = NativeFunctions.column("url_canonicalize", c)
+  def url_registrable_domain(c: Column): Column =
+    NativeFunctions.column("url_registrable_domain", c)
+  def url_host_reversed(c: Column): Column = NativeFunctions.column("url_host_reversed", c)
+  def url_host(c: Column): Column = NativeFunctions.column("url_host", c)
 }

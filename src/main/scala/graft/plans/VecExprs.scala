@@ -1,11 +1,10 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** Native dot product over numeric array columns.
@@ -43,10 +42,7 @@ object VecExprs {
     s
   }
 
-  def register(spark: SparkSession): Unit = NativeFunctions.register(spark, this)
-
-  /** Column-API form (requires [[register]] on the active session). */
-  def vec_dot(a: Column, b: Column): Column = call_function("vec_dot", a, b)
+  def vec_dot(a: Column, b: Column): Column = NativeFunctions.column("vec_dot", a, b)
 }
 
 /** `vec_dot(a, b)` — exact fold-left dot product as double; NULL on

@@ -115,7 +115,6 @@ object EventStreams {
     * ingest timestamp). */
   def streamingExactDedup(spark: SparkSession, docsPath: String,
                           watermark: String = "1 hour"): DataFrame = {
-    graft.plans.TextHashExprs.register(spark)
     spark.readStream
       .schema(docSchema)
       .parquet(docsPath)

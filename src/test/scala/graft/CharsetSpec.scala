@@ -164,7 +164,6 @@ class CharsetSpec extends AnyFunSuite {
   // ------------------------------------------------- expressions via a plan
 
   test("native expressions match the kernel through a real plan") {
-    CharsetExprs.register(spark)
     val rows = Seq(
       ("utf-8", "body — café №"),
       ("utf-16le", "wide • body"),
@@ -194,7 +193,7 @@ class CharsetSpec extends AnyFunSuite {
   }
 
   test("expressions are null-safe and total on empty input") {
-    CharsetExprs.register(spark)
+    graft.plans.NativeFunctions.register(spark)
     val df = spark.sql(
       "SELECT charset_sniff(CAST(NULL AS BINARY)) AS a, " +
         "charset_decode(CAST('' AS BINARY)) AS b, " +

@@ -4,6 +4,11 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.plans.FeedExprs.{feed_entries, feed_kind}
+import graft.plans.OfficeExprs.{office_kind, office_text}
+import graft.plans.UnicodeNorm.unicode_norm
+import graft.plans.UrlExprs.{url_host, url_registrable_domain}
+
 /** Null-result discipline under WHOLE-STAGE CODEGEN for the native
   * expressions whose kernels return null on NON-NULL input (unrecognized
   * container / not-a-feed / unknown normalization form / not a
@@ -33,15 +38,14 @@ class CodegenNullSpec extends AnyFunSuite {
   }
 
   test("office_kind/office_text yield NULL (not an NPE) for junk bytes in codegen") {
-    graft.plans.OfficeExprs.register(spark)
     // junk bytes for even ids, null child for odd — both must come out null,
     // and the downstream md5/length must not NPE on the non-null-child rows
     val df = spark.range(8).select(
         when(col("id") % 2 === 0, lit(Array[Byte](1, 2, 3, 4)))
           .otherwise(lit(null).cast("binary")).as("b"))
       .select(
-        call_function("office_kind", col("b")).as("k"),
-        call_function("office_text", col("b")).as("t"))
+        office_kind(col("b")).as("k"),
+        office_text(col("b")).as("t"))
       .select(col("k"), col("t"), md5(col("k")).as("mk"), length(col("t")).as("lt"))
     assertCodegen(df)
     val rows = df.collect()
@@ -50,22 +54,20 @@ class CodegenNullSpec extends AnyFunSuite {
   }
 
   test("feed_kind yields NULL for non-feed text in codegen") {
-    graft.plans.FeedExprs.register(spark)
     val df = spark.range(6).select(
         concat(lit("plain text, not xml #"), col("id")).as("s"))
-      .select(call_function("feed_kind", col("s")).as("k"))
+      .select(feed_kind(col("s")).as("k"))
       .select(col("k"), md5(col("k")).as("mk"))
     assertCodegen(df)
     df.collect().foreach { r => assert(r.isNullAt(0) && r.isNullAt(1)) }
   }
 
   test("unicode_norm yields NULL for an unknown form in codegen") {
-    graft.plans.UnicodeNorm.register(spark)
     val df = spark.range(6).select(
         concat(lit("café #"), col("id")).as("s"))
       .select(
-        call_function("unicode_norm", col("s"), lit("NFX")).as("bad"),
-        call_function("unicode_norm", col("s"), lit("NFC")).as("good"))
+        unicode_norm(col("s"), "NFX").as("bad"),
+        unicode_norm(col("s"), "NFC").as("good"))
       .select(col("bad"), md5(col("bad")).as("mb"), col("good"))
     assertCodegen(df)
     df.collect().foreach { r =>
@@ -75,23 +77,21 @@ class CodegenNullSpec extends AnyFunSuite {
   }
 
   test("url_host yields NULL for a non-hierarchical URL in codegen") {
-    graft.plans.UrlExprs.register(spark)
     val urls = spark.range(6).select(concat(lit("mailto:a"), col("id")).as("u"))
     // a bare projection: the row writer itself must see the null
-    val bare = urls.select(call_function("url_host", col("u")).as("h"))
+    val bare = urls.select(url_host(col("u")).as("h"))
     assertCodegen(bare)
     bare.collect().foreach { r => assert(r.isNullAt(0)) }
     val domain = urls.select(
-      call_function("url_registrable_domain", call_function("url_host", col("u"))).as("d"))
+      url_registrable_domain(url_host(col("u"))).as("d"))
     assertCodegen(domain)
     domain.collect().foreach { r => assert(r.isNullAt(0)) }
   }
 
   test("feed_entries yields NULL for non-feed text of a non-nullable column in codegen") {
-    graft.plans.FeedExprs.register(spark)
     val df = spark.range(6).select(
         concat(lit("plain text, not xml #"), col("id")).as("s"))
-      .select(call_function("feed_entries", col("s")).as("e"))
+      .select(feed_entries(col("s")).as("e"))
       .select(col("e"), size(col("e")).as("n"))
     assertCodegen(df)
     df.collect().foreach { r => assert(r.isNullAt(0) && r.isNullAt(1)) }

@@ -35,7 +35,6 @@ class DecontaminateSpec extends AnyFunSuite {
   test("token_shingles_md5 kernel == composed normalize/split/slice/join/md5 form") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    graft.plans.TextHashExprs.register(spark)
     // raw inputs incl. messy whitespace (the kernel normalizes in its own
     // byte walk and must match the trim(regexp_replace(\s+))-then-split
     // composed chain), repeats, CJK tokens, exactly-k / fewer-than-k

@@ -104,7 +104,6 @@ class DedupSpec extends AnyFunSuite {
   test("ngram shingle kernel path == composed transform/substr form, edge docs included") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    graft.plans.TextHashExprs.register(spark)
     // the exact expression swap inside ngramJaccardCapped: char_ngrams for
     // len >= n, the single short window for len < n (old
     // sequence(1, greatest(len-2, 1)) semantics), null propagation

@@ -21,7 +21,6 @@ class ExprSinkSpec extends AnyFunSuite {
 
   test("clean_margin_index expression equals the kernel function (Column + SQL)") {
     import spark.implicits._
-    CleanMarginIndexExpr.register(spark)
 
     val docs = DocsSource.fixtureJson(spark, "src/test/resources/fixtures/docs/*/*.json")
     val texts = docs.map(d => ExtractAll.fullText(d)).toDF("raw")
@@ -39,6 +38,7 @@ class ExprSinkSpec extends AnyFunSuite {
       "no fixture was cleaned — expression not exercised")
 
     // SQL form
+    graft.plans.NativeFunctions.register(spark)
     val viaSql = spark.sql(
       "SELECT clean_margin_index(raw) AS cleaned, raw FROM raw_texts").collect()
     viaSql.foreach { r =>

@@ -2,14 +2,18 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.extract.Cleaners
+import graft.pipeline.{DedupJobs, LineDedup, LmQuality}
 import graft.plans._
 
-/** Both install paths of the native functions: a session built with
-  * GraftExtensions, and a plain session after each kernel object's
-  * `register`, must resolve every [[NativeFunctions]] entry. */
+/** How a native function reaches a session. For SQL text, both install
+  * paths must resolve every [[NativeFunctions]] entry: a session built
+  * with GraftExtensions, and a plain session after one
+  * `NativeFunctions.register`. The Column builders need no install: their
+  * queries run in a session that nothing has registered. */
 class ExtensionsSpec extends AnyFunSuite {
 
   /** Every table entry resolves to its own expression class. */
@@ -77,16 +81,49 @@ class ExtensionsSpec extends AnyFunSuite {
       def exists(name: String): Boolean =
         plain.sessionState.functionRegistry.functionExists(FunctionIdentifier(name))
       NativeFunctions.all.foreach(f => assert(!exists(f.name), f.name))
-      Seq(CleanMarginIndexExpr.register _, TextHashExprs.register _, UrlExprs.register _,
-        RobotsExprs.register _, CharsetExprs.register _, PiiExprs.register _,
-        OfficeExprs.register _, UnicodeNorm.register _, FeedExprs.register _,
-        QualityExprs.register _, VecExprs.register _, TopKMinAgg.register _)
-        .foreach(_(plain))
+      NativeFunctions.register(plain)
       assertResolvesAll(plain)
     } finally {
       plain.stop()
       SparkSession.clearActiveSession()
       SparkSession.clearDefaultSession()
     }
+  }
+
+  test("the Column builders run in a new session that nothing has registered") {
+    val base = SparkSession.builder()
+      .master("local[2]")
+      .appName("graft-extensions-spec-builders")
+      .config("spark.sql.shuffle.partitions", "2")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    val fresh = base.newSession()
+    val sfDir = "/root/testdata/sf0.001"
+    def rows(s: SparkSession, q: String): Seq[String] =
+      SparkEntry.queries(q)(s, sfDir).collect().map(_.toString).sorted.toSeq
+    try {
+      Seq("q_ann_cosine", "q_dedup_embedding").foreach { q =>
+        val got = rows(fresh, q)
+        assert(got.nonEmpty, q)
+        assert(got == rows(base, q), q)
+      }
+
+      import fresh.implicits._
+      val texts = Seq("Hello,  World 42 ", " tabs\there ", "ÀB c")
+      val got = texts.toDF("t").select(
+          DedupJobs.tokens(col("t")).as("toks"),
+          LmQuality.normalized(col("t")).as("norm"),
+          LineDedup.lineKey(col("t")).as("key"),
+          md5(lower(trim(regexp_replace(col("t"), "\\s+", " ")))).as("want_key"))
+        .collect()
+      assert(got.map(_.getSeq[String](0)).toSeq ==
+        Seq(Seq("hello", "world", "42"), Seq("tabs", "here"), Seq("b", "c")))
+      assert(got.map(_.getString(1)).toSeq == Seq("hello, world 42", "tabs here", "àb c"))
+      got.foreach(r => assert(r.getString(2) == r.getString(3), r))
+
+      val reg = fresh.sessionState.functionRegistry
+      NativeFunctions.all.foreach(f =>
+        assert(!reg.functionExists(FunctionIdentifier(f.name)), f.name))
+    } finally DedupJobs.releaseCached()
   }
 }

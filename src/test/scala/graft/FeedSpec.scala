@@ -99,7 +99,6 @@ class FeedSpec extends AnyFunSuite {
   }
 
   test("expressions match the kernel through a real plan with explode") {
-    FeedExprs.register(spark)
     import spark.implicits._
     val rows = Seq(
       (0L, FeedText.encodeRss(es)),

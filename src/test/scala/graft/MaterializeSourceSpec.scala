@@ -3,14 +3,22 @@ package graft
 import java.io.File
 
 import scala.io.Source
+import scala.util.matching.Regex
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Source check: `graft.pipeline.Materialize` is the one owner of every
-  * materialised intermediate. Engine code cuts, persists and frees through
-  * it, so `releaseCached` can free everything the engine made; a bare
-  * `localCheckpoint(`, `.persist(` or `.cache()` anywhere else in
-  * `src/main/scala` would escape that. Comment lines are ignored. */
+/** Source checks over `src/main/scala`, comment lines ignored.
+  *
+  * `graft.pipeline.Materialize` is the one owner of every materialised
+  * intermediate. Engine code cuts, persists and frees through it, so
+  * `releaseCached` can free everything the engine made; a bare
+  * `localCheckpoint(`, `.persist(` or `.cache()` anywhere else would
+  * escape that.
+  *
+  * No engine code calls a native function by name: `call_function(`
+  * resolves the name in the function registry of the session that
+  * analyses the plan, and fails in a session that nothing registered.
+  * The `graft.plans` builders build the expression instead. */
 class MaterializeSourceSpec extends AnyFunSuite {
 
   private val bare = """localCheckpoint\(|\.persist\(|\.cache\(\)""".r
@@ -21,16 +29,26 @@ class MaterializeSourceSpec extends AnyFunSuite {
       if (f.isDirectory) scalaFiles(f) else if (f.getName.endsWith(".scala")) Seq(f) else Nil)
   }
 
+  private lazy val sources = scalaFiles(new File("src/main/scala"))
+
+  /** `file:line: code` of every code line matching `rule` in a file
+    * `exempt` does not name. */
+  private def scan(rule: Regex, exempt: String => Boolean = _ => false): Seq[String] = for {
+    f <- sources.filterNot(f => exempt(f.getName)).sortBy(_.getPath)
+    (line, i) <- { val src = Source.fromFile(f, "UTF-8"); try src.getLines().toList finally src.close() }.zipWithIndex
+    code = line.trim
+    if !(code.startsWith("//") || code.startsWith("*") || code.startsWith("/*"))
+    if rule.findFirstIn(line.replaceAll("//.*$", "")).nonEmpty
+  } yield s"${f.getName}:${i + 1}: $code"
+
   test("only Materialize checkpoints or persists in engine code") {
-    val sources = scalaFiles(new File("src/main/scala"))
-    val found = for {
-      f <- sources.filter(_.getName != "Materialize.scala").sortBy(_.getPath)
-      (line, i) <- { val src = Source.fromFile(f, "UTF-8"); try src.getLines().toList finally src.close() }.zipWithIndex
-      code = line.trim
-      if !(code.startsWith("//") || code.startsWith("*") || code.startsWith("/*"))
-      if bare.findFirstIn(line.replaceAll("//.*$", "")).nonEmpty
-    } yield s"${f.getName}:${i + 1}: $code"
+    val found = scan(bare, _ == "Materialize.scala")
     assert(found.isEmpty, found.mkString(s"${found.size} materialised outside Materialize:\n", "\n", ""))
     assert(sources.exists(_.getName == "Materialize.scala"))
+  }
+
+  test("no engine code calls a native function by name") {
+    val found = scan("""call_function\(""".r)
+    assert(found.isEmpty, found.mkString(s"${found.size} call_function sites:\n", "\n", ""))
   }
 }

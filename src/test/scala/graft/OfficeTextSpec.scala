@@ -93,7 +93,6 @@ class OfficeTextSpec extends AnyFunSuite {
   }
 
   test("expressions match the kernel through a real plan") {
-    OfficeExprs.register(spark)
     import spark.implicits._
     val rows = Seq(
       (1L, OfficeText.encodeDocx("docx body\nsecond & line")),

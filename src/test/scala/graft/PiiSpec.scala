@@ -88,7 +88,6 @@ class PiiSpec extends AnyFunSuite {
   // ------------------------------------------------- expression via a plan
 
   test("pii_redact expression matches the kernel through a real plan") {
-    PiiExprs.register(spark)
     import spark.implicits._
     val texts = Seq(
       "u9@h.io pays 4111111111111111 from 10.0.0.1 call 555-867-5309",
@@ -102,13 +101,12 @@ class PiiSpec extends AnyFunSuite {
   }
 
   test("expression is null-safe") {
-    PiiExprs.register(spark)
+    graft.plans.NativeFunctions.register(spark)
     val r = spark.sql("SELECT pii_redact(CAST(NULL AS STRING)) AS x").collect()(0)
     assert(r.isNullAt(0))
   }
 
   test("pii_stats kernel == composed builtin counts + luhn filter + redact md5") {
-    PiiExprs.register(spark)
     import spark.implicits._
     val texts = Seq(
       "u9@h.io pays 4111111111111111 from 10.0.0.1 call 555-867-5309",
@@ -139,6 +137,7 @@ class PiiSpec extends AnyFunSuite {
       assert(x == y, s"doc $i: $x != $y")
     }
     // null-safe
+    graft.plans.NativeFunctions.register(spark)
     val r = spark.sql("SELECT pii_stats(CAST(NULL AS STRING)) AS x").collect()(0)
     assert(r.isNullAt(0))
   }

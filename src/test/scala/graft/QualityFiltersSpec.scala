@@ -118,7 +118,6 @@ class QualityFiltersSpec extends AnyFunSuite {
       nStop.cast("long").as("ns"), passes.as("p"))
     // gopherSignals rounds for output; compare the UNROUNDED kernel
     // struct (what `passes` consumes) against the unrounded composed form
-    graft.plans.QualityExprs.register(spark)
     val kraw = df.select(col("doc_id"),
         graft.plans.QualityExprs.gopher_signals(coalesce(col("text"), lit(""))).as("g"))
       .select(col("doc_id"), col("g.word_count").as("wc"),

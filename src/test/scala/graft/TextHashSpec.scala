@@ -21,7 +21,6 @@ class TextHashSpec extends AnyFunSuite {
 
   private def df = {
     import spark.implicits._
-    TextHashExprs.register(spark)
     Seq(
       (1L, "the quick brown fox jumps over the lazy dog 42"),
       (2L, "short"),
@@ -77,7 +76,6 @@ class TextHashSpec extends AnyFunSuite {
 
   test("minhash_sig over heavy repeats == over the distinct set == the builtin form") {
     import spark.implicits._
-    TextHashExprs.register(spark)
     // hashing each distinct token once must not change any minimum
     val r = new scala.util.Random(4242)
     val vocab = Seq("the", "court", "appeal", "hk", "2021", "plaintiff", "x")
@@ -241,7 +239,6 @@ class TextHashSpec extends AnyFunSuite {
   test("ws_normalize equals the regexp_replace/trim/lower compositions, all flags") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    graft.plans.TextHashExprs.register(spark)
     // traps: case-fold specials (ſ K İ Σ incl. final-sigma position),
     // non-ASCII whitespace (NBSP must NOT collapse), leading/trailing and
     // interior runs of every Java-\s char, all-whitespace, empty
@@ -269,6 +266,7 @@ class TextHashSpec extends AnyFunSuite {
           s"'${r.getString(1)}' != '${r.getString(2)}'"))
     }
     // null propagation
+    graft.plans.NativeFunctions.register(spark)
     val nr = spark.sql("SELECT ws_normalize(CAST(NULL AS STRING), true, true) AS x")
       .collect()(0)
     assert(nr.isNullAt(0))
@@ -277,7 +275,6 @@ class TextHashSpec extends AnyFunSuite {
   test("ascii_tokens equals regexp_extract_all(lower(text), '[a-z0-9]+')") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    graft.plans.TextHashExprs.register(spark)
     // traps: İ lowers to "i̇" (its ASCII 'i' must tokenize), ſ -> 's',
     // K (Kelvin) -> 'k', digits, punctuation runs, CJK, empty
     val texts = Seq(
@@ -296,6 +293,7 @@ class TextHashSpec extends AnyFunSuite {
       .collect()
     rows.foreach(r => assert(r.getSeq[String](1) == r.getSeq[String](2),
       s"doc ${r.getLong(0)}: ${r.getSeq[String](1)} != ${r.getSeq[String](2)}"))
+    graft.plans.NativeFunctions.register(spark)
     val nr = spark.sql("SELECT ascii_tokens(CAST(NULL AS STRING)) AS x").collect()(0)
     assert(nr.isNullAt(0))
   }
@@ -303,7 +301,6 @@ class TextHashSpec extends AnyFunSuite {
   test("norm_md5 equals md5(trim(regexp_replace(text, \\s+, ' ')))") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    graft.plans.TextHashExprs.register(spark)
     val texts = Seq(
       "plain text here", "", " \t\n\f\r ", "  leading and  trailing\t",
       "早安\n世界  mixed\tascii", "nb sp stays", "x",
@@ -321,7 +318,6 @@ class TextHashSpec extends AnyFunSuite {
 
   test("top_2gram equals the explode/groupBy/window rank, ties included") {
     import spark.implicits._
-    TextHashExprs.register(spark)
     // fixture exercises: a dominating repeat, an all-unique tie (the
     // binary-smallest gram must win), single-token/empty null cases, and
     // multi-byte tokens

@@ -36,7 +36,6 @@ class TrainingPipelineSpec extends AnyFunSuite {
     * stage's checkpoint, crossJoined into one row. */
   private def crossJoinSummary(dir: String, nearDup: Boolean): DataFrame = {
     val docs = spark.read.parquet(s"$dir/documents.parquet")
-    TextHashExprs.register(spark)
     val dedAll = QualityFilters.gopherSignals(docs).filter(col("passes"))
       .withColumn("nthash", TextHashExprs.norm_md5(coalesce(col("text"), lit(""))))
       .withColumn("rn", row_number().over(

@@ -97,7 +97,6 @@ class UnicodeNormSpec extends AnyFunSuite {
   }
 
   test("expressions match the kernel through a real plan") {
-    UnicodeNorm.register(spark)
     import spark.implicits._
     val rows = Seq(
       (1L, "caf" + eAcuteD + " " + fiLig + "le"),

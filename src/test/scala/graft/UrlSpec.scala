@@ -113,7 +113,6 @@ class UrlSpec extends AnyFunSuite {
 
   test("native expressions equal the kernel through a real plan, incl. SQL") {
     import spark.implicits._
-    UrlExprs.register(spark)
     val urls = Seq(
       "HTTPS://WWW.Example.ORG:443/a/../b/%7euser?utm_source=x&b=2&a=1#f",
       "http://News.Site.com.hk:8080/zh/./p%20q?z&y=2",
@@ -122,6 +121,7 @@ class UrlSpec extends AnyFunSuite {
     val got = df.select(UrlExprs.url_canonicalize(col("u")).as("c")).as[String].collect()
     assert(got.toSeq == urls.map(UrlOps.canonicalize))
     val hosts = Seq("www.example.co.uk", "a.b.example.org", "10.0.0.1")
+    graft.plans.NativeFunctions.register(spark)
     val hg = hosts.toDF("h").selectExpr(
       "url_registrable_domain(h) AS d", "url_host_reversed(h) AS r")
       .as[(String, String)].collect()

@@ -26,7 +26,6 @@ class VecDotSpec extends AnyFunSuite {
 
   test("vec_dot == aggregate(zip_with) bit-for-bit on random float vectors") {
     import spark.implicits._
-    VecExprs.register(spark)
     val rnd = new scala.util.Random(11)
     val rows = (0 until 500).map { i =>
       val d = 1 + rnd.nextInt(96)
@@ -46,7 +45,6 @@ class VecDotSpec extends AnyFunSuite {
 
   test("vec_dot null semantics: mismatched lengths and null elements") {
     import spark.implicits._
-    VecExprs.register(spark)
     val df = Seq(
       (1, Seq[java.lang.Float](1f, 2f), Seq[java.lang.Float](3f, 4f)),
       (2, Seq[java.lang.Float](1f, 2f, 3f), Seq[java.lang.Float](1f, 1f)), // mismatch
@@ -69,7 +67,6 @@ class VecDotSpec extends AnyFunSuite {
 
   test("vec_dot handles double arrays and float/double mixes") {
     import spark.implicits._
-    VecExprs.register(spark)
     val df = Seq((1, Seq(1.5f, -2.25f), Seq(2.0, 4.0))).toDF("id", "a", "b")
       .repartition(2)
     val got = df.select(
