@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.extract.ExtractAll
 import graft.pipeline.DocsSource
 
@@ -9,13 +7,7 @@ import graft.pipeline.DocsSource
   * → records + out-span stats on stdout. `sbt "runMain graft.tools.DemoExtract"`. */
 object DemoExtract {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Queries.session()
     import spark.implicits._
 
     val path = args.headOption.getOrElse("src/test/resources/fixtures/docs/*/*.json")

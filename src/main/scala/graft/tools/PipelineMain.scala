@@ -1,8 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
-
 import graft.pipeline._
 
 /** End-to-end pipeline drive: synthetic corpus → skew-aware resumable
@@ -17,16 +14,7 @@ object PipelineMain {
     val outDir = if (args.length > 1) args(1) else "/tmp/graft_pipeline"
     val runId = if (args.length > 2) args(2) else "run1"
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-pipeline")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Queries.session()
 
     val t0 = System.nanoTime()
     val docs = CorpusGen.generate(spark, nDocs, 8)

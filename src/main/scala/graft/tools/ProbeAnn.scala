@@ -3,7 +3,7 @@ package graft.tools
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
@@ -40,12 +40,7 @@ object ProbeAnn {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val idx = args.lift(1).getOrElse(
       java.nio.file.Files.createTempDirectory("graft_ivf_demo").toString)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Queries.session()
 
     val jobs = new AtomicInteger(0)
     spark.sparkContext.addSparkListener(new SparkListener {

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Stage an m× documents table for heavy-family scale evidence
@@ -9,7 +8,7 @@ import org.apache.spark.sql.functions._
   * STRUCTURE scales linearly (pure copies would make every doc an m-way
   * duplicate — a quadratically harder dedup instance, not a bigger one).
   * Output dir holds `documents.parquet` only; use with
-  * `graft.BenchExtra <outDir> <heavy queries...>`.
+  * `graft.tools.Queries time <outDir> - <heavy queries...>`.
   *
   * Usage: `sbt "runMain graft.tools.ScaleCorpus <srcSfDir> <outDir> [m]"`. */
 object ScaleCorpus {
@@ -17,12 +16,7 @@ object ScaleCorpus {
     val src = args(0)
     val out = args(1)
     val m = if (args.length > 2) args(2).toInt else 4
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Queries.session()
     val docs = spark.read.parquet(s"$src/documents.parquet")
     val copies = (0 until m).map { c =>
       docs.select(

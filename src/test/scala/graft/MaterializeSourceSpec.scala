@@ -18,7 +18,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * No engine code calls a native function by name: `call_function(`
   * resolves the name in the function registry of the session that
   * analyses the plan, and fails in a session that nothing registered.
-  * The `graft.plans` builders build the expression instead. */
+  * The `graft.plans` builders build the expression instead.
+  *
+  * Tools run in `graft.tools.Queries.session()`, so they plan and run a
+  * query the way the frozen `Bench` times it; only `Bench` and `Verify`
+  * build their own session. */
 class MaterializeSourceSpec extends AnyFunSuite {
 
   private val bare = """localCheckpoint\(|\.persist\(|\.cache\(\)""".r
@@ -50,5 +54,11 @@ class MaterializeSourceSpec extends AnyFunSuite {
   test("no engine code calls a native function by name") {
     val found = scan("""call_function\(""".r)
     assert(found.isEmpty, found.mkString(s"${found.size} call_function sites:\n", "\n", ""))
+  }
+
+  test("only Queries, Bench and Verify build a SparkSession") {
+    val found = scan("""\.builder\(\)""".r, Set("Queries.scala", "Bench.scala", "Verify.scala"))
+    assert(found.isEmpty, found.mkString(s"${found.size} session builders:\n", "\n", ""))
+    assert(sources.exists(_.getName == "Queries.scala"))
   }
 }

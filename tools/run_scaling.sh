@@ -1,12 +1,13 @@
 #!/bin/bash
 # Two-parallelism scaling evidence (BASELINE.md): fresh JVM per level.
+# SPARK_GRAFT_CPUS=N tools/run_scaling.sh [nDocs]: local[N] vs local[4N].
 set -e
-N=${1:-8}
-DOCS=${2:-20000}
+N=${SPARK_GRAFT_CPUS:-8}
+DOCS=${1:-20000}
 cd "$(dirname "$0")/.."
 sbt -batch "runMain graft.tools.ScalingBench gen $DOCS" 2>&1 | grep -o '{.*}'
-OUT_N=$(sbt -batch "runMain graft.tools.ScalingBench run $N $DOCS" 2>&1 | grep -o '{"metric.*}')
-OUT_4N=$(sbt -batch "runMain graft.tools.ScalingBench run $((4*N)) $DOCS" 2>&1 | grep -o '{"metric.*}')
+OUT_N=$(SPARK_GRAFT_CPUS=$N sbt -batch "runMain graft.tools.ScalingBench run $DOCS" 2>&1 | grep -o '{"metric.*}')
+OUT_4N=$(SPARK_GRAFT_CPUS=$((4*N)) sbt -batch "runMain graft.tools.ScalingBench run $DOCS" 2>&1 | grep -o '{"metric.*}')
 echo "$OUT_N"
 echo "$OUT_4N"
 python3 - "$OUT_N" "$OUT_4N" <<'EOF'
