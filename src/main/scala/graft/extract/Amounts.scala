@@ -2,7 +2,7 @@ package graft.extract
 
 import java.util.Locale
 
-import graft.text.Py
+import graft.text.{Py, Scan}
 import graft.text.Py.{I, Rx}
 
 /** P23/P24/P25 — three-tier positional amount search, context-scored
@@ -15,57 +15,49 @@ object Amounts {
   final case class Candidate(amount: String, context: String, position: Int, fullTextLen: Int)
 
   def extract(text: String, language: String, segmentType: String): String =
-    if (segmentType == "claim") extractClaimEnhanced(text, language)
-    else extractJudgmentEnhanced(text, language)
+    extract(Scan(text), language, segmentType)
 
-  /** `_extract_claim_amount_enhanced` (`src/extractor.py:2135-2157`). */
-  def extractClaimEnhanced(text: String, language: String): String =
-    extractEnhanced(text, language, "claim")
-
-  /** `_extract_judgment_amount_enhanced` (`src/extractor.py:2159-2181`). */
-  def extractJudgmentEnhanced(text: String, language: String): String =
-    extractEnhanced(text, language, "judgment")
-
-  /** The cascade both enhanced extractors share: precise windows, then
-    * extended windows, then the whole text at threshold 1.0. */
-  private def extractEnhanced(text: String, language: String, amountType: String): String = {
-    val precise = extractPrecise(text, language, amountType)
+  /** `_extract_claim_amount_enhanced` and `_extract_judgment_amount_enhanced`
+    * (`src/extractor.py:2135-2181`): precise windows, then extended
+    * windows, then the whole text at threshold 1.0. */
+  def extract(scan: Scan, language: String, segmentType: String): String = {
+    val amountType = if (segmentType == "claim") "claim" else "judgment"
+    val precise = extractPrecise(scan, language, amountType)
     if (precise.nonEmpty) return precise
-    val extended = extractExtended(text, language, amountType)
+    val extended = extractExtended(scan, language, amountType)
     if (extended.nonEmpty) return extended
-    extractByKeywords(text, language, amountType, 1.0)
+    extractByKeywords(scan, language, amountType, 1.0)
   }
 
   /** `_extract_amounts_precise` (`src/extractor.py:2183-2210`): claim =
     * front 30% (≤10000) + back 30% (≥len−8000); judgment = back 40%
     * (≥len−12000); threshold 2.5. Floor-division arithmetic replicated. */
-  def extractPrecise(text: String, language: String, amountType: String): String = {
-    val n = text.length
+  def extractPrecise(scan: Scan, language: String, amountType: String): String = {
+    val n = scan.text.length
     if (amountType == "claim") {
       val front30End = math.min(n * 3 / 10, 10000)
       val back30Start = math.max(n * 7 / 10, n - 8000)
-      val front = extractByKeywords(Py.sliceTo(text, front30End), language, amountType, 2.5)
-      val back = extractByKeywords(Py.sliceFrom(text, back30Start), language, amountType, 2.5)
+      val front = extractByKeywords(scan.window(front30End), language, amountType, 2.5)
+      val back = extractByKeywords(scan.slice(back30Start, n), language, amountType, 2.5)
       combineAmountResults(List(front, back))
     } else {
       val back40Start = math.max(n * 6 / 10, n - 12000)
-      extractByKeywords(Py.sliceFrom(text, back40Start), language, amountType, 2.5)
+      extractByKeywords(scan.slice(back40Start, n), language, amountType, 2.5)
     }
   }
 
   /** `_extract_amounts_extended` (`src/extractor.py:2212-2240`): claim =
     * front 50% (≤15000) + middle 30–80%; judgment = middle 40–90%;
     * threshold 2.0. */
-  def extractExtended(text: String, language: String, amountType: String): String = {
-    val n = text.length
+  def extractExtended(scan: Scan, language: String, amountType: String): String = {
+    val n = scan.text.length
     if (amountType == "claim") {
       val front50End = math.min(n * 5 / 10, 15000)
-      val middle = Py.slice(text, n * 3 / 10, n * 8 / 10)
-      val front = extractByKeywords(Py.sliceTo(text, front50End), language, amountType, 2.0)
-      val mid = extractByKeywords(middle, language, amountType, 2.0)
+      val front = extractByKeywords(scan.window(front50End), language, amountType, 2.0)
+      val mid = extractByKeywords(scan.slice(n * 3 / 10, n * 8 / 10), language, amountType, 2.0)
       combineAmountResults(List(front, mid))
     } else {
-      extractByKeywords(Py.slice(text, n * 4 / 10, n * 9 / 10), language, amountType, 2.0)
+      extractByKeywords(scan.slice(n * 4 / 10, n * 9 / 10), language, amountType, 2.0)
     }
   }
 
@@ -140,10 +132,10 @@ object Amounts {
     if (language == "chinese") enhancedChinese else enhancedBase
 
   /** `_find_potential_amounts` (`src/extractor.py:2382-2404`). */
-  def findPotentialAmounts(text: String, patterns: Seq[Rx]): List[Candidate] = {
+  def findPotentialAmounts(scan: Scan, patterns: Seq[Rx]): List[Candidate] = {
+    val text = scan.text
     val out = scala.collection.mutable.ListBuffer.empty[Candidate]
-    val folded = Py.foldCase(text) // shared by every pattern's guard and anchor
-    for (p <- patterns; (m, ms, me) <- p.findIter(text, folded)) {
+    for (p <- patterns; (m, ms, me) <- p.findIter(scan)) {
       val start = math.max(0, ms - 150)
       val end = math.min(text.length, me + 150)
       val context = Py.wsCollapse(Py.strip(Py.slice(text, start, end)))
@@ -177,12 +169,11 @@ object Amounts {
   /** `_extract_amounts_by_enhanced_keywords` (`src/extractor.py:2249-2292`):
     * candidates → scoring → stable desc sort → top 3 contexts → 3000-char
     * budget → rule-based normalization. */
-  def extractByKeywords(text: String, language: String, amountType: String,
+  def extractByKeywords(scan: Scan, language: String, amountType: String,
                         threshold: Double): String = {
-    if (text == null || text.length < 50) return ""
+    if (scan.text.length < 50) return ""
     val (keywords, contextWords) = enhancedKeywords(language, amountType)
-    val patterns = enhancedAmountPatterns(language)
-    val potentials = findPotentialAmounts(text, patterns)
+    val potentials = findPotentialAmounts(scan, enhancedAmountPatterns(language))
 
     val validated = potentials.flatMap { c =>
       val score = validateAmountContext(c, amountType, language, keywords, contextWords)
@@ -231,9 +222,9 @@ object Amounts {
     val foundAmounts = scala.collection.mutable.ListBuffer.empty[String]
     val amountValues = scala.collection.mutable.ListBuffer.empty[Double]
     val currencies = scala.collection.mutable.LinkedHashSet.empty[String]
-    val folded = Py.foldCase(text)
+    val scan = Scan(text)
 
-    for (p <- numberAnalysisPatterns; m <- p.findAll(text, folded)) {
+    for (p <- numberAnalysisPatterns; m <- p.findAll(scan)) {
       parseAmountMatch(m) match {
         case Some((value, currency)) if value > 0 =>
           amountValues += value

@@ -2,49 +2,46 @@ package graft.extract
 
 import java.util.Locale
 
-import graft.text.Py
-import graft.text.Py.I
+import graft.text.{Py, Scan}
+import graft.text.Py.{I, Rx}
 
 /** P8/P10 — case-number extraction: the stateful ACTION-line scan
   * (`/root/reference/src/extractor.py:439-567`) and the positioned Chinese
   * path (`src/extractor.py:663-708`). */
 object CaseNumber {
 
-  def extract(text: String, language: String): String = {
+  private[graft] val chinesePatterns = Seq(
+    """(高院民事訴訟\s*\d+\s*年\s*第\s*\d+[A-Z]?\s*號)""",
+    """((?:高院)?民事訴訟案件(?:編號)?\s*\d+\s*年\s*第\s*\d+[A-Z]?\s*號)""",
+    """(ACTION NO\.?\s*\d+[A-Z]?\s+OF\s+\d{4})""",
+    """(HCA\d{6}[A-Z]?_\d{4})""",
+    """(HCA\s+\d+[A-Z]?/\d{4})""")
+    .map(Rx(_))
+
+  def extract(text: String, language: String): String = extract(Scan(text), language)
+
+  def extract(scan: Scan, language: String): String = {
+    val firstPages = scan.window(15000)
     if (language == "english") {
-      val direct = extractActionLineDirectly(text)
-      if (direct.nonEmpty) return direct
+      val direct = extractActionLineDirectly(firstPages.text)
+      if (direct.nonEmpty) direct
       // Fallback: HCA n/yyyy → ACTION NO n OF yyyy (src/extractor.py:449-454)
-      Py.searchGroups("""HCA\s+(\d+[A-Z]?)/(\d{4})""", Py.sliceTo(text, 15000), I) match {
-        case Some(g) => return s"ACTION NO ${g(1)} OF ${g(2)}"
-        case None =>
-      }
-      ""
+      else Py.searchGroups("""HCA\s+(\d+[A-Z]?)/(\d{4})""", firstPages.text, I)
+        .fold("")(g => s"ACTION NO ${g(1)} OF ${g(2)}")
     } else {
-      val positioned = extractChineseCaseNumberPositioned(text)
-      if (positioned.nonEmpty) return positioned
-      val patterns = Seq(
-        """(高院民事訴訟\s*\d+\s*年\s*第\s*\d+[A-Z]?\s*號)""",
-        """((?:高院)?民事訴訟案件(?:編號)?\s*\d+\s*年\s*第\s*\d+[A-Z]?\s*號)""",
-        """(ACTION NO\.?\s*\d+[A-Z]?\s+OF\s+\d{4})""",
-        """(HCA\d{6}[A-Z]?_\d{4})""",
-        """(HCA\s+\d+[A-Z]?/\d{4})""")
-      val start = Py.sliceTo(text, math.min(text.length, 15000))
-      for (p <- patterns) {
-        Py.search1(p, start) match {
-          case Some(m) => return Py.wsCollapse(Py.strip(m))
-          case None =>
-        }
-      }
-      ""
+      val positioned = extractChineseCaseNumberPositioned(scan.text)
+      if (positioned.nonEmpty) positioned
+      else chinesePatterns.iterator.flatMap(_.search1(firstPages))
+        .map(m => Py.wsCollapse(Py.strip(m))).nextOption().getOrElse("")
     }
   }
 
-  /** `_extract_action_line_directly` (`src/extractor.py:482-567`) — a
-    * line-level stateful scan with split-year repair; not expressible as a
-    * single regex, kept as pure Scala inside the typed kernel. */
-  def extractActionLineDirectly(text: String): String = {
-    val lines = Py.split(Py.sliceTo(text, 15000), "\n")
+  /** `_extract_action_line_directly` (`src/extractor.py:482-567`) over the
+    * text's first 15000 chars — a line-level stateful scan with split-year
+    * repair; not expressible as a single regex, kept as pure Scala inside
+    * the typed kernel. */
+  def extractActionLineDirectly(firstPages: String): String = {
+    val lines = Py.split(firstPages, "\n")
 
     def fixups(s: String): String = {
       var c = s
@@ -103,40 +100,32 @@ object CaseNumber {
     ""
   }
 
+  private val courtPatterns = Seq(
+    """香港特別行政區.*?高等法院.*?上訴法庭""",
+    """高等法院.*?原訟法庭""",
+    """民事上訴案件""",
+    """雜項案件""")
+
+  private val partiesPatterns = Seq("""原告人""", """被告人""", """申請人""", """上訴人""")
+
+  private val positionedPatterns = Seq(
+    """民事上訴案件\s*(\d{4})年第\s*([^號]+)\s*號""",
+    """(\d{4})年第\s*([^號]+)\s*號""",
+    """案件編號[：:]\s*([^\n]+)""")
+
   /** `_extract_chinese_case_number_positioned` (`src/extractor.py:663-708`):
     * the court-end → party-start positional window idiom. */
   def extractChineseCaseNumberPositioned(text: String): String = {
-    val courtPatterns = Seq(
-      """香港特別行政區.*?高等法院.*?上訴法庭""",
-      """高等法院.*?原訟法庭""",
-      """民事上訴案件""",
-      """雜項案件""")
-
-    var courtEnd = 0
-    for (p <- courtPatterns)
-      Py.searchSpan(p, text).foreach { case (_, e) => courtEnd = math.max(courtEnd, e) }
+    val courtEnd = courtPatterns.flatMap(Py.searchSpan(_, text)).map(_._2).maxOption.getOrElse(0)
     if (courtEnd == 0) return ""
 
-    val partiesPatterns = Seq("""原告人""", """被告人""", """申請人""", """上訴人""")
-    var partiesStart = text.length
     val after = Py.sliceFrom(text, courtEnd)
-    for (p <- partiesPatterns)
-      Py.searchSpan(p, after).foreach { case (s, _) =>
-        partiesStart = math.min(partiesStart, courtEnd + s)
-      }
+    val partiesStart = partiesPatterns.flatMap(Py.searchSpan(_, after)).map(courtEnd + _._1)
+      .minOption.getOrElse(text.length)
     if (partiesStart == text.length) return ""
 
     val middle = Py.slice(text, courtEnd, partiesStart)
-    val chinesePatterns = Seq(
-      """民事上訴案件\s*(\d{4})年第\s*([^號]+)\s*號""",
-      """(\d{4})年第\s*([^號]+)\s*號""",
-      """案件編號[：:]\s*([^\n]+)""")
-    for (p <- chinesePatterns) {
-      Py.searchGroups(p, middle) match {
-        case Some(g) => return Py.wsCollapse(Py.strip(g(0)))
-        case None =>
-      }
-    }
-    ""
+    positionedPatterns.iterator.flatMap(Py.searchGroups(_, middle))
+      .map(g => Py.wsCollapse(Py.strip(g(0)))).nextOption().getOrElse("")
   }
 }

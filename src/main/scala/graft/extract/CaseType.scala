@@ -2,7 +2,7 @@ package graft.extract
 
 import java.util.Locale
 
-import graft.text.Py
+import graft.text.{Py, Scan}
 import graft.text.Py.{I, Rx, S}
 
 /** P21 — case-type segment extraction with the weight-sorted,
@@ -12,11 +12,14 @@ object CaseType {
 
   final case class Segment(content: String, weight: Int)
 
-  def extract(text0: String, language: String, docType: String): String = {
+  def extract(text: String, language: String, docType: String): String =
+    extract(Scan(text), language, docType)
+
+  def extract(scan: Scan, language: String, docType: String): String = {
     // 80000-char cap (src/extractor.py:1691-1693)
-    val text = if (text0.length > 80000) Py.sliceTo(text0, 80000) else text0
-    if (language == "english") extractEnglishComprehensive(text)
-    else extractChineseComprehensive(text)
+    val capped = scan.window(80000)
+    if (language == "english") extractEnglishComprehensive(capped)
+    else extractChineseComprehensive(capped)
   }
 
   /** A layer of weighted patterns: up to two matches of each, cleaned,
@@ -24,19 +27,15 @@ object CaseType {
   private[extract] final case class Layer(rows: Seq[(Rx, Int)], min: Int, max: Int)
 
   /** The segments of `layers` in order: the first two matches of each
-    * pattern, cleaned, within the layer's bounds. One case fold of `text`
-    * is shared by the patterns when any has a guard or an anchor. */
-  private[extract] def layerSegments(text: String, layers: Seq[Layer]): List[Segment] = {
-    val needsFold = layers.exists(_.rows.exists { case (p, _) => p.anchor.nonEmpty || p.guard.nonEmpty })
-    val folded = if (needsFold) Py.foldCase(text) else null
+    * pattern, cleaned, within the layer's bounds. */
+  private[extract] def layerSegments(scan: Scan, layers: Seq[Layer]): List[Segment] =
     for {
       layer <- layers.toList
       (p, weight) <- layer.rows
-      (g1, _, _) <- p.findIter(text, folded, maxMatches = 2)
+      (g1, _, _) <- p.findIter(scan, maxMatches = 2)
       clean = cleanComprehensiveContent(g1)
       if clean.length >= layer.min && clean.length <= layer.max
     } yield Segment(clean, weight)
-  }
 
   // `_extract_english_case_type_comprehensive` (`src/extractor.py:1706-1780`)
   // layer 1: key sections, weights 10..6; layer 2: judgment context, 5 and 4
@@ -78,22 +77,22 @@ object CaseType {
     "matter", "claim", "relief", "judgment", "order")
   private val chineseKeywords = Seq("申請", "爭議", "糾紛", "案件", "法庭", "法院", "判決", "命令", "裁定")
 
-  def extractEnglishComprehensive(text: String): String =
-    comprehensive(text, englishLayers, paragraphLen = (200, 2000), cleanLen = (100, 1500), maxLength = 3000)(
+  def extractEnglishComprehensive(scan: Scan): String =
+    comprehensive(scan, englishLayers, paragraphLen = (200, 2000), cleanLen = (100, 1500), maxLength = 3000)(
       p => englishKeywords.exists(p.toLowerCase(Locale.ROOT).contains))
 
-  def extractChineseComprehensive(text: String): String =
-    comprehensive(text, chineseLayers, paragraphLen = (150, 1500), cleanLen = (80, 1200), maxLength = 2500)(
+  def extractChineseComprehensive(scan: Scan): String =
+    comprehensive(scan, chineseLayers, paragraphLen = (150, 1500), cleanLen = (80, 1200), maxLength = 2500)(
       p => chineseKeywords.exists(p.contains))
 
   /** The pattern layers, then layer 3: paragraphs of `paragraphLen` chars
     * with a case keyword, cleaned to `cleanLen`, weight 2 — stopping once a
     * paragraph brings the total to 8 segments. */
-  private def comprehensive(text: String, layers: Seq[Layer], paragraphLen: (Int, Int),
+  private def comprehensive(scan: Scan, layers: Seq[Layer], paragraphLen: (Int, Int),
                             cleanLen: (Int, Int), maxLength: Int)(hasKeyword: String => Boolean): String = {
-    val segments = scala.collection.mutable.ListBuffer.from(layerSegments(text, layers))
+    val segments = scala.collection.mutable.ListBuffer.from(layerSegments(scan, layers))
     var stop = false
-    for (paragraph <- Py.resplit("""\n\s*\n""", text) if !stop) {
+    for (paragraph <- Py.resplit("""\n\s*\n""", scan.text) if !stop) {
       if (paragraph.length >= paragraphLen._1 && paragraph.length <= paragraphLen._2 && hasKeyword(paragraph)) {
         val clean = cleanComprehensiveContent(paragraph)
         if (clean.length >= cleanLen._1 && clean.length <= cleanLen._2) {

@@ -3,7 +3,7 @@ package graft.extract
 import java.util.Locale
 
 import graft.model.CaseRecord
-import graft.text.Py
+import graft.text.{Py, Scan}
 import graft.text.Py.I
 
 /** P26 — corrigendum routing and detail extraction
@@ -16,24 +16,14 @@ object Corrigendum {
       corrigendumDate: Option[String],
       correctionSummary: String)
 
+  private val originalDatePatterns = Seq(
+    """corrigendum in the (Judgment|Decision) dated (\d{1,2} \w+ \d{4})""",
+    """in the (Judgment|Decision) dated (\d{1,2} \w+ \d{4})""")
+
   /** `_extract_corrigendum_details` (`src/extractor.py:2774-2827`). */
   def extractDetails(text: String): Details = {
-    var correctedType: Option[String] = None
-    var originalDate: Option[String] = None
-
-    val originalDatePatterns = Seq(
-      """corrigendum in the (Judgment|Decision) dated (\d{1,2} \w+ \d{4})""",
-      """in the (Judgment|Decision) dated (\d{1,2} \w+ \d{4})""")
-    var found = false
-    for (p <- originalDatePatterns if !found) {
-      Py.searchGroups(p, text, I) match {
-        case Some(g) =>
-          correctedType = Some(g(1))
-          originalDate = Some(g(2))
-          found = true
-        case None =>
-      }
-    }
+    // (document type, date) of the first pattern that matches
+    val original = originalDatePatterns.iterator.flatMap(Py.searchGroups(_, text, I)).nextOption()
 
     val corrigendumDate =
       Py.search1("""Date of Corrigendum:\s*(\d{1,2} \w+ \d{4})""", text)
@@ -62,21 +52,24 @@ object Corrigendum {
         else "格式或内容更正"
       }
 
-    Details(correctedType, originalDate, corrigendumDate, summary)
+    Details(original.map(_(1)), original.map(_(2)), corrigendumDate, summary)
   }
 
   /** `_extract_corrigendum_information` (`src/extractor.py:2746-2772`):
     * base fields extracted on the FULL text, doc_type forced to
     * 'Corrigendum', amounts blanked. */
-  def extract(text: String, docId: String, fileName: String, language: String): CaseRecord = {
-    val details = extractDetails(text)
+  def extract(text: String, docId: String, fileName: String, language: String): CaseRecord =
+    extract(Scan(text), docId, fileName, language)
+
+  def extract(doc: Scan, docId: String, fileName: String, language: String): CaseRecord = {
+    val details = extractDetails(doc.text)
     CaseRecord(
       doc_id = docId,
-      case_number = CaseNumber.extract(text, language),
-      trial_date = TrialDate.extract(text, language),
-      court_name = CourtName.extract(text, language),
-      plaintiff = Parties.extractPlaintiff(text, language, "Corrigendum"),
-      defendant = Parties.extractDefendant(text, language, "Corrigendum"),
+      case_number = CaseNumber.extract(doc, language),
+      trial_date = TrialDate.extract(doc, language),
+      court_name = CourtName.extract(doc, language),
+      plaintiff = Parties.extractPlaintiff(doc, language, "Corrigendum"),
+      defendant = Parties.extractDefendant(doc, language, "Corrigendum"),
       judge = "",
       case_type = "Corrigendum Document",
       lawyer = "",

@@ -2,7 +2,7 @@ package graft.extract
 
 import java.util.Locale
 
-import graft.text.Py
+import graft.text.{Py, Scan}
 import graft.text.Py.{I, Rx, S}
 
 /** P7 — court-name extraction, cleaning and validation
@@ -37,12 +37,13 @@ object CourtName {
   /** The first match, in pattern order, that cleans to a valid court name.
     * Every English pattern needs "IN THE" and captures a "...COURT...": a
     * document without both is skipped before any pattern runs. */
-  def extract(text: String, language: String): String = {
+  def extract(text: String, language: String): String = extract(Scan(text), language)
+
+  def extract(scan: Scan, language: String): String = {
     val english = language == "english"
-    val folded = if (english) Py.foldCase(text) else null
-    if (english && !(folded.contains("in the") && folded.contains("court"))) return ""
+    if (english && !(scan.folded.contains("in the") && scan.folded.contains("court"))) return ""
     (if (english) englishPatterns else chinesePatterns).iterator
-      .flatMap(_.search1(text, folded))
+      .flatMap(_.search1(scan))
       .map(raw => cleanCourtName(Py.strip(raw)))
       .find(validateCourtName(_, language))
       .getOrElse("")

@@ -1,7 +1,7 @@
 package graft.extract
 
 import graft.model.{CaseRecord, Doc, OutSpans, Span}
-import graft.text.Py
+import graft.text.Scan
 
 /** P27 — top-level per-document extraction: the single `Doc => CaseRecord`
   * pass mirroring `extract_information`
@@ -111,19 +111,21 @@ object ExtractAll {
 
   def extractInformation(text: String, docId: String, fileName: String): CaseRecord = {
     val language = LangDoc.detectLanguage(text)
+    // one view of the document (and so one case fold) for every field
+    val doc = Scan(text)
 
     // Chinese router (src/extractor.py:2683-2687)
     if (language == "chinese" && LangDoc.isChineseDocument(text))
-      return ChineseDoc.process(text, docId, fileName)
+      return ChineseDoc.process(doc, docId, fileName)
 
     val docType = LangDoc.detectDocumentType(fileName)
 
     // Corrigendum router (src/extractor.py:2693-2695)
     if (LangDoc.isCorrigendum(text))
-      return Corrigendum.extract(text, docId, fileName, language)
+      return Corrigendum.extract(doc, docId, fileName, language)
 
     // Layer 1: first ~4 pages (15000 chars) for the basic fields
-    val firstPages = Py.sliceTo(text, 15000)
+    val firstPages = doc.window(15000)
 
     CaseRecord(
       doc_id = docId,
@@ -135,11 +137,11 @@ object ExtractAll {
       judge = Judge.extract(firstPages, language),
       case_type = CaseType.extract(firstPages, language, docType),
       // Layer 2: lawyer segment from the document tail
-      lawyer = Lawyers.extractLawyerSegment(text, language),
+      lawyer = Lawyers.extractLawyerSegment(doc, language),
       // Layer 3: full-text / positional fields
-      judgment_result = JudgmentResult.extract(text, language),
-      claim_amount = Amounts.extract(text, language, "claim"),
-      judgment_amount = Amounts.extract(text, language, "judgment"),
+      judgment_result = JudgmentResult.extract(doc, language),
+      claim_amount = Amounts.extract(doc, language, "claim"),
+      judgment_amount = Amounts.extract(doc, language, "judgment"),
       language = language,
       document_type = docType,
       file_name = fileName,

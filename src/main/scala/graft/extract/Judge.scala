@@ -1,6 +1,6 @@
 package graft.extract
 
-import graft.text.Py
+import graft.text.{Py, Scan}
 import graft.text.Py.{I, Rx}
 
 /** P15/P16/P17 — judge extraction and the two cleaning chains
@@ -12,9 +12,11 @@ import graft.text.Py.{I, Rx}
   * mirrored here via `Py.subN(..., count = 2)`. */
 object Judge {
 
-  def extract(text: String, language: String): String =
-    if (language == "english") extractEnglishJudge(text)
-    else extractChineseJudge(text)
+  def extract(text: String, language: String): String = extract(Scan(text), language)
+
+  def extract(scan: Scan, language: String): String =
+    if (language == "english") extractEnglishJudge(scan)
+    else extractChineseJudge(scan)
 
   // Each English pattern with the literal its matches require (Py.Rx guard).
   private[graft] val specialPatterns = Seq(
@@ -48,10 +50,9 @@ object Judge {
     * formats, then `Before:` formats, then signature-block and title
     * formats; the first match that passes its tier's check and cleans to a
     * non-empty name wins (`findall()[0]` ≡ the first match). */
-  def extractEnglishJudge(text: String): String = {
-    val folded = Py.foldCase(text) // shared by every pattern's guard
+  def extractEnglishJudge(scan: Scan): String = {
     def first(patterns: Seq[Rx])(valid: String => Boolean): Option[String] =
-      patterns.iterator.flatMap(_.search1(text, folded)).map(Py.strip).filter(valid)
+      patterns.iterator.flatMap(_.search1(scan)).map(Py.strip).filter(valid)
         .map(cleanJudgeNameEnhanced).find(_.nonEmpty)
     first(specialPatterns)(raw => raw.length >= 3 &&
         !Py.matches("""^(?:to|at|in|on|for|and|or|the|of|with|from)$""", raw, I))
@@ -63,20 +64,16 @@ object Judge {
       .getOrElse("")
   }
 
+  private[graft] val chinesePatterns = Seq(
+    """主審法官[：:]\s*([^\n]+)""",
+    """審訊法官[：:]\s*([^\n]+)""",
+    """(?:高等法院原訟法庭法官|法官)\s*([^\n\s]{2,10})""")
+    .map(Rx(_))
+
   /** `_extract_chinese_judge` (`src/extractor.py:1437-1453`). */
-  def extractChineseJudge(text: String): String = {
-    val patterns = Seq(
-      """主審法官[：:]\s*([^\n]+)""",
-      """審訊法官[：:]\s*([^\n]+)""",
-      """(?:高等法院原訟法庭法官|法官)\s*([^\n\s]{2,10})""")
-    for (p <- patterns) {
-      Py.search1(p, text).foreach { m =>
-        val clean = cleanJudgeName(Py.strip(m))
-        if (clean.nonEmpty) return clean
-      }
-    }
-    ""
-  }
+  def extractChineseJudge(scan: Scan): String =
+    chinesePatterns.iterator.flatMap(_.search1(scan)).map(m => cleanJudgeName(Py.strip(m)))
+      .find(_.nonEmpty).getOrElse("")
 
   /** `_clean_judge_name` (`src/extractor.py:1455-1475`) — used only by the
     * Chinese path. Flags-as-count bug sites at :1462-1463 reproduced. */

@@ -1,18 +1,20 @@
 package graft.extract
 
 import graft.extract.CaseType.Layer
-import graft.text.Py
+import graft.text.{Py, Scan}
 import graft.text.Py.{I, Rx, S}
 
 /** P22 — judgment-result extraction over the last-15% window
   * (`/root/reference/src/extractor.py:1918-2107`). */
 object JudgmentResult {
 
-  def extract(text: String, language: String): String = {
-    val totalChars = text.length
+  def extract(text: String, language: String): String = extract(Scan(text), language)
+
+  def extract(scan: Scan, language: String): String = {
+    val totalChars = scan.text.length
     // last 15% but at least the last 5000 chars (src/extractor.py:1924-1926)
     val start = math.max(totalChars * 85 / 100, totalChars - 5000)
-    val section = Py.sliceFrom(text, start)
+    val section = scan.slice(start, totalChars)
     if (language == "english") extractFocusedEnglish(section)
     else extractFocusedChinese(section)
   }
@@ -55,10 +57,11 @@ object JudgmentResult {
     Rx("""([Aa]pplication.*?(?:granted|dismissed|refused|allowed)[^.]*?[.\n])""", I,
       Py.lit("application"), Seq("granted", "dismissed", "refused", "allowed")))
 
+  private val englishLayers = Seq(layer(orderPatterns, 20, 1000), layer(decisionPatterns, 15, 800))
+
   /** `_extract_judgment_result_focused` (`src/extractor.py:1941-2022`). */
-  def extractFocusedEnglish(section: String): String =
-    focused(section, Seq(layer(orderPatterns, 20, 1000), layer(decisionPatterns, 15, 800)),
-      prefixLen = 30, maxLen = 2500)
+  def extractFocusedEnglish(section: Scan): String =
+    focused(section, englishLayers, prefixLen = 30, maxLen = 2500)
 
   private val orderZh = Seq(
     Rx("""(?:命令|判令|裁定|判決|判决)\s*[：:.]?\s*\n((?:[^\n]+\n?){2,10})"""),
@@ -70,18 +73,19 @@ object JudgmentResult {
     Rx("""((?:勝訴|敗訴|得直|不得直).*?)"""),
     Rx("""((?:撤回|撤訴).*?)"""))
 
+  private val chineseLayers = Seq(layer(orderZh, 10, 800), layer(decisionZh, 8, 600))
+
   /** `_extract_chinese_judgment_result_focused` (`src/extractor.py:2024-2085`). */
-  def extractFocusedChinese(section: String): String =
-    focused(section, Seq(layer(orderZh, 10, 800), layer(decisionZh, 8, 600)),
-      prefixLen = 20, maxLen = 2000)
+  def extractFocusedChinese(section: Scan): String =
+    focused(section, chineseLayers, prefixLen = 20, maxLen = 2000)
 
   /** An unweighted layer: the results are combined in match order. */
   private def layer(patterns: Seq[Rx], min: Int, max: Int): Layer = Layer(patterns.map(_ -> 0), min, max)
 
   /** The layers' segments (`_clean_judgment_content` is
     * `_clean_comprehensive_content`), prefix-deduped and budgeted. */
-  private def focused(section: String, layers: Seq[Layer], prefixLen: Int, maxLen: Int): String = {
-    if (section == null || section.length < 100) return ""
+  private def focused(section: Scan, layers: Seq[Layer], prefixLen: Int, maxLen: Int): String = {
+    if (section.text.length < 100) return ""
     combine(CaseType.layerSegments(section, layers).map(_.content), prefixLen, maxSegments = 4, maxLen)
   }
 

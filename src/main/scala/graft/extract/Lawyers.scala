@@ -2,7 +2,7 @@ package graft.extract
 
 import java.util.Locale
 
-import graft.text.Py
+import graft.text.{Py, Scan}
 import graft.text.Py.Rx
 
 /** P19/P20 — lawyer-segment extraction over the last-20% window, with
@@ -10,12 +10,15 @@ import graft.text.Py.Rx
   * 600-char budget (`/root/reference/src/extractor.py:3039-3246`). */
 object Lawyers {
 
-  def extractLawyerSegment(text: String, language: String): String = {
-    if (text == null || text.isEmpty) return ""
-    val lastSectionStart = math.max(0, text.length - text.length / 5)
-    val lastSection = Py.sliceFrom(text, lastSectionStart)
-    if (language == "english") extractEnglishLawyerSegment(lastSection, text)
-    else extractChineseLawyerSegment(lastSection, text)
+  def extractLawyerSegment(text: String, language: String): String =
+    if (text == null) "" else extractLawyerSegment(Scan(text), language)
+
+  def extractLawyerSegment(scan: Scan, language: String): String = {
+    val n = scan.text.length
+    if (n == 0) return ""
+    val lastSection = scan.slice(math.max(0, n - n / 5), n)
+    if (language == "english") extractEnglishLawyerSegment(lastSection, scan)
+    else extractChineseLawyerSegment(lastSection.text)
   }
 
   // Method-1 patterns, each anchored at the literals its matches begin with,
@@ -56,77 +59,43 @@ object Lawyers {
     "barrister", "appeared for", "acting for", "solicitors", "law firm",
     "not represented", "in person", "did not appear")
 
+  private val lineWords = Seq("instructed", "counsel", "represented", "chambers")
+
   /** `_extract_english_lawyer_segment` (`src/extractor.py:3070-3207`). */
-  def extractEnglishLawyerSegment(lastSection: String, fullText: String): String = {
-    var segments = List.newBuilder[String]
-    var found = List.empty[String]
-
+  def extractEnglishLawyerSegment(lastSection: Scan, fullText: Scan): String = {
     // Method 1: paragraph scan of the last-20% window
-    val paragraphs = Py.resplit("""\n\s*\n""", lastSection)
-    for (p0 <- paragraphs) {
-      val paragraph = Py.strip(p0)
-      if (paragraph.length >= 30) {
-        val lower = paragraph.toLowerCase(Locale.ROOT) // the reference's .lower()
-        val folded = Py.foldCase(paragraph) // the regex engine's fold
-        val hasLawyerInfo = lawyerPatterns.exists(_.contains(paragraph, folded))
-        val hasKeywords = lawyerKeywords.exists(lower.contains)
-        val hasNamePattern = namePattern.contains(paragraph, folded)
-        if (hasLawyerInfo || (hasKeywords && hasNamePattern)) {
-          val cleaned = cleanLawyerSegment(paragraph)
-          if (cleaned.length >= 15 && cleaned.length <= 1000) segments += cleaned
-        }
-      }
-    }
-    found = segments.result()
-
-    // Method 2: last 10 lines with ±2-line context gather
-    if (found.isEmpty) {
-      val lines = Py.split(lastSection, "\n").takeRight(10)
-      var i = 0
-      var break = false
-      while (i < lines.length && !break) {
-        val line = Py.strip(lines(i))
-        if (line.nonEmpty) {
-          val lower = line.toLowerCase(Locale.ROOT)
-          if (Seq("instructed", "counsel", "represented", "chambers").exists(lower.contains)) {
-            val startIdx = math.max(0, i - 2)
-            val endIdx = math.min(lines.length, i + 3)
-            val context = (startIdx until endIdx)
-              .filter(j => j < lines.length && Py.strip(lines(j)).nonEmpty)
-              .map(j => Py.strip(lines(j)))
-            if (context.nonEmpty) {
-              val cleaned = cleanLawyerSegment(context.mkString(" "))
-              if (cleaned.length >= 15 && cleaned.length <= 800) {
-                found = List(cleaned)
-                break = true
-              }
-            }
-          }
-        }
-        i += 1
-      }
+    val paragraphs = Py.resplit("""\n\s*\n""", lastSection.text).map(Py.strip).filter(_.length >= 30)
+    var found = paragraphs.flatMap { p =>
+      val paragraph = Scan(p)
+      val lower = p.toLowerCase(Locale.ROOT) // the reference's .lower()
+      val hasLawyerInfo = lawyerPatterns.exists(_.contains(paragraph))
+      val hasKeywords = lawyerKeywords.exists(lower.contains)
+      if (hasLawyerInfo || (hasKeywords && namePattern.contains(paragraph)))
+        Some(cleanLawyerSegment(p)).filter(c => c.length >= 15 && c.length <= 1000)
+      else None
     }
 
-    // Method 3: widen to last 30% with strict patterns, ±100-char context
+    // Method 2: the first of the last 10 lines with a lawyer word whose
+    // ±2-line context cleans to 15..800 chars
     if (found.isEmpty) {
-      val extStart = math.max(0, fullText.length - fullText.length * 30 / 100)
-      val ext = Py.sliceFrom(fullText, extStart)
-      val buf = scala.collection.mutable.ListBuffer.empty[String]
-      val extFolded = Py.foldCase(ext)
-      for (p <- clearPatterns) {
-        val iter = p.findIter(ext, extFolded)
-        var stop = false
-        for ((_, ms, me) <- iter if !stop) {
-          val s = math.max(0, ms - 100)
-          val e = math.min(ext.length, me + 100)
-          val cleaned = cleanLawyerSegment(Py.slice(ext, s, e))
-          if (cleaned.length >= 20 && cleaned.length <= 600) {
-            buf += cleaned
-            if (buf.length >= 2) stop = true
-          }
-        }
+      val lines = Py.split(lastSection.text, "\n").takeRight(10).map(Py.strip)
+      found = lines.indices.iterator
+        .filter(i => lineWords.exists(lines(i).toLowerCase(Locale.ROOT).contains))
+        .map(i => cleanLawyerSegment(lines.slice(math.max(0, i - 2), i + 3).filter(_.nonEmpty).mkString(" ")))
+        .find(c => c.length >= 15 && c.length <= 800).toList
+    }
+
+    // Method 3: widen to last 30% with strict patterns, ±100-char context;
+    // each pattern adds its accepted matches until there are two (at least one)
+    if (found.isEmpty) {
+      val n = fullText.text.length
+      val ext = fullText.slice(math.max(0, n - n * 30 / 100), n)
+      found = clearPatterns.foldLeft(List.empty[String]) { (acc, p) =>
+        acc ++ p.findIter(ext).iterator
+          .map { case (_, ms, me) => cleanLawyerSegment(Py.slice(ext.text, math.max(0, ms - 100), me + 100)) }
+          .filter(c => c.length >= 20 && c.length <= 600)
+          .take(math.max(1, 2 - acc.length))
       }
-      found = buf.toList
     }
 
     if (found.isEmpty) return ""
@@ -162,7 +131,7 @@ object Lawyers {
     """律师.*?(?:代表|代理)""")
 
   /** `_extract_chinese_lawyer_segment` (`src/extractor.py:3209-3246`). */
-  def extractChineseLawyerSegment(lastSection: String, fullText: String): String = {
+  def extractChineseLawyerSegment(lastSection: String): String = {
     val buf = scala.collection.mutable.ListBuffer.empty[String]
     val paragraphs = Py.resplit("""\n\s*\n""", lastSection)
     for (p0 <- paragraphs) {

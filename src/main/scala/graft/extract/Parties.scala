@@ -2,8 +2,8 @@ package graft.extract
 
 import java.util.Locale
 
-import graft.text.Py
-import graft.text.Py.{I, M, S}
+import graft.text.{Py, Scan}
+import graft.text.Py.{I, M, Rx, S}
 
 /** P11/P12 — party extraction: DCCJ direct format, HCA BETWEEN-block split,
   * numbered-party parsing, smart formatting
@@ -25,16 +25,22 @@ object Parties {
   }
 
   def extractPlaintiff(text: String, language: String, docType: String): String =
-    if (language == "english") extractPlaintiffImproved(text, docType)
-    else extractChineseParty(text, isPlaintiff = true)
+    extractPlaintiff(Scan(text), language, docType)
+
+  def extractPlaintiff(scan: Scan, language: String, docType: String): String =
+    if (language == "english") extractPlaintiffImproved(scan, docType)
+    else extractChineseParty(scan, chinesePlaintiffPatterns, maxLen = 200)
 
   def extractDefendant(text: String, language: String, docType: String): String =
-    if (language == "english") extractDefendantImproved(text, docType)
-    else extractChineseParty(text, isPlaintiff = false)
+    extractDefendant(Scan(text), language, docType)
+
+  def extractDefendant(scan: Scan, language: String, docType: String): String =
+    if (language == "english") extractDefendantImproved(scan, docType)
+    else extractChineseParty(scan, chineseDefendantPatterns, maxLen = 500)
 
   // --- Chinese fallback patterns (src/extractor.py:720-739, 789-810) ---
 
-  private val chinesePlaintiffPatterns = Seq(
+  private[graft] val chinesePlaintiffPatterns = Seq(
     """原告人\s*\n\s*([A-Za-z\s,]+?)(?=\n|\s*及\s*)""",
     """原告人\s*\n\s*([^\n]+?)(?=\s*第|\s*被告|\s*_)""",
     """(?:第一原告人|原告人)\s*[：:]\s*([^\n第被]+)""",
@@ -43,8 +49,9 @@ object Parties {
     """申請人[：:]\s*([^\n]+)""",
     """上訴人[：:]\s*([^\n]+)""",
     """第一原告人\s*([A-Za-z\s,]+)(?=\n|第二|第三|被告)""")
+    .map(Rx(_))
 
-  private val chineseDefendantPatterns = Seq(
+  private[graft] val chineseDefendantPatterns = Seq(
     """第一被告人\s*\n?\s*([A-Za-z\s,]+?)(?=\s*第二被告人|\s*第三被告人|\s*_)""",
     """第一被告人\s*([A-Za-z\s,\.]+)(?=\s*第二|\s*第三|\s*_)""",
     """第三被告人\s*([^_\n]+?)(?=_|Before|Date|\s*$)""",
@@ -55,74 +62,54 @@ object Parties {
     """被申請人[：:]\s*([^\n]+)""",
     """被上訴人[：:]\s*([^\n]+)""",
     """(?:第一被告人|被告人)\s*([A-Za-z\s,]+)(?=\n|第二|第三|原告|Before)""")
+    .map(Rx(_))
 
-  private def extractChineseParty(text: String, isPlaintiff: Boolean): String = {
-    val patterns = if (isPlaintiff) chinesePlaintiffPatterns else chineseDefendantPatterns
-    val maxLen = if (isPlaintiff) 200 else 500
-    for (p <- patterns) {
-      Py.search1(p, text) match {
-        case Some(raw) =>
-          var v = Py.wsCollapse(Py.strip(raw))
-          v = Py.sub("""^\s*[：:]\s*""", "", v)
-          if (v.length > 3 && v.length < maxLen && !Py.matches("""^\d+\s*$""", v))
-            return v
-        case None =>
-      }
-    }
-    ""
-  }
+  /** The first pattern match that cleans to a plausible party name. */
+  private def extractChineseParty(scan: Scan, patterns: Seq[Rx], maxLen: Int): String =
+    patterns.iterator.flatMap(_.search1(scan))
+      .map(raw => Py.sub("""^\s*[：:]\s*""", "", Py.wsCollapse(Py.strip(raw))))
+      .find(v => v.length > 3 && v.length < maxLen && !Py.matches("""^\d+\s*$""", v))
+      .getOrElse("")
 
   // --- English: DCCJ direct + HCA BETWEEN (src/extractor.py:741-855) ---
 
-  private def dccjExtract(text: String, partyType: String): String = {
-    val patterns = Seq(
-      s"""([A-Z][A-Z\\s&\\.,\\(\\)]+?)\\s*\\n\\s*$partyType\\s*(?:\\n|$$)""",
-      s"""([A-Z][A-Z\\s&\\.,\\(\\)]+?)\\s+$partyType\\s*(?:\\n|$$)""",
-      s"""([A-Z][A-Z\\s&\\.,\\(\\)\\-]+?)\\s*\\n\\s*$partyType""",
-      s"""([A-Z][A-Z\\s&\\.,\\(\\)\\-]+?)\\s+$partyType""")
-    for (p <- patterns) {
-      val matches = Py.findAll(p, text, M)
-      for (m <- matches) {
-        var clean = Py.wsCollapse(Py.strip(m))
-        clean = Py.sub("""^and\s+""", "", clean, I)
-        if (clean.length > 3 && clean.length < 100) return clean
+  private val partyTypes = Seq("Plaintiff", "Defendant")
+
+  private[graft] val dccjPatterns: Map[String, Seq[Rx]] = partyTypes.map(t => t -> Seq(
+    s"""([A-Z][A-Z\\s&\\.,\\(\\)]+?)\\s*\\n\\s*$t\\s*(?:\\n|$$)""",
+    s"""([A-Z][A-Z\\s&\\.,\\(\\)]+?)\\s+$t\\s*(?:\\n|$$)""",
+    s"""([A-Z][A-Z\\s&\\.,\\(\\)\\-]+?)\\s*\\n\\s*$t""",
+    s"""([A-Z][A-Z\\s&\\.,\\(\\)\\-]+?)\\s+$t""").map(Rx(_, M))).toMap
+
+  private def dccjExtract(scan: Scan, partyType: String): String =
+    dccjPatterns(partyType).iterator.flatMap(_.findAll(scan))
+      .map(m => Py.sub("""^and\s+""", "", Py.wsCollapse(Py.strip(m)), I))
+      .find(c => c.length > 3 && c.length < 100)
+      .getOrElse("")
+
+  private[graft] val betweenPattern = Rx("""BETWEEN\s*(.*?)\s*(?=Before:|__________|Date|主審)""", S | I)
+
+  /** The BETWEEN block split at its first AND: the two sides, stripped. */
+  private def betweenSides(scan: Scan): Option[(String, String)] =
+    betweenPattern.search1(scan).flatMap { between =>
+      val content = Py.strip(between)
+      Py.searchSpan("""\s+AND\s+""", content, I).map { case (start, end) =>
+        (Py.strip(Py.sliceTo(content, start)), Py.strip(Py.sliceFrom(content, end)))
       }
     }
-    ""
-  }
 
-  private val betweenPattern = """BETWEEN\s*(.*?)\s*(?=Before:|__________|Date|主審)"""
-
-  private def extractPlaintiffImproved(text: String, docType: String): String = {
-    if (docType == "DCCJ") return dccjExtract(text, "Plaintiff")
-    Py.search1(betweenPattern, text, S | I) match {
-      case Some(between) =>
-        val content = Py.strip(between)
-        Py.searchSpan("""\s+AND\s+""", content, I) match {
-          case Some((start, _)) =>
-            val section = Py.strip(Py.sliceTo(content, start))
-            formatPartiesSmart(extractPartiesRobust(section, "Plaintiff"), "Plaintiff")
-          case None => ""
-        }
-      case None => ""
+  private def extractPlaintiffImproved(scan: Scan, docType: String): String =
+    if (docType == "DCCJ") dccjExtract(scan, "Plaintiff")
+    else betweenSides(scan).fold("") { case (before, _) =>
+      formatPartiesSmart(extractPartiesRobust(before, "Plaintiff"), "Plaintiff")
     }
-  }
 
-  private def extractDefendantImproved(text: String, docType: String): String = {
-    if (docType == "DCCJ") return dccjExtract(text, "Defendant")
-    Py.search1(betweenPattern, text, S | I) match {
-      case Some(between) =>
-        val content = Py.strip(between)
-        Py.searchSpan("""\s+AND\s+""", content, I) match {
-          case Some((_, end)) =>
-            var section = Py.strip(Py.sliceFrom(content, end))
-            section = Py.strip(Py.sub("""_{5,}.*$""", "", section, S))
-            formatPartiesSmart(extractPartiesRobust(section, "Defendant"), "Defendant")
-          case None => ""
-        }
-      case None => ""
+  private def extractDefendantImproved(scan: Scan, docType: String): String =
+    if (docType == "DCCJ") dccjExtract(scan, "Defendant")
+    else betweenSides(scan).fold("") { case (_, after) =>
+      val section = Py.strip(Py.sub("""_{5,}.*$""", "", after, S))
+      formatPartiesSmart(extractPartiesRobust(section, "Defendant"), "Defendant")
     }
-  }
 
   /** `_extract_parties_robust` (`src/extractor.py:857-872`). */
   def extractPartiesRobust(section: String, partyType: String): List[Party] = {
@@ -131,43 +118,33 @@ object Parties {
     else extractSimpleParty(section, partyType).toList
   }
 
+  private val nameCls = """[A-Za-z\s,\.\(\)&\-\'（）]"""
+
+  private val numberedPatterns: Map[String, Seq[String]] = partyTypes.map(t => t -> Seq(
+    // name above, ordinal below
+    s"""([A-Z]$nameCls+?(?:\\([^)]*\\))?(?:（[^）]*）)?)\\s*\\n\\s*(\\d+)(?:st|nd|rd|th)\\s+$t""",
+    // same line
+    s"""([A-Z]$nameCls+?(?:\\([^)]*\\))?(?:（[^）]*）)?)\\s+(\\d+)(?:st|nd|rd|th)\\s+$t""",
+    // reversed: ordinal first
+    s"""(\\d+)(?:st|nd|rd|th)\\s+$t\\s*\\n\\s*([A-Z]$nameCls+?(?:\\([^)]*\\))?(?:（[^）]*）)?)""",
+    // unnumbered
+    s"""([A-Z]$nameCls+?(?:\\([^)]*\\))?(?:（[^）]*）)?)\\s+$t(?!\\s*\\d)""")).toMap
+
   /** `_extract_numbered_parties_enhanced` (`src/extractor.py:874-939`):
     * 4 ordered multi-line patterns; first pattern family with hits wins;
     * dedupe by name (first occurrence), stable sort by ordinal (None→0). */
   def extractNumberedPartiesEnhanced(section: String, partyType: String): List[Party] = {
-    val nameCls = """[A-Za-z\s,\.\(\)&\-\'（）]"""
-    val patterns = Seq(
-      // name above, ordinal below
-      s"""([A-Z]$nameCls+?(?:\\([^)]*\\))?(?:（[^）]*）)?)\\s*\\n\\s*(\\d+)(?:st|nd|rd|th)\\s+$partyType""",
-      // same line
-      s"""([A-Z]$nameCls+?(?:\\([^)]*\\))?(?:（[^）]*）)?)\\s+(\\d+)(?:st|nd|rd|th)\\s+$partyType""",
-      // reversed: ordinal first
-      s"""(\\d+)(?:st|nd|rd|th)\\s+$partyType\\s*\\n\\s*([A-Z]$nameCls+?(?:\\([^)]*\\))?(?:（[^）]*）)?)""",
-      // unnumbered
-      s"""([A-Z]$nameCls+?(?:\\([^)]*\\))?(?:（[^）]*）)?)\\s+$partyType(?!\\s*\\d)""")
-
-    var parties = List.empty[Party]
-    var idx = 0
-    var done = false
-    while (idx < patterns.length && !done) {
-      val groupsList = Py.findAllGroups(patterns(idx), section, I | M)
-      val found = scala.collection.mutable.ListBuffer.empty[Party]
-      for (g <- groupsList) {
-        if (idx < 3) {
-          val (name, number) = if (idx == 2) (g(1), g(0)) else (g(0), g(1))
-          val clean = cleanPartyName(name)
-          if (clean.nonEmpty) found += Party(clean, Some(number.toInt))
-        } else {
-          val clean = cleanPartyName(g(0))
-          if (clean.nonEmpty) found += Party(clean, None)
+    val parties = numberedPatterns(partyType).iterator.zipWithIndex.map { case (p, idx) =>
+      Py.findAllGroups(p, section, I | M).flatMap { g =>
+        val (name, number) = idx match {
+          case 2 => (g(1), Some(g(0))) // ordinal first
+          case 3 => (g(0), None)       // unnumbered
+          case _ => (g(0), Some(g(1)))
         }
+        val clean = cleanPartyName(name)
+        if (clean.nonEmpty) Some(Party(clean, number.map(_.toInt))) else None
       }
-      if (found.nonEmpty) {
-        parties = found.toList
-        done = true
-      }
-      idx += 1
-    }
+    }.find(_.nonEmpty).getOrElse(Nil)
 
     // Dedupe by name preserving first, stable sort by ordinal (None→0)
     val seen = scala.collection.mutable.LinkedHashSet.empty[String]

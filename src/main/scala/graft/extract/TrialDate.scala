@@ -1,6 +1,6 @@
 package graft.extract
 
-import graft.text.Py
+import graft.text.{Py, Scan}
 import graft.text.Py.{I, Rx}
 
 /** P6 — trial-date extraction + 11-step cleaning chain
@@ -30,12 +30,13 @@ object TrialDate {
     * 5 chars (English) or 3 (Chinese). Every English pattern requires the
     * literal "date" and every Chinese one "日期": a document without it is
     * skipped before any pattern runs. */
-  def extract(text: String, language: String): String = {
+  def extract(text: String, language: String): String = extract(Scan(text), language)
+
+  def extract(scan: Scan, language: String): String = {
     val english = language == "english"
-    val folded = Py.foldCase(text)
-    if (!folded.contains(if (english) "date" else "日期")) return ""
+    if (!scan.folded.contains(if (english) "date" else "日期")) return ""
     (if (english) englishPatterns else chinesePatterns).iterator
-      .flatMap(_.search1(text, folded))
+      .flatMap(_.search1(scan))
       .map(raw => cleanTrialDate(Py.strip(raw)))
       .find(_.length > (if (english) 5 else 3))
       .getOrElse("")

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.extract.ExtractAll
@@ -32,9 +32,9 @@ object ExtractJob {
   val DefaultSkewThresholdBytes: Long = 512 * 1024
 
   /** Span bytes per doc as a Catalyst expression (no kernel invocation). */
-  def withDocBytes(docs: DataFrame): DataFrame =
-    docs.withColumn("doc_bytes",
-      aggregate(col("spans"), lit(0L), (acc, s) => acc + length(s.getField("text"))))
+  private def docBytes: Column = aggregate(col("spans"), lit(0L), (acc, s) => acc + length(s.getField("text")))
+
+  def withDocBytes(docs: DataFrame): DataFrame = docs.withColumn("doc_bytes", docBytes)
 
   /** "Identity keys": for each target partition b in [0, n), a long k_b
     * whose Murmur3 hash (seed 42 — what Spark's HashPartitioning applies to
@@ -160,7 +160,7 @@ object ExtractJob {
       val stats = waveDf.groupBy($"bucket").agg(
         count(lit(1)).as("docs"),
         sum(size($"spans")).as("spans"),
-        sum(aggregate($"spans", lit(0L), (acc, s) => acc + length(s.getField("text")))).as("bytes"),
+        sum(docBytes).as("bytes"),
         min($"doc_id").as("doc_id_min"),
         max($"doc_id").as("doc_id_max")
       ).collect()

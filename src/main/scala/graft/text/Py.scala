@@ -182,14 +182,12 @@ object Py {
 
   /** Python slice `s[a:b]` with clamping; negative indices supported. */
   def slice(s: String, from: Int, until: Int): String = {
-    val n = s.length
-    def norm(i: Int): Int = {
-      val j = if (i < 0) n + i else i
-      math.max(0, math.min(n, j))
-    }
-    val a = norm(from); val b = norm(until)
+    val a = sliceIndex(from, s.length); val b = sliceIndex(until, s.length)
     if (a >= b) "" else s.substring(a, b)
   }
+  /** A slice bound over `n` chars: negative counts from the end, clamped
+    * to `[0, n]`. */
+  private[text] def sliceIndex(i: Int, n: Int): Int = math.max(0, math.min(n, if (i < 0) n + i else i))
   /** `s[a:]` */
   def sliceFrom(s: String, from: Int): String = slice(s, from, s.length)
   /** `s[:b]` */
@@ -197,9 +195,6 @@ object Py {
 
   /** Python `str.strip()` — Unicode whitespace. */
   def strip(s: String): String = s.strip()
-
-  /** Python floor division for possibly-negative operands. */
-  def floorDiv(a: Long, b: Long): Long = Math.floorDiv(a, b)
 
   // ---------------------------------------------------------------------
   // Fast exact scanning. The JDK regex engine finds unanchored matches by
@@ -267,6 +262,8 @@ object Py {
 
   /** One extraction pattern: the regex, its flags, its start [[Anchor]] and
     * its required-literal guard, declared together and scanned by one loop.
+    * Every scan takes a [[Scan]], the text together with its own fold, so
+    * the patterns run over one view share that view's one [[foldCase]].
     *
     * The contract:
     *  - `guard`: every match of the pattern contains at least one of these
@@ -280,13 +277,12 @@ object Py {
     *
     * Both are pure speedups: every method returns what the string API
     * (`Py.findIter(p, s, flags)` and the rest, no guard, no anchor) returns
-    * for the same regex and flags. AnchoredScanSpec pins that equivalence
-    * for every `Rx` the kernel ships, over corpus, adversarial case-fold
-    * traps and fuzz. A guard whose literals are the anchor's needles adds
-    * nothing: the anchored loop already returns when no needle occurs.
-    *
-    * `folded`, where a method takes it, may pass a precomputed
-    * [[foldCase]] of `s` so several patterns share one fold. */
+    * for the same regex and flags over `scan.text`. AnchoredScanSpec pins
+    * that equivalence for every `Rx` the kernel ships, over corpus,
+    * adversarial case-fold traps, fuzz and sliced views. A guard whose
+    * literals are the anchor's needles adds nothing: the anchored loop
+    * already returns when no needle occurs. Only a guard or a literal
+    * anchor reads `scan.folded`; the other patterns never make the fold. */
   final case class Rx(p: String, flags: Int = 0, anchor: Option[Anchor] = None,
                       guard: Seq[String] = Nil) {
     private[this] val compiled = pattern(p, flags)
@@ -301,31 +297,30 @@ object Py {
     }
 
     /** `re.finditer` → (group1-or-0, start, end), at most `maxMatches`. */
-    def findIter(s: String, folded: String = null,
-                 maxMatches: Int = Int.MaxValue): List[(String, Int, Int)] = {
+    def findIter(scan: Scan, maxMatches: Int = Int.MaxValue): List[(String, Int, Int)] = {
       val out = List.newBuilder[(String, Int, Int)]
-      scan(s, folded, maxMatches)(m => out += ((group1(m), m.start(), m.end())))
+      run(scan, maxMatches)(m => out += ((group1(m), m.start(), m.end())))
       out.result()
     }
 
     /** `re.findall` (one group or none). */
-    def findAll(s: String, folded: String = null): List[String] = {
+    def findAll(scan: Scan): List[String] = {
       val out = List.newBuilder[String]
-      scan(s, folded, Int.MaxValue)(m => out += group1(m))
+      run(scan, Int.MaxValue)(m => out += group1(m))
       out.result()
     }
 
     /** `re.search` → group(1)-or-0 of the first match. */
-    def search1(s: String, folded: String = null): Option[String] = {
+    def search1(scan: Scan): Option[String] = {
       var res: Option[String] = None
-      scan(s, folded, 1)(m => res = Option(if (m.groupCount() >= 1) m.group(1) else m.group(0)))
+      run(scan, 1)(m => res = Option(if (m.groupCount() >= 1) m.group(1) else m.group(0)))
       res
     }
 
     /** `bool(re.search(...))`. */
-    def contains(s: String, folded: String = null): Boolean = {
+    def contains(scan: Scan): Boolean = {
       var hit = false
-      scan(s, folded, 1)(_ => hit = true)
+      run(scan, 1)(_ => hit = true)
       hit
     }
 
@@ -334,9 +329,9 @@ object Py {
       if (g == null) "" else g
     }
 
-    private def scan(s: String, folded0: String, maxMatches: Int)(emit: Matcher => Unit): Unit = {
-      val folded =
-        if (folded0 == null && (guardF.nonEmpty || needles != null)) foldCase(s) else folded0
+    private def run(scan: Scan, maxMatches: Int)(emit: Matcher => Unit): Unit = {
+      val s = scan.text
+      val folded = if (guardF.nonEmpty || needles != null) scan.folded else null
       if (guardF.nonEmpty && !guardF.exists(folded.contains)) return
       val m = compiled.matcher(s)
       var found = 0

@@ -4,9 +4,10 @@ import java.util.regex.Pattern
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.extract.{Amounts, CaseType, Cleaners, CourtName, ExtractAll, Judge, JudgmentResult, Lawyers, TrialDate}
+import graft.extract.{Amounts, CaseNumber, CaseType, ChineseDoc, Cleaners, CourtName, ExtractAll, Judge, JudgmentResult,
+  Lawyers, Parties, TrialDate}
 import graft.pipeline.CorpusGen
-import graft.text.Py
+import graft.text.{Py, Scan}
 import graft.text.Py.Rx
 
 /** Differential gate for the kernel's [[Py.Rx]] patterns and the
@@ -108,18 +109,29 @@ class AnchoredScanSpec extends AnyFunSuite {
 
   // ---- helper ----------------------------------------------------------
 
+  private val Deseret = "\uD801\uDC00" // U+10400, folds to U+10428
+
+  /** `s` inside a longer text, cut out by two nested slices whose bounds
+    * split a U+10400 surrogate pair at each end: the view's fold is the
+    * outer text's fold cut there, not the fold of the view's own text. */
+  private def slicedView(s: String): Scan =
+    Scan("Ab" + Deseret + s + Deseret + "cD").slice(1, -1).slice(2, 4 + s.length)
+
   /** Every scan of `rx` equals the plain string-API scan of its regex (no
-    * guard, no anchor), with and without a caller-supplied fold. */
+    * guard, no anchor), on the text and on a sliced view around it. */
   private def checkRx(rx: Rx, where: String): Unit = {
     allInputs.foreach { s =>
       val plain = Py.findIter(rx.p, s, rx.flags)
       val at = s"[$where] <${rx.p}> on <${s.take(120)}>"
-      assert(rx.findIter(s) == plain, s"findIter mismatch $at")
-      assert(rx.findIter(s, Py.foldCase(s)) == plain, s"findIter(folded) mismatch $at")
-      assert(rx.findIter(s, maxMatches = 2) == plain.take(2), s"findIter(max=2) mismatch $at")
-      assert(rx.search1(s) == Py.search1(rx.p, s, rx.flags), s"search1 mismatch $at")
-      assert(rx.contains(s) == Py.contains(rx.p, s, rx.flags), s"contains mismatch $at")
-      assert(rx.findAll(s) == Py.findAll(rx.p, s, rx.flags), s"findAll mismatch $at")
+      val scan = Scan(s)
+      assert(rx.findIter(scan) == plain, s"findIter mismatch $at")
+      val view = slicedView(s)
+      assert(view.text == Deseret.substring(1) + s + Deseret.substring(0, 1))
+      assert(rx.findIter(view) == Py.findIter(rx.p, view.text, rx.flags), s"findIter(sliced view) mismatch $at")
+      assert(rx.findIter(scan, maxMatches = 2) == plain.take(2), s"findIter(max=2) mismatch $at")
+      assert(rx.search1(scan) == Py.search1(rx.p, s, rx.flags), s"search1 mismatch $at")
+      assert(rx.contains(scan) == Py.contains(rx.p, s, rx.flags), s"contains mismatch $at")
+      assert(rx.findAll(scan) == Py.findAll(rx.p, s, rx.flags), s"findAll mismatch $at")
     }
   }
 
@@ -162,7 +174,7 @@ class AnchoredScanSpec extends AnyFunSuite {
     Lawyers.clearPatterns.foreach(checkRx(_, "Lawyers/clear"))
     checkRx(Lawyers.namePattern, "Lawyers/name")
     // the cascade-level literal check folds the way the regex does
-    assert(Lawyers.extractEnglishLawyerSegment(InstructedParagraph, InstructedParagraph) ==
+    assert(Lawyers.extractEnglishLawyerSegment(Scan(InstructedParagraph), Scan(InstructedParagraph)) ==
       Lawyers.cleanLawyerSegment(InstructedParagraph))
   }
 
@@ -175,8 +187,19 @@ class AnchoredScanSpec extends AnyFunSuite {
     (Judge.specialPatterns ++ Judge.beforePatterns ++ Judge.alternativePatterns)
       .foreach(checkRx(_, "Judge/en"))
     // the (?i) name pattern takes "sitting" too, as it does after "JUSTICE"
-    assert(Judge.extractEnglishJudge(JusticeDotted) == "JUSTİCE Alan Brown sitting")
-    assert(Judge.extractEnglishJudge(JusticeLongS) == "Juſtice Alan Brown sitting")
+    assert(Judge.extractEnglishJudge(Scan(JusticeDotted)) == "JUSTİCE Alan Brown sitting")
+    assert(Judge.extractEnglishJudge(Scan(JusticeLongS)) == "Juſtice Alan Brown sitting")
+    Judge.chinesePatterns.foreach(checkRx(_, "Judge/zh"))
+  }
+
+  test("CaseNumber, ChineseDoc and Parties cascades: Rx == plain") {
+    CaseNumber.chinesePatterns.foreach(checkRx(_, "CaseNumber/zh"))
+    (ChineseDoc.caseNumberPatterns ++ ChineseDoc.courtNamePatterns ++ ChineseDoc.trialDatePatterns ++
+      ChineseDoc.judgePatterns ++ ChineseDoc.defendantPatterns ++ ChineseDoc.defendantLawyerPatterns)
+      .foreach(checkRx(_, "ChineseDoc"))
+    (Parties.chinesePlaintiffPatterns ++ Parties.chineseDefendantPatterns).foreach(checkRx(_, "Parties/zh"))
+    Parties.dccjPatterns.values.flatten.foreach(checkRx(_, "Parties/dccj"))
+    checkRx(Parties.betweenPattern, "Parties/between")
   }
 
   // ---- whitespace collapse ----------------------------------------------
